@@ -19,14 +19,17 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 
 def env_int(name: str, default: int) -> int:
-    """Integer knob from the environment with a safe fallback — the route
-    bounds below are deployment-sized (how much loop state a driver can
-    hold), so they are env-parameterised like SPARK_GRAFT_SHUFFLE_PARTITIONS
-    (round-7 verdict: the docs promised this; now it is true)."""
+    """Integer knob from the environment, ``default`` when unset or empty —
+    the route bounds below are deployment-sized (how much loop state a
+    driver can hold), so they are env-parameterised like
+    SPARK_GRAFT_SHUFFLE_PARTITIONS (round-7 verdict: the docs promised
+    this; now it is true). A value that is not an integer raises
+    ``ValueError`` instead of silently running with the default."""
+    raw = os.environ.get(name, "")
     try:
-        return int(os.environ.get(name, "") or default)
+        return int(raw) if raw else default
     except ValueError:
-        return default
+        raise ValueError(f"{name}={raw!r} is not an integer") from None
 
 # Materialization cadence for the iterative rank/label state. 1 = every
 # round — the measured optimum on local[32] at sf0.1: batching 3 rounds

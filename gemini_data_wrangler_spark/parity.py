@@ -8,7 +8,7 @@ registry; this module produces the same per-query record shape
 diff the complete inventory instead of trusting the builder's local suite.
 
 Run:  ``python -m gemini_data_wrangler_spark parity --out PARITY_r03.json``
-(defaults: sf0.01 tables, same comparison semantics as tests/parity.py,
+(defaults: sf0.01 tables, same comparison semantics as the test suite,
 which imports its ``compare`` from here).
 """
 

@@ -18,6 +18,9 @@ event windows) registered by their own modules.
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
+import re
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,113 +42,20 @@ def register(name: str, oracle: Optional[str]):
     return deco
 
 
-def registry() -> dict[str, tuple[QueryFn, Optional[str]]]:
-    # Import side-effect registries for extension operators.
-    from gemini_data_wrangler_spark import (  # noqa: F401
-        queries_ext,
-        queries_ext2,
-        queries_ext3,
-        queries_ext4,
-        queries_ext5,
-        queries_ext6,
-        queries_ext7,
-        queries_ext8,
-        queries_ext9,
-        queries_ext10,
-        queries_ext11,
-        queries_ext12,
-        queries_ext13,
-        queries_ext14,
-        queries_ext15,
-        queries_ext16,
-        queries_ext17,
-        queries_ext18,
-        queries_ext19,
-        queries_ext20,
-        queries_ext21,
-        queries_ext22,
-        queries_ext23,
-        queries_ext24,
-        queries_ext25,
-        queries_ext26,
-        queries_ext27,
-        queries_ext28,
-        queries_ext29,
-        queries_ext30,
-        queries_ext31,
-        queries_ext32,
-        queries_ext33,
-        queries_ext34,
-        queries_ext35,
-        queries_ext36,
-        queries_ext37,
-        queries_ext38,
-        queries_ext39,
-        queries_ext40,
-        queries_ext41,
-        queries_ext42,
-        queries_ext43,
-        queries_ext44,
-        queries_ext45,
-        queries_ext46,
-        queries_ext47,
-        queries_ext48,
-        queries_ext49,
-        queries_ext50,
-        queries_ext51,
-        queries_ext52,
-        queries_ext53,
-        queries_ext54,
-        queries_ext55,
-        queries_ext56,
-        queries_ext57,
-        queries_ext58,
-        queries_ext59,
-        queries_ext60,
-        queries_ext61,
-        queries_ext62,
-        queries_ext63,
-        queries_ext64,
-        queries_ext65,
-        queries_ext66,
-        queries_ext67,
-        queries_ext68,
-        queries_ext69,
-        queries_ext70,
-        queries_ext71,
-        queries_ext72,
-        queries_ext73,
-        queries_ext74,
-        queries_ext75,
-        queries_ext76,
-        queries_ext77,
-        queries_ext78,
-        queries_ext79,
-        queries_ext80,
-        queries_ext81,
-        queries_ext82,
-        queries_ext83,
-        queries_ext84,
-        queries_ext85,
-        queries_ext86,
-        queries_ext87,
-        queries_ext88,
-        queries_ext89,
-        queries_ext90,
-        queries_ext91,
-        queries_ext92,
-        queries_ext93,
-        queries_ext94,
-        queries_ext95,
-        queries_ext96,
-        queries_ext97,
-        queries_ext98,
-        queries_ext99,
-        queries_ext100,
-        queries_ext101,
-        queries_tpch,
-    )
+def _module_order(name: str) -> tuple:
+    """``queries_ext``, then ``queries_ext2`` … by number, then the rest."""
+    m = re.fullmatch(r"queries_ext(\d*)", name)
+    return (0, int(m.group(1) or 1), name) if m else (1, 0, name)
 
+
+def registry() -> dict[str, tuple[QueryFn, Optional[str]]]:
+    """Every declared query, in registration order. Each ``queries_*``
+    module of the package registers its queries when imported."""
+    import gemini_data_wrangler_spark as pkg
+
+    names = [m.name for m in pkgutil.iter_modules(pkg.__path__) if m.name.startswith("queries_")]
+    for name in sorted(names, key=_module_order):
+        importlib.import_module(f"{pkg.__name__}.{name}")
     return dict(_REGISTRY)
 
 

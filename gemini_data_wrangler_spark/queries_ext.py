@@ -48,17 +48,13 @@ from gemini_data_wrangler_spark.queries import (
     register,
     run_stages,
 )
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
+from gemini_data_wrangler_spark.sources.readers import sf_table
 from gemini_data_wrangler_spark.streaming.events import (
     session_agg,
     session_oracle_sql,
     sliding_window_agg,
     tumbling_window_agg,
 )
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
 
 
 # ---------------------------------------------------------------------------
@@ -225,7 +221,7 @@ def window_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         token_count(F.col("text")).alias("n_tokens"),
@@ -244,7 +240,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gemini_data_wrangler_spark.functions.text import bpe_ish_token_count
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     return docs.select("doc_id", bpe_ish_token_count(F.col("text")).alias("n_bpe_tokens"))
 
 
@@ -269,7 +265,7 @@ _QUALITY_ORACLE = """
 
 @register("text_quality_scores", _QUALITY_ORACLE)
 def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     feats = quality_features(F.col("text"))
     return docs.select(
         "doc_id",
@@ -284,7 +280,7 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"SELECT doc_id, {language_id_oracle_sql('text')} AS lang_pred FROM documents",
 )
 def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     return docs.select("doc_id", language_id(F.col("text")).alias("lang_pred"))
 
 
@@ -296,7 +292,7 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     return docs.select("doc_id", doc_fingerprint(F.col("text")).alias("fingerprint"))
 
 
@@ -308,7 +304,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SELECT text, MIN(doc_id) AS keep_id, COUNT(*) AS copies FROM documents GROUP BY text",
 )
 def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     return exact_dedup(docs, ["text"], "doc_id")
 
 
@@ -317,7 +313,7 @@ _NGRAM_ORACLE = ngram_jaccard_oracle_sql("documents", "doc_id", "text", n=5, thr
 
 @register("dedup_ngram_jaccard", _NGRAM_ORACLE)
 def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     return ngram_jaccard_pairs(docs, "doc_id", "text", n=5, threshold=0.8)
 
 
@@ -349,7 +345,7 @@ def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def dedup_simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     return simhash_pairs(docs, "doc_id", "text", n=5, jaccard_threshold=0.8)
 
 
@@ -380,7 +376,7 @@ def _embedding_cosine_pairs(spark: SparkSession, sf_dir: str, route: str) -> Dat
     from gemini_data_wrangler_spark.functions.vectors import l2_norm, vec_dot
     from gemini_data_wrangler_spark.operators.similarity import cosine_pair_candidates
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     # Two-phase exact all-pairs: (1) numpy block-matmul candidates at
     # threshold − 1e-3 (guaranteed superset: float reassociation error is
     # ~1e-12), then (2) exact verification with the SAME left-to-right
@@ -593,7 +589,7 @@ def similarity_ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     every index step is deterministic, so DuckDB re-derives centroids,
     assignments, probing, and the exact rerank from scratch. The recall
     gate below still anchors it to the brute-force ranking."""
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     return ivf_topk(emb, queries_from_ids(emb, _ANN_QUERY_IDS), k=10)
 
 
@@ -605,7 +601,7 @@ def _ann_recall_check(spark: SparkSession, sf_dir: str, approx_fn, floor: float)
     hash MISMATCH instead of a self-attested rows-only pass."""
     from gemini_data_wrangler_spark.shared_builds import ann_exact_topk
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     q = queries_from_ids(emb, _ANN_QUERY_IDS)
     exact = ann_exact_topk(spark, sf_dir, reuse=True, k=10).select(
         "query_id", "vec_id"
@@ -669,7 +665,7 @@ def similarity_ivf_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from gemini_data_wrangler_spark.operators.similarity import kmeans_lloyd
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     n = emb.count()
     n_cells = max(4, math.ceil(math.sqrt(n) / 2))
     nprobe = max(3, math.ceil(n_cells / 2))
@@ -696,7 +692,7 @@ def similarity_ivf_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling_window_agg(_table(spark, sf_dir, "events"), "1 hour")
+    return tumbling_window_agg(sf_table(spark, sf_dir, "events"), "1 hour")
 
 
 @register(
@@ -712,12 +708,12 @@ def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_sliding_halfhour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sliding_window_agg(_table(spark, sf_dir, "events"), "1 hour", "30 minutes")
+    return sliding_window_agg(sf_table(spark, sf_dir, "events"), "1 hour", "30 minutes")
 
 
 @register("events_sessions", session_oracle_sql("events", 30))
 def events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return session_agg(_table(spark, sf_dir, "events"), "30 minutes")
+    return session_agg(sf_table(spark, sf_dir, "events"), "30 minutes")
 
 
 # ---------------------------------------------------------------------------
@@ -734,7 +730,7 @@ def events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     return attach_binary_payload(docs, "doc_id", "text").select(
         "asset_id", "modality", "n_bytes", "content_hash"
     )
@@ -764,7 +760,7 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     return decode_assets(synthesize_assets(docs, "doc_id"))
 
 
@@ -779,5 +775,5 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     return frame_sample(decode_assets(synthesize_assets(docs, "doc_id")))

@@ -18,11 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -41,7 +37,7 @@ def approx_distinct_bound_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL++ estimate (rsd=0.02) vs exact per group, gated at 3·rsd. The
     estimate itself stays in the rows-only sibling (`count_distinct_approx`
     — sketch values are engine-specific); the GUARANTEE is hash-checked."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderpriority")
         .agg(
@@ -70,7 +66,7 @@ def percentile_approx_bound_check(spark: SparkSession, sf_dir: str) -> DataFrame
     """Greenwald-Khanna approx percentiles bracketed by exact interpolated
     percentiles at ±0.01 rank — the GK rank-error guarantee (eps = 1/acc =
     1e-4 here) made hash-checkable."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     agg = orders.groupBy("o_orderpriority").agg(
         F.expr("approx_percentile(o_totalprice, array(0.5, 0.95), 10000)").alias("_apx"),
         F.expr("percentile(o_totalprice, array(0.49, 0.51, 0.94, 0.96))").alias("_ex"),
@@ -95,7 +91,7 @@ def hll_merge_bound_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datasketches-HLL per-group estimates AND their union-merge, each
     within 5% of the exact distinct count — the mergeable-sketch guarantee
     (sketch once per shard, merge without re-scanning) hash-gated."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     per = orders.groupBy("o_orderpriority").agg(
         F.hll_sketch_agg(F.col("o_custkey").cast("string")).alias("_sk"),
         F.count_distinct("o_custkey").alias("n_exact"),
@@ -133,7 +129,7 @@ def sample_bernoulli_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction·N (binomial), and every sampled row exists in the source.
     The sampled ROWS stay rows-only (`sample_orders` — RNG streams are
     engine-specific); the contract is hash-checked."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     sampled = orders.sample(fraction=0.1, seed=42).persist()
     n_total = orders.count()
     n = sampled.count()
@@ -161,7 +157,7 @@ def kmeans_state_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     preserve.)"""
     from gemini_data_wrangler_spark.operators.similarity import kmeans_lloyd
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     cents = kmeans_lloyd(emb, k=8, max_iter=2)
     n_vecs = emb.count()
     stats = cents.agg(
@@ -218,7 +214,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition by doc. Scores rounded to 6 decimals on both sides (single
     multiply+log per value — no sum reassociation; rounding absorbs
     libm-vs-JVM ulp differences)."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     n_docs = docs.count()
     tok = docs.select(
         "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("w")
@@ -271,7 +267,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream: one corpus aggregation + one map-side join + one doc-keyed
     aggregation; no shuffle keyed on words for the big side. Rounded to 6
     (the per-doc mean sums ~100 doubles; reassociation noise is ~1e-13)."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("w")
     )
@@ -312,7 +308,7 @@ def sample_capped_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-source partitions are bounded by AQE skew splitting, or pre-salt
     on a hash prefix and take per-salt caps first (documented here as the
     2-level variant — same trick as the packing prefix sum)."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
     )
@@ -361,7 +357,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gemini_data_wrangler_spark.operators.dedup import connected_components
     from gemini_data_wrangler_spark.shared_builds import neardup_pairs
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     pairs = neardup_pairs(spark, sf_dir, reuse=True)
     comp = connected_components(pairs)
     quality = docs.select(
@@ -403,7 +399,7 @@ def sample_language_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5-ordered) subset — the rebalancing step multilingual corpora run
     before training. Deterministic across engines/cluster sizes. One tiny
     per-lang aggregation broadcast back + one per-lang ranking window."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     target = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("c")).agg(
         F.min("c").alias("t")
     )
@@ -457,7 +453,7 @@ def multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_assets,
     )
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     decoded = decode_assets(synthesize_assets(docs, "doc_id")).filter(
         F.col("ok") & F.col("width").isNotNull()
     )
@@ -489,7 +485,7 @@ def dq_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats, zero for the screen itself. z rounded to 6 on both sides (mu
     and sigma are sums — engine reassociation noise ~1e-13 is absorbed;
     the |z|≥3 cut uses the unrounded value in both engines)."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     stats = orders.groupBy("o_orderpriority").agg(
         F.avg("o_totalprice").alias("mu"),
         F.stddev_samp("o_totalprice").alias("sigma"),
@@ -521,7 +517,7 @@ def corpus_stats_by_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus composition rollup (docs / tokens / chars per source ×
     language + an id-spread probe) — the first query every ingest run
     fires. One partial-aggregated exchange on a few hundred groups."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     return docs.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(F.split(F.trim("text"), r"\s+")).cast("bigint")).alias("n_tokens"),
@@ -566,7 +562,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is vocabulary²-bounded but corpus-sublinear in practice; at test
     scale it broadcasts, at 100 TB the probe becomes a shuffle join keyed
     on the bigram — same plan text, AQE picks the side. Rounded to 6."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
     bg = tok.select(
         "doc_id",
@@ -612,7 +608,7 @@ def feature_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers — rounding only guards the division's last bit)."""
     from pyspark.sql import Window as _W
 
-    orders = _table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 300)
+    orders = sf_table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 300)
     w = _W.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     return orders.select(
         "o_orderkey",
@@ -668,7 +664,7 @@ def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions in one projection + one low-cardinality aggregation; the
     oracle performs the identical normalization in DuckDB (RE2-safe
     patterns only: no lookaheads)."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("HTTPS://WWW.Site"), (F.col("doc_id") % 5).cast("string"),
         F.lit(".EXAMPLE.com/Docs"), (F.col("doc_id") % 13).cast("string"),
@@ -723,7 +719,7 @@ def agg_argminmax_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction: every ordering key is unique (orderkey; date||key for
     the date variant) because both engines break max_by ties arbitrarily.
     One partial-aggregated exchange."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     date_key = F.concat(
         F.col("o_orderdate").cast("string"), F.lit("|"), F.col("o_orderkey").cast("string")
     )
@@ -765,7 +761,7 @@ def asof_purchase_click_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame
     (``operators/temporal.py::asof_join_tolerance``)."""
     from gemini_data_wrangler_spark.operators.temporal import asof_join_tolerance
 
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
     )
@@ -822,7 +818,7 @@ def dedup_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gemini_data_wrangler_spark.operators.dedup import connected_components
     from gemini_data_wrangler_spark.shared_builds import neardup_pairs
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     pairs = neardup_pairs(spark, sf_dir, reuse=True)
     comp = connected_components(pairs)
     quality = docs.select(

@@ -17,11 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 _RBO_P = 0.9
@@ -67,8 +63,8 @@ def rec_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-weighted ranking-stability metric. Revenue sums run in exact
     integer cents (deterministic ranks, ties to brand name); prefix
     overlaps are integer counts over bounded rank tables."""
-    li = _table(spark, sf_dir, "lineitem")
-    part = _table(spark, sf_dir, "part")
+    li = sf_table(spark, sf_dir, "lineitem")
+    part = sf_table(spark, sf_dir, "part")
     rev = (
         li.join(F.broadcast(part.select("p_partkey", "p_brand")),
                 li["l_partkey"] == F.col("p_partkey"))

@@ -23,11 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 _RRF_QUERY_IDS = [0, 1, 2, 3, 4]
@@ -107,7 +103,7 @@ def rec_reciprocal_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-deterministic. Queries are broadcast on both branches —
     candidate scans are shuffle-free passes; the fusion join sees only
     |queries| x 2k rows."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
 
     # Shingles hash to longs INSIDE the transform (the jaccard below only
     # needs set sizes, which xxhash64 preserves at ~1e-13 collision odds —
@@ -213,7 +209,7 @@ def corpus_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     epochs each source runs per corpus pass (the repetition-budget
     number an over-sampled source must stay under). One groupBy plus a
     broadcast 1-row total — the canonical two-aggregate shape."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     src = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col("n_chars").cast("bigint")).alias("n_chars"),
@@ -278,7 +274,7 @@ def dedup_repeated_window_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     join back); windows are |chars|/16 rows. At corpus scale, swap
     the shuffled key for xxhash64(window) — here the raw text keys keep
     the DuckDB oracle exact."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     wins = (
         docs.filter(F.length("text") >= _RW_W)
         .select(

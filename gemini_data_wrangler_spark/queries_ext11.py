@@ -26,11 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 def _doc_bigrams(docs: DataFrame) -> DataFrame:
@@ -87,7 +83,7 @@ def text_boilerplate_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation. The gram-frequency table is corpus-vocabulary-sized, not
     corpus-sized, and the threshold scalar is a broadcast single-row
     cross join — nothing ever lands on the driver."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     grams = _doc_bigrams(docs)
     gram_df = grams.groupBy("gram").agg(F.count_distinct("doc_id").alias("df"))
     n_docs = docs.agg(F.count("*").alias("n_docs"))
@@ -144,7 +140,7 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from a separate full aggregation with map-side combine. Both
     aggregations shuffle on the term key; the final stats-postings join
     is vocabulary-sized."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     tokens = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("term")
     )
@@ -196,7 +192,7 @@ def shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is then ``df.repartition(16, "shard").sortWithinPartitions
     ("pos")``, a single exchange. 16 shards here for oracle compactness;
     production uses more nibbles (256/4096-way) the same way."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     hashed = docs.select(
         "doc_id", F.md5(F.col("doc_id").cast("string")).alias("h")
     )

@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 @register(
@@ -60,7 +56,7 @@ def dedup_prefix_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs only. Candidates are Σ|block|², never n². At 100 TB, k (prefix
     words) tunes the block size the same way the shingle width tunes
     PPJoin (``operators/dedup.py``)."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     blocked = docs.select(
         "doc_id",
         "text",
@@ -115,7 +111,7 @@ def events_time_decayed_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the anchor is a one-row broadcast cross join, the decay
     is a scan-side expression, and the aggregation has map-side combine —
     one exchange on event_type regardless of input size."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     anchor = events.agg(F.max(F.col("ts").cast("date")).alias("max_d"))
     anchored = events.crossJoin(F.broadcast(anchor)).select(
         "event_type",
@@ -164,7 +160,7 @@ def corpus_mixing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-partition state = #languages), a one-row total broadcast, and a
     languages-sized broadcast join against the target table — output
     cardinality is #languages no matter the corpus size."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     per_lang = docs.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.size(F.split("text", " "))).alias("lang_tokens"),
@@ -235,7 +231,7 @@ def dq_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     on event_type — swap for approx_percentile at 100 TB, same plan
     minus the sort), medians broadcast back (group-count-sized), final
     screen is a scan-side expression with map-side combine."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     med = events.groupBy("event_type").agg(
         F.round(F.expr("percentile(value, 0.5)"), 4).alias("med")
     )

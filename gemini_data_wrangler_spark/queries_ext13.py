@@ -40,11 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -75,7 +71,7 @@ def scd2_order_status_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     (o_orderdate, o_orderkey) sort, so the plan is a single Exchange +
     Sort feeding two Window operators — at 100 TB this is one shuffle of
     the change log, no joins."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     chg = (
         orders.withColumn("prev", F.lag("o_orderstatus").over(w))
@@ -122,7 +118,7 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding / context packing. `sequence`+`explode`+`substring` is a
     narrow JVM-only pipeline: no shuffle, no Python, output partitions
     inherit the scan's, so it scales linearly with input bytes."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     n_extra = F.ceil(
         (F.length("text") - F.lit(_CHUNK_SIZE)) / F.lit(float(_CHUNK_STRIDE))
     )
@@ -176,7 +172,7 @@ def quality_filter_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     an alphabetic character, ≥2 stop-word hits. All higher-order
     functions on a single split — whole-stage-codegen'd, no shuffle, no
     Python; the corpus filter is `WHERE keep`."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     ws = F.split(F.trim("text"), r"\s+")
     d = docs.select("doc_id", ws.alias("ws"))
     total_len = F.expr("aggregate(ws, 0L, (a, x) -> a + length(x))")
@@ -231,7 +227,7 @@ def text_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver. (A production run would group on xxhash64(span) and join the
     text back for the survivors; the span text is grouped directly here
     so the oracle can reproduce it.)"""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     ws = F.split(F.trim("text"), r"\s+")
     spans = F.expr(
         f"transform(sequence(1, size(ws) - {_SPAN_N - 1}),"
@@ -277,7 +273,7 @@ def window_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     7-row frame is always odd so the median is an element, not an
     average. One global sort window — at scale, partition by coarse time
     range first (`window_moving_7day_sum` shows the per-key form)."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     daily = (
         orders.groupBy(F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"))
         .agg(F.round(F.sum("o_totalprice"), 6).alias("total"))
@@ -317,7 +313,7 @@ def agg_regression_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     intercept, r², count, mean x/y — all second-moment sums, so one
     partial-aggregated shuffle on the group key; identical shape to
     `agg_stats_functions`."""
-    li = _table(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     y, x = F.col("l_extendedprice"), F.col("l_quantity")
     return li.groupBy("l_returnflag").agg(
         F.round(F.regr_slope(y, x), 6).alias("slope"),
@@ -355,7 +351,7 @@ def unpivot_order_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a row-local generator (each input row fans out to one row per
     value column), so it adds no shuffle beyond the aggregation that
     built the wide table."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     wide = orders.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("double").alias("n_orders"),
         F.round(F.sum("o_totalprice"), 6).alias("total_price"),

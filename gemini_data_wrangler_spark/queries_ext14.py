@@ -33,11 +33,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.session import session_memo
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -53,29 +50,18 @@ _SEM_K = 8
 # the gate doubled its cost (same amortization the round-6 kNN-graph memo
 # applies to the graph-ANN family). The PUBLISHER always builds fresh and
 # refreshes the memo — its bench timing stays an honest measurement of the
-# pipeline — while the gate reuses the latest build. Keyed by Spark
-# application id; stale apps pruned on insert; the checkpointed frame is
-# ~|near-dup pairs| rows.
-_SEM_PAIRS_CACHE: dict = {}
-
-
+# pipeline — while the gate reuses the latest build (shared_builds
+# contract); the checkpointed frame is ~|near-dup pairs| rows.
 def _sem_pairs(spark: SparkSession, sf_dir: str, reuse: bool) -> DataFrame:
-    # Memo-key invariant (round-6 ADVICE): unlike _gann_graph, no caller
-    # supplies a frame here — the embeddings table is loaded INSIDE this
-    # function from sf_dir, which is part of the key, so the cached pairs
-    # can never describe different data than the key claims.
     from gemini_data_wrangler_spark.operators.similarity import semantic_dedup_pairs
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, _SEM_THRESHOLD, _SEM_K)
-    if not reuse or key not in _SEM_PAIRS_CACHE:
-        for stale in [k for k in _SEM_PAIRS_CACHE if k[0] != app]:
-            del _SEM_PAIRS_CACHE[stale]
-        emb = _table(spark, sf_dir, "embeddings")
-        _SEM_PAIRS_CACHE[key] = semantic_dedup_pairs(
+    def build() -> DataFrame:
+        emb = sf_table(spark, sf_dir, "embeddings")
+        return semantic_dedup_pairs(
             emb, "vec_id", "embedding", threshold=_SEM_THRESHOLD, k=_SEM_K
         ).localCheckpoint()
-    return _SEM_PAIRS_CACHE[key]
+
+    return session_memo(spark, "sem_pairs", (sf_dir, _SEM_THRESHOLD, _SEM_K), build, reuse)
 
 
 def _semantic_oracle(k: int = _SEM_K, iters: int = 3, n_assign: int = 2) -> str:
@@ -142,7 +128,7 @@ def dedup_semantic_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gemini_data_wrangler_spark.functions.vectors import cosine_similarity
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     sem = _sem_pairs(spark, sf_dir, reuse=True).select("doc_a", "doc_b")
 
     cand = cosine_pair_candidates(
@@ -301,7 +287,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is band-equi, never batch×corpus."""
     from gemini_data_wrangler_spark.shared_builds import neardup_pairs
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     in_batch = lambda c: (F.col(c) % 7) == 0  # noqa: E731
     pairs = neardup_pairs(spark, sf_dir, reuse=True)
     # Single pass over the pair set: at most one side of a pair can be the
@@ -350,7 +336,7 @@ def diag_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     top_share ≫ 1/shuffle-partitions means the hot key serializes one
     task (→ salt it, `join_salted_skew`) and a tiny n_keys means
     broadcast. Two partial-aggregated shuffles, output is one row."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     c = orders.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n"))
     return c.agg(
         F.count(F.lit(1)).alias("n_keys"),
@@ -390,7 +376,7 @@ def ewma_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence (no closed-form pow() rewriting, which catastrophically
     cancels for long series). Prefix lists are O(n²) per series — fine to
     thousands of points; longer series get segmented two-level folds."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     daily = events.groupBy(
         F.to_date(F.date_trunc("day", "ts")).alias("d")
     ).agg(F.round(F.sum("value"), 6).alias("total"))
@@ -432,7 +418,7 @@ def scalar_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-based position with 0 for absent, element max, slice+reverse). All
     whole-stage-codegen'd row-local expressions; complements the
     string/math/date scalar banks."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     ws = F.split(F.trim("text"), r"\s+")
     d = docs.filter(F.col("doc_id") < 100).select("doc_id", ws.alias("ws"))
     return d.select(
@@ -562,7 +548,7 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gemini_data_wrangler_spark.queries_ext import _ANN_QUERY_IDS
     from gemini_data_wrangler_spark.shared_builds import pq_index
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     idx = pq_index(spark, sf_dir, reuse=False)
     return pq_topk(emb, queries_from_ids(emb, _ANN_QUERY_IDS), k=10, index=idx)
 
@@ -592,7 +578,7 @@ def similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gemini_data_wrangler_spark.queries_ext import _ann_recall_check
     from gemini_data_wrangler_spark.shared_builds import pq_index
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     shortlist = max(100, math.ceil(0.25 * emb.count()))
     # The index is identical to the publisher's; only the SEARCH uses the
     # corpus-adaptive shortlist, so the session-shared (codes, codebook)

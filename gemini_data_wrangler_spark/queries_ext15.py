@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -54,7 +50,7 @@ def sales_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup. The window runs over the AGGREGATED series (hundreds of rows),
     not the fact table — the cheap-by-construction period-over-period
     pattern; the fact-table work is one partial-aggregated shuffle."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     monthly = orders.groupBy(
         F.year("o_orderdate").alias("y"), F.month("o_orderdate").alias("m")
     ).agg(F.round(F.sum("o_totalprice"), 6).alias("revenue"))
@@ -97,7 +93,7 @@ def text_top_bigrams_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     count per (lang, bigram), one ranking window per lang partition.
     At 100 TB the count is the heavy partial-aggregated shuffle; the
     ranking windows run over the (already reduced) per-lang counts."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     ws = F.split(F.trim("text"), r"\s+")
     bigrams = F.expr(
         "transform(sequence(1, size(ws) - 1), i -> concat(ws[i-1], ' ', ws[i]))"
@@ -137,7 +133,7 @@ def histogram_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D equi-width histogram (order month × 50k price bucket) — heatmap
     binning as one groupBy over two derived keys; fully partial-aggregated,
     no UDF, output bounded by bucket-grid size not input rows."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     return orders.groupBy(
         F.to_date(F.date_trunc("month", "o_orderdate")).alias("month"),
         F.floor(F.col("o_totalprice") / _PRICE_BUCKET).alias("price_bucket"),
@@ -216,7 +212,7 @@ def text_normalize_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     to itself), re-join. The map is baked into the plan — zero joins,
     zero shuffles, whole-stage-codegen'd; a dictionary too big for a plan
     literal becomes a broadcast join on the exploded tokens."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     keys = F.array(*[F.lit(k) for k in _ALIASES])
     vals = F.array(*[F.lit(v) for v in _ALIASES.values()])
     amap = F.map_from_arrays(keys, vals)

@@ -28,11 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -62,7 +58,7 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilities. One shuffle to order per user, one to count per
     (from,to); the normalizing window runs over the tiny |types|² count
     table. The input to next-event prediction and anomaly scoring."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
         F.col("event_type").alias("from_type"),
@@ -100,7 +96,7 @@ def agg_filtered_bank(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates replace the N-self-joins anti-pattern ("join the table to
     itself once per condition"). Everything partial-aggregates, so the
     shuffle carries |groups| rows per condition, not data."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.count_if(F.col("o_orderstatus") == "F").alias("n_finished"),
@@ -140,7 +136,7 @@ def feature_scaling_bank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group feature scaling: min-max, z-score, robust (IQR) — each row
     joined against broadcast per-group stats; the stats aggregation is the
     only shuffle, the scaling itself is map-side."""
-    li = _table(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     stats = li.groupBy("l_returnflag").agg(
         F.min("l_quantity").alias("mn"),
         F.max("l_quantity").alias("mx"),
@@ -188,7 +184,7 @@ def feature_hash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     portability seeded hashes lack). Explode + one groupBy; at 100 TB the
     aggregation partial-combines per partition before the (doc, bucket)
     shuffle."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     hexd = "0123456789abcdef"
     tok = (
         docs.filter(F.col("doc_id") < 50)
@@ -239,7 +235,7 @@ def table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identically" check run after cross-engine loads. (Doubles are
     excluded from the serialization: engines disagree on float→string
     formatting; hash them via scaled-integer casts if needed.)"""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     hexd = "0123456789abcdef"
     h = F.md5(
         F.concat_ws(
@@ -301,7 +297,7 @@ def corpus_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     across providers. The heavy input collapses to a |sources|×|langs|
     distribution table in one aggregation; the pairwise grid and the JS
     sum are O(|sources|²·|langs|) on tiny data."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     # Staged once (round 7): the |sources|×|langs| count table feeds five
     # subtrees (totals, dist, and — now derived from it instead of three
     # more document scans — the source/lang axes; every doc contributes a

@@ -21,11 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -54,7 +50,7 @@ def events_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     consecutive days — grouping on it yields the islands. Two shuffles
     total (distinct, ranking+group share the user partitioning); the
     classic replacement for per-user driver loops or self-joins."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     days = events.select(
         "user_id", F.to_date(F.date_trunc("day", "ts")).alias("d")
     ).distinct()
@@ -94,7 +90,7 @@ def events_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative sum runs over the tiny per-day new-user table. The
     windowed-distinct formulation holds O(users) state per frame; this
     one is two partial-aggregated shuffles + a |days|-row window."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     firsts = events.groupBy("user_id").agg(
         F.min(F.to_date(F.date_trunc("day", "ts"))).alias("first_d")
     )
@@ -137,7 +133,7 @@ def events_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile-interpolation fp noise (~1e-16 relative) sits ten orders
     below the 1e-6 rounding grain, so results hash-match (at raw-micros
     magnitude the same noise lands on the rounding boundary)."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     # ts is TIMESTAMP_NTZ in the parquet; unix_micros wants TIMESTAMP. The
     # cast interprets it in the session zone — a fixed offset that cancels
@@ -179,7 +175,7 @@ def dq_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the outlier treatment that keeps rows (unlike dropping screens
     `dq_outlier_zscore`/`dq_outlier_mad`). Exact percentile bounds are a
     tiny per-group table broadcast into a map-side clamp."""
-    li = _table(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     bounds = li.groupBy("l_returnflag").agg(
         F.expr("percentile(l_extendedprice, 0.01)").alias("lo"),
         F.expr("percentile(l_extendedprice, 0.99)").alias("hi"),
@@ -218,7 +214,7 @@ def dq_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     the log10(1+1/d) expectation — the classic fabricated-data /
     unit-mixing detector for financial columns. One digit-extraction
     groupBy; the normalizing window runs over 9 rows."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     digit = F.substring(
         F.floor("o_totalprice").cast("bigint").cast("string"), 1, 1
     ).cast("int")
@@ -271,7 +267,7 @@ def window_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     divide-by-zero built-in `corr` raises under ANSI mode, and the
     identical formula text on both engines keeps results hash-equal.
     Full frames only, so both engines see the same 14-point samples."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.to_date(F.date_trunc("day", "o_orderdate")).alias("d")
     ).agg(

@@ -26,11 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -60,7 +56,7 @@ def langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     classifier into the corpus pipeline."""
     from gemini_data_wrangler_spark.functions.text import language_id
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     pred = docs.select(
         F.col("lang").alias("actual"), language_id(F.col("text")).alias("predicted")
     )
@@ -106,7 +102,7 @@ def embedding_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     after k-means. Two partial-aggregated passes (per-(label,dim) means,
     then per-vector distances against the broadcast centroid table);
     everything keyed, nothing driver-side."""
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "label",
         "vec_id",
@@ -161,7 +157,7 @@ def events_dedup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming `dropDuplicatesWithinWatermark` (same bounded-state
     semantics: one prior timestamp per key). One lag window, no
     self-join; the filter is `WHERE NOT is_dup`."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     gap = us - F.lag(us).over(w)
@@ -208,7 +204,7 @@ def dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gemini_data_wrangler_spark.operators.dedup import connected_components
     from gemini_data_wrangler_spark.shared_builds import neardup_pairs
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     pairs = neardup_pairs(spark, sf_dir, reuse=True)
     comp = connected_components(pairs)
     return (

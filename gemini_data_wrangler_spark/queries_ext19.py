@@ -25,11 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import load_sf_tables, sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -73,7 +69,7 @@ def attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate; at 100 TB bucket both sides to (user, 30-min bin) first
     (`operators/temporal.py` range_join shape) so candidates are
     bin-local, never clicks×purchases."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     p = events.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", us.alias("pus")
@@ -127,7 +123,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket identically). The fact table collapses to |customers| rows
     BEFORE the ntile windows — at extreme scale replace ntile's global
     sort with equi-depth histogram bucket joins."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     anchor = orders.agg(F.max("o_orderdate").alias("mx"))
     rfm = (
         orders.groupBy("o_custkey")

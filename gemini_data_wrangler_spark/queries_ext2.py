@@ -14,11 +14,7 @@ from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.operators.temporal import asof_join, range_join_count
 from gemini_data_wrangler_spark.queries import register, run_stages
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import load_sf_tables, sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -344,7 +340,7 @@ def topk_expensive_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def count_distinct_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -368,7 +364,7 @@ def count_distinct_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Sketch bits differ per engine, so the hash-checked contract is the
     # GUARANTEE: each engine's own estimate must sit within 3×rsd of the
     # shared exact anchor — a mismatch means someone's HLL math broke.
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.count_distinct("o_custkey").alias("n_customers_exact"),
         (
@@ -397,7 +393,7 @@ def count_distinct_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         *[
             F.round(F.expr(f"percentile(o_totalprice, {q})"), 4).alias(f"p{int(q * 100)}")
@@ -425,7 +421,7 @@ def percentile_approx_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Sketches differ per engine, so the hash-checked contract is the rank
     # guarantee: each engine's own estimate must land inside the exact
     # ±0.01-quantile envelope around the target rank.
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
         F.expr(
@@ -460,7 +456,7 @@ def percentile_approx_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def asof_purchase_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
     )
@@ -487,7 +483,7 @@ def asof_purchase_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def range_clicks_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     clicks = events.filter(F.col("event_type") == "click").select("user_id", "ts", "value")
     out = range_join_count(

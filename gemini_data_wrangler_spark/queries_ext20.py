@@ -22,11 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -75,7 +71,7 @@ def timeseries_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     value. One series-ordered sort; per-key time series shard the same
     windows by key (`timeseries_gapfill` shows the zero/forward-fill
     variants on the same spine)."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     daily = (
         events.filter(F.col("event_type") == "purchase")
         .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("d"))
@@ -139,7 +135,7 @@ def events_disorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     disorder → wider streaming watermarks / late-data allowances. One
     lag window + groupBy; users under 50 events are dropped to keep the
     ratio meaningful."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
         "user_id", "event_id", F.lag("event_id").over(w).alias("prev_id")
@@ -188,7 +184,7 @@ def users_behavior_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     count the 2³ flag combinations and name the marketing segment. The
     'did A and B but not C' audience is a filter over this table,
     never an INTERSECT/EXCEPT of user-id sets."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     flags = events.groupBy("user_id").agg(
         F.bool_or(F.col("event_type") == "view").alias("did_view"),
         F.bool_or(F.col("event_type") == "click").alias("did_click"),
@@ -241,7 +237,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     content they contribute. Explode spans once, derive the shared-span
     set with a groupBy, left-join back, aggregate per doc — all linear
     and span-keyed (hash the span to a long at scale)."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     ws = F.split(F.trim("text"), r"\s+")
     spans_expr = F.expr(
         f"transform(sequence(1, size(ws) - {_NOV_N - 1}),"

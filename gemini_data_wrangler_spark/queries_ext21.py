@@ -22,11 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import load_sf_tables, sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -63,7 +59,7 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     the payback-curve table growth analytics reads. The fact table
     collapses to cohort×age cells in one aggregation; the cumulative
     window runs over that grid, partitioned by cohort."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     day = F.to_date(F.date_trunc("day", "ts"))
     firsts = events.groupBy("user_id").agg(F.min(day).alias("cohort_day"))
     size = firsts.groupBy("cohort_day").agg(F.count(F.lit(1)).alias("n_users"))
@@ -199,7 +195,7 @@ def running_balance_clamped(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit 0 (DuckDB's seedless list_reduce gets the 0 prepended), the
     identical fp sequence on both engines. Same O(n²)-prefix-list caveat
     and segmenting remedy as `ewma_daily_value`."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     net = F.when(F.col("event_type") == "purchase", F.col("value")).otherwise(
         -F.col("value") / 4
     )

@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -62,7 +58,7 @@ def dq_mahalanobis_diag(spark: SparkSession, sf_dir: str) -> DataFrame:
     unremarkable per-column but jointly improbable. Broadcast per-group
     moments, map-side distance; the full-covariance variant adds the
     Cholesky factors to the same broadcast table."""
-    li = _table(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     stats = li.groupBy("l_returnflag").agg(
         F.avg("l_quantity").alias("mu_q"),
         F.var_samp("l_quantity").alias("var_q"),
@@ -116,7 +112,7 @@ def profile_column_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     column profile: ~0 flags near-constant columns, ~1 uniform ones.
     One stacked union + two aggregations; cardinalities stay small by
     construction (categorical profiling)."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     s = orders.select(
         F.col("o_orderstatus").alias("val"), F.lit("o_orderstatus").alias("col")
     ).unionAll(
@@ -174,7 +170,7 @@ def dq_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing or training on user-adjacent tables. One aggregation over
     the quasi-identifier; remediation (generalize or suppress) applies
     to exactly the flagged classes."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     groups = cust.groupBy("c_mktsegment", "c_nationkey").agg(
         F.count(F.lit(1)).alias("group_size")
     )
@@ -224,7 +220,7 @@ def customer_trend_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≥10 orders. regr_slope partial-aggregates per customer in one
     shuffle; the top-k is TakeOrderedAndProject. The per-entity trend
     screen behind churn/expansion alerts."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     x = F.datediff(F.to_date(F.date_trunc("day", "o_orderdate")), F.lit("1995-01-01").cast("date"))
     pts = orders.select("o_custkey", x.cast("double").alias("x"), F.col("o_totalprice").alias("y"))
     slopes = (

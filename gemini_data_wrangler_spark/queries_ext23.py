@@ -21,11 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import load_sf_tables, sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -63,7 +59,7 @@ def pit_join_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity-equi join with the interval predicate evaluated row-local.
     Facts landing exactly on a change date resolve to the NEW interval
     (>= from, < to) — the standard convention."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     chg = orders.withColumn("prev", F.lag("o_orderstatus").over(w)).filter(
         F.col("prev").isNull() | (F.col("prev") != F.col("o_orderstatus"))
@@ -117,7 +113,7 @@ def events_paths_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     'what do users do right before converting'. Two lag windows share
     one (user, time) sort; the path groupBy runs over |purchases| rows;
     top-k is TakeOrderedAndProject."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
         "event_type",
@@ -209,7 +205,7 @@ def customer_order_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the ordering is total.  The arrays are serialized with
     `array_join` (values at a pinned DECIMAL(18,6) scale) so every output
     column is a scalar the driver's pandas canonicalizer can hash."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     triple = F.struct(
         F.col("o_orderdate").alias("d"),
         F.col("o_orderkey").alias("k"),

@@ -38,11 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -89,7 +85,7 @@ def layout_zorder_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-locally from it."""
     from gemini_data_wrangler_spark.operators.window import distributed_ntile
 
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     keyed = orders.select(
         "o_orderkey",
         F.expr("o_custkey & 65535").alias("ck"),
@@ -150,7 +146,7 @@ def layout_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate range. One map-side-combined aggregation; this is the
     footer-stats data-skipping mechanism that turns a 100 TB range scan
     into a handful of files."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     return orders.groupBy(
         F.date_trunc("month", F.to_date("o_orderdate")).cast("date").alias("zone")
     ).agg(
@@ -194,7 +190,7 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-file maintenance job (the write itself is
     ``repartitionByRange(keys) + maxRecordsPerFile``). One window + one
     aggregate, both partition-local after a single hash shuffle."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy("o_orderkey")
     numbered = orders.select(
         F.col("o_orderpriority").alias("part"),
@@ -237,7 +233,7 @@ def sketch_hll_intersection_check(spark: SparkSession, sf_dir: str) -> DataFrame
     3σ on each term (σ = rsd·true), asserted against the exact counts.
     The oracle recomputes the exact set algebra and pins ``bound_ok``;
     a hash mismatch means the estimator left its guarantee."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     d = F.to_date("o_orderdate")
     in_a = d.between(F.lit("1995-01-01"), F.lit("1996-12-31"))
     in_b = d.between(F.lit("1997-01-01"), F.lit("1998-12-31"))
@@ -317,7 +313,7 @@ def text_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     handful of scalars broadcast back; scoring is one partial-aggregated
     groupBy + TakeOrderedAndProject for the top-k. Linear in corpus
     tokens, no UDFs."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("w")
     )
@@ -404,7 +400,7 @@ def text_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out per shingle — SCALE.md's 10× crawl-clone run shows why) →
     shared counts per ordered pair → divide by the contained side's kept
     shingle count."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.split(F.trim(F.lower("text")), r"\s+").alias("t")
     ).filter(F.size("t") >= 3)

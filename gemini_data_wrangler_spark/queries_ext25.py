@@ -34,11 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -68,7 +64,7 @@ def timeseries_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     that doesn't page you every Saturday for being quieter than Friday.
     Two map-side-combined aggregations and a broadcast join of the 7-row
     baseline; the raw event table is touched once."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     daily = events.groupBy(
         F.to_date("ts").alias("d"), F.dayofweek(F.to_date("ts")).alias("dow")
     ).agg(F.round(F.sum("value"), 6).alias("day_value"))
@@ -121,7 +117,7 @@ def feature_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-depth histogram boundaries + interpolation."""
     from gemini_data_wrangler_spark.operators.window import two_level_rank
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     n_docs = docs.count()
     ranked = docs.select(
         "doc_id",
@@ -175,7 +171,7 @@ def dq_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing half (a large group where everyone shares one sensitive value
     still discloses it). One distinct-count aggregation; pairs with
     `dq_k_anonymity` as the release gate."""
-    customer = _table(spark, sf_dir, "customer")
+    customer = sf_table(spark, sf_dir, "customer")
     band = (
         F.when(F.col("c_acctbal") < 0, "negative")
         .when(F.col("c_acctbal") < 5000, "low")
@@ -223,7 +219,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributedly FIRST (orderBy+limit → TakeOrderedAndProject, each
     task keeps a local top-1k) so the ranking window's single-task frame
     is constant-bounded — never the corpus-growing full vocabulary."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     freq = (
         docs.select(
             F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("w")
@@ -272,8 +268,8 @@ def join_band_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume is linear in the true match density — the same quantize-and-
     probe trick the LSH/IVF kernels use, applied to a scalar column.
     The oracle states the naive predicate; results are identical."""
-    supplier = _table(spark, sf_dir, "supplier")
-    customer = _table(spark, sf_dir, "customer")
+    supplier = sf_table(spark, sf_dir, "supplier")
+    customer = sf_table(spark, sf_dir, "customer")
     s = supplier.select(
         "s_suppkey",
         "s_acctbal",

@@ -28,11 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -80,7 +76,7 @@ def ops_backfill_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     has no true gaps, so the plan is usually empty — row-count zero IS
     the assertion that ingestion is complete (the test fabricates gaps to
     prove the island logic)."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     present = (
         events.filter(F.col("event_type").isin("signup", "purchase"))
         .select("event_type", F.to_date("ts").alias("d"))
@@ -134,7 +130,7 @@ def window_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame
     window. Work scales with |user-days| × width; the raw event table is
     read exactly once. (The streaming mirror of this shape is an HLL
     sketch per day merged across the window — `sketch_hll_mergeable`.)"""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     ud = events.select("user_id", F.to_date("ts").alias("d")).distinct()
     days = ud.select("d").distinct().select(F.col("d").alias("window_end"))
     return (
@@ -182,7 +178,7 @@ def events_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     The pairing is a range join grouped per purchase; percentiles are one
     global aggregate. Delays are integer seconds, so percentile
     interpolation is exact in double math on both engines."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     purch = events.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("p_ts")
     )
@@ -249,7 +245,7 @@ def ops_watermark_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
     window), block maxima prefix-maxed over the tiny block table, then
     combined — a global ORDER BY window would drag every event through
     one partition; this never does."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     # Staged once (round 7): `blk` feeds BOTH the within-block window and
     # the block-maxima aggregate — unpersisted, the events scan +
     # timestamp decode ran twice. Narrow 4-column frame, eager blocks.

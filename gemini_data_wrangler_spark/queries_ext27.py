@@ -29,11 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -102,7 +98,7 @@ def vocab_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gemini_data_wrangler_spark.operators.bpe import train_bpe_merges
 
     return train_bpe_merges(
-        _table(spark, sf_dir, "documents"), n_merges=_BPE_MERGES
+        sf_table(spark, sf_dir, "documents"), n_merges=_BPE_MERGES
     )
 
 
@@ -126,7 +122,7 @@ def vocab_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrink this number — `tests/test_ext27.py` asserts
     n_tokens(after k merges) ≤ n_seed_symbols row-wise and that the total
     reduction equals what the merge pair-counts predict."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     words = F.split(F.trim(F.lower("text")), r"\s+")
     return docs.select(
         "doc_id",
@@ -174,7 +170,7 @@ def privacy_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed PRF for a production secret. The true count never leaves this
     query; only the noisy value is released (the oracle carries it too,
     purely to pin the mechanism)."""
-    customer = _table(spark, sf_dir, "customer")
+    customer = sf_table(spark, sf_dir, "customer")
     g = customer.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("true_count")
     )
@@ -219,5 +215,5 @@ def multimodal_audio_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_assets,
     )
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     return audio_duration(synthesize_assets(docs, "doc_id"))

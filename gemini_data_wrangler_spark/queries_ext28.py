@@ -28,11 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -81,7 +77,7 @@ def forecast_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-element array accumulator; the level-update is inlined twice in
     the trend-update so both engines execute the identical fp sequence
     (same exact-recursion contract as `ewma_daily_value`)."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     daily = events.groupBy(
         F.to_date(F.date_trunc("day", "ts")).alias("d")
     ).agg(F.round(F.sum("value"), 6).alias("total"))
@@ -137,7 +133,7 @@ def sketch_quantile_histogram_check(spark: SparkSession, sf_dir: str) -> DataFra
     estimate's error is bounded by one bin width; ``bound_ok`` asserts
     |est − exact| ≤ bin_width against the exact quantile. The oracle
     recomputes the exact side and pins TRUE."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     width = (_QS_HI - _QS_LO) / _QS_BINS
     binned = orders.select(
         F.least(
@@ -247,7 +243,7 @@ def events_reach_hll_sliding_check(spark: SparkSession, sf_dir: str) -> DataFram
     rebuilt, a new day only adds one. ``bound_ok`` asserts the estimate
     within 3 standard errors (rse ≈ 1.04/√2^lgK) of the exact reach,
     which the oracle recomputes exactly and pins TRUE."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     daily = events.select("user_id", F.to_date("ts").alias("d")).groupBy(
         "d"
     ).agg(F.hll_sketch_agg("user_id", F.lit(_HLL_LGK)).alias("sk"))

@@ -19,11 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -62,7 +58,7 @@ def inventory_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     window even at extreme part counts."""
     from gemini_data_wrangler_spark.operators.window import two_level_cumsum
 
-    li = _table(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_partkey").agg(
         F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 6).alias(
             "revenue"
@@ -123,7 +119,7 @@ def events_stickiness_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling distincts are bounded range joins over that tiny table
     (`window_sliding_distinct_users`' shape at two widths; the sketch
     variant `events_reach_hll_sliding_check` covers the streaming path)."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     ud = events.select("user_id", F.to_date("ts").alias("d")).distinct()
     days = ud.select("d").distinct().select(F.col("d").alias("we"))
     dau = ud.groupBy("d").agg(F.count_distinct("user_id").alias("dau"))
@@ -187,8 +183,8 @@ def market_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     concentration screen, and operationally the same math that flags a
     partition key whose value distribution will skew a shuffle
     (`diag_key_skew`'s economic cousin)."""
-    orders = _table(spark, sf_dir, "orders")
-    customer = _table(spark, sf_dir, "customer")
+    orders = sf_table(spark, sf_dir, "orders")
+    customer = sf_table(spark, sf_dir, "customer")
     sales = (
         orders.join(customer, orders["o_custkey"] == customer["c_custkey"])
         .groupBy("c_mktsegment", "c_nationkey")

@@ -29,11 +29,8 @@ from gemini_data_wrangler_spark.operators.dedup import (
     ngram_jaccard_oracle_sql,
 )
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.session import session_memo
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -69,7 +66,7 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     LLM training corpora. Two explode→agg passes (tokens, bigrams) joined on
     doc_id; at 100 TB both shuffles key on doc_id so AQE co-partitions the
     final join."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
     tok_stats = (
         toks.select("doc_id", F.explode("t").alias("w"))
@@ -140,7 +137,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     match counts and an md5 of the scrubbed text proving byte-identical
     redaction against the oracle. One codegen'd projection — no shuffle, no
     UDF; scales embarrassingly."""
-    docs = _table(spark, sf_dir, "documents").withColumn("_aug", _aug_text())
+    docs = sf_table(spark, sf_dir, "documents").withColumn("_aug", _aug_text())
     counts = pii_counts(F.col("_aug"))
     return docs.select(
         "doc_id",
@@ -172,7 +169,7 @@ def text_url_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain histogram over extracted URLs — the provenance/robots audit
     every web-scale corpus needs. Projection + one partial-aggregated
     shuffle on domain (low cardinality → tiny exchange)."""
-    docs = _table(spark, sf_dir, "documents").withColumn(
+    docs = sf_table(spark, sf_dir, "documents").withColumn(
         "_aug",
         F.concat(
             F.col("text"),
@@ -207,7 +204,7 @@ def sample_deterministic_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine, every run, every cluster size — the reproducibility property
     seeded sampling cannot give across engines. Pure filter: pushed to the
     scan, no shuffle."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     return orders.filter(F.md5(F.col("o_orderkey").cast("string")) < "2a").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -232,7 +229,7 @@ def sample_stratified_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (50% urgent, 25% high, ~10% rest) — the down-weight-by-source knob of
     corpus mixing, reproducible across engines. Filter + one tiny
     aggregation shuffle."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     threshold = (
         F.when(F.col("o_orderpriority") == "1-URGENT", F.lit("80"))
         .when(F.col("o_orderpriority") == "2-HIGH", F.lit("40"))
@@ -328,7 +325,7 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     Explode → partial-aggregated shuffle → TakeOrderedAndProject (top-k
     never materializes the full sort at scale). Total order (count desc,
     bigram asc) makes the cut deterministic."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     toks = docs.select(F.split(F.trim("text"), r"\s+").alias("t"))
     return (
         toks.select(F.explode(word_bigrams(F.col("t"))).alias("bigram"))
@@ -360,7 +357,7 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gemini_data_wrangler_spark.streaming.events import streaming_click_purchase_join
 
-    events = _table(spark, sf_dir, "events").withColumn("ts", F.col("ts").cast("timestamp"))
+    events = sf_table(spark, sf_dir, "events").withColumn("ts", F.col("ts").cast("timestamp"))
     return streaming_click_purchase_join(
         events.filter(F.col("event_type") == "click"),
         events.filter(F.col("event_type") == "purchase"),
@@ -388,7 +385,7 @@ def agg_stats_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second-moment aggregates + exact median — single partial-aggregated
     shuffle (median is the exception: exact percentile needs the group's
     values together; Spark plans it as a sort-based aggregate per group)."""
-    li = _table(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.stddev_samp("l_quantity"), 6).alias("sd_qty"),
         F.round(F.var_pop("l_quantity"), 6).alias("var_qty"),
@@ -415,7 +412,7 @@ def agg_stats_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scalar_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 1000)
+    o = sf_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 1000)
     return o.select(
         "o_orderkey",
         F.year("o_orderdate").alias("y"),
@@ -444,7 +441,7 @@ def scalar_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scalar_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _table(spark, sf_dir, "customer").filter(F.col("c_custkey") < 500)
+    c = sf_table(spark, sf_dir, "customer").filter(F.col("c_custkey") < 500)
     return c.select(
         "c_custkey",
         F.upper("c_name").alias("up"),
@@ -477,7 +474,7 @@ def scalar_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scalar_math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _table(spark, sf_dir, "part").filter(F.col("p_partkey") < 400)
+    p = sf_table(spark, sf_dir, "part").filter(F.col("p_partkey") < 400)
     return p.select(
         "p_partkey",
         F.abs(F.col("p_retailprice") - 1000).alias("dev"),
@@ -598,29 +595,19 @@ GROUP BY cell_id, pos"""
     )
 
 
-# Session-scoped memo for the final-assignment stats frame: the
-# `embedding_kmeans` publisher always builds fresh (its bench timing stays
-# an honest measurement of the Lloyd pipeline) and refreshes the memo; the
-# `embedding_kmeans_members` diagnostic sibling reuses the latest build —
-# same publisher/gate amortization as the SemDeDup pair memo
-# (queries_ext14._SEM_PAIRS_CACHE). Keyed by Spark application id + sf_dir;
-# stale apps pruned on insert; the checkpointed frame is k·dim rows.
-_KMEANS_STATS_CACHE: dict = {}
-
-
+# Session memo for the final-assignment stats frame (shared_builds
+# contract): the `embedding_kmeans` publisher always builds fresh and the
+# `embedding_kmeans_members` diagnostic sibling reuses the latest build.
+# The frame is k·dim rows; kmeans_lloyd checkpoints its own state, so the
+# build adds no checkpoint.
 def _kmeans_stats(spark: SparkSession, sf_dir: str, reuse: bool) -> DataFrame:
     from gemini_data_wrangler_spark.operators.similarity import kmeans_lloyd
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, 8, 3)
-    if not reuse or key not in _KMEANS_STATS_CACHE:
-        for stale in [k for k in _KMEANS_STATS_CACHE if k[0] != app]:
-            del _KMEANS_STATS_CACHE[stale]
-        emb = _table(spark, sf_dir, "embeddings")
-        _KMEANS_STATS_CACHE[key] = kmeans_lloyd(
-            emb, k=8, max_iter=3, return_stats=True
-        )
-    return _KMEANS_STATS_CACHE[key]
+    def build() -> DataFrame:
+        emb = sf_table(spark, sf_dir, "embeddings")
+        return kmeans_lloyd(emb, k=8, max_iter=3, return_stats=True)
+
+    return session_memo(spark, "kmeans_stats", (sf_dir, 8, 3), build, reuse)
 
 
 @register("embedding_kmeans", _kmeans_oracle())
@@ -703,7 +690,7 @@ def sketch_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     error guarantee: every estimate (including the merged 'ALL' row,
     which in Spark comes ONLY from `hll_union_agg` over the per-group
     sketches) must sit within 5% of the shared exact anchor."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     # Eagerly materialize the 5-row sketch table: seg_est and the merged
     # global_est branch both consume it, and a lazy plan would re-scan and
     # re-sketch the fact table once per branch.

@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -58,7 +54,7 @@ def ops_backlog_sweepline(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders — O(n) versus the day×interval range join's O(n·days). The
     raw table collapses to per-day deltas FIRST (map-side combined), so
     the running-sum window scans only the tiny date spine."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     iv = orders.select(
         F.to_date("o_orderdate").alias("open_d"),
         F.date_add(
@@ -110,7 +106,7 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the tiny hour table) — the global ORDER BY window the oracle
     states would drag every point through one partition at 100 TB;
     this shape never does."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     up = events.select(F.col("ts").alias("t"), F.lit(1).alias("delta"))
     down = events.select(
         F.expr(f"ts + INTERVAL {_CONC_HOLD_S} SECOND").alias("t"),
@@ -175,7 +171,7 @@ def join_nearest_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the per-user time-band join; the argmin is one window per
     anchor. At 100 TB band the join by coarse time bucket exactly like
     `join_band_acctbal` quantizes a scalar."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     us = lambda c: F.unix_micros(F.col(c).cast("timestamp"))  # noqa: E731
     p = events.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", us("ts").alias("pus")

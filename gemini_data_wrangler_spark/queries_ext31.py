@@ -22,11 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -80,7 +76,7 @@ def corpus_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_remaining) every corpus-prep run logs. Stage costs are the
     already-scaled shapes: two hash aggregations, then the
     inverted-index containment join on the (smaller) stage-2 corpus."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     # Stage survivors and the shingle set are each consumed by several
     # downstream subtrees AND by their own funnel count action (round 7):
     # unpersisted, s1/s2 re-ran per consumer and the shingle
@@ -205,7 +201,7 @@ def customer_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     in Spark and −inf in DuckDB, so neither engine's quirk is relied
     on). Everything after the per-customer lead window is
     metadata-sized."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     o = orders.select(
         F.to_date("o_orderdate").alias("d"),
@@ -281,7 +277,7 @@ def events_user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     window anywhere."""
     from gemini_data_wrangler_spark.operators.window import two_level_rank
 
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     per_user = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("x"))
     totals = per_user.agg(
         F.count(F.lit(1)).alias("n"), F.sum("x").alias("tot")

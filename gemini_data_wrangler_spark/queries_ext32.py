@@ -21,11 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -68,7 +64,7 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     up as a nonzero orphan count before anything joins silently to
     null). Each edge is one anti join + one count, keyed and
     broadcast-friendly."""
-    t = {n: _table(spark, sf_dir, n) for n in
+    t = {n: sf_table(spark, sf_dir, n) for n in
          ("orders", "lineitem", "customer", "nation", "part")}
     edges = [
         ("orders->customer", t["orders"], "o_custkey", t["customer"], "c_custkey"),
@@ -128,8 +124,8 @@ def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_FRESH_SLA_DAYS}-day SLA — the staleness read that catches a
     silently-stalled ingestion before a training snapshot is cut.
     One scan-local max per source."""
-    orders = _table(spark, sf_dir, "orders")
-    events = _table(spark, sf_dir, "events")
+    orders = sf_table(spark, sf_dir, "orders")
+    events = sf_table(spark, sf_dir, "events")
     src = orders.agg(
         F.lit("orders").alias("source"),
         F.max(F.to_date("o_orderdate")).alias("latest"),
@@ -179,7 +175,7 @@ def embedding_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(label,dim) centroid pass as `embedding_label_stats`, one extra
     per-label moment pass, then a row-local screen; the centroid and
     stats tables are broadcast-sized at any corpus scale."""
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "label",
         "vec_id",

@@ -21,11 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -60,7 +56,7 @@ def multimodal_image_channel_stats(spark: SparkSession, sf_dir: str) -> DataFram
         synthesize_assets,
     )
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     stats = image_channel_stats(synthesize_assets(docs, "doc_id"))
     return stats.select(
         "asset_id",
@@ -101,7 +97,7 @@ def multimodal_video_frame_luminance(spark: SparkSession, sf_dir: str) -> DataFr
         video_frame_luminance,
     )
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     return video_frame_luminance(synthesize_assets(docs, "doc_id"))
 
 

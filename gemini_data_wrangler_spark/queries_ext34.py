@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -63,7 +59,7 @@ def timeseries_decompose_classical(spark: SparkSession, sf_dir: str) -> DataFram
     sibling: `timeseries_seasonal_anomaly` flags, this answers "is it
     trend, weekday shape, or genuinely unexplained?". All windows run
     over the per-day rollup; the seasonal table is 7 rows broadcast."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     daily = events.groupBy(
         F.to_date("ts").alias("d"), F.dayofweek(F.to_date("ts")).alias("dow")
     ).agg(F.round(F.sum("value"), 6).alias("observed"))
@@ -133,7 +129,7 @@ def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exposes the full matrix, and `text_ngram_novelty`'s corpus
     analogue). One lead window over events, then two aggregations over
     the tiny transition table."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
         F.col("event_type").alias("s"),

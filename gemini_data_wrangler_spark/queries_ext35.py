@@ -19,11 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -70,7 +66,7 @@ def users_bot_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Flag on either. One lag window + two per-user aggregates; the
     corpus-level mirrors are `events_interarrival_stats` and
     `events_entropy_rate`."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     seq = events.select(
@@ -151,7 +147,7 @@ def corpus_ks_drift_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     first — the cumulative window never sees raw rows); compare
     `corpus_source_divergence` (JS on binned histograms) for the
     k-sample variant."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     a = docs.filter(F.col("source") == _KS_A).select(F.col("n_chars").alias("v"))
     b = docs.filter(F.col("source") == _KS_B).select(F.col("n_chars").alias("v"))
     n_a, n_b = a.count(), b.count()

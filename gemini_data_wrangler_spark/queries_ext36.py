@@ -18,11 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -58,7 +54,7 @@ def multimodal_audio_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_assets,
     )
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     stats = audio_sample_stats(synthesize_assets(docs, "doc_id"))
     return stats.select(
         "asset_id",
@@ -96,7 +92,7 @@ def dq_chi_square_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     contingency table is tiny after one grouped count; compare chi2 to
     the χ²(dof) quantile offline (the CDF needs the incomplete gamma,
     which neither engine exposes — dof and N ship alongside)."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     obs = orders.groupBy(
         F.col("o_orderpriority").alias("p"),
         F.year(F.to_date("o_orderdate")).alias("y"),

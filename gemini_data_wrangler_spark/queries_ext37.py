@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -72,7 +68,7 @@ def sketch_minhash_estimate_check(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     from gemini_data_wrangler_spark.shared_builds import neardup_pairs
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     # Pair set from the LSH+exact-verify path (pair-set exactness at the
     # 0.8 pipeline threshold is itself oracle-proven by dedup_minhash_lsh)
     # — the PPJoin exact join at lower thresholds degenerates on
@@ -168,7 +164,7 @@ def dq_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     first invalidity check an experimentation platform runs — an honest
     hash split on real traffic must NOT trip it. One distinct + one
     aggregate."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     grp = (
         F.conv(
             F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10

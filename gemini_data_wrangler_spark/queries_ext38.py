@@ -13,11 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 @register(
@@ -46,7 +42,7 @@ def window_distribution_functions(spark: SparkSession, sf_dir: str) -> DataFrame
     analytics-surface functions the core window bank doesn't already
     pin. Total ordering in the spec makes every value deterministic;
     one exchange per partition spec."""
-    orders = _table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)
+    orders = sf_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)
     w = Window.partitionBy("o_orderstatus").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
     )
@@ -78,7 +74,7 @@ def agg_boolean_bank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean aggregate bank: bool_and / bool_or (the every/any
     predicates data-quality rules compile to) plus a FILTER'd count —
     one map-side-combined pass."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.bool_and(F.col("o_totalprice") > 1000).alias("all_over_1k"),
         F.bool_or(F.col("o_totalprice") > 400000).alias("any_over_400k"),
@@ -109,7 +105,7 @@ def scalar_bitwise_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins: DuckDB spells bitwise xor as the ``xor()`` function (its ``^``
     is POWER), Spark spells it infix ``^`` — the CUSTOM shim refuses
     ``^`` for that reason (plans/dialect.py)."""
-    orders = _table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 1000)
+    orders = sf_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 1000)
     return orders.select(
         "o_orderkey",
         F.expr("o_orderkey & 255").alias("low_byte"),

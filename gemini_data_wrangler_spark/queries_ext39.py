@@ -18,11 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -64,7 +60,7 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ranking window; the LSH/IVF tiers bound candidates at scale."""
     from gemini_data_wrangler_spark.functions.vectors import cosine_similarity
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id").isin(*_RANGE_QUERY_IDS)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("_q")
     )
@@ -112,7 +108,7 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     fertility accounting). Vocabulary = one TakeOrderedAndProject over
     word counts, broadcast back; the per-doc rate is one aggregated
     left-join membership pass over exploded tokens."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     w = docs.select(
         "doc_id", F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("t")
     )

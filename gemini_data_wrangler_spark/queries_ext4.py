@@ -14,11 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register, run_stages
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -228,7 +224,7 @@ def fuzzy_match_customer_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     (zip, domain, …) — the shape (equi-join block + cheap verify filter)
     stays the same; an unblocked fuzzy join is quadratic and not shippable.
     """
-    cust = _table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
+    cust = sf_table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
     # The verify stage is O(|block|²) compute against an O(n) scan: spread
     # the probe side across the cluster BEFORE the broadcast join, or a
     # one-file/one-split input serializes every levenshtein onto one task.
@@ -321,7 +317,7 @@ def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     global SortAggregate needs no ordering) — two cheap scans instead of
     one sorted one. The two 1-row results cross-join back and pivot to
     per-column rows with an explode of literals (driver-free, no collect)."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     minmax = []
     for c, kind in _PROFILE_COLS:

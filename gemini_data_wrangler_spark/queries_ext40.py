@@ -21,11 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 _H_ORDER = 16  # 16-bit coords → 2^32 curve positions
@@ -138,7 +134,7 @@ def layout_hilbert_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         two_level_rank,
     )
 
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     keyed = orders.select(
         "o_orderkey",
         F.expr("o_custkey & 65535").alias("ck"),

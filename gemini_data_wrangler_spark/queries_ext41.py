@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -79,7 +75,7 @@ def forecast_holt_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     as MAPE and RMSE against the realized totals. The evaluation every
     capacity forecast needs before anyone trusts it; one lag window
     over the per-day table plus one aggregate."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     daily = events.groupBy(
         F.to_date(F.date_trunc("day", "ts")).alias("d")
     ).agg(F.round(F.sum("value"), 6).alias("total"))
@@ -176,7 +172,7 @@ def text_compression_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-exactness stays pinned by the unit test.
 
     Output: doc_id, raw_bytes, bound_ok."""
-    docs = _table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = sf_table(spark, sf_dir, "documents").select("doc_id", "text")
     out = compression_signal_frame(docs)
     return out.select(
         "doc_id",

@@ -32,11 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -89,7 +85,7 @@ def chunk_content_defined(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc running-sum window to number chunks, one hash aggregate to
     re-assemble them (sorted collect keeps token order deterministic),
     one aggregate for the stats — linear in tokens, no driver state."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     tok = (
         docs.select(
             "doc_id",
@@ -185,7 +181,7 @@ def text_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints collide with other docs — the plagiarism/near-dup
     signal. Per-doc windows + one equi-join on fp_hash; linear in
     tokens, bucketed at scale like the MinHash band join."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     ws = F.split(F.trim(F.lower("text")), r"\s+")
     grams = F.expr(
         f"transform(sequence(1, size(ws) - {_WIN_K - 1}),"
@@ -276,7 +272,7 @@ def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     word (the rarest word's list bounds the join), instead of re-scanning
     text; the oracle reproduces the result with a sliding trigram window.
     The top phrase itself is one TakeOrderedAndProject, broadcast back."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
         F.posexplode(F.split(F.trim(F.lower("text")), r"\s+")).alias("pos", "t"),

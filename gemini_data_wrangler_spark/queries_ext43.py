@@ -27,11 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -73,7 +69,7 @@ def feature_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     min(H) ⇒ one determines the other). Three bounded-domain hash
     aggregates and a broadcast-size reduction; the scan collapses
     map-side, so cost is one pass regardless of row count."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     joint = orders.groupBy(
         F.col("o_orderpriority").alias("x"), F.col("o_orderstatus").alias("y")
     ).agg(F.count(F.lit(1)).alias("nxy"))
@@ -143,7 +139,7 @@ def profile_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. The multicollinearity screen that precedes any feature
     engineering — adding columns widens the aggregate, never adds
     scans. The oracle recomputes each pair independently."""
-    li = _table(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     pairs = [
         (a, b) for i, a in enumerate(_CORR_COLS) for b in _CORR_COLS[i + 1 :]
     ]
@@ -193,7 +189,7 @@ def dq_functional_dependency(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by LHS cardinality and AQE splits skewed LHS keys."""
     out = None
     for tbl, lhs, rhs in _FD_CANDIDATES:
-        t = _table(spark, sf_dir, tbl)
+        t = sf_table(spark, sf_dir, tbl)
         g = t.groupBy(lhs).agg(F.countDistinct(rhs).alias("nd"))
         row = g.agg(
             F.count(F.lit(1)).alias("n_groups"),
@@ -241,7 +237,7 @@ def dq_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     noise). Per-group sufficient statistics (n, mean, sum of squares)
     in one partial-aggregated pass, then a constant-size reduction —
     the textbook map-side-combine shape, identical at any scale."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     g = orders.groupBy(F.col("o_orderpriority").alias("grp")).agg(
         F.count(F.lit(1)).alias("n"),
         F.avg("o_totalprice").alias("m"),

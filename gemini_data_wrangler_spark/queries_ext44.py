@@ -23,11 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # Shared scored-and-labeled view: quality score vs "is English" label.
@@ -44,7 +40,7 @@ _STOPWORDS = "'the','a','of','and','to','in','is','that','it','for'"
 
 
 def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.lower("text")), r"\s+")
     stop_hits = F.size(
         F.filter(
@@ -212,7 +208,7 @@ def quality_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     agreement po flatters raters that both say "keep" to everything).
     One aggregate produces the 2×2 contingency counts; kappa is
     constant-size arithmetic on top."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.lower("text")), r"\s+")
     stop_hits = F.size(
         F.filter(
@@ -278,7 +274,7 @@ def dq_effect_size_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     KS/chi-square screens say WHETHER distributions differ; d says BY
     HOW MUCH in pooled-σ units). Per-group moments in one aggregate,
     constant-size arithmetic after; the A/B-readout shape."""
-    ev = _table(spark, sf_dir, "events").filter(
+    ev = sf_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "click")
     )
     g = ev.groupBy("event_type").agg(

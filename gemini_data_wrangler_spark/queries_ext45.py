@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -61,7 +57,7 @@ def percentile_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded-frame window, which would materialize the total per row);
     the crossing point is one cumulative window per group with a full
     tie-break, so the answer is deterministic in both engines."""
-    li = _table(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     tot = li.groupBy(F.col("l_returnflag").alias("grp")).agg(
         F.sum("l_quantity").alias("tw")
     )
@@ -130,7 +126,7 @@ def er_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition-pinned like the fuzzy verify so its levenshtein work
     spreads across the cluster."""
     cust = (
-        _table(spark, sf_dir, "customer")
+        sf_table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") <= _ER_KEY_CAP)
         .select("c_custkey", "c_name", "c_nationkey")
     )
@@ -210,7 +206,7 @@ def timeseries_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-sum window over the bounded day axis, and a
     TakeOrderedAndProject for the argmax — raw-row cardinality never
     reaches the window."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.date_trunc("day", "o_orderdate").cast("date").alias("d")
     ).agg(F.round(F.sum("o_totalprice"), 2).alias("x"))

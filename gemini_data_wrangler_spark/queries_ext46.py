@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -69,7 +65,7 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5→uniform, same trick as `sample_deterministic_hash`); the rate
     is rounded to 6 places on both engines so stddev reduction-order
     ulps cannot flip a draw. Returns the allocation audit per stratum."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     s = orders.groupBy(F.col("o_orderpriority").alias("stratum")).agg(
         F.count(F.lit(1)).alias("nh"), F.stddev_samp("o_totalprice").alias("sh")
     )
@@ -159,7 +155,7 @@ def text_collocation_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram comes from the bigram table joined to its two positional
     margins (equi-joins on tokens, linear in distinct bigrams), G² is
     row-local arithmetic, the top-k is a TakeOrderedAndProject."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     ws = F.split(F.trim(F.lower("text")), r"\s+")
     bg = (
         docs.select(ws.alias("ws"))
@@ -247,7 +243,7 @@ def timeseries_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pearson r simultaneously; a constant-size stack reshapes to rows.
     Daily totals are cent-rounded so both engines correlate identical
     inputs."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.date_trunc("day", "o_orderdate").cast("date").alias("d")
     ).agg(F.round(F.sum("o_totalprice"), 2).alias("x"))
@@ -295,7 +291,7 @@ def dq_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complements `feature_mutual_information` with the classical
     effect-size view. Domain-bounded contingency aggregate + constant
     arithmetic; nothing scales with row count after the first groupBy."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     joint = orders.groupBy(
         F.col("o_orderpriority").alias("x"), F.col("o_orderstatus").alias("y")
     ).agg(F.count(F.lit(1)).alias("o"))

@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -112,7 +108,7 @@ def embedding_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_pair_candidates,
     )
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     cand = cosine_pair_candidates(
         emb, "vec_id", "embedding", threshold=_DB_TAU, block_rows=500
     )
@@ -231,7 +227,7 @@ def customer_theil_sen_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank. The self-join is quadratic only WITHIN each customer's own
     orders (per-key block, same bounded shape as the fuzzy verify);
     the median is exact per entity."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     x = F.datediff(
         F.to_date(F.date_trunc("day", "o_orderdate")), F.lit("1995-01-01").cast("date")
     ).cast("double")

@@ -21,11 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -73,7 +69,7 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself leaks about the secret's distribution. EMD over ordered bins
     is the mean |cumulative difference| (normalized by bins−1). Grid
     cardinality bounds every post-scan stage."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     b = cust.select(
         "c_nationkey",
         F.least(
@@ -145,8 +141,8 @@ def ops_businessday_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamped: they are the data-quality signal. One join on orderkey
     (co-partitioned at scale via bucketing) + a bounded histogram
     aggregate."""
-    li = _table(spark, sf_dir, "lineitem")
-    orders = _table(spark, sf_dir, "orders")
+    li = sf_table(spark, sf_dir, "lineitem")
+    orders = sf_table(spark, sf_dir, "orders")
     first_ship = li.groupBy("l_orderkey").agg(F.min("l_shipdate").alias("ship"))
 
     def bd(col: F.Column) -> F.Column:
@@ -206,7 +202,7 @@ def dq_psi_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     histograms from ONE scan via conditional counts, constant-size
     arithmetic after — the cheapest drift monitor that still localizes
     WHERE the distribution moved."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     width = (_PSI_HI - _PSI_LO) / _PSI_BINS
     binned = orders.select(
         F.when(

@@ -22,11 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -75,7 +71,7 @@ def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     one aggregate makes every checkpoint a histogram lookup instead of
     k distinct-scans; the log-log fit is a regr_slope over
     {_HEAPS_CK} points."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     ws = F.split(F.trim(F.lower("text")), r"\s+")
     w = docs.select("doc_id", ws.alias("ws"))
     g = (
@@ -167,7 +163,7 @@ def er_fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern before thresholding (the principled version of the ad-hoc
     fuzzy score). u comes from per-field value histograms; no pairs
     are formed."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     exprs = {
         "nation": F.col("c_nationkey").cast("string"),
         "name_suffix3": F.expr("substring(c_name, length(c_name) - 2, 3)"),

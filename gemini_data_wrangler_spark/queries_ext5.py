@@ -18,11 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)["events"]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 @register(
@@ -55,7 +51,7 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning reused across the whole plan (sort-merge stages share the
     exchange), which is what makes sequence funnels tractable on 100 TB of
     events: nothing ever pairs events with events."""
-    ev = _events(spark, sf_dir).select("user_id", "event_type", "ts")
+    ev = sf_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     v = ev.filter(F.col("event_type") == "view").groupBy("user_id").agg(F.min("ts").alias("v_ts"))
     c = (
         ev.filter(F.col("event_type") == "click")
@@ -103,7 +99,7 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id; the final rollup keys on (cohort, offset) — a few hundred
     groups regardless of input size, so the last exchange is negligible and
     the heavy lifting is map-side distinct + partial aggregation."""
-    ev = _events(spark, sf_dir).select("user_id", F.col("ts").cast("date").alias("day"))
+    ev = sf_table(spark, sf_dir, "events").select("user_id", F.col("ts").cast("date").alias("day"))
     first = ev.groupBy("user_id").agg(F.min("day").alias("first_day"))
     act = ev.distinct()
     return (
@@ -134,7 +130,7 @@ def events_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``from_json`` into a typed struct column at ingest — extraction per
     query re-parses the JSON for every row, parse-once-store-typed doesn't.
     """
-    ev = _events(spark, sf_dir)
+    ev = sf_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return (
         ev.select(F.floor(k / 10).cast("int").alias("k_bucket"), "value")

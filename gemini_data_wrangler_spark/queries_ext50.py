@@ -23,11 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -72,7 +68,7 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale."""
     from gemini_data_wrangler_spark.functions.vectors import cosine_similarity
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id").isin(*_HN_ANCHORS)).select(
         F.col("vec_id").alias("anchor_id"),
         F.col("embedding").alias("_q"),
@@ -128,7 +124,7 @@ def pack_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence packing (`pack_sequences` is the zero-waste endpoint; this
     quantifies what bucketing alone recovers). One row-local bucket
     expression + a domain-bounded histogram aggregate."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     n_tok = F.size(F.split(F.trim("text"), r"\s+"))
     bucket = F.pow(
         F.lit(2.0), F.ceil(F.log(n_tok.cast("double")) / F.lit(float(__import__("math").log(2))))
@@ -180,7 +176,7 @@ def split_group_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     test customer during training — inflated eval); group-hash leaks
     exactly zero BY CONSTRUCTION, and this query measures both, it does
     not assume. Two hash aggregates; the leak count is exact."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     assigned = orders.select(
         "o_custkey",
         F.when(F.md5(F.col("o_orderkey").cast("string")) < "c", "train")
@@ -253,7 +249,7 @@ def sample_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the domains barely overlap and you need new data, not weights).
     PSI's bin machinery pointed at reweighting; one scan, bounded
     grid, constant-size ESS reduction."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     width = (_IW_HI - _IW_LO) / _IW_BINS
     binned = orders.select(
         F.when(

@@ -19,11 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -51,7 +47,7 @@ def scalar_regex_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     written natively, values must agree), and boolean partial match.
     Pure codegen expressions; the bank pins semantics for migrated
     CUSTOM stages."""
-    orders = _table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 500)
+    orders = sf_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 500)
     return orders.select(
         "o_orderkey",
         F.regexp_extract("o_orderpriority", r"(\d+)-(\w+)", 1).alias("prio_num"),
@@ -104,7 +100,7 @@ def scalar_higher_order_functions(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle spells them as filter-length idioms). All row-local codegen;
     arrays are bounded literals so the bank is O(rows).  Array results
     are `array_join`-serialized so every output column is scalar."""
-    nat = _table(spark, sf_dir, "nation")
+    nat = sf_table(spark, sf_dir, "nation")
     nk, rk = F.col("n_nationkey").cast("bigint"), F.col("n_regionkey").cast("bigint")
     arr2 = F.array(nk, rk)
 
@@ -160,7 +156,7 @@ def scalar_json_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     casts, array indexing, nested paths, missing-key null, array
     length. Spark `get_json_object`/`json_array_length` vs DuckDB's
     json_extract family. Row-local; no shuffle."""
-    ev = _table(spark, sf_dir, "events").filter(F.col("event_id") < 300)
+    ev = sf_table(spark, sf_dir, "events").filter(F.col("event_id") < 300)
     doc = F.concat(
         F.lit('{"k": '),
         (F.col("event_id") % 100).cast("string"),

@@ -22,11 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -68,7 +64,7 @@ def attribution_position_based(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the recency-weighted sibling and `asof_purchase_last_click` the
     last-touch degenerate case. Same bucketed user+time-range join; the
     position comes from one ranking window per purchase."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     p = events.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", us.alias("pus")
@@ -136,7 +132,7 @@ def events_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing MEAN would absorb. Runs entirely over the bounded
     (type × hour) aggregate; full 24-row frames only, so both engines
     take the median of the same 24 values."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     hourly = events.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("h")
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -214,8 +210,8 @@ def ops_little_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweepline needs NO ordered window at all: one broadcast max and one
     windowless integer sum over the boundary points, fully distributed
     at any scale."""
-    li = _table(spark, sf_dir, "lineitem")
-    orders = _table(spark, sf_dir, "orders")
+    li = sf_table(spark, sf_dir, "lineitem")
+    orders = sf_table(spark, sf_dir, "orders")
     first_ship = li.groupBy("l_orderkey").agg(F.min("l_shipdate").alias("ship"))
     # Staged once (round 7): `d` feeds FOUR subtrees (both unionAll
     # branches of the boundary points, the direct latency rollup, and

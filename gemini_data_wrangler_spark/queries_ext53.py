@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register, run_stages
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 def _custom(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
@@ -128,8 +124,8 @@ def ops_backlog_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence-explode fans out only to the months an interval spans;
     the month axis bounds the final aggregate. Cross-method anchor:
     total order_days equals `ops_little_law`'s Σdurations."""
-    li = _table(spark, sf_dir, "lineitem")
-    orders = _table(spark, sf_dir, "orders")
+    li = sf_table(spark, sf_dir, "lineitem")
+    orders = sf_table(spark, sf_dir, "orders")
     first_ship = li.groupBy("l_orderkey").agg(F.min("l_shipdate").alias("ship"))
     d = (
         orders.join(first_ship, orders["o_orderkey"] == first_ship["l_orderkey"])

@@ -23,16 +23,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 _TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
 
 
 # ---------------------------------------------------------------------------
@@ -140,7 +136,7 @@ def events_markov_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence carries no first-order signal — the go/no-go gate before
     investing in a sequence model. One lag window per user; the
     transition matrix and argmax predictor are |types|²-bounded."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
         "ts", "event_type", F.lag("event_type").over(w).alias("prev")

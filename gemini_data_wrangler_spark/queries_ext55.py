@@ -21,11 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import load_sf_tables, sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -76,7 +72,7 @@ def forecast_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the model, and `coverage_ok` pins it with a 4σ binomial margin.
     The split is the deterministic md5 hash (reproducible everywhere);
     the order statistic runs only over the calibration slice."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     h = F.md5(F.col("o_orderkey").cast("string"))
     s = orders.withColumn(
         "part",
@@ -165,7 +161,7 @@ def ab_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort should land within a few SEs of zero, which makes this a
     permanent A/A guardrail too). Four (group × period) moment cells
     from one scan, constant-size arithmetic after."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     g = orders.select(
         F.when(F.md5(F.col("o_custkey").cast("string")) < "8", "T")
         .otherwise("C")

@@ -25,11 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import load_sf_tables, sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -73,7 +69,7 @@ def sketch_bitmap_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment regardless of customer count; production uses roaring
     compression for sparse universes). The `bitmap_exact` column proves
     the bitwise math equals the plain distinct-bucket join."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     b = cust.select(
         F.col("c_mktsegment").alias("seg"),
         (F.col("c_custkey") % _BM_BUCKETS).cast("bigint").alias("bucket"),
@@ -170,7 +166,7 @@ def quality_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     get better FEATURES (low resolution). Within-bin mean identity
     holds only approximately, so `decomposition_ok` gates at 0.01.
     Fixed bin grid; three bounded aggregates."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.lower("text")), r"\s+")
     stop_hits = F.size(
         F.filter(

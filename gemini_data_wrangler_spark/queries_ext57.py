@@ -27,11 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -84,7 +80,7 @@ def er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison row). Candidates come from lead(key, i) windows over the
     sort order — one pass, n·w rows, no rank self-join (round 7)."""
     cust = (
-        _table(spark, sf_dir, "customer")
+        sf_table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") <= _SN_KEY_CAP)
         .select("c_custkey", "c_name")
     )
@@ -178,8 +174,8 @@ def join_rank_topk_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     its prefix floor, so its score is bounded by floor + the other
     side's max). m² prefix work replaces the |orders|×|customers|
     cross join — the certificate, not hope, is what makes it safe."""
-    orders = _table(spark, sf_dir, "orders")
-    cust = _table(spark, sf_dir, "customer")
+    orders = sf_table(spark, sf_dir, "orders")
+    cust = sf_table(spark, sf_dir, "customer")
     ta = (
         orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
         .limit(_RJ_M)
@@ -259,7 +255,7 @@ def agg_gini_mean_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes are a broadcast 5-row aggregate."""
     from gemini_data_wrangler_spark.operators.window import two_level_rank
 
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     base = orders.select(
         F.col("o_orderpriority").alias("grp"),
         F.col("o_totalprice").alias("x"),

@@ -15,11 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 _DAILY_SQL = """
@@ -71,7 +67,7 @@ def timeseries_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     `timeseries_changepoint_cusum` locates). SSR comes from regr_*
     sufficient statistics (SSR = Syy − Sxy²/Sxx), so each regression is
     one partial-aggregated pass over the bounded day axis."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.date_trunc("day", "o_orderdate").cast("date").alias("d")
     ).agg(F.round(F.sum("o_totalprice"), 2).alias("x"))
@@ -149,7 +145,7 @@ def timeseries_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     nonparametric cousin of `timeseries_acf` (no moments assumed).
     Exact-median filter drops ties so both engines count identical
     signs; one lag window over the bounded day axis."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.date_trunc("day", "o_orderdate").cast("date").alias("d")
     ).agg(F.round(F.sum("o_totalprice"), 2).alias("x"))

@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -141,7 +137,7 @@ def events_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`events_burst_detection`) and exponential interarrival models
     (`events_interarrival_stats`) are valid at all. Two bounded
     aggregates over the (type × hour) grid."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     hourly = events.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("h")
     ).agg(F.count(F.lit(1)).alias("n"))

@@ -26,11 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)["documents"]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 def word_ngrams(tokens_col: str, n: int) -> F.Column:
@@ -87,7 +83,7 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     second full-corpus explode+distinct through its own plan branch
     (Spark executes multi-referenced unpersisted subtrees once per
     branch)."""
-    docs = _docs(spark, sf_dir).select(
+    docs = sf_table(spark, sf_dir, "documents").select(
         "doc_id", F.split(F.trim("text"), r"\s+").alias("t")
     )
     is_eval = F.col("doc_id") % 97 == 0
@@ -145,7 +141,7 @@ def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-addressed, so every engine, run, and cluster size assigns each
     doc to the SAME split (seeded randomSplit cannot promise that across
     engines). Pure projection + one tiny (source × split) aggregation."""
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     h = F.md5(F.col("doc_id").cast("string"))
     return (
         docs.select(
@@ -217,7 +213,7 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gemini_data_wrangler_spark.operators.graphs import pagerank
 
     li = (
-        load_sf_tables(spark, sf_dir)["lineitem"]
+        sf_table(spark, sf_dir, "lineitem")
         # One ship-year keeps the bench-scale graph modest; the iteration
         # cost is linear in edges either way (pushed-down scan filter).
         .filter(F.col("l_shipdate").between("1995-01-01", "1995-12-31"))
@@ -276,7 +272,7 @@ def vocab_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     count table only."""
     from gemini_data_wrangler_spark.operators.window import two_level_rank
 
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     # Staged once (round 7): the token explode feeds the vocabulary
     # frequency build AND the encode join — unpersisted, the full-text
     # tokenize ran twice.
@@ -330,7 +326,7 @@ def _cms_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged counter table (≤ depth·width rows) is broadcast back and each
     candidate takes the min over its depth buckets — the driver never
     sees the vocabulary."""
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     words = docs.select(
         "source", F.explode(F.split(F.trim("text"), r"\s+")).alias("w")
     )
@@ -448,7 +444,7 @@ def sketch_count_min_bound_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bound_ok`` to TRUE — a hash mismatch means the sketch math broke.
     (The estimates themselves stay rows-only in the sibling query; this
     row makes the *guarantee* engine-checkable instead of self-attested.)"""
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     n_words = docs.select(
         F.sum(F.size(F.split(F.trim("text"), r"\s+"))).alias("n")
     )
@@ -497,7 +493,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # text) feeds BOTH the in-bucket window and the bucket-totals agg —
     # unpersisted, it ran twice. Eager checkpoint of the tiny 3-column
     # counts frame halves the text work.
-    t = _docs(spark, sf_dir).select(
+    t = sf_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.split(F.trim("text"), r"\s+")).cast("bigint").alias("n_tokens"),
         (F.col("doc_id") / _PACK_BUCKET).cast("bigint").alias("bucket"),

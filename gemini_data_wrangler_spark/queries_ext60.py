@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 _DAILY_EVENTS_SQL = """
@@ -67,7 +63,7 @@ def forecast_seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator). Two lag windows on the bounded day axis; rows where
     the seasonal lag is undefined are excluded from BOTH numerators so
     the ratio compares like for like."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     daily = events.groupBy(
         F.date_trunc("day", "ts").cast("date").alias("d")
     ).agg(F.round(F.sum("value"), 6).alias("total"))
@@ -167,7 +163,7 @@ def forecast_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates). Rows before two full seasons are withheld (state still
     warming). Completes the forecasting ladder: EWMA → Holt →
     Holt-Winters, all exact distributed folds."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     daily = events.groupBy(
         F.date_trunc("day", "ts").cast("date").alias("d")
     ).agg(F.round(F.sum("value"), 6).alias("total"))

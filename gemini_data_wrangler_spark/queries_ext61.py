@@ -22,11 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -216,7 +212,7 @@ def similarity_mmr_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gemini_data_wrangler_spark.functions.vectors import cosine_similarity
     from gemini_data_wrangler_spark.shared_builds import ann_exact_topk, mmr_list
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     mmr = mmr_list(spark, sf_dir, reuse=True).select(
         "query_id", "vec_id", "mmr_rank"
     )
@@ -307,7 +303,7 @@ def embedding_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-dimension explode + hash aggregate (linear in vectors × dims),
     then a label-bounded reduction — the embedding twin of
     `dq_psi_price_drift`."""
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     halves = emb.select(
         "label",
         F.posexplode(F.col("embedding")).alias("dim0", "v0"),

@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 _BH_ALPHA = 0.05
@@ -89,7 +85,7 @@ def dq_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     alarms ~once per run at α = 0.05 by construction; with it, the
     expected false-discovery fraction among flags is ≤ α. One grid
     build + per-group windows + a 25-row BH window."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     # Staged once (round 7): six subtrees read this 2-column projection
     # (grid, axis, groups, global counts, sizes, total).
     vals = cust.select(
@@ -176,7 +172,7 @@ def agg_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     is quadratic only WITHIN each nation's block and repartition-pinned
     like the other compute-dense verifies; the median is exact per
     group."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     n_parts = max(spark.sparkContext.defaultParallelism, 8)
     c = cust.select(
         F.col("c_nationkey").alias("g"),

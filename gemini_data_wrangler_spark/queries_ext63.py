@@ -15,11 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -55,7 +51,7 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     location ladder: mean → trimmed mean → Hodges–Lehmann → median).
     Per-group exact quantiles broadcast back over the scan; one
     filtered aggregate after."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     b = orders.groupBy(F.col("o_orderpriority").alias("grp")).agg(
         F.expr(f"percentile(o_totalprice, {_TRIM})").alias("lo"),
         F.expr(f"percentile(o_totalprice, {1 - _TRIM})").alias("hi"),
@@ -127,7 +123,7 @@ def dq_mann_whitney_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distinct-value histogram with average ranks below + (t+1)/2 —
     the same sweep as `quality_score_auc` (U/(n₁n₂) IS that AUC), so
     the only ordered pass touches |distinct lengths| rows."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     s = docs.filter(F.col("source").isin(_MW_A, _MW_B)).select(
         F.col("n_chars").alias("v"),
         F.when(F.col("source") == _MW_A, 1).otherwise(0).alias("isa"),
@@ -210,7 +206,7 @@ def dq_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives, and the median centering keeps the test honest under
     skew). Per-group exact medians broadcast back, then the standard
     two-level moment reduction."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     med = orders.groupBy(F.col("o_orderpriority").alias("grp")).agg(
         F.median("o_totalprice").alias("m")
     )

@@ -23,11 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -130,7 +126,7 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     `profile_correlation_matrix`'s Pearson misses whenever the
     relationship is nonlinear. One window pair per variable inside each
     group partition, then a single corr() aggregate."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     v = docs.select(
         F.col("lang").alias("grp"),
         F.col("n_chars").alias("x"),

@@ -29,11 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -98,7 +94,7 @@ def stats_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     bracket the CI. The one-scan distributed bootstrap — no resample
     materialization, no RNG state, reproducible across engines. Weighted
     sums run in integer cents so replicate means are exact."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     n_blocks = (_BOOT_R + 3) // 4
     case_sql = _pois_case_on("substring(h, 1 + 8 * o, 8)")
     # 25 md5s per row (one per block of 4 replicates), expanded to the 100
@@ -180,7 +176,7 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram-not-rows move as the AUC/Mann–Whitney sweeps), integer
     counts until the final ratio. Complements Spearman: tau's pair
     semantics survive heavy ties, exactly this discrete-grid regime."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     v = orders.select(
         F.floor(F.col("o_totalprice") / _TAU_BUCKET).cast("bigint").alias("x"),
         F.substring("o_orderpriority", 1, 1).cast("int").alias("y"),

@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -92,7 +88,7 @@ def forecast_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     sparse series. State [z, p, gap, started] folds exactly over the
     zero-filled date spine; both engines execute the identical branch
     and fp sequence, so parity is exact."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     bounds = events.agg(
         F.min(F.to_date(F.date_trunc("day", "ts"))).alias("lo"),
         F.max(F.to_date(F.date_trunc("day", "ts"))).alias("hi"),
@@ -172,7 +168,7 @@ def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform usage). Uses H = ln n − Σc·ln c / n so the per-(doc,token)
     counts reduce in one pass without materializing probabilities.
     Explode → two map-side-combined aggregates; no Python."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("t")
     )
@@ -220,7 +216,7 @@ def agg_mode_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine pipeline cannot carry. GroupBy-count then one ranking
     window over the (group × distinct-value) table — the window input is
     domain-sized, not row-sized."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     c = orders.groupBy(
         F.col("o_orderpriority").alias("grp"),
         F.month("o_orderdate").cast("int").alias("v"),
@@ -266,7 +262,7 @@ def stats_skewness_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     n vs n−1 denominators); pinning the moment formulas in the query
     makes the definition — and therefore cross-engine parity — exact.
     Two scans, both fully partial-aggregated."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     m = orders.groupBy(F.col("o_orderpriority").alias("grp")).agg(
         F.avg("o_totalprice").alias("mu")
     )

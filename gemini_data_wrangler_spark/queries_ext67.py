@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -71,7 +67,7 @@ def similarity_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gemini_data_wrangler_spark.operators.similarity import mutual_knn_edges
     from gemini_data_wrangler_spark.shared_builds import knn_table
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     knn = knn_table(spark, sf_dir, reuse=False, k=_KNN_K)
     return mutual_knn_edges(emb, k=_KNN_K, knn=knn)
 
@@ -105,7 +101,7 @@ def stats_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (KS says "distributions differ", the QQ table says WHERE: head,
     body, or tail). Two percentile aggregates over a filtered scan,
     constant 9-row output."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     ps = [round(0.1 * i, 1) for i in range(1, 10)]
     qa = docs.filter(F.col("source") == _QQ_A).agg(
         F.expr(f"percentile(n_chars, array({', '.join(map(str, ps))}))").alias("qs")
@@ -162,7 +158,7 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic-text detector that complements `text_zipf_fit`'s slope).
     Explode → word-frequency table (token-domain-sized) → per-source
     constant reduction."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("t")
     )

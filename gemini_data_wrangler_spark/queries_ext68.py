@@ -21,11 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -145,7 +141,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gemini_data_wrangler_spark.operators.graphs import personalized_pagerank
 
     li = (
-        _table(spark, sf_dir, "lineitem")
+        sf_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_shipdate").between("1995-01-01", "1995-12-31"))
         .select(
             (F.col("l_suppkey") * 2).alias("src"),
@@ -199,7 +195,7 @@ def scalar_variant_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     FIELD (this bank touches 6 fields ⇒ 6× parse work saved). Row-local
     projection; DuckDB oracle reads the same doc through its native JSON
     type."""
-    ev = _table(spark, sf_dir, "events").filter(F.col("event_id") < 300)
+    ev = sf_table(spark, sf_dir, "events").filter(F.col("event_id") < 300)
     doc = F.concat(
         F.lit('{"k": '),
         (F.col("event_id") % 100).cast("string"),

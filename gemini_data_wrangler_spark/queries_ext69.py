@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -70,7 +66,7 @@ def similarity_knn_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gemini_data_wrangler_spark.operators.similarity import mutual_knn_edges
     from gemini_data_wrangler_spark.shared_builds import knn_table
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     knn = knn_table(spark, sf_dir, reuse=True, k=5)
     edges = mutual_knn_edges(emb, k=5, knn=knn).select(
         F.col("vec_u").alias("doc_a"), F.col("vec_v").alias("doc_b")
@@ -108,7 +104,7 @@ def feature_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (singleton categories fall back to the global mean). One
     grouped aggregate broadcast back over the scan; the standard
     high-cardinality categorical encode for tree/linear models."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     g = cust.groupBy(F.col("c_nationkey").alias("cat")).agg(
         F.sum("c_acctbal").alias("s"), F.count(F.lit(1)).alias("n")
     )
@@ -168,7 +164,7 @@ def feature_best_split_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     with prefix sums supplying left/right class counts per cut — one
     ordered pass over |distinct prices|, not rows; the single-feature
     split-finding kernel a distributed decision tree runs per node."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     v = orders.select(
         F.col("o_totalprice").alias("x"),
         F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
@@ -245,7 +241,7 @@ def agg_geometric_harmonic_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     bank (GM for multiplicative quantities like growth ratios, HM for
     rate averaging) completing the location-statistic family. Single
     hash aggregate, fully partial-aggregated."""
-    orders = _table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
+    orders = sf_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     return orders.groupBy(F.col("o_orderpriority").alias("grp")).agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.exp(F.avg(F.log("o_totalprice"))), 6).alias("geometric_mean"),

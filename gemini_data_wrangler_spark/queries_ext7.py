@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
+from gemini_data_wrangler_spark.sources.readers import load_sf_tables, sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -130,7 +130,7 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap, with the overlap length in days. Equi-join on
     (customer, time bucket) — never an inequality-only join."""
     iv = (
-        load_sf_tables(spark, sf_dir)["orders"]
+        sf_table(spark, sf_dir, "orders")
         .select(
             F.col("o_custkey").alias("c"),
             F.col("o_orderkey").alias("k"),
@@ -205,7 +205,7 @@ def merge_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply an update batch (status flip, 10% of keys) and an insert batch
     (new keys) onto the orders snapshot, latest version wins. Union-all +
     one row_number shuffle on the merge key — the scalable MERGE shape."""
-    o = load_sf_tables(spark, sf_dir)["orders"]
+    o = sf_table(spark, sf_dir, "orders")
     base = o.select(
         "o_orderkey", "o_orderstatus", "o_totalprice", F.lit(1).alias("version")
     )
@@ -309,7 +309,7 @@ _EQD_COARSE = 10_000.0  # value-range width of a coarse prefix-sum bucket
 def histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact NTILE(10) bucket stats over o_totalprice — see
     :func:`equidepth_histogram`."""
-    t = load_sf_tables(spark, sf_dir)["orders"].select(
+    t = sf_table(spark, sf_dir, "orders").select(
         F.col("o_totalprice").alias("x")
     )
     return equidepth_histogram(t, "x", _EQD_K, _EQD_COARSE)

@@ -30,11 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -116,8 +112,8 @@ def geo_radius_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete. The Spark plan is a hash join on (cx, cy), NOT a nested
     loop; at 100 TB the cell id is the shuffle key and the 9× explode
     stays on the smaller side."""
-    cust = _table(spark, sf_dir, "customer")
-    supp = _table(spark, sf_dir, "supplier")
+    cust = sf_table(spark, sf_dir, "customer")
+    supp = sf_table(spark, sf_dir, "supplier")
     clat, clon = _coords(F.col("c_custkey"), "C")
     slat, slon = _coords(F.col("s_suppkey"), "S")
     c = cust.select(
@@ -177,8 +173,8 @@ def geo_nearest_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, so the shuffle carries ONE row per customer, not 25.
     Distances are rounded to 6 dp before the argmin (trig ulps cannot
     flip the winner) with the hub key as the deterministic tiebreak."""
-    cust = _table(spark, sf_dir, "customer")
-    nation = _table(spark, sf_dir, "nation")
+    cust = sf_table(spark, sf_dir, "customer")
+    nation = sf_table(spark, sf_dir, "nation")
     clat, clon = _coords(F.col("c_custkey"), "C")
     hlat, hlon = _coords(F.col("n_nationkey"), "N")
     c = cust.select("c_custkey", clat.alias("clat"), clon.alias("clon"))
@@ -227,7 +223,7 @@ def geo_cell_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-cell detection primitive. Pure partial-agg shuffle keyed by the
     cell id; cardinality is bounded by the grid (24×72), so the reduce
     side is trivially small at any input scale."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     clat, clon = _coords(F.col("c_custkey"), "C")
     return (
         cust.select("c_acctbal", clat.alias("lat"), clon.alias("lon"))
@@ -274,8 +270,8 @@ def geo_bbox_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-joined back so empty boxes report 0. The box side is always the
     broadcast side; the comparisons are on bit-identical doubles (no
     trig), so no rounding is needed anywhere."""
-    cust = _table(spark, sf_dir, "customer")
-    nation = _table(spark, sf_dir, "nation")
+    cust = sf_table(spark, sf_dir, "customer")
+    nation = sf_table(spark, sf_dir, "nation")
     clat, clon = _coords(F.col("c_custkey"), "C")
     blat, blon = _coords(F.col("n_nationkey"), "B")
     c = cust.select(clat.alias("lat"), clon.alias("lon"))

@@ -23,11 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -71,7 +67,7 @@ def text_chunk_dup_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk→count aggregate and the join back are both keyed by the chunk
     text (xxhash64(chunk) in production — the text never needs to leave
     the shuffle); the final per-doc rollup is one more hash aggregate."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     ws = F.split(F.trim("text"), r"\s+")
     chunks = F.expr(
         f"transform(sequence(0, cast(ceil(size(ws) / {_CHUNK_W}.0) as int) - 1),"
@@ -142,8 +138,8 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     never per-corpus); item supports and the scalar basket count come
     back via broadcasts. Both rule directions are derived from one
     triangular count."""
-    li = _table(spark, sf_dir, "lineitem")
-    part = _table(spark, sf_dir, "part")
+    li = sf_table(spark, sf_dir, "lineitem")
+    part = sf_table(spark, sf_dir, "part")
     # Staged once (round 7): the basket table feeds FOUR subtrees (item
     # supports, the basket count, and both sides of the pair self-join) —
     # unpersisted, the lineitem⋈part join + distinct re-ran per consumer.

@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 _JW_MIN = 0.8
@@ -63,7 +59,7 @@ def fuzzy_jaro_winkler_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair, same rows (the kernel is pure).
     jw_udf = jaro_winkler_udf().asNondeterministic()
 
-    part = _table(spark, sf_dir, "part")
+    part = sf_table(spark, sf_dir, "part")
     a = part.select(
         F.col("p_partkey").alias("partkey_a"),
         F.col("p_name").alias("name_a"),
@@ -105,7 +101,7 @@ def fuzzy_damerau_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     off-by-one windows) breaks the hash."""
     from gemini_data_wrangler_spark.functions.strings import damerau_levenshtein_udf
 
-    supp = _table(spark, sf_dir, "supplier")
+    supp = sf_table(spark, sf_dir, "supplier")
     a = supp.select(
         F.col("s_suppkey").alias("suppkey_a"),
         F.col("s_name").alias("name_a"),

@@ -23,11 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 _SEQ_MIN_USERS = 50
@@ -57,7 +53,7 @@ def events_sequential_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one per-(user, type) min/max aggregate + a per-user join over
     the tiny type lists — linear in events where the naive event-level
     self-join is quadratic."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     spans = events.groupBy("user_id", "event_type").agg(
         F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts")
     )
@@ -106,7 +102,7 @@ def running_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     risk/regression-detection window composition. Two ordered window
     passes then one grouped max; everything stays in the per-customer
     sort, no self-joins."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     w_ord = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     bal = F.sum("o_totalprice").over(
         w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -162,7 +158,7 @@ def timeseries_rising_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the |days| daily aggregate BEFORE any window, so the single-
     partition ordered pass touches thousands of rows, not the fact
     table."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     daily = (
         orders.groupBy(
             F.date_trunc("day", "o_orderdate").cast("date").alias("d")

@@ -21,11 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -83,7 +79,7 @@ def stats_ols_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums difference two large unordered-FP sums, so the last ~2 digits
     of a 6-dp value are summation-order noise; the identical algebra on
     both engines keeps everything above that floor stable)."""
-    li = _table(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     s = li.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("l_quantity").alias("sx1"),
@@ -166,7 +162,7 @@ def stats_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     (d≈2 none, d→0 positive, d→4 negative). The fact table reduces to
     the daily series first; the OLS fit is a broadcast scalar row and
     the DW sums are one lag window over |days| rows."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.date_trunc("day", "o_orderdate").cast("date").alias("d")
     ).agg(F.sum("o_totalprice").alias("y"))
@@ -244,7 +240,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     size; the denominator is a broadcast 1-row global total. Integer
     token-mass sums are exact; the share is a single division, so no
     cross-engine FP drift."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("w")
     )

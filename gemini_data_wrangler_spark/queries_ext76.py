@@ -17,11 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -61,7 +57,7 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     effective df — the default two-sample mean test when variances
     differ. One grouped moment aggregate, then scalar algebra on a
     2-row table pivoted to one row."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     g = (
         cust.filter(F.col("c_mktsegment").isin("BUILDING", "MACHINERY"))
         .groupBy(F.col("c_mktsegment").alias("seg"))
@@ -131,7 +127,7 @@ def stats_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 5%; the uniform-ish price distribution should reject in every
     group, and the VALUES are cross-checked against DuckDB running the
     identical algebra."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     x = F.col("o_totalprice")
     m = orders.groupBy(F.col("o_orderpriority").alias("grp")).agg(
         F.count(F.lit(1)).alias("n"),
@@ -210,7 +206,7 @@ def feature_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     row."""
     from gemini_data_wrangler_spark.operators.window import distributed_ntile
 
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     ranked = distributed_ntile(
         cust.select(
             (F.col("c_mktsegment") == "BUILDING").alias("is_good"),

@@ -21,11 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -59,7 +55,7 @@ def multimodal_audio_zero_crossings(spark: SparkSession, sf_dir: str) -> DataFra
         synthesize_assets,
     )
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     return audio_zero_crossings(synthesize_assets(docs, "doc_id"))
 
 
@@ -138,7 +134,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-back rollup — the shuffles key on word and phrase text, and
     identical phrase strings score identically by construction (max =
     any occurrence's score)."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     ws = F.split(F.trim(F.lower("text")), r"\s+")
     tok = (
         docs.select("doc_id", F.posexplode(ws).alias("pos0", "w"))

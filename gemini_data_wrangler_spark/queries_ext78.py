@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -156,7 +152,7 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     experiment variance-reduction. The A/B arm is a content-hash bit
     (reproducible cross-engine); θ comes from one global moment row
     broadcast over the per-arm rollup. Two grouped aggregates total."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     arm = (
         F.conv(
             F.substring(

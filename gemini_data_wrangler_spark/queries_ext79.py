@@ -35,11 +35,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.session import session_memo
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -63,15 +60,10 @@ _GANN_QUERY_IDS = [0, 1, 2, 3, 4]
 _GANN_DRIVER_MAX_STATE_ROWS = 1_700_000
 
 
-# Session-scoped memo for the checkpointed kNN graph (the expensive tiled
-# exact build): `similarity_graph_ann_topk` and `similarity_graph_ann_recall`
+# Session memo for the checkpointed kNN graph (the expensive tiled exact
+# build): `similarity_graph_ann_topk` and `similarity_graph_ann_recall`
 # search the SAME graph, and rebuilding it per query doubled the heaviest
-# bench entry (round-5 verdict ask #3). Keyed by Spark application id so a
-# stopped session's blocks are never referenced; stale-app entries are
-# pruned on insert.
-_GANN_GRAPH_CACHE: dict = {}
-
-
+# bench entry (round-5 verdict ask #3).
 def _gann_graph(embeddings: DataFrame, degree: int, cache_key: str | None) -> DataFrame:
     from gemini_data_wrangler_spark.operators.similarity import knn_directed
 
@@ -84,18 +76,13 @@ def _gann_graph(embeddings: DataFrame, degree: int, cache_key: str | None) -> Da
 
     if cache_key is None:
         return build()
-    app = embeddings.sparkSession.sparkContext.applicationId
     # The logical-plan fingerprint guards the memo against a caller passing
     # a DIFFERENT frame (filtered corpus, other table) under the same
     # cache_key — without it the search would silently run over a stale
     # graph built from other data (round-6 ADVICE). semanticHash is
     # analysis-time only: no Spark job.
-    key = (app, cache_key, degree, embeddings.semanticHash())
-    if key not in _GANN_GRAPH_CACHE:
-        for stale in [k for k in _GANN_GRAPH_CACHE if k[0] != app]:
-            del _GANN_GRAPH_CACHE[stale]
-        _GANN_GRAPH_CACHE[key] = build()
-    return _GANN_GRAPH_CACHE[key]
+    key = (cache_key, degree, embeddings.semanticHash())
+    return session_memo(embeddings.sparkSession, "gann_graph", key, build)
 
 
 def graph_ann_beam_topk(
@@ -407,7 +394,7 @@ def similarity_graph_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force ranking."""
     from gemini_data_wrangler_spark.operators.similarity import queries_from_ids
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     return graph_ann_beam_topk(
         emb, queries_from_ids(emb, _GANN_QUERY_IDS), cache_key=sf_dir
     )
@@ -424,7 +411,7 @@ def similarity_graph_ann_topk_distributed(spark: SparkSession, sf_dir: str) -> D
     pinned in tests/test_ext79.py."""
     from gemini_data_wrangler_spark.operators.similarity import queries_from_ids
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     return graph_ann_beam_topk(
         emb,
         queries_from_ids(emb, _GANN_QUERY_IDS),
@@ -458,7 +445,7 @@ def similarity_graph_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from gemini_data_wrangler_spark.operators.similarity import queries_from_ids
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     n = emb.count()
     hops = max(_GANN_HOPS, math.ceil(math.log(max(n, 2)) / math.log(_GANN_DEGREE)) + 2)
     beam = max(_GANN_BEAM, 3 * math.ceil(math.log2(max(n, 2))))
@@ -529,7 +516,7 @@ def embedding_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     output dims × aggregate over input dims): no shuffle, no Python, no
     matrix broadcast — the cheapest possible pre-ANN dimensionality cut
     at any corpus size."""
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     proj = F.expr(
         f"transform(sequence(1, {_JL_OUT}), j -> "
         f"  aggregate(sequence(1, {_JL_IN}), 0D, (acc, i) -> "
@@ -617,7 +604,7 @@ def lm_stupid_backoff_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg), then eval trigrams join the count tables on their n-gram keys;
     every join is a shuffle-keyed equi-join AQE converts to broadcast
     whenever a count table is small. Linear in tokens end to end."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos", "w")
     )

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -54,7 +54,7 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{k} weighted sample of orders, weight = o_totalprice: A-ES keys
     u^(1/w) compared in log space (ln(u)/w), u derived from md5(o_orderkey)
     so every engine draws the SAME sample."""
-    o = load_sf_tables(spark, sf_dir)["orders"]
+    o = sf_table(spark, sf_dir, "orders")
     u = (
         F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10)
         .cast("bigint")
@@ -88,7 +88,7 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     1997) merged with a late-batch state (the rest) by summing the
     mergeable (sum, count) pairs — equal to the full recompute, which is
     exactly what the oracle runs."""
-    li = load_sf_tables(spark, sf_dir)["lineitem"]
+    li = sf_table(spark, sf_dir, "lineitem")
 
     def state(df: DataFrame) -> DataFrame:
         return df.groupBy("l_returnflag", "l_linestatus").agg(
@@ -138,7 +138,7 @@ def skyline_price_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     every strictly-higher price — one per-price aggregate + a two-level
     distributed prefix-min over descending price."""
     pts = (
-        load_sf_tables(spark, sf_dir)["orders"]
+        sf_table(spark, sf_dir, "orders")
         .select(F.col("o_totalprice").alias("p"), F.col("o_orderdate").alias("d"))
         .groupBy("p")
         .agg(F.min("d").alias("d"))

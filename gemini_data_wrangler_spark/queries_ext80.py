@@ -34,11 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -174,7 +170,7 @@ def stats_logistic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     same sorted list left-to-right, so even the double-precision sums
     are order-identical — full value parity on the converged
     coefficients and residual deviance."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     grid = orders.groupBy(
         F.substring("o_orderpriority", 1, 1).cast("int").alias("x1"),
         F.floor(F.col("o_totalprice") / _LOGIT_BUCKET).cast("int").alias("x2"),
@@ -267,7 +263,7 @@ def stats_ransac_line(spark: SparkSession, sf_dir: str) -> DataFrame:
     the integer inlier count (ties to the lowest sample id), so the
     result is bit-stable: slope/intercept/residuals use only correctly
     rounded IEEE ops, identical on every engine."""
-    li = _table(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     pts = (
         li.select(
             # (orderkey, linenumber) is NOT unique in the synthetic data;
@@ -381,7 +377,7 @@ def sketch_bbit_minhash_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gemini_data_wrangler_spark.shared_builds import neardup_pairs
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     # Shared eager-checkpointed pair memo: participants + the final pair
     # join both replay its blocks.
     exact = neardup_pairs(

@@ -28,11 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -87,7 +83,7 @@ def coreset_kcenter_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeling. One distributed arg-max plus one row-local least() update
     per round over the persisted corpus; driver state is the k centers
     only."""
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     base = (
         emb.select(
             "vec_id", F.expr("transform(embedding, v -> CAST(v AS DOUBLE))").alias("_e")
@@ -161,7 +157,7 @@ def corpus_doremi_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     the token->count join is a shuffle equi-join on the word key (AQE
     broadcasts the count table when small); the reweight itself runs on
     the |domains|-row table."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(F.split(F.trim("text"), r"\s+")).alias("w")
     )

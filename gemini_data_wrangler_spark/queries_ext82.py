@@ -26,11 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -82,7 +78,7 @@ def sketch_ams_f2_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound_ok gate pins the estimator within its Chebyshev-justified
     band. The exact side is one grouped count (the self-join-size
     identity sum c^2)."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     tok = docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("w"))
     exact = (
         tok.groupBy("w")
@@ -207,7 +203,7 @@ def quality_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from gemini_data_wrangler_spark.operators.window import distributed_ntile
 
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     # Percentile bins via distributed two-level rank + closed-form ntile
     # (block = floor(price)) — no orders-sized single-task window.
     scored = distributed_ntile(

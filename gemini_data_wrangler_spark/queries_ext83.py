@@ -21,11 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 _PCA_DIMS = 64
@@ -89,7 +85,7 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixed sign convention plus the dominant eigenvalue and its
     explained-variance fraction — the spectral summary a pipeline uses
     to size a JL/PCA cut before ANN indexing."""
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = sf_table(spark, sf_dir, "embeddings")
     ex = emb.select(F.posexplode(F.col("embedding")).alias("p", "xv")).select(
         (F.col("p") + 1).alias("i"), F.col("xv").cast("double").alias("x")
     )

@@ -25,11 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -121,9 +117,9 @@ def customer_cox_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     risk sets over the bounded duration axis); 8 Newton steps on the
     1-parameter partial likelihood fold over the sorted grid — exact
     cross-engine parity via identical fold order."""
-    orders = _table(spark, sf_dir, "orders")
-    lineitem = _table(spark, sf_dir, "lineitem")
-    customer = _table(spark, sf_dir, "customer")
+    orders = sf_table(spark, sf_dir, "orders")
+    lineitem = sf_table(spark, sf_dir, "lineitem")
+    customer = sf_table(spark, sf_dir, "customer")
     ship = lineitem.groupBy("l_orderkey").agg(
         F.min(F.to_date("l_shipdate")).alias("ship")
     )
@@ -301,8 +297,8 @@ def ab_propensity_stratified_effect(spark: SparkSession, sf_dir: str) -> DataFra
     treated-minus-control completion-rate difference plus the
     stratum-size-weighted ATE — every mean a ratio of integer counts, so
     the estimate is exact cross-engine arithmetic."""
-    orders = _table(spark, sf_dir, "orders")
-    customer = _table(spark, sf_dir, "customer")
+    orders = sf_table(spark, sf_dir, "orders")
+    customer = sf_table(spark, sf_dir, "customer")
     unit = (
         orders.join(
             F.broadcast(customer.select("c_custkey", "c_mktsegment")),

@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -95,7 +91,7 @@ def ab_msprt_always_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
     1 / running-max(Lambda) — monotone non-increasing, so stopping at
     any peek preserves the type-I guarantee. The only data-scale pass is
     the per-user then per-day grouped count."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     arm = (
         F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
         .cast("bigint")
@@ -222,7 +218,7 @@ def stats_eb_shrunk_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean (k+alpha)/(n+alpha+beta) row-locally — the league-table
     estimator that stops 3-of-3 parts outranking 400-of-1000 ones.
     TakeOrderedAndProject keeps the top-k distributed."""
-    li = _table(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     pp = li.groupBy("l_partkey").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0)).alias("k"),

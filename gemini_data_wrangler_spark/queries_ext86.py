@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -161,7 +157,7 @@ def er_fellegi_sunter_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     to [eps, 1-eps] identically on both engines). Output: the match
     prevalence and per-field m/u probabilities — the inputs every
     linkage weight table is built from."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     a = cust.select(
         F.col("c_custkey").alias("ka"),
         F.col("c_nationkey").alias("nk"),

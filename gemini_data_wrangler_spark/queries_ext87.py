@@ -25,11 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -106,8 +102,8 @@ def graph_hits_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     order is stable across engines despite last-ulp sum differences."""
     from gemini_data_wrangler_spark.operators.graphs import hits_raw
 
-    orders = _table(spark, sf_dir, "orders")
-    lineitem = _table(spark, sf_dir, "lineitem")
+    orders = sf_table(spark, sf_dir, "orders")
+    lineitem = sf_table(spark, sf_dir, "lineitem")
     edges = (
         orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
@@ -206,7 +202,7 @@ def events_funnel_significance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Abramowitz-Stegun normal-CDF polynomial rendered identically into
     both engines — no libm erf dependence. One grouped pass builds the
     per-user step flags; everything after is |steps|-row arithmetic."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     flags = [
         F.max(
             F.when(F.col("event_type") == st, 1).otherwise(0)

@@ -25,11 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -85,7 +81,7 @@ def quality_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     'inherently sequential' algorithm via its closed-form identity."""
     from gemini_data_wrangler_spark.operators.window import distributed_ntile
 
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     # Percentile bins via distributed two-level rank + closed-form ntile
     # (block = floor(price)) — no orders-sized single-task window.
     scored = distributed_ntile(
@@ -197,9 +193,9 @@ def customer_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     as `customer_cox_hazard`), chi-square from the summed O-E and
     variance, p-value through the shared normal-CDF polynomial. Counts
     stay integer until the final ratios, so parity is exact."""
-    orders = _table(spark, sf_dir, "orders")
-    lineitem = _table(spark, sf_dir, "lineitem")
-    customer = _table(spark, sf_dir, "customer")
+    orders = sf_table(spark, sf_dir, "orders")
+    lineitem = sf_table(spark, sf_dir, "lineitem")
+    customer = sf_table(spark, sf_dir, "customer")
     ship = lineitem.groupBy("l_orderkey").agg(
         F.min(F.to_date("l_shipdate")).alias("ship")
     )

@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -102,7 +98,7 @@ def attribution_shapley_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     efficiency identity (sum phi = v(full) - v(empty)) ships in the
     output as `total_attributed`. One data pass; the lattice algebra is
     constant-size at any corpus scale."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     fd = events.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("fd"))
     ev = events.join(fd, "user_id").withColumn(
         "_first", F.to_date("ts") == F.col("fd")
@@ -188,7 +184,7 @@ def ab_qini_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversion and uplift, and the cumulative Qini statistic
     Q(k) = sum(y1 - y0*n1/n0) — the uplift model's decision curve.
     Integer counts, exact ratios, one grouped pass after the window."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     # Score deciles via distributed two-level rank + closed-form ntile
     # (key = -price for DESC, block = floor(-price)) — no orders-sized
     # single-task window.

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -57,7 +57,7 @@ def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Violation count per data-quality rule over orders, all rules in one
     scan (conditional-count aggregates unpivoted with stack). The oracle
     spells each rule as its own aggregate — same numbers, N scans."""
-    o = load_sf_tables(spark, sf_dir)["orders"]
+    o = sf_table(spark, sf_dir, "orders")
     agg = o.agg(
         *[
             F.count_if(F.expr(pred)).alias(name)
@@ -103,7 +103,7 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders: drop different key slices, flip some statuses): added /
     removed / changed keys only — unchanged rows are filtered inside the
     join, compared via a map-side payload hash."""
-    o = load_sf_tables(spark, sf_dir)["orders"]
+    o = sf_table(spark, sf_dir, "orders")
     old = (
         o.filter(F.col("o_orderkey") % 13 != 0)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -172,7 +172,7 @@ def timeseries_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily urgent-order counts on a gap-free date spine: missing days
     zero-filled, max_price forward-filled from the last observed day."""
     daily = (
-        load_sf_tables(spark, sf_dir)["orders"]
+        sf_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(F.count(F.lit(1)).alias("n_orders"), F.max("o_totalprice").alias("max_price"))
@@ -251,7 +251,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Staged once (round 7): both sides of the co-order self-join read
     # this filtered-distinct projection.
     li = (
-        load_sf_tables(spark, sf_dir)["lineitem"]
+        sf_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") >= 45)
         .select("l_orderkey", "l_partkey")
         .distinct()

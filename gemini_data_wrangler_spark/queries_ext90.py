@@ -26,11 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -78,8 +74,8 @@ def graph_temporal_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     influence on temporal networks. Two vertex-keyed self-joins with the
     date inequality evaluated inside the join, distinct-union of the hop
     sets, TakeOrderedAndProject for the top-K."""
-    orders = _table(spark, sf_dir, "orders")
-    lineitem = _table(spark, sf_dir, "lineitem")
+    orders = sf_table(spark, sf_dir, "orders")
+    lineitem = sf_table(spark, sf_dir, "lineitem")
     # Staged once (round 7): `li` feeds BOTH sides of the co-order
     # self-join below — unpersisted, the lineitem⋈orders+distinct
     # pipeline ran twice. Released right after `e` materializes (its
@@ -211,8 +207,8 @@ def sketch_bloom_fp_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     within 3x of the (1-e^-kn/m)^k theory (+binomial slack). Bit-exact
     across engines: md5-derived positions and 64-bit word arithmetic
     only."""
-    supplier = _table(spark, sf_dir, "supplier")
-    customer = _table(spark, sf_dir, "customer")
+    supplier = sf_table(spark, sf_dir, "supplier")
+    customer = sf_table(spark, sf_dir, "customer")
     pos = None
     for i in range(_BLOOM_K):
         p = supplier.select(F.expr(_bloom_pos_sql("s_suppkey", i)).alias("p"))

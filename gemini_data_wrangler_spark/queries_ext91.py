@@ -22,11 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -78,7 +74,7 @@ def rec_offpolicy_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbiased offline estimate of the policy's online value under
     uniform-ish logging. Two grouped passes, integer counts, exact
     parity."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     split = (
         F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10)
         .cast("bigint")
@@ -161,7 +157,7 @@ def profile_boxplot_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.5*IQR fences, and the outlier count from a second pass that joins
     the bounded quartile table back (broadcast) — the profiling shape
     every DQ dashboard runs."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     q = cust.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n"),
         F.expr("percentile(c_acctbal, 0.25)").alias("q1"),

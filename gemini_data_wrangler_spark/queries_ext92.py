@@ -16,11 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 _RDD_CUT = 200000.0
@@ -65,7 +61,7 @@ def ab_regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary effect = intercept_right - intercept_left. Slopes are
     reported scaled by the bandwidth so the rounded values carry
     signal."""
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     w = orders.filter(
         (F.col("o_totalprice") >= _RDD_CUT - _RDD_BW)
         & (F.col("o_totalprice") < _RDD_CUT + _RDD_BW)

@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -95,7 +91,7 @@ def events_absorption_prob(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolls the same propagation layers relationally). The funnel
     question "how much of each entry channel eventually converts" with
     path structure, not just flags."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
         F.col("event_type").alias("cur"),
@@ -168,8 +164,8 @@ def inventory_newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame
     per brand (identical definition in both engines). safety_stock =
     q* - mean shows how much of the order covers variability rather
     than expectation."""
-    li = _table(spark, sf_dir, "lineitem")
-    part = _table(spark, sf_dir, "part")
+    li = sf_table(spark, sf_dir, "lineitem")
+    part = sf_table(spark, sf_dir, "part")
     demand = (
         li.join(F.broadcast(part.select("p_partkey", "p_brand")),
                 li["l_partkey"] == F.col("p_partkey"))

@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -79,7 +75,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded hub table. Integer-exact."""
     from gemini_data_wrangler_spark.shared_builds import neardup_pairs
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     pairs = neardup_pairs(spark, sf_dir, reuse=True)
     deg = (
         pairs.select(F.col("doc_a").alias("node"))
@@ -153,7 +149,7 @@ def ab_mde_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the bounded day axis and fixed z constants: no inverse-CDF
     evaluation, exact parity. The first table every experimentation
     platform shows before launch."""
-    events = _table(spark, sf_dir, "events")
+    events = sf_table(spark, sf_dir, "events")
     daily = events.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).alias("n_d"),
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("k_d"),
@@ -212,8 +208,8 @@ def stats_tail_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
     upper-tail co-movement (anti-dependence) that a correlation
     coefficient cannot see. Exact percentile thresholds (one pass) then
     integer joint-exceedance counts."""
-    orders = _table(spark, sf_dir, "orders")
-    lineitem = _table(spark, sf_dir, "lineitem")
+    orders = sf_table(spark, sf_dir, "orders")
+    lineitem = sf_table(spark, sf_dir, "lineitem")
     o = (
         orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
         .groupBy(orders["o_orderkey"], F.col("o_totalprice").alias("x"))

@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -65,8 +61,8 @@ def dq_simpsons_paradox_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     where a 'winning' treatment loses inside every subgroup. One grouped
     pass to the bounded (segment x arm) cell table; integer-exact
     ratios."""
-    orders = _table(spark, sf_dir, "orders")
-    customer = _table(spark, sf_dir, "customer")
+    orders = sf_table(spark, sf_dir, "orders")
+    customer = sf_table(spark, sf_dir, "customer")
     unit = orders.join(
         F.broadcast(customer.select("c_custkey", "c_mktsegment")),
         orders["o_custkey"] == F.col("c_custkey"),
@@ -142,8 +138,8 @@ def sales_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     change. Row-local logs, one grouped pass of OLS sufficient sums per
     brand, closed-form slope/intercept arithmetic on the bounded brand
     table."""
-    li = _table(spark, sf_dir, "lineitem")
-    part = _table(spark, sf_dir, "part")
+    li = sf_table(spark, sf_dir, "lineitem")
+    part = sf_table(spark, sf_dir, "part")
     rows = (
         li.filter(F.col("l_quantity") > 0)
         .join(F.broadcast(part.select("p_partkey", "p_brand")),

@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -86,8 +82,8 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     add-one ratio of as-extreme permuted differences. The distribution-
     free two-sample test with zero RNG state and full cross-engine
     determinism."""
-    orders = _table(spark, sf_dir, "orders")
-    customer = _table(spark, sf_dir, "customer")
+    orders = sf_table(spark, sf_dir, "orders")
+    customer = sf_table(spark, sf_dir, "customer")
     base = (
         orders.join(
             F.broadcast(customer.select("c_custkey", "c_mktsegment")),
@@ -208,7 +204,7 @@ def stats_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted distinct-value axis — the whole-CDF omnibus companion to the
     KS max-gap test (`corpus_ks_drift_test`). One grouped pass then a
     bounded ordered window."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     v = cust.select(
         F.col("c_acctbal").alias("z"),
         F.when(F.col("c_mktsegment") == "BUILDING", 1).otherwise(0).alias("g"),

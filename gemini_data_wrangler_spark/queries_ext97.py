@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -71,8 +67,8 @@ def quality_fairness_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group selection rate (demographic parity), TPR and FPR
     (equalized odds), and the corpus-wide max-min gap for each — one
     grouped pass, integer-exact ratios on the bounded group table."""
-    orders = _table(spark, sf_dir, "orders")
-    customer = _table(spark, sf_dir, "customer")
+    orders = sf_table(spark, sf_dir, "orders")
+    customer = sf_table(spark, sf_dir, "customer")
     unit = orders.join(
         F.broadcast(customer.select("c_custkey", "c_mktsegment")),
         orders["o_custkey"] == F.col("c_custkey"),
@@ -150,7 +146,7 @@ def stats_logistic_partial_dependence(spark: SparkSession, sf_dir: str) -> DataF
         _logit_spark_fold,
     )
 
-    orders = _table(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     grid = orders.groupBy(
         F.substring("o_orderpriority", 1, 1).cast("int").alias("x1"),
         F.floor(F.col("o_totalprice") / _LOGIT_BUCKET).cast("int").alias("x2"),

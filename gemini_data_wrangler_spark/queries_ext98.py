@@ -23,11 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 def _qnorm(z: str) -> str:
@@ -90,7 +86,7 @@ def stats_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a, b) broadcast back; LM = n*R2 of the auxiliary e^2-on-x
     regression, chi-square(1) p-value via the shared normal polynomial.
     Two map-side-aggregated scans, no per-row residual table."""
-    li = _table(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     d = li.select(
         F.col("l_quantity").cast("double").alias("x"),
         F.col("l_extendedprice").cast("double").alias("y"),
@@ -168,7 +164,7 @@ def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, then the classic 206.835 - 1.015(W/S) - 84.6(Sy/W)
     formula. The readability feature family every text-quality filter
     bank includes."""
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
         F.size(F.split(F.trim("text"), r"\s+")).alias("words"),
@@ -214,7 +210,7 @@ def agg_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     inequality measure (the fraction of total balance society would give
     up for perfect equality under log utility). One aggregate of
     (count, sum, sum-of-logs); complements the Gini family."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     pos = cust.filter(F.col("c_acctbal") > 0).select(F.col("c_acctbal").alias("v"))
     return pos.agg(
         F.count(F.lit(1)).alias("n"),

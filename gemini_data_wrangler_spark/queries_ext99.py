@@ -18,11 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_sf_tables(spark, sf_dir)[name]
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 # ---------------------------------------------------------------------------
@@ -62,7 +58,7 @@ def agg_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         two_level_rank,
     )
 
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     filt = cust.filter(F.col("c_acctbal") > 0)
     n_tot = filt.agg(F.count(F.lit(1)).alias("_n"))
     ranked = two_level_rank(
@@ -125,7 +121,7 @@ def corpus_neardup_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline WHICH feeds to clean first."""
     from gemini_data_wrangler_spark.shared_builds import neardup_pairs
 
-    docs = _table(spark, sf_dir, "documents")
+    docs = sf_table(spark, sf_dir, "documents")
     pairs = neardup_pairs(spark, sf_dir, reuse=True)
     members = (
         pairs.select(F.col("doc_a").alias("doc"))
@@ -165,7 +161,7 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     additively across subgroups. Two cheap aggregates (the mean, then
     one normalized-log pass); completes the Gini / Atkinson / Lorenz
     inequality family."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = sf_table(spark, sf_dir, "customer")
     pos = cust.filter(F.col("c_acctbal") > 0).select(F.col("c_acctbal").alias("v"))
     mu = pos.agg(F.avg("v").alias("mu"))
     j = pos.crossJoin(F.broadcast(mu))

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register, run_stages
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 # ---------------------------------------------------------------------------
 # Q1: pricing summary report (FILTER + GROUP with expression aggregates)
@@ -424,13 +425,6 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q4-style: order priority checking — EXISTS → left-semi join with a
 # compound (equi + range) condition
 # ---------------------------------------------------------------------------
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables as _load
-
-
-def _t(spark, sf_dir, name):
-    return _load(spark, sf_dir)[name]
-
-
 @register(
     "tpch_q4_order_priority",
     """
@@ -447,10 +441,10 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS compiles to a left-semi join (compound equi+range condition):
     the probe side streams, no duplication from multiple matches, and the
     aggregation stays partial-before-shuffle."""
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = sf_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-07-01")
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     sem = orders.join(
         li,
         (orders["o_orderkey"] == li["l_orderkey"]) & (li["l_shipdate"] > orders["o_orderdate"]),
@@ -475,10 +469,10 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = sf_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
     )
-    orders = _t(spark, sf_dir, "orders")
+    orders = sf_table(spark, sf_dir, "orders")
     hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
@@ -507,8 +501,8 @@ def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = sf_table(spark, sf_dir, "customer")
+    orders = sf_table(spark, sf_dir, "orders")
     per_cust = (
         cust.join(orders, cust["c_custkey"] == orders["o_custkey"], "left")
         .groupBy("c_custkey")
@@ -532,10 +526,10 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = sf_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-03-01") & (F.col("l_shipdate") < "1996-04-01")
     )
-    part = _t(spark, sf_dir, "part")
+    part = sf_table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(part, li["l_partkey"] == part["p_partkey"])
@@ -563,11 +557,11 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").filter(
+    part = sf_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1") & F.col("p_size").isin(5, 10, 15, 20)
     )
-    li = _t(spark, sf_dir, "lineitem")
-    bad_supp = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
+    li = sf_table(spark, sf_dir, "lineitem")
+    bad_supp = sf_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
     return (
         li.join(bad_supp, li["l_suppkey"] == bad_supp["s_suppkey"], "left_anti")
         .join(part, li["l_partkey"] == part["p_partkey"])
@@ -593,15 +587,15 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("_sq"))
         .filter(F.col("_sq") > 150)
         .select("l_orderkey", F.round("_sq", 2).alias("sum_qty"))
     )
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = sf_table(spark, sf_dir, "orders")
+    cust = sf_table(spark, sf_dir, "customer")
     return (
         big.join(orders, big["l_orderkey"] == orders["o_orderkey"])
         .join(cust, orders["o_custkey"] == cust["c_custkey"])
@@ -624,8 +618,8 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = sf_table(spark, sf_dir, "lineitem")
+    part = sf_table(spark, sf_dir, "part")
     j = li.join(part, part["p_partkey"] == li["l_partkey"])
     br = (
         ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 15) & F.col("l_quantity").between(1, 11))
@@ -653,8 +647,8 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery = one-row aggregate cross-joined (broadcast by
     construction); NOT EXISTS = left-anti join."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = sf_table(spark, sf_dir, "customer")
+    orders = sf_table(spark, sf_dir, "orders")
     avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(F.avg("c_acctbal").alias("_avg"))
     return (
         cust.crossJoin(F.broadcast(avg_bal))
@@ -690,7 +684,7 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     computing the aggregate twice and re-joining."""
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 0)
+    li = sf_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 0)
     costs = li.groupBy("l_partkey", "l_suppkey").agg(
         F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_cost")
     )
@@ -700,7 +694,7 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("unit_cost") == F.col("_min")) & (F.col("l_partkey") < 200))
         .drop("_min")
     )
-    supp = _t(spark, sf_dir, "supplier")
+    supp = sf_table(spark, sf_dir, "supplier")
     return best.join(supp, best["l_suppkey"] == supp["s_suppkey"]).select(
         F.col("l_partkey").alias("p_key"), "s_name", F.round("unit_cost", 6).alias("unit_cost")
     )
@@ -730,11 +724,11 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    li = sf_table(spark, sf_dir, "lineitem")
+    supp = sf_table(spark, sf_dir, "supplier")
+    orders = sf_table(spark, sf_dir, "orders")
+    cust = sf_table(spark, sf_dir, "customer")
+    nation = sf_table(spark, sf_dir, "nation")
     n1 = nation.select(F.col("n_nationkey").alias("_nk1"), F.col("n_name").alias("supp_nation"))
     n2 = nation.select(F.col("n_nationkey").alias("_nk2"), F.col("n_name").alias("cust_nation"))
     j = (
@@ -777,10 +771,10 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%a%"))
-    nation = _t(spark, sf_dir, "nation")
+    li = sf_table(spark, sf_dir, "lineitem")
+    supp = sf_table(spark, sf_dir, "supplier")
+    part = sf_table(spark, sf_dir, "part").filter(F.col("p_name").like("%a%"))
+    nation = sf_table(spark, sf_dir, "nation")
     return (
         li.join(supp, li["l_suppkey"] == supp["s_suppkey"])
         .join(part, li["l_partkey"] == part["p_partkey"])
@@ -809,7 +803,7 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global scalar threshold = one-row aggregate cross-joined (broadcast);
     the per-part aggregate is computed once and reused for both sides via
     persist — not recomputed per branch."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = sf_table(spark, sf_dir, "lineitem")
     pv = (
         li.groupBy("l_partkey")
         .agg(F.sum(F.col("l_extendedprice") * F.col("l_quantity")).alias("value"))
@@ -842,7 +836,7 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = sf_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
     )
     revenue = (
@@ -851,7 +845,7 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     mx = revenue.agg(F.max("total_revenue").alias("_mx"))
-    supp = _t(spark, sf_dir, "supplier")
+    supp = sf_table(spark, sf_dir, "supplier")
     return (
         revenue.crossJoin(F.broadcast(mx))
         .filter(F.col("total_revenue") == F.col("_mx"))
@@ -877,8 +871,8 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The correlated AVG subquery becomes a per-part aggregate joined back
     on the correlation key — AQE broadcasts the (small) aggregate side."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
+    li = sf_table(spark, sf_dir, "lineitem")
+    part = sf_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
     avg_qty = li.groupBy(F.col("l_partkey").alias("_pk")).agg(
         (F.avg("l_quantity") * 0.2).alias("_limit")
     )
@@ -909,12 +903,12 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") >= "1996-01-01")
+    li = sf_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") >= "1996-01-01")
     heavy = (
         li.groupBy("l_suppkey").agg(F.sum("l_quantity").alias("_sq")).filter(F.col("_sq") > 500)
     )
-    nations = _t(spark, sf_dir, "nation").filter(F.col("n_regionkey") < 3)
-    supp = _t(spark, sf_dir, "supplier")
+    nations = sf_table(spark, sf_dir, "nation").filter(F.col("n_regionkey") < 3)
+    supp = sf_table(spark, sf_dir, "supplier")
     return (
         supp.join(heavy, supp["s_suppkey"] == heavy["l_suppkey"], "left_semi")
         .join(F.broadcast(nations), supp["s_nationkey"] == nations["n_nationkey"], "left_semi")
@@ -955,15 +949,15 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio is a single grouped pass with a conditional sum — no second scan.
     Dim tables (part-filtered, nation, region) broadcast; the only large
     shuffles are lineitem⋈orders and orders⋈customer on their keys."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%a%"))
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders").filter(
+    li = sf_table(spark, sf_dir, "lineitem")
+    part = sf_table(spark, sf_dir, "part").filter(F.col("p_name").like("%a%"))
+    supp = sf_table(spark, sf_dir, "supplier")
+    orders = sf_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1997-01-01")
     )
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
+    cust = sf_table(spark, sf_dir, "customer")
+    nation = sf_table(spark, sf_dir, "nation")
+    region = sf_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     n1 = nation.select(F.col("n_nationkey").alias("_cnk"), F.col("n_regionkey").alias("_crk"))
     n2 = nation.select(F.col("n_nationkey").alias("_snk"), F.col("n_name").alias("nation"))
     j = (
@@ -1026,8 +1020,8 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier, and l1's supplier is the only late one. One lineitem shuffle
     on l_orderkey serves both predicates; at 100 TB that's the difference
     between one wide shuffle and three."""
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = sf_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    li = sf_table(spark, sf_dir, "lineitem")
     flagged = li.join(
         orders.select("o_orderkey", "o_orderdate"), li["l_orderkey"] == F.col("o_orderkey")
     ).withColumn("_late", F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 60))
@@ -1049,7 +1043,7 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("_late") & (F.col("_n_supp") > 1) & (F.col("_n_late_supp") == 1))
     )
-    supp = _t(spark, sf_dir, "supplier")
+    supp = sf_table(spark, sf_dir, "supplier")
     return (
         l1.join(supp, l1["l_suppkey"] == supp["s_suppkey"])
         .groupBy("s_name")

@@ -9,8 +9,15 @@ made at runtime (the reference delegates all physical planning to DuckDB —
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
+
+# (applicationId, kind, *key) -> built value. Holds the live application's
+# entries only: every insert drops the entries of any other application.
+_MEMO: dict[tuple, object] = {}
 
 
 def get_spark(
@@ -65,12 +72,41 @@ def get_spark(
     )
     # Free-form conf overrides from the environment (k=v;k=v) — lets a
     # deployment (or an A/B harness) retune any knob without code edits;
-    # explicit extra_conf still wins.
+    # explicit extra_conf still wins. An entry that is not k=v raises.
     extra_env = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for kv in filter(None, (s.strip() for s in extra_env.split(";"))):
-        k, _, v = kv.partition("=")
-        if k and v:
-            builder = builder.config(k.strip(), v.strip())
+        k, _, v = (part.strip() for part in kv.partition("="))
+        if not (k and v):
+            raise ValueError(f"SPARK_GRAFT_EXTRA_CONF entry {kv!r} is not k=v")
+        builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def session_memo(
+    spark: SparkSession,
+    kind: str,
+    key: tuple,
+    build: Callable[[], T],
+    reuse: bool = True,
+) -> T:
+    """Return the value memoized under ``(applicationId, kind, *key)``,
+    calling ``build()`` and storing its result when there is none or when
+    ``reuse`` is false.
+
+    This is the one session-scoped memo of the engine: a publisher query
+    rebuilds (``reuse=False``) and its siblings read the latest build
+    (``reuse=True``). Nothing survives the Spark application, since the
+    key carries the application id and an insert drops every other
+    application's entries. ``build`` owns the materialization of what it
+    returns, and may itself call ``session_memo``.
+    """
+    app = spark.sparkContext.applicationId
+    full_key = (app, kind, *key)
+    if reuse and full_key in _MEMO:
+        return _MEMO[full_key]
+    for stale in [k for k in _MEMO if k[0] != app]:
+        del _MEMO[stale]
+    _MEMO[full_key] = value = build()
+    return value

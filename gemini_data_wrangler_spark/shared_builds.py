@@ -10,7 +10,10 @@ work, the amortization the round-6 verdict endorsed for the kNN graph
 (ask #3) and that `queries_ext75._co_order_edges` / `queries_ext14.
 _sem_pairs` already apply.
 
-Contract (identical to the existing memos):
+Contract, shared by every memo site in the package — each goes through
+:func:`gemini_data_wrangler_spark.session.session_memo`, which scopes
+keys to the Spark application and drops other applications' entries on
+insert, so nothing is cached across Spark applications:
 
 - The input table is loaded INSIDE the helper from ``sf_dir`` — the
   frame a key describes can never be other data than the key claims
@@ -23,26 +26,15 @@ Contract (identical to the existing memos):
   cache, so the bench's per-query ``clearCache()`` cannot drop it, and
   fan-out consumers (CC probes, multi-branch joins) replay blocks
   instead of racing to recompute the kernel.
-- Nothing survives the Spark application: keys carry the application
-  id and stale apps are pruned on insert — no caching across bench or
-  driver invocations.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from gemini_data_wrangler_spark.sources.readers import load_sf_tables
-
-# (app, sf_dir, n, threshold) -> checkpointed (doc_a, doc_b, jaccard)
-_NEARDUP_PAIRS_CACHE: dict = {}
-# (app, sf_dir, k) -> checkpointed (query_id, vec_id, sim, rank)
-_KNN_CACHE: dict = {}
-
-
-def _prune_stale(cache: dict, app: str) -> None:
-    for stale in [k for k in cache if k[0] != app]:
-        del cache[stale]
+from gemini_data_wrangler_spark.session import session_memo
+from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
 def neardup_pairs(
@@ -63,15 +55,11 @@ def neardup_pairs(
     """
     from gemini_data_wrangler_spark.operators.dedup import minhash_lsh_pairs
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, n, threshold)
-    if not reuse or key not in _NEARDUP_PAIRS_CACHE:
-        _prune_stale(_NEARDUP_PAIRS_CACHE, app)
-        docs = load_sf_tables(spark, sf_dir)["documents"]
-        _NEARDUP_PAIRS_CACHE[key] = minhash_lsh_pairs(
-            docs, "doc_id", "text", n=n, threshold=threshold
-        ).localCheckpoint()
-    return _NEARDUP_PAIRS_CACHE[key]
+    def build() -> DataFrame:
+        docs = sf_table(spark, sf_dir, "documents")
+        return minhash_lsh_pairs(docs, "doc_id", "text", n=n, threshold=threshold).localCheckpoint()
+
+    return session_memo(spark, "neardup_pairs", (sf_dir, n, threshold), build, reuse)
 
 
 def knn_table(
@@ -89,18 +77,12 @@ def knn_table(
     """
     from gemini_data_wrangler_spark.operators.similarity import knn_directed
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, k)
-    if not reuse or key not in _KNN_CACHE:
-        _prune_stale(_KNN_CACHE, app)
-        emb = load_sf_tables(spark, sf_dir)["embeddings"]
-        _KNN_CACHE[key] = knn_directed(emb, k=k).localCheckpoint()
-    return _KNN_CACHE[key]
+    def build() -> DataFrame:
+        return knn_directed(sf_table(spark, sf_dir, "embeddings"), k=k).localCheckpoint()
+
+    return session_memo(spark, "knn_table", (sf_dir, k), build, reuse)
 
 
-# (app, sf_dir) -> checkpointed exact (query_id, vec_id, sim, rank) at
-# rank <= _ANN_TOPK_CAP for the fixed ANN probe queries
-_ANN_TOPK_CACHE: dict = {}
 # Deepest exact list any consumer reads: the MMR candidate pool (30);
 # rrf takes 20, the recall gates / ndcg 10, the mmr relevance gate 5.
 ANN_TOPK_CAP = 30
@@ -133,21 +115,13 @@ def ann_exact_topk(
     )
     from gemini_data_wrangler_spark.queries_ext import _ANN_QUERY_IDS
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if not reuse or key not in _ANN_TOPK_CACHE:
-        _prune_stale(_ANN_TOPK_CACHE, app)
-        emb = load_sf_tables(spark, sf_dir)["embeddings"]
-        _ANN_TOPK_CACHE[key] = cosine_topk(
-            emb, queries_from_ids(emb, _ANN_QUERY_IDS), k=ANN_TOPK_CAP
-        ).localCheckpoint()
-    from pyspark.sql import functions as F
+    def build() -> DataFrame:
+        emb = sf_table(spark, sf_dir, "embeddings")
+        q = queries_from_ids(emb, _ANN_QUERY_IDS)
+        return cosine_topk(emb, q, k=ANN_TOPK_CAP).localCheckpoint()
 
-    return _ANN_TOPK_CACHE[key].filter(F.col("rank") <= k)
-
-
-# (app, sf_dir) -> checkpointed MMR selection (query_id, vec_id, sim, mmr_rank)
-_MMR_CACHE: dict = {}
+    ranked = session_memo(spark, "ann_exact_topk", (sf_dir,), build, reuse)
+    return ranked.filter(F.col("rank") <= k)
 
 
 def mmr_list(spark: SparkSession, sf_dir: str, reuse: bool) -> DataFrame:
@@ -163,21 +137,12 @@ def mmr_list(spark: SparkSession, sf_dir: str, reuse: bool) -> DataFrame:
     from gemini_data_wrangler_spark.queries_ext import _ANN_QUERY_IDS
     from gemini_data_wrangler_spark.queries_ext61 import _MMR_POOL, mmr_topk
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if not reuse or key not in _MMR_CACHE:
-        _prune_stale(_MMR_CACHE, app)
-        emb = load_sf_tables(spark, sf_dir)["embeddings"]
+    def build() -> DataFrame:
+        emb = sf_table(spark, sf_dir, "embeddings")
         cand = ann_exact_topk(spark, sf_dir, reuse=True, k=_MMR_POOL)
-        _MMR_CACHE[key] = mmr_topk(
-            emb, _ANN_QUERY_IDS, cand=cand
-        ).localCheckpoint()
-    return _MMR_CACHE[key]
+        return mmr_topk(emb, _ANN_QUERY_IDS, cand=cand).localCheckpoint()
 
-
-# (app, sf_dir, method) -> checkpointed approximate ranked list
-# (query_id, vec_id, sim, rank) for the fixed ANN probe queries
-_APPROX_LIST_CACHE: dict = {}
+    return session_memo(spark, "mmr_list", (sf_dir,), build, reuse)
 
 
 def approx_topk_list(
@@ -211,18 +176,13 @@ def approx_topk_list(
         builders["rerank"] = _rerank_topk
     if method not in builders:
         raise ValueError(f"approx_topk_list: unknown method {method!r}")
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, method)
-    if not reuse or key not in _APPROX_LIST_CACHE:
-        _prune_stale(_APPROX_LIST_CACHE, app)
-        emb = load_sf_tables(spark, sf_dir)["embeddings"]
+
+    def build() -> DataFrame:
+        emb = sf_table(spark, sf_dir, "embeddings")
         q = queries_from_ids(emb, _ANN_QUERY_IDS)
-        _APPROX_LIST_CACHE[key] = builders[method](emb, q, k=10).localCheckpoint()
-    return _APPROX_LIST_CACHE[key]
+        return builders[method](emb, q, k=10).localCheckpoint()
 
-
-# (app, sf_dir) -> (codes, codebook) checkpointed PQ index frames
-_PQ_INDEX_CACHE: dict = {}
+    return session_memo(spark, "approx_topk_list", (sf_dir, method), build, reuse)
 
 
 def pq_index(spark: SparkSession, sf_dir: str, reuse: bool):
@@ -235,11 +195,8 @@ def pq_index(spark: SparkSession, sf_dir: str, reuse: bool):
     """
     from gemini_data_wrangler_spark.operators.similarity import pq_encode
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if not reuse or key not in _PQ_INDEX_CACHE:
-        _prune_stale(_PQ_INDEX_CACHE, app)
-        emb = load_sf_tables(spark, sf_dir)["embeddings"]
-        codes, codebook = pq_encode(emb)
-        _PQ_INDEX_CACHE[key] = (codes.localCheckpoint(), codebook.localCheckpoint())
-    return _PQ_INDEX_CACHE[key]
+    def build():
+        codes, codebook = pq_encode(sf_table(spark, sf_dir, "embeddings"))
+        return codes.localCheckpoint(), codebook.localCheckpoint()
+
+    return session_memo(spark, "pq_index", (sf_dir,), build, reuse)

@@ -14,13 +14,14 @@ import os
 import tempfile
 import zipfile
 
-_SHIPPED_CONTEXTS: set[int] = set()
+from gemini_data_wrangler_spark.session import session_memo
 
 
 def ensure_package_shipped(spark) -> None:
     """Zip this package and distribute it via ``SparkContext.addPyFile``.
 
-    Safe to call per-query: no-op after the first call on a given context.
+    Safe to call per-query: no-op after the first call in a given Spark
+    application.
     Also a no-op when the package is already importable on workers through
     PYTHONPATH (local mode launched from the repo root) — addPyFile is still
     harmless, so we don't try to detect that.
@@ -29,10 +30,10 @@ def ensure_package_shipped(spark) -> None:
         sc = spark.sparkContext
     except Exception:
         return
-    key = id(sc)
-    if key in _SHIPPED_CONTEXTS:
-        return
+    session_memo(spark, "shipped_package", (), lambda: _ship(sc))
 
+
+def _ship(sc) -> None:
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_path = os.path.join(
         tempfile.gettempdir(), f"gemini_data_wrangler_spark_{os.getpid()}.zip"
@@ -52,4 +53,3 @@ def ensure_package_shipped(spark) -> None:
         # Already added under another name, or a cluster manager that
         # disallows runtime file distribution — rely on --py-files then.
         pass
-    _SHIPPED_CONTEXTS.add(key)

@@ -193,42 +193,34 @@ def dataframe_from_rows(
     return spark.createDataFrame(rows, schema=fields)
 
 
-# (session id, sf_dir) -> loaded tables; parquet schema discovery costs a
-# JVM round-trip per table, so reuse DataFrames across queries in a session.
-_LOAD_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-
-
-def load_sf_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    tables: tuple[str, ...] = TESTDATA_TABLES,
-    register: bool = True,
-) -> dict[str, DataFrame]:
-    """Load every parquet table of a testdata scale-factor directory,
-    optionally registering each as a temp view (for CUSTOM SQL stages)."""
+def load_sf_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Load every parquet table of a testdata scale-factor directory and
+    register each as a temp view (for CUSTOM SQL stages). The DataFrames
+    are memoized per application: parquet schema discovery costs a JVM
+    round-trip per table."""
+    from gemini_data_wrangler_spark.session import session_memo
     from gemini_data_wrangler_spark.shipping import ensure_package_shipped
 
     ensure_package_shipped(spark)
-    key = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    cached = _LOAD_CACHE.get(key)
-    if cached is not None:
-        if register:
-            for name, df in cached.items():
-                df.createOrReplaceTempView(name)
-        return dict(cached)
 
-    _enable_nanos_timestamps(spark)
-    out: dict[str, DataFrame] = {}
-    for name in tables:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = _normalize_ns_timestamps(spark, spark.read.parquet(path), path)
-        if register:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    _LOAD_CACHE[key] = dict(out)
-    return out
+    def build() -> dict[str, DataFrame]:
+        _enable_nanos_timestamps(spark)
+        out: dict[str, DataFrame] = {}
+        for name in TESTDATA_TABLES:
+            path = os.path.join(sf_dir, f"{name}.parquet")
+            if os.path.exists(path):
+                out[name] = _normalize_ns_timestamps(spark, spark.read.parquet(path), path)
+        return out
+
+    tables = session_memo(spark, "sf_tables", (sf_dir,), build)
+    for name, df in tables.items():
+        df.createOrReplaceTempView(name)
+    return dict(tables)
+
+
+def sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One table of a scale-factor directory (see :func:`load_sf_tables`)."""
+    return load_sf_tables(spark, sf_dir)[name]
 
 
 def load_dir_tables(

@@ -10,10 +10,10 @@ from __future__ import annotations
 
 import pytest
 
+from gemini_data_wrangler_spark.parity import compare
 from gemini_data_wrangler_spark.plans.dialect import duckdb_to_spark_sql
 from gemini_data_wrangler_spark.sources.readers import load_sf_tables
 from tests.conftest import SF_ORACLE
-from tests.parity import compare
 
 # Each entry: (name, duckdb_sql). The same text is shimmed and run on Spark.
 BANK = [

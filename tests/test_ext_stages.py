@@ -214,8 +214,8 @@ def test_kmeans_stats_contract_and_guards(spark):
     import pytest
 
     from gemini_data_wrangler_spark.operators.similarity import kmeans_lloyd
+    from gemini_data_wrangler_spark import session
     from gemini_data_wrangler_spark.queries_ext3 import (
-        _KMEANS_STATS_CACHE,
         embedding_kmeans,
         embedding_kmeans_members,
     )
@@ -238,12 +238,16 @@ def test_kmeans_stats_contract_and_guards(spark):
 
     # Publisher refreshes the memo; the members sibling reuses the SAME
     # frame object (no second Lloyd build).
-    _KMEANS_STATS_CACHE.clear()
+    def kmeans_entries() -> list:
+        return [v for k, v in session._MEMO.items() if k[1] == "kmeans_stats"]
+
+    for key in [k for k in session._MEMO if k[1] == "kmeans_stats"]:
+        del session._MEMO[key]
     full = embedding_kmeans(spark, SF_ORACLE)
-    assert len(_KMEANS_STATS_CACHE) == 1
-    cached = next(iter(_KMEANS_STATS_CACHE.values()))
+    assert len(kmeans_entries()) == 1
+    cached = kmeans_entries()[0]
     members = embedding_kmeans_members(spark, SF_ORACLE)
-    assert next(iter(_KMEANS_STATS_CACHE.values())) is cached
+    assert kmeans_entries() == [cached] and kmeans_entries()[0] is cached
     mem_rows = {(r.cell_id, r.n_members) for r in members.collect()}
     full_rows = {(r.cell_id, r.n_members) for r in full.collect()}
     assert mem_rows == full_rows

@@ -5,8 +5,8 @@ from __future__ import annotations
 
 import pytest
 
+from gemini_data_wrangler_spark.parity import compare
 from tests.conftest import SF_ORACLE, SF_SMALL
-from tests.parity import compare
 
 
 def _cases():

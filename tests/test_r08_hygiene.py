@@ -14,6 +14,8 @@ from __future__ import annotations
 import subprocess
 import sys
 
+import pytest
+
 from tests.conftest import REPO_DIR, SF_SMALL
 
 
@@ -25,7 +27,17 @@ def test_env_int_reads_override_and_falls_back(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_TEST_BOUND")
     assert env_int("SPARK_GRAFT_TEST_BOUND", 500) == 500
     monkeypatch.setenv("SPARK_GRAFT_TEST_BOUND", "not-an-int")
-    assert env_int("SPARK_GRAFT_TEST_BOUND", 500) == 500
+    with pytest.raises(ValueError, match="SPARK_GRAFT_TEST_BOUND='not-an-int'"):
+        env_int("SPARK_GRAFT_TEST_BOUND", 500)
+
+
+def test_extra_conf_entry_that_is_not_k_eq_v_raises(monkeypatch):
+    """Raised while the builder is assembled, before any JVM starts."""
+    from gemini_data_wrangler_spark.session import get_spark
+
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", "oops")
+    with pytest.raises(ValueError, match="'oops' is not k=v"):
+        get_spark()
 
 
 def test_route_bounds_are_env_parameterised():
@@ -52,14 +64,15 @@ def test_shared_build_memo_keys_are_app_scoped(spark):
     other application are pruned on insert — so no cache key can ever
     match across two SparkSessions (fresh process ⇒ fresh empty module
     dict; same process, new session ⇒ new applicationId ⇒ pruned)."""
+    from gemini_data_wrangler_spark import session
     from gemini_data_wrangler_spark import shared_builds as sb
 
     app = spark.sparkContext.applicationId
-    stale_key = ("app-from-a-previous-session", SF_SMALL, 5, 0.8)
-    sb._NEARDUP_PAIRS_CACHE[stale_key] = object()
+    stale_key = ("app-from-a-previous-session", "neardup_pairs", SF_SMALL, 5, 0.8)
+    session._MEMO[stale_key] = object()
     sb.neardup_pairs(spark, SF_SMALL, reuse=False)
-    assert stale_key not in sb._NEARDUP_PAIRS_CACHE
-    assert all(k[0] == app for k in sb._NEARDUP_PAIRS_CACHE)
+    assert stale_key not in session._MEMO
+    assert all(k[0] == app for k in session._MEMO)
     # A hypothetical other application's key never matches the live one.
-    for key in sb._NEARDUP_PAIRS_CACHE:
+    for key in session._MEMO:
         assert key != ("some-other-app",) + key[1:]
