@@ -39,16 +39,18 @@ _SHINGLES = (
 
 def _rrf_oracle() -> str:
     ids = ", ".join(str(i) for i in _RRF_QUERY_IDS)
-    qsh = _SHINGLES.format(t="q.text")
-    dsh = _SHINGLES.format(t="d.text")
+    # Shingle each document once, before the (query, document) cross join;
+    # shingling inside the join redid it for every pair, 100x slower.
     return f"""
-    WITH qdoc AS (
-      SELECT doc_id AS query_id, text FROM documents WHERE doc_id IN ({ids})
+    WITH shingled AS (
+      SELECT doc_id, {_SHINGLES.format(t="text")} AS sh FROM documents
+    ), qdoc AS (
+      SELECT doc_id AS query_id, sh AS qsh FROM shingled WHERE doc_id IN ({ids})
     ), lex AS (
       SELECT q.query_id, d.doc_id AS vec_id,
-             round(CAST(len(list_intersect({qsh}, {dsh})) AS DOUBLE)
-                   / len(list_distinct(list_concat({qsh}, {dsh}))), 6) AS jac
-      FROM qdoc q CROSS JOIN documents d
+             round(CAST(len(list_intersect(q.qsh, d.sh)) AS DOUBLE)
+                   / len(list_distinct(list_concat(q.qsh, d.sh))), 6) AS jac
+      FROM qdoc q CROSS JOIN shingled d
       WHERE d.doc_id != q.query_id
     ), lex_ranked AS (
       SELECT query_id, vec_id,

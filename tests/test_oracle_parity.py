@@ -44,8 +44,10 @@ def test_all_outputs_driver_canonicalizable(spark):
     """The grading driver canonicalizes results with pandas ``sort_values``,
     which raises ``unhashable type: 'list'`` on any array/map/struct cell
     (``embedding_kmeans`` ERR'd CORRECTNESS_r03 exactly this way).  Every
-    registry query must therefore emit scalar-only columns — plan-build
-    only, no execution, so this covers all 424 queries in seconds."""
+    registry query must therefore emit scalar-only columns.  The check
+    reads only each output schema, but building the 428 queries still runs
+    the Spark jobs that 87 builders execute eagerly (persist, count,
+    localCheckpoint), so the test takes 100-120 s on 4 cores."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     from gemini_data_wrangler_spark.queries import registry
