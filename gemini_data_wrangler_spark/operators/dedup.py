@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.functions.text import char_shingle_hashes
-from gemini_data_wrangler_spark.operators.graphs import env_int as _env_int
+from gemini_data_wrangler_spark.operators.graphs import env_int as _env_int, run_route
 from gemini_data_wrangler_spark.plans.stage import Stage
 
 # Mersenne prime 2^31-1: modulus for the universal-hash family
@@ -813,24 +813,13 @@ def simhash_oracle_sql(
 DRIVER_CC_MAX_EDGES = _env_int("SPARK_GRAFT_DRIVER_CC_MAX_EDGES", 500_000)
 
 
-def _validate_cc_route(route: str) -> None:
-    """Reject unknown route strings up front: a typo like ``"driverr"``
-    must raise, not silently force the distributed loop (matches the
-    existing validation pattern in ``cosine_pair_candidates``)."""
-    if route not in ("auto", "distributed"):
-        raise ValueError(
-            f"connected components: unknown route {route!r} "
-            "(expected 'auto' or 'distributed')"
-        )
-
-
 def _cc_driver_route(
     pairs: DataFrame,
     src: str,
     dst: str,
     max_edges: int = DRIVER_CC_MAX_EDGES,
     include_self_only: bool = True,
-) -> DataFrame | None:
+) -> list | None:
     """Bounded driver-side connected components: collect at most
     ``max_edges + 1`` edges — if the limit truncated, return ``None`` and
     let the caller run the distributed loop; otherwise the collected rows
@@ -841,9 +830,7 @@ def _cc_driver_route(
     any input. ``include_self_only`` mirrors the variants' self-edge
     semantics: min-label propagation emits a vertex that only appears in
     self-edges (True), star contraction drops it (False).
-    Output: doc_id, cluster_id, typed like the input ids."""
-    from pyspark.sql.types import StructField, StructType
-
+    Output: sorted (doc_id, cluster_id) rows."""
     rows = pairs.select(src, dst).limit(max_edges + 1).collect()
     if len(rows) > max_edges:
         return None
@@ -868,13 +855,26 @@ def _cc_driver_route(
             continue
         members.add(a)
         members.add(b)
-    out = [(x, find(x)) for x in sorted(members)]
-    id_type = pairs.schema[src].dataType
-    schema = StructType(
-        [StructField("doc_id", id_type), StructField("cluster_id", id_type)]
+    return [(x, find(x)) for x in sorted(members)]
+
+
+def _run_cc(kernel: str, pairs, src, dst, route, max_edges, loop, include_self_only):
+    """Both CC kernels through ``graphs.run_route``. On ``"auto"`` the pairs
+    are persisted BEFORE the probe: limit().collect() cannot short-circuit
+    a shuffle-heavy pair-producing upstream, so without the cache a
+    >max_edges graph would pay for the upstream twice (once for the
+    truncated probe, once for the loop). Partitions the probe computed
+    stay cached for the fallback. ``"distributed"`` stages nothing."""
+    t = pairs.schema[src].dataType.simpleString()
+    return run_route(
+        kernel,
+        route,
+        pairs,
+        f"doc_id {t}, cluster_id {t}",
+        lambda p: _cc_driver_route(p, src, dst, max_edges, include_self_only),
+        loop,
+        persist=route == "auto",
     )
-    spark = pairs.sparkSession
-    return spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
 
 
 def connected_components(
@@ -899,37 +899,19 @@ def connected_components(
     large-star/small-star variant of Kiveris et al. bounds rounds at
     O(log² n) with the same per-round join shape — the propagation below is
     that algorithm without the degree-rebalancing step, which tiny dup
-    clusters don't need).
-
-    ``route="auto"`` first tries the bounded driver-side union-find
-    (:func:`_cc_driver_route`, ≤ ``DRIVER_CC_MAX_EDGES`` edges — the
-    common case after a high-threshold pair gate), falling back to the
-    distributed loop when the edge set is big data. ``"distributed"``
-    forces the loop (tests pin route equivalence). Any other value
-    raises (a typo must not silently pick a path).
+    clusters don't need). Routes follow the ``graphs`` module contract; the
+    driver route is a union-find (:func:`_cc_driver_route`), the common
+    case after a high-threshold pair gate.
 
     Output: doc_id, cluster_id.
     """
-    _validate_cc_route(route)
-    unpersist_pairs = False
-    try:
-        if route == "auto":
-            # Persist BEFORE the probe: limit().collect() cannot short-circuit
-            # a shuffle-heavy pair-producing upstream, so without the cache a
-            # >max_edges graph would pay for the upstream twice (once for the
-            # truncated probe, once for the distributed loop). Partitions the
-            # probe computed stay cached for the fallback; the cache is
-            # released in the finally below.
-            pairs = pairs.persist()
-            unpersist_pairs = True
-            fast = _cc_driver_route(pairs, src, dst, max_edges=max_edges)
-            if fast is not None:
-                return fast
+
+    def loop(pairs, stage):
         # Emit both orientations with one explode instead of union(e, e-swapped):
         # a union would reference the upstream pair-producing plan twice, and
         # Spark executes self-referencing branches independently — for a
         # MinHash/verify upstream that doubles the expensive part of the query.
-        edges = (
+        edges = stage(
             pairs.select(
                 F.explode(
                     F.array(
@@ -941,64 +923,52 @@ def connected_components(
             .select("_e.u", "_e.v")
             .distinct()
         )
-        edges_cached = edges = edges.persist()
         # Size the loop's parallelism to the edge count (one upfront job): dup
         # graphs are usually a tiny fraction of the corpus, and running each
         # propagation round at full cluster width pays fixed per-task overhead
         # × iterations for near-empty partitions. ~50k edges per partition keeps
         # a round sub-second at any width; capped at defaultParallelism.
         n_edges = edges.count()
-    finally:
-        # Release the probe cache on EVERY exit: fast-path return (the
-        # union-find result is already on the driver), the distributed
-        # path (the persisted `edges` hold everything the loop needs once
-        # the count materializes them), and any exception from the probe
-        # or the count (ADVICE r6: a raise must not leak executor memory
-        # for the session).
-        if unpersist_pairs:
-            pairs.unpersist()
-    sc = edges.sparkSession.sparkContext
-    n = max(1, min(sc.defaultParallelism, n_edges // 50_000 + 1))
-    edges = edges.repartition(n, "v")
-    labels = (
-        edges.select(F.col("u").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=False)
-    )
+        sc = edges.sparkSession.sparkContext
+        n = max(1, min(sc.defaultParallelism, n_edges // 50_000 + 1))
+        edges = edges.repartition(n, "v")
+        labels = (
+            edges.select(F.col("u").alias("id"))
+            .distinct()
+            .withColumn("label", F.col("id"))
+            .localCheckpoint(eager=False)
+        )
 
-    # Convergence probe: labels only ever decrease, so the (exact, decimal)
-    # label sum strictly decreases until the fixpoint — one cheap aggregate
-    # per round instead of an anti-join. The label state is marked with a
-    # LAZY localCheckpoint and this probe is the action that materializes
-    # it, so each round schedules ONE Spark job, not checkpoint + probe.
-    def _label_sum(df: DataFrame):
-        return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
+        # Convergence probe: labels only ever decrease, so the (exact, decimal)
+        # label sum strictly decreases until the fixpoint — one cheap aggregate
+        # per round instead of an anti-join. The label state is marked with a
+        # LAZY localCheckpoint and this probe is the action that materializes
+        # it, so each round schedules ONE Spark job, not checkpoint + probe.
+        def _label_sum(df: DataFrame):
+            return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
 
-    prev_sum = _label_sum(labels)
-    for _ in range(max_iter):
-        # TWO propagation hops per materialization: a propagation join on
-        # the tiny dup graph costs less than a job's fixed overhead, so
-        # batching hops halves the loop's fixed cost. Convergence stays
-        # sound — the label sum is monotone under any number of hops, so
-        # sum-unchanged still means fixpoint.
-        cur = labels
-        for _hop in range(2):
-            neighbor = edges.join(
-                cur.select(F.col("id").alias("v"), F.col("label").alias("_nl")), "v"
-            ).select(F.col("u").alias("id"), F.col("_nl").alias("label"))
-            cur = cur.union(neighbor).groupBy("id").agg(F.min("label").alias("label"))
-        new_labels = cur.localCheckpoint(eager=False)
-        new_sum = _label_sum(new_labels)  # materializes the lazy checkpoint
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    # Unpersist the frame that was actually cached (the pre-repartition
-    # one — `edges` was rebound by the repartition, so unpersisting it
-    # here would be a no-op and leak the cache).
-    edges_cached.unpersist()
-    return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
+        prev_sum = _label_sum(labels)
+        for _ in range(max_iter):
+            # TWO propagation hops per materialization: a propagation join on
+            # the tiny dup graph costs less than a job's fixed overhead, so
+            # batching hops halves the loop's fixed cost. Convergence stays
+            # sound — the label sum is monotone under any number of hops, so
+            # sum-unchanged still means fixpoint.
+            cur = labels
+            for _hop in range(2):
+                neighbor = edges.join(
+                    cur.select(F.col("id").alias("v"), F.col("label").alias("_nl")), "v"
+                ).select(F.col("u").alias("id"), F.col("_nl").alias("label"))
+                cur = cur.union(neighbor).groupBy("id").agg(F.min("label").alias("label"))
+            new_labels = cur.localCheckpoint(eager=False)
+            new_sum = _label_sum(new_labels)  # materializes the lazy checkpoint
+            labels = new_labels
+            if new_sum == prev_sum:
+                break
+            prev_sum = new_sum
+        return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
+
+    return _run_cc("connected_components", pairs, src, dst, route, max_edges, loop, True)
 
 
 def connected_components_star(
@@ -1025,43 +995,10 @@ def connected_components_star(
     aggregate per round.
 
     Output: doc_id, cluster_id (component minimum), same contract as
-    :func:`connected_components` — including the ``route="auto"``
-    driver-side union-find fast path below ``DRIVER_CC_MAX_EDGES`` edges
-    (star contraction's O(log² n) round advantage only matters once the
-    edge set is big data anyway).
+    :func:`connected_components`, including its driver route (star
+    contraction's O(log² n) round advantage only matters once the edge set
+    is big data anyway).
     """
-    _validate_cc_route(route)
-    unpersist_pairs = False
-    try:
-        if route == "auto":
-            # Same probe insurance as connected_components: materialize the
-            # pair stream before the limit-probe so a >max_edges graph doesn't
-            # run the expensive pair-producing upstream twice.
-            pairs = pairs.persist()
-            unpersist_pairs = True
-            fast = _cc_driver_route(pairs, src, dst, max_edges=max_edges, include_self_only=False)
-            if fast is not None:
-                return fast
-        e = (
-            pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # Size per-round parallelism to the (usually tiny) dup graph, like
-        # connected_components: full-width rounds pay fixed task overhead ×
-        # rounds × stages for near-empty partitions. The count materializes
-        # the lazy checkpoint above; the repartitioned copy is materialized by
-        # the first fingerprint probe below.
-        sc = e.sparkSession.sparkContext
-        n_parts = max(1, min(sc.defaultParallelism, e.count() // 50_000 + 1))
-    finally:
-        # Probe cache released on every exit — fast return, distributed
-        # path (the checkpointed edge state is materialized by the count
-        # above), or an exception from probe/count (ADVICE r6).
-        if unpersist_pairs:
-            pairs.unpersist()
-    e = e.repartition(n_parts, "u").localCheckpoint(eager=False)
 
     def large_star(edges: DataFrame) -> DataFrame:
         both = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -1105,21 +1042,38 @@ def connected_components_star(
             ).collect()[0]
         )
 
-    prev = fingerprint(e)
-    for _ in range(max_iter):
+    def loop(pairs, stage):
         e = (
-            small_star(large_star(e))
-            .repartition(n_parts, "u")
+            pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
             .localCheckpoint(eager=False)
         )
-        cur = fingerprint(e)  # materializes the lazy checkpoint
-        if cur == prev:
-            break
-        prev = cur
-    both = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    return both.groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("cluster_id")
-    ).select(F.col("u").alias("doc_id"), "cluster_id")
+        # Size per-round parallelism to the (usually tiny) dup graph, like
+        # connected_components: full-width rounds pay fixed task overhead ×
+        # rounds × stages for near-empty partitions. The count materializes
+        # the lazy checkpoint above; the repartitioned copy is materialized by
+        # the first fingerprint probe below.
+        sc = e.sparkSession.sparkContext
+        n_parts = max(1, min(sc.defaultParallelism, e.count() // 50_000 + 1))
+        e = e.repartition(n_parts, "u").localCheckpoint(eager=False)
+        prev = fingerprint(e)
+        for _ in range(max_iter):
+            e = (
+                small_star(large_star(e))
+                .repartition(n_parts, "u")
+                .localCheckpoint(eager=False)
+            )
+            cur = fingerprint(e)  # materializes the lazy checkpoint
+            if cur == prev:
+                break
+            prev = cur
+        both = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        return both.groupBy("u").agg(
+            F.least(F.min("v"), F.first("u")).alias("cluster_id")
+        ).select(F.col("u").alias("doc_id"), "cluster_id")
+
+    return _run_cc("connected_components_star", pairs, src, dst, route, max_edges, loop, False)
 
 
 def connected_components_oracle_sql(pairs_sql: str) -> str:

@@ -1,4 +1,5 @@
-"""Iterative graph analytics on DataFrames — PageRank, triangle counting.
+"""Iterative graph analytics on DataFrames: PageRank, personalized
+PageRank, label propagation, k-core, BFS, HITS and triangle counting.
 
 Complements ``dedup.connected_components`` (min-label propagation) and
 ``similarity.kmeans_lloyd`` (Lloyd iterations) as the third iterative
@@ -7,6 +8,26 @@ plus an aggregation, with ``localCheckpoint`` truncating lineage so the
 plan never grows with iteration count. No counterpart in the reference
 (its stage algebra has no iteration at all — SURVEY.md §2); north-star
 scope.
+
+Route contract. Every iterative kernel here, and both connected-components
+kernels in ``dedup``, takes ``route`` and ``max_edges`` and runs through
+:func:`run_route`:
+
+* ``route="auto"`` first tries the bounded driver route: collect at most
+  ``max_edges + 1`` rows of the kernel's staged edge frame; when they fit,
+  the whole loop runs in memory on the driver (zero Spark jobs per round,
+  against one or more jobs per round whose floor is rounds × scheduler
+  overhead) and the result is a one-partition frame. Past the bound the
+  distributed loop runs and reuses the partitions the probe cached.
+* ``route="distributed"`` runs only the loop — the 100 TB shape.
+* Any other value raises ``ValueError`` naming the kernel.
+
+Only bounded loop state (edge pairs, rank or label vectors) moves to the
+driver. Both routes give the same output: integer kernels exactly, the
+float kernels (PageRank, HITS) up to summation order, which consumers
+absorb by comparing rounded values. Every frame a kernel persists is
+released when it returns or raises. The bounds are deployment-sized and
+read ``SPARK_GRAFT_DRIVER_*_MAX_EDGES`` overrides.
 """
 
 from __future__ import annotations
@@ -15,7 +36,6 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 
 def env_int(name: str, default: int) -> int:
@@ -31,51 +51,128 @@ def env_int(name: str, default: int) -> int:
     except ValueError:
         raise ValueError(f"{name}={raw!r} is not an integer") from None
 
-# Materialization cadence for the iterative rank/label state. 1 = every
-# round — the measured optimum on local[32] at sf0.1: batching 3 rounds
-# per localCheckpoint was A/B-tested and LOST (PageRank 6.2 s vs 4.1 s,
-# label propagation 3.6 s vs 3.1 s, best-of-3 fresh-process runs) even
-# though the state feeds a single branch per round, because each
-# materialization hands AQE fresh runtime stats to re-plan the next
-# round's join and keeps the state compact. Left as a knob: on a real
-# cluster where per-job scheduling latency dominates (1000 executors,
-# sub-second rounds), raising it trades AQE accuracy for fewer barriers.
-_CHECKPOINT_EVERY = 1
+
+def run_route(
+    kernel: str, route: str, frame: DataFrame, schema, driver, loop, persist: bool = True
+):
+    """Run ``kernel`` on ``route`` under the module's route contract.
+
+    ``frame`` is the kernel's edge frame, persisted here unless ``persist``
+    is false. On ``"auto"``, ``driver(staged)`` returns the result rows, or
+    ``None`` past the bound; the rows become a one-partition frame of
+    ``schema`` (a DDL string, or a tuple of them for a tuple of row lists).
+    Otherwise ``loop(staged, stage)`` returns the result; ``stage(df)``
+    persists a loop frame. Every persisted frame is released on exit."""
+    if route not in ("auto", "distributed"):
+        raise ValueError(
+            f"{kernel}: unknown route {route!r} (expected 'auto' or 'distributed')"
+        )
+    held = []
+
+    def stage(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return held[-1]
+
+    staged = stage(frame) if persist else frame
+    try:
+        if route == "auto":
+            rows = driver(staged)
+            if rows is not None:
+                spark = staged.sparkSession
+
+                def one_partition(rows, schema):
+                    return spark.createDataFrame(
+                        spark.sparkContext.parallelize(rows, 1), schema
+                    )
+
+                if isinstance(schema, tuple):
+                    return tuple(map(one_partition, rows, schema))
+                return one_partition(rows, schema)
+        return loop(staged, stage)
+    finally:
+        # The loops' results are eager or probe-materialized checkpoints,
+        # and the driver route's rows are already local, so nothing
+        # downstream still reads these blocks.
+        for df in held:
+            df.unpersist()
 
 
+def _type(df: DataFrame, i: int = 0) -> str:
+    """DDL name of column ``i``'s type, for driver-route result schemas."""
+    return df.schema[i].dataType.simpleString()
 
-def _edge_arrays(e: DataFrame, max_edges: int):
-    """Bounded Arrow collect of a 2-column edge frame for the driver
-    routes: returns ``(src_idx, dst_idx, nodes)`` numpy arrays (ids
-    compressed to 0..n-1 against the sorted ``nodes`` vocabulary) or
-    ``None`` when the frame exceeds ``max_edges`` rows. Like
-    `_bfs_driver_route` this moves only bounded LOOP STATE — the edge
-    pairs — to the driver; callers keep a distributed fallback for the
-    100 TB shape."""
+
+def _edge_columns(e: DataFrame, max_edges: int):
+    """Bounded Arrow collect of a 2-column edge frame for the float driver
+    routes: its two columns as numpy arrays, or ``None`` when the frame is
+    empty (the loop keeps its behavior there) or exceeds ``max_edges``."""
+    pdf = e.limit(max_edges + 1).toPandas()
+    if not 0 < len(pdf) <= max_edges:
+        return None
+    return pdf.iloc[:, 0].to_numpy(), pdf.iloc[:, 1].to_numpy()
+
+
+def _rank_arrays(e0: DataFrame, max_edges: int):
+    """Driver input of both PageRank kernels: ``(si, di, nodes, safe_deg,
+    dangling)`` with ids compressed to 0..n-1 against the sorted ``nodes``
+    vocabulary, or ``None`` (see :func:`_edge_columns`)."""
     import numpy as np
 
-    pdf = e.limit(max_edges + 1).toPandas()
-    if len(pdf) > max_edges:
+    cols = _edge_columns(e0, max_edges)
+    if cols is None:
         return None
-    src = pdf.iloc[:, 0].to_numpy()
-    dst = pdf.iloc[:, 1].to_numpy()
-    nodes = np.unique(np.concatenate([src, dst])) if len(pdf) else np.array([], dtype="int64")
-    return np.searchsorted(nodes, src), np.searchsorted(nodes, dst), nodes
+    nodes = np.unique(np.concatenate(cols))
+    si, di = (np.searchsorted(nodes, c) for c in cols)
+    outdeg = np.bincount(si, minlength=len(nodes))
+    dangling = outdeg == 0
+    return si, di, nodes, np.where(dangling, 1, outdeg), dangling
 
 
-def _rank_frame(spark, e: DataFrame, nodes, ranks) -> DataFrame:
-    """(node, rank) DataFrame from driver arrays, typed like the edge ids."""
-    id_type = e.schema[0].dataType
-    schema = StructType(
-        [StructField("node", id_type), StructField("rank", DoubleType())]
+def _inflow(r, si, di, safe_deg):
+    """One driver round's Σ_in r/outdeg per node."""
+    import numpy as np
+
+    contrib = r / safe_deg
+    return np.bincount(di, weights=contrib[si], minlength=len(r))
+
+
+def _rank_rows(nodes, ranks) -> list:
+    return list(zip([n.item() for n in nodes], [float(r) for r in ranks]))
+
+
+def _rank_setup(e0: DataFrame, stage):
+    """Distributed set-up shared by both PageRank kernels: the edge list
+    hash-partitioned on the source key (reused every round), the node
+    table and the out-degrees, all persisted, with parallelism sized to
+    ~50k edges per partition."""
+    n_edges = e0.count()
+    par = max(1, min(e0.sparkSession.sparkContext.defaultParallelism, n_edges // 50_000 + 1))
+    e = stage(e0.repartition(par, "_s"))
+    nodes = stage(
+        e.select(F.col("_s").alias("node"))
+        .union(e.select(F.col("_d").alias("node")))
+        .distinct()
+        .repartition(par, "node")
     )
-    rows = list(zip([n.item() for n in nodes], [float(r) for r in ranks]))
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    outdeg = stage(
+        e.groupBy(F.col("_s").alias("node")).agg(F.count(F.lit(1)).alias("_deg"))
+    )
+    return e, nodes, outdeg
 
 
-# Same bound (and same rationale) as DRIVER_BFS_MAX_EDGES below: ≤500k
-# (u, v) pairs is tens of MB of loop state on the driver; bigger graphs
-# stay on the distributed loops.
+def _contribs(e: DataFrame, ranks: DataFrame, outdeg: DataFrame) -> DataFrame:
+    """One distributed round's Σ_in rank/outdeg per node (``_in``)."""
+    return (
+        e.join(ranks.join(outdeg, "node").withColumnRenamed("node", "_s"), "_s")
+        .select(F.col("_d").alias("node"), (F.col("rank") / F.col("_deg")).alias("_c"))
+        .groupBy("node")
+        .agg(F.sum("_c").alias("_in"))
+    )
+
+
+# ≤500k (u, v) pairs is tens of MB of loop state on the driver; bigger
+# graphs stay on the distributed loops. Same bound as DRIVER_BFS_MAX_EDGES
+# and dedup.DRIVER_CC_MAX_EDGES.
 DRIVER_GRAPH_MAX_EDGES = env_int("SPARK_GRAFT_DRIVER_GRAPH_MAX_EDGES", 500_000)
 
 
@@ -103,131 +200,67 @@ def pagerank(
     aggregate folded INTO the iteration's plan (crossJoin) — never a
     driver-side ``collect`` — and is built only when dangling nodes exist
     at all (detected once upfront), so symmetric graphs pay nothing and an
-    iteration is pure plan with no mid-round driver sync.
-
-    ``route="auto"`` first tries the bounded driver-side power iteration
-    (:func:`_pagerank_driver_route`, ≤ ``max_edges`` distinct edges): the
-    whole fixed-iteration recurrence runs as numpy vector ops over the
-    collected edge arrays — zero Spark jobs per round, versus 2 joins +
-    an aggregation + a localCheckpoint write per round in the distributed
-    loop, whose floor is iterations × scheduler overhead. Consumers
-    compare ROUNDED ranks (9 decimals ≫ the ~1e-12 relative spread that
-    summation order contributes), the same tolerance that already makes
-    the Spark loop, the unrolled DuckDB CTE oracle, and the numpy
-    reference in tests agree. ``"distributed"`` forces the loop — the
-    only 100 TB shape; any other value raises.
+    iteration is pure plan with no mid-round driver sync. The driver route
+    runs the same recurrence as numpy vector ops (≤ ``max_edges`` distinct
+    edges); consumers compare ranks rounded to 9 decimals, far above the
+    ~1e-12 relative spread that summation order contributes.
 
     Output: ``node`` (bigint), ``rank`` (double), summing to ~1.
     """
-    if route not in ("auto", "distributed"):
-        raise ValueError(
-            f"pagerank: unknown route {route!r} (expected 'auto' or 'distributed')"
-        )
-    sc = edges.sparkSession.sparkContext
-    e0 = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct().persist()
-    try:
-        if route == "auto":
-            fast = _pagerank_driver_route(e0, iterations, damping, max_edges)
-            if fast is not None:
-                return fast
-        return _pagerank_distributed(sc, e0, iterations, damping)
-    finally:
-        # Released on every exit — driver-route return, finished loop, or
-        # an exception mid-round (same contract as bfs_hops). The loop's
-        # final state is an eager localCheckpoint, so nothing downstream
-        # still needs these blocks.
-        e0.unpersist()
+    e0 = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
 
+    def driver(e0):
+        import numpy as np
 
-def _pagerank_driver_route(
-    e0: DataFrame, iterations: int, damping: float, max_edges: int
-) -> DataFrame | None:
-    """Bounded driver-side PageRank (see :func:`pagerank`): collect the
-    ≤``max_edges`` edge list once, run the identical recurrence
-    ``r' = (1-d)/N + d·(Σ_in r/outdeg + dangling/N)`` as numpy vector
-    ops. Returns None past the bound (caller falls back)."""
-    import numpy as np
+        got = _rank_arrays(e0, max_edges)
+        if got is None:
+            return None
+        si, di, nodes, safe_deg, dangling = got
+        n = len(nodes)
+        has_dangling = bool(dangling.any())
+        r = np.full(n, 1.0 / n)
+        base = (1.0 - damping) / n
+        for _ in range(iterations):
+            inr = _inflow(r, si, di, safe_deg)
+            dm = float(r[dangling].sum()) if has_dangling else 0.0
+            r = base + damping * (inr + dm / n)
+        return _rank_rows(nodes, r)
 
-    got = _edge_arrays(e0, max_edges)
-    if got is None:
-        return None
-    si, di, nodes = got
-    n = len(nodes)
-    if n == 0:
-        return None  # degenerate empty graph: keep the loop's behavior
-    outdeg = np.bincount(si, minlength=n)
-    dangling = outdeg == 0
-    has_dangling = bool(dangling.any())
-    safe_deg = np.where(dangling, 1, outdeg)
-    r = np.full(n, 1.0 / n)
-    base = (1.0 - damping) / n
-    for _ in range(iterations):
-        contrib = r / safe_deg
-        inr = np.bincount(di, weights=contrib[si], minlength=n)
-        dm = float(r[dangling].sum()) if has_dangling else 0.0
-        r = base + damping * (inr + dm / n)
-    return _rank_frame(e0.sparkSession, e0, nodes, r)
+    def loop(e0, stage):
+        e, nodes, outdeg = _rank_setup(e0, stage)
+        n = nodes.count()
+        # A node is dangling iff it has no outdeg row, so the probe is a
+        # count comparison over two persisted tables — one cheap job, not
+        # an anti-join (it also materializes outdeg's cache).
+        has_dangling = n > outdeg.count()
+        ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
+        base = (1.0 - damping) / n
+        for _ in range(iterations):
+            new = nodes.join(_contribs(e, ranks, outdeg), "node", "left")
+            redistributed = F.lit(0.0)
+            if has_dangling:
+                dm = ranks.join(outdeg, "node", "left_anti").agg(
+                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
+                )
+                new = new.crossJoin(F.broadcast(dm))
+                redistributed = F.col("_dm") / n
+            # The rank and label loops checkpoint every round. On local[32]
+            # at sf0.1, batching 3 rounds per localCheckpoint LOST 1.5×
+            # (PageRank 6.2 s vs 4.1 s, label propagation 3.6 s vs 3.1 s):
+            # each materialization hands AQE fresh stats to re-plan the
+            # next round's join and keeps the state compact. With dangling
+            # mass the state also feeds two branches per round.
+            ranks = new.select(
+                "node",
+                (
+                    F.lit(base)
+                    + F.lit(damping)
+                    * (F.coalesce(F.col("_in"), F.lit(0.0)) + redistributed)
+                ).alias("rank"),
+            ).localCheckpoint()
+        return ranks
 
-
-def _pagerank_distributed(sc, e0: DataFrame, iterations: int, damping: float) -> DataFrame:
-    n_edges = e0.count()
-    par = max(1, min(sc.defaultParallelism, n_edges // 50_000 + 1))
-    e = e0.repartition(par, "_s").persist()
-
-    nodes = (
-        e.select(F.col("_s").alias("node"))
-        .union(e.select(F.col("_d").alias("node")))
-        .distinct()
-        .repartition(par, "node")
-        .persist()
-    )
-    n = nodes.count()
-    outdeg = (
-        e.groupBy(F.col("_s").alias("node")).agg(F.count(F.lit(1)).alias("_deg")).persist()
-    )
-    # A node is dangling iff it has no outdeg row, so the probe is a count
-    # comparison over the two already-persisted tables — one cheap job, not
-    # an anti-join (the count also materializes outdeg's cache before the
-    # loop, which the anti-join used to do as a side effect).
-    has_dangling = n > outdeg.count()
-
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
-    base = (1.0 - damping) / n
-    # With dangling mass `ranks` feeds TWO branches per round (contribs +
-    # the dangling-mass aggregate) and Spark does not share unmaterialized
-    # subplans across branches — there every round MUST materialize; on
-    # dangling-free graphs the cadence is the measured knob (see
-    # _CHECKPOINT_EVERY).
-    checkpoint_every = 1 if has_dangling else _CHECKPOINT_EVERY
-    for _it in range(iterations):
-        contribs = (
-            e.join(
-                ranks.join(outdeg, "node").withColumnRenamed("node", "_s"),
-                "_s",
-            )
-            .select(F.col("_d").alias("node"), (F.col("rank") / F.col("_deg")).alias("_c"))
-            .groupBy("node")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        new = nodes.join(contribs, "node", "left")
-        redistributed = F.lit(0.0)
-        if has_dangling:
-            dm = ranks.join(outdeg, "node", "left_anti").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-            )
-            new = new.crossJoin(F.broadcast(dm))
-            redistributed = F.col("_dm") / n
-        ranks = new.select(
-            "node",
-            (
-                F.lit(base)
-                + F.lit(damping)
-                * (F.coalesce(F.col("_in"), F.lit(0.0)) + redistributed)
-            ).alias("rank"),
-        )
-        if (_it + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint()
-    return ranks
+    return run_route("pagerank", route, e0, f"node {_type(e0)}, rank double", driver, loop)
 
 
 def personalized_pagerank(
@@ -250,128 +283,65 @@ def personalized_pagerank(
     symmetrized edge list, as `pagerank` callers here do):
     ``r' = (1-d)·1[node∈S]/|S| + d·Σ_in r/outdeg``.
 
-    Same scale shape as :func:`pagerank`: edge list cached and
-    hash-partitioned once, per round one co-partitioned join + one
-    map-side-combined aggregation, rank state one row per node,
-    `localCheckpoint` truncates the iterative lineage.
-
-    ``route``/``max_edges``: same bounded driver-side auto route as
-    :func:`pagerank` (the restart vector and the seed count come from the
-    collected seed list intersected with the node set, mirroring the
-    distributed seed-flag join); ``"distributed"`` forces the loop.
+    Same scale shape as :func:`pagerank`. Both routes restart on seeds ∩
+    nodes (the distributed seed-flag left join): a seed absent from the
+    graph contributes no restart mass and no output row. An empty
+    intersection raises ``ValueError``.
     """
-    if route not in ("auto", "distributed"):
-        raise ValueError(
-            "personalized_pagerank: unknown route "
-            f"{route!r} (expected 'auto' or 'distributed')"
-        )
-    sc = edges.sparkSession.sparkContext
-    e0 = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct().persist()
-    try:
-        if route == "auto":
-            fast = _ppr_driver_route(e0, seeds, iterations, damping, max_edges)
-            if fast is not None:
-                return fast
-        return _ppr_distributed(sc, e0, seeds, iterations, damping)
-    finally:
-        e0.unpersist()
+    e0 = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
 
+    def driver(e0):
+        import numpy as np
 
-def _ppr_driver_route(
-    e0: DataFrame,
-    seeds: DataFrame,
-    iterations: int,
-    damping: float,
-    max_edges: int,
-) -> DataFrame | None:
-    """Bounded driver-side personalized PageRank (see
-    :func:`personalized_pagerank`): identical recurrence
-    ``r' = (1-d)·1[node∈S]/|S| + d·Σ_in r/outdeg`` as numpy vector ops
-    over the collected edge arrays. Returns None past the bound."""
-    import numpy as np
+        got = _rank_arrays(e0, max_edges)
+        if got is None:
+            return None
+        si, di, nodes, safe_deg, _ = got
+        n = len(nodes)
+        seed_rows = seeds.select("node").limit(max_edges + 1).collect()
+        if len(seed_rows) > max_edges:
+            return None
+        seed_idx = np.searchsorted(nodes, [r[0] for r in seed_rows])
+        in_graph = [
+            i
+            for i, r in zip(seed_idx, seed_rows)
+            if i < n and nodes[i] == r[0]
+        ]
+        n_seeds = float(len(in_graph))
+        if not n_seeds:
+            raise ValueError("personalized_pagerank: empty seed set")
+        seed_vec = np.zeros(n)
+        seed_vec[np.array(in_graph, dtype="int64")] = 1.0
+        r = seed_vec / n_seeds
+        for _ in range(iterations):
+            inr = _inflow(r, si, di, safe_deg)
+            r = (1.0 - damping) * seed_vec / n_seeds + damping * inr
+        return _rank_rows(nodes, r)
 
-    got = _edge_arrays(e0, max_edges)
-    if got is None:
-        return None
-    si, di, nodes = got
-    n = len(nodes)
-    if n == 0:
-        return None
-    seed_rows = seeds.select("node").limit(max_edges + 1).collect()
-    if len(seed_rows) > max_edges:
-        return None
-    # Restart vector: seeds ∩ nodes, exactly the distributed left-join
-    # seed-flag semantics (a seed absent from the graph contributes no
-    # restart mass and no output row).
-    seed_idx = np.searchsorted(nodes, [r[0] for r in seed_rows])
-    in_graph = [
-        i
-        for i, r in zip(seed_idx, seed_rows)
-        if i < n and nodes[i] == r[0]
-    ]
-    n_seeds = float(len(in_graph))
-    if not n_seeds:
-        raise ValueError("personalized_pagerank: empty seed set")
-    seed_vec = np.zeros(n)
-    seed_vec[np.array(in_graph, dtype="int64")] = 1.0
-    outdeg = np.bincount(si, minlength=n)
-    safe_deg = np.where(outdeg == 0, 1, outdeg)
-    r = seed_vec / n_seeds
-    for _ in range(iterations):
-        contrib = r / safe_deg
-        inr = np.bincount(di, weights=contrib[si], minlength=n)
-        r = (1.0 - damping) * seed_vec / n_seeds + damping * inr
-    return _rank_frame(e0.sparkSession, e0, nodes, r)
+    def loop(e0, stage):
+        e, nodes, outdeg = _rank_setup(e0, stage)
+        seed_flags = nodes.join(
+            seeds.select(F.col("node"), F.lit(1.0).alias("_seed")), "node", "left"
+        ).select("node", F.coalesce("_seed", F.lit(0.0)).alias("_seed"))
+        n_seeds = seed_flags.agg(F.sum("_seed")).collect()[0][0]
+        if not n_seeds:
+            raise ValueError("personalized_pagerank: empty seed set")
+        seed_flags = stage(seed_flags)
+        ranks = seed_flags.select(
+            "node", (F.col("_seed") / n_seeds).alias("rank")
+        ).localCheckpoint()
+        for _ in range(iterations):
+            ranks = seed_flags.join(_contribs(e, ranks, outdeg), "node", "left").select(
+                "node",
+                (
+                    F.lit(1.0 - damping) * F.col("_seed") / n_seeds
+                    + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
+                ).alias("rank"),
+            ).localCheckpoint()
+        return ranks
 
-
-def _ppr_distributed(
-    sc, e0: DataFrame, seeds: DataFrame, iterations: int, damping: float
-) -> DataFrame:
-    n_edges = e0.count()
-    par = max(1, min(sc.defaultParallelism, n_edges // 50_000 + 1))
-    e = e0.repartition(par, "_s").persist()
-
-    nodes = (
-        e.select(F.col("_s").alias("node"))
-        .union(e.select(F.col("_d").alias("node")))
-        .distinct()
-        .repartition(par, "node")
-        .persist()
-    )
-    seed_flags = nodes.join(
-        seeds.select(F.col("node"), F.lit(1.0).alias("_seed")), "node", "left"
-    ).select("node", F.coalesce("_seed", F.lit(0.0)).alias("_seed"))
-    n_seeds = seed_flags.agg(F.sum("_seed")).collect()[0][0]
-    if not n_seeds:
-        raise ValueError("personalized_pagerank: empty seed set")
-    outdeg = (
-        e.groupBy(F.col("_s").alias("node")).agg(F.count(F.lit(1)).alias("_deg")).persist()
-    )
-    seed_flags = seed_flags.persist()
-
-    ranks = seed_flags.select(
-        "node", (F.col("_seed") / n_seeds).alias("rank")
-    ).localCheckpoint()
-    for _it in range(iterations):
-        contribs = (
-            e.join(
-                ranks.join(outdeg, "node").withColumnRenamed("node", "_s"),
-                "_s",
-            )
-            .select(F.col("_d").alias("node"), (F.col("rank") / F.col("_deg")).alias("_c"))
-            .groupBy("node")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        ranks = seed_flags.join(contribs, "node", "left").select(
-            "node",
-            (
-                F.lit(1.0 - damping) * F.col("_seed") / n_seeds
-                + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        if (_it + 1) % _CHECKPOINT_EVERY == 0:
-            ranks = ranks.localCheckpoint()
-    return ranks
+    schema = f"node {_type(e0)}, rank double"
+    return run_route("personalized_pagerank", route, e0, schema, driver, loop)
 
 
 def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -470,36 +440,42 @@ def label_propagation(
     over the (count, -label) struct collapses it to one row per node
     before the exchange, the same win measured for kmeans assignment);
     ``localCheckpoint`` truncates lineage per round like
-    :func:`pagerank`.
+    :func:`pagerank`. The driver route runs the same integer argmax
+    rounds over the collected symmetrized edge list.
 
     Output: ``node``, ``label`` (community id = smallest node id that won
     locally). Not a fixed-point guarantee — fixed iteration count, the
     streaming-friendly variant.
-
-    ``route="auto"`` first tries the bounded driver-side walk (collect
-    the ≤``max_edges`` symmetrized edge list once, run the synchronous
-    integer argmax rounds in memory — exact, no float anywhere, zero
-    Spark jobs per round); ``"distributed"`` forces the loop, the 100 TB
-    shape. Any other value raises.
     """
-    if route not in ("auto", "distributed"):
-        raise ValueError(
-            "label_propagation: unknown route "
-            f"{route!r} (expected 'auto' or 'distributed')"
-        )
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     und = e.union(e.select(F.col("_d").alias("_s"), F.col("_s").alias("_d"))).filter(
         F.col("_s") != F.col("_d")
-    ).distinct().persist()
-    try:
-        if route == "auto":
-            fast = _lp_driver_route(und, iterations, max_edges)
-            if fast is not None:
-                return fast
+    ).distinct()
+
+    def driver(und):
+        rows = und.limit(max_edges + 1).collect()
+        if len(rows) > max_edges:
+            return None
+        adj: dict = {}
+        for u, v in rows:
+            adj.setdefault(u, []).append(v)
+        labels = {u: u for u in adj}
+        for _ in range(iterations):
+            new = {}
+            for u, nbrs in adj.items():
+                cnt: dict = {}
+                for v in nbrs:
+                    lv = labels[v]
+                    cnt[lv] = cnt.get(lv, 0) + 1
+                new[u] = min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+            labels = new
+        return sorted(labels.items())
+
+    def loop(und, stage):
         labels = (
             und.select(F.col("_s").alias("node")).distinct().withColumn("label", F.col("node"))
         ).localCheckpoint()
-        for _it in range(iterations):
+        for _ in range(iterations):
             neigh = (
                 und.join(labels.withColumnRenamed("node", "_d"), "_d")
                 .groupBy(F.col("_s").alias("node"), "label")
@@ -508,45 +484,17 @@ def label_propagation(
             # argmax by (count desc, label asc): max over the lexicographic
             # struct (_c, -label) — partial-aggregable, unlike a row_number
             # window, which re-shuffles and sorts every (node, label) row.
-            best = neigh.groupBy("node").agg(
+            labels = neigh.groupBy("node").agg(
                 F.max_by("label", F.struct(F.col("_c"), (-F.col("label")).alias("_nl"))).alias(
                     "label"
                 )
-            )
-            labels = best.localCheckpoint() if (_it + 1) % _CHECKPOINT_EVERY == 0 else best
+            ).localCheckpoint()
         return labels
-    finally:
-        und.unpersist()
 
-
-def _lp_driver_route(und: DataFrame, iterations: int, max_edges: int) -> DataFrame | None:
-    """Bounded driver-side label propagation (see :func:`label_propagation`):
-    the synchronous rounds are pure integer bookkeeping (neighbor-label
-    counts, argmax with ties to the smallest label), so the in-memory walk
-    is exactly the distributed semantics. Returns None past the bound."""
-    rows = und.limit(max_edges + 1).collect()
-    if len(rows) > max_edges:
-        return None
-    adj: dict = {}
-    for u, v in rows:
-        adj.setdefault(u, []).append(v)
-    labels = {u: u for u in adj}
-    for _ in range(iterations):
-        new = {}
-        for u, nbrs in adj.items():
-            cnt: dict = {}
-            for v in nbrs:
-                lv = labels[v]
-                cnt[lv] = cnt.get(lv, 0) + 1
-            new[u] = min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        labels = new
-    spark = und.sparkSession
-    id_type = und.schema["_s"].dataType
-    schema = StructType(
-        [StructField("node", id_type), StructField("label", id_type)]
+    t = _type(und)
+    return run_route(
+        "label_propagation", route, und, f"node {t}, label {t}", driver, loop
     )
-    out = sorted(labels.items())
-    return spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
 
 
 def k_core(
@@ -567,31 +515,41 @@ def k_core(
     would schedule two jobs per round — the per-job floor is what the
     multi-tenant bench host charges for). Rounds are bounded by the
     peeling depth (≤ the degeneracy ordering length, in practice a few
-    dozen even on 100 TB graphs).
+    dozen even on 100 TB graphs). The driver route runs the same
+    synchronous peeling rounds over the collected canonical edge list;
+    the maximal k-core is unique, so both routes reach the same fixpoint.
 
     Output: node, core_degree (degree WITHIN the k-core; ≥ k for every
     surviving node — the defining invariant).
-
-    ``route="auto"`` first tries the bounded driver-side peel (collect
-    the ≤``max_edges`` canonical edge list once, run the synchronous
-    integer degree-peeling rounds in memory — exact, zero Spark jobs per
-    round); ``"distributed"`` forces the loop, the 100 TB shape. Any
-    other value raises.
     """
-    if route not in ("auto", "distributed"):
-        raise ValueError(
-            f"k_core: unknown route {route!r} (expected 'auto' or 'distributed')"
-        )
     e0 = edges.select(F.col(src).alias("_a"), F.col(dst).alias("_b")).filter(
         F.col("_a") != F.col("_b")
-    ).distinct().persist()
-    try:
-        if route == "auto":
-            # The limit-probe collect runs against the persisted e0, so a
-            # >max_edges graph pays the canonicalization once, not twice.
-            fast = _kcore_driver_route(e0, k, max_iter, max_edges)
-            if fast is not None:
-                return fast
+    ).distinct()
+
+    def driver(e0):
+        rows = e0.limit(max_edges + 1).collect()
+        if len(rows) > max_edges:
+            return None
+        cur = [(a, b) for a, b in rows]
+        for _ in range(max_iter):
+            if not cur:
+                break
+            deg: dict = {}
+            for a, b in cur:
+                deg[a] = deg.get(a, 0) + 1
+                deg[b] = deg.get(b, 0) + 1
+            keep = {n for n, d in deg.items() if d >= k}
+            pruned = [(a, b) for a, b in cur if a in keep and b in keep]
+            if len(pruned) == len(cur):
+                break
+            cur = pruned
+        core_deg: dict = {}
+        for a, b in cur:
+            core_deg[a] = core_deg.get(a, 0) + 1
+            core_deg[b] = core_deg.get(b, 0) + 1
+        return sorted(core_deg.items())
+
+    def loop(e0, stage):
         e = e0.localCheckpoint()
         n_e = e.count()
         for _ in range(max_iter):
@@ -619,94 +577,13 @@ def k_core(
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("core_degree"))
         )
-    finally:
-        e0.unpersist()
 
-
-def _kcore_driver_route(
-    e0: DataFrame, k: int, max_iter: int, max_edges: int
-) -> DataFrame | None:
-    """Bounded driver-side k-core peel (see :func:`k_core`): synchronous
-    integer degree-peeling rounds over the collected canonical edge list —
-    identical fixpoint to the distributed loop (the maximal k-core is
-    unique and the round semantics match exactly). Returns None past the
-    bound."""
-    rows = e0.limit(max_edges + 1).collect()
-    if len(rows) > max_edges:
-        return None
-    cur = [(a, b) for a, b in rows]
-    for _ in range(max_iter):
-        if not cur:
-            break
-        deg: dict = {}
-        for a, b in cur:
-            deg[a] = deg.get(a, 0) + 1
-            deg[b] = deg.get(b, 0) + 1
-        keep = {n for n, d in deg.items() if d >= k}
-        pruned = [(a, b) for a, b in cur if a in keep and b in keep]
-        if len(pruned) == len(cur):
-            break
-        cur = pruned
-    core_deg: dict = {}
-    for a, b in cur:
-        core_deg[a] = core_deg.get(a, 0) + 1
-        core_deg[b] = core_deg.get(b, 0) + 1
-    spark = e0.sparkSession
-    id_type = e0.schema["_a"].dataType
-    schema = StructType(
-        [StructField("node", id_type), StructField("core_degree", LongType())]
+    return run_route(
+        "k_core", route, e0, f"node {_type(e0)}, core_degree bigint", driver, loop
     )
-    out = sorted(core_deg.items())
-    return spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
 
 
-# Same bound (and same rationale) as dedup.DRIVER_CC_MAX_EDGES: ≤500k
-# symmetrized (u, v) pairs is tens of MB of loop state on the driver —
-# trivially held — while every graph past it stays on the distributed loop.
 DRIVER_BFS_MAX_EDGES = env_int("SPARK_GRAFT_DRIVER_BFS_MAX_EDGES", 500_000)
-
-
-def _bfs_driver_route(sym: DataFrame, seed, max_iter: int, max_edges: int):
-    """Bounded driver-side BFS — the `dedup._cc_driver_route` pattern
-    applied to hop distances (round-6 verdict ask #2): when the
-    symmetrized edge list fits the bound, collect it ONCE and run the
-    whole frontier expansion as an in-memory adjacency walk — zero Spark
-    jobs per round, versus 2 jobs + a localCheckpoint write per round in
-    the distributed loop (whose floor is rounds × scheduler overhead:
-    BFS eccentricity ≈ 15-25 rounds at sf0.1 made it the most expensive
-    bench query). Like the CC union-find route this moves only bounded
-    LOOP STATE (the edge pairs / hop map) to the driver; there is no
-    per-element value math to keep JVM-side in unweighted BFS — the
-    "math" IS the set bookkeeping. Returns None when the graph exceeds
-    ``max_edges`` (caller falls back to the distributed loop, which is
-    the only 100 TB shape).
-    """
-    from collections import deque
-
-    rows = sym.limit(max_edges + 1).collect()
-    if len(rows) > max_edges:
-        return None
-    adj: dict = {}
-    for u, v in rows:
-        adj.setdefault(u, []).append(v)
-    hops = {seed: 0}
-    dq = deque([seed])
-    while dq:
-        x = dq.popleft()
-        h = hops[x]
-        if h >= max_iter:
-            continue
-        for y in adj.get(x, ()):
-            if y not in hops:
-                hops[y] = h + 1
-                dq.append(y)
-    spark = sym.sparkSession
-    id_type = sym.schema["u"].dataType
-    schema = StructType(
-        [StructField("node", id_type), StructField("hops", LongType())]
-    )
-    out = sorted(hops.items())
-    return spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
 
 
 def bfs_hops(
@@ -718,77 +595,14 @@ def bfs_hops(
     route: str = "auto",
     max_edges: int = DRIVER_BFS_MAX_EDGES,
 ) -> DataFrame:
-    """Unweighted single-source shortest hop counts by frontier expansion
-    (distributed BFS / the unit-weight case of SSSP). Each round joins the
-    current FRONTIER (just-discovered nodes, not the whole visited set)
-    against the symmetrized edge list and anti-joins away already-visited
-    nodes. The new frontier is marked with a lazy localCheckpoint and the
-    emptiness probe's count() is the action that materializes it (merges
-    two jobs into one); the visited set IS checkpointed each round — an
-    A/B at sf0.1 showed that replacing it with a lazy union of the
-    already-checkpointed frontiers LOSES ~20-40% despite saving the job:
-    every later round re-plans and re-reads the growing union subtree,
-    which costs more than the one O(V) compaction job. Rounds =
-    eccentricity of the seed, per-round cost ∝ frontier-adjacent edges.
-    This is the Pregel-style BFS every bulk-synchronous graph engine
-    runs; at cluster scale swap localCheckpoint for reliable checkpoint
-    (RUNBOOK.md).
-
-    ``route="auto"`` first tries the bounded driver-side walk
-    (:func:`_bfs_driver_route`, ≤ ``max_edges`` symmetrized edges — the
-    common case for the fixed-budget co-order graph), falling back to
-    the distributed loop when the edge set is big data. ``"distributed"``
-    forces the loop (tests pin route equivalence + bench records it as a
-    scale_path row). Any other value raises.
+    """Unweighted single-source shortest hop counts: :func:`multi_bfs_hops`
+    from ``[seed]``, projected to its ``(node, hops)`` columns.
 
     Output: node, hops (seed included at 0; unreachable nodes absent).
     """
-    if route not in ("auto", "distributed"):
-        raise ValueError(
-            f"bfs_hops: unknown route {route!r} (expected 'auto' or 'distributed')"
-        )
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
-                )
-            ).alias("_e")
-        )
-        .select("_e.u", "_e.v")
-        .distinct()
-        .persist()
-    )
-    try:
-        if route == "auto":
-            # The limit-probe collect runs against the persisted sym, so a
-            # >max_edges graph pays the symmetrization once, not twice.
-            fast = _bfs_driver_route(sym, seed, max_iter, max_edges)
-            if fast is not None:
-                return fast
-        sym.count()
-        spark = edges.sparkSession
-        visited = spark.createDataFrame([(seed, 0)], ["node", "hops"]).localCheckpoint()
-        frontier = visited
-        for h in range(1, max_iter + 1):
-            nxt = (
-                sym.join(frontier.select(F.col("node").alias("u")), "u")
-                .select(F.col("v").alias("node"))
-                .distinct()
-                .join(visited.select("node"), "node", "left_anti")
-                .withColumn("hops", F.lit(h))
-                .localCheckpoint(eager=False)
-            )
-            if nxt.count() == 0:  # materializes the lazy checkpoint
-                break
-            visited = visited.unionAll(nxt).localCheckpoint()
-            frontier = nxt
-        return visited
-    finally:
-        # Released on every exit — driver-route return, converged loop, or
-        # an exception mid-round (same contract as connected_components).
-        sym.unpersist()
+    return _bfs(
+        "bfs_hops", edges, [seed], src, dst, max_iter, route, max_edges
+    ).select("node", "hops")
 
 
 def multi_bfs_hops(
@@ -801,25 +615,33 @@ def multi_bfs_hops(
     max_edges: int = DRIVER_BFS_MAX_EDGES,
 ) -> DataFrame:
     """Multi-source BFS: hop distance from EVERY seed in ``seeds`` (a
-    bounded Python sequence of node ids) to every node it reaches — one
-    loop whose frontier carries (seed, node) pairs, so k seeds cost one
-    traversal of rounds = max seed eccentricity, not k sequential runs.
-    Same route contract as :func:`bfs_hops`: ``"auto"`` collects the
-    symmetrized edge list when it fits ``max_edges`` and runs the whole
-    walk driver-side (zero jobs per round — the round-6 verdict's cure
-    for per-round scheduler overhead), falling back to the distributed
-    (seed, node)-keyed loop; ``"distributed"`` forces the loop. Driver
-    state is bounded by max_edges pairs + |seeds|·|nodes| hop entries.
+    bounded Python sequence of node ids) to every node it reaches, by
+    frontier expansion (distributed BFS / the unit-weight case of SSSP).
+    One loop whose frontier carries (seed, node) pairs, so k seeds cost
+    one traversal of rounds = max seed eccentricity, not k sequential runs.
+
+    Each round joins the current FRONTIER (just-discovered pairs, not the
+    whole visited set) against the symmetrized edge list and anti-joins
+    away already-visited pairs. The new frontier is marked with a lazy
+    localCheckpoint and the emptiness probe's count() is the action that
+    materializes it (merges two jobs into one); the visited set IS
+    checkpointed each round — an A/B at sf0.1 showed that replacing it
+    with a lazy union of the already-checkpointed frontiers LOSES ~20-40%
+    despite saving the job: every later round re-plans and re-reads the
+    growing union subtree, which costs more than the one O(V) compaction
+    job. This is the Pregel-style BFS every bulk-synchronous graph engine
+    runs; at cluster scale swap localCheckpoint for reliable checkpoint
+    (RUNBOOK.md). The driver route walks the collected edge list once per
+    seed; its state is bounded by max_edges pairs + |seeds|·|nodes| hop
+    entries.
 
     Output: seed, node, hops (each seed at 0 to itself; unreachable
     (seed, node) combinations absent).
     """
-    if route not in ("auto", "distributed"):
-        raise ValueError(
-            f"multi_bfs_hops: unknown route {route!r} "
-            "(expected 'auto' or 'distributed')"
-        )
-    seeds = list(seeds)
+    return _bfs("multi_bfs_hops", edges, list(seeds), src, dst, max_iter, route, max_edges)
+
+
+def _bfs(kernel, edges, seeds, src, dst, max_iter, route, max_edges) -> DataFrame:
     sym = (
         edges.select(
             F.explode(
@@ -831,45 +653,36 @@ def multi_bfs_hops(
         )
         .select("_e.u", "_e.v")
         .distinct()
-        .persist()
     )
-    spark = edges.sparkSession
-    try:
-        if route == "auto":
-            from collections import deque
 
-            rows = sym.limit(max_edges + 1).collect()
-            if len(rows) <= max_edges:
-                adj: dict = {}
-                for u, v in rows:
-                    adj.setdefault(u, []).append(v)
-                out = []
-                for s in seeds:
-                    hops = {s: 0}
-                    dq = deque([s])
-                    while dq:
-                        x = dq.popleft()
-                        h = hops[x]
-                        if h >= max_iter:
-                            continue
-                        for y in adj.get(x, ()):
-                            if y not in hops:
-                                hops[y] = h + 1
-                                dq.append(y)
-                    out.extend((s, n, h) for n, h in sorted(hops.items()))
-                id_type = sym.schema["u"].dataType
-                schema = StructType(
-                    [
-                        StructField("seed", id_type),
-                        StructField("node", id_type),
-                        StructField("hops", LongType()),
-                    ]
-                )
-                return spark.createDataFrame(
-                    spark.sparkContext.parallelize(out, 1), schema
-                )
+    def driver(sym):
+        from collections import deque
+
+        rows = sym.limit(max_edges + 1).collect()
+        if len(rows) > max_edges:
+            return None
+        adj: dict = {}
+        for u, v in rows:
+            adj.setdefault(u, []).append(v)
+        out = []
+        for s in seeds:
+            hops = {s: 0}
+            dq = deque([s])
+            while dq:
+                x = dq.popleft()
+                h = hops[x]
+                if h >= max_iter:
+                    continue
+                for y in adj.get(x, ()):
+                    if y not in hops:
+                        hops[y] = h + 1
+                        dq.append(y)
+            out.extend((s, n, h) for n, h in sorted(hops.items()))
+        return out
+
+    def loop(sym, stage):
         sym.count()
-        visited = spark.createDataFrame(
+        visited = sym.sparkSession.createDataFrame(
             [(s, s, 0) for s in seeds], ["seed", "node", "hops"]
         ).localCheckpoint()
         frontier = visited
@@ -887,8 +700,11 @@ def multi_bfs_hops(
             visited = visited.unionAll(nxt).localCheckpoint()
             frontier = nxt
         return visited
-    finally:
-        sym.unpersist()
+
+    t = _type(sym)
+    return run_route(
+        kernel, route, sym, f"seed {t}, node {t}, hops bigint", driver, loop
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -909,7 +725,6 @@ def hits_raw(
     iterations: int = 8,
     route: str = "auto",
     max_edges: int = DRIVER_HITS_MAX_EDGES,
-    checkpoint_every: int = 2,
 ) -> tuple[DataFrame, DataFrame]:
     """RAW (unnormalized) HITS sums over a DISTINCT bipartite edge list:
     ``iterations`` alternating half-steps ``auth = Eᵀ·hub`` /
@@ -919,68 +734,40 @@ def hits_raw(
     ROUNDED normalized scores, which absorbs summation-order ulps, the
     same tolerance contract as :func:`pagerank`).
 
-    ``route="auto"`` first tries the bounded driver route: collect the
-    ≤``max_edges`` edge pairs once and run every half-step as a numpy
-    ``bincount`` over the index-compressed arrays — zero Spark jobs per
-    round, versus 2 join+aggregate shuffles per round (the distributed
-    loop's floor is 2·iterations × scheduler overhead, which dominated
-    the bench row). ``"distributed"`` forces the loop — the 100 TB shape:
-    per half-step one edge×node-table join with map-side partial sums,
-    state checkpointed every ``checkpoint_every`` rounds.
+    The driver route runs every half-step as a numpy ``bincount`` over the
+    index-compressed edge arrays. The distributed loop runs per half-step
+    one edge×node-table join with map-side partial sums.
 
     Returns ``(hub, auth)``: hub is (<left>, h double), auth is
     (<right>, a double), one row per node with ≥1 edge on that side.
     """
-    if route not in ("auto", "distributed"):
-        raise ValueError(
-            f"hits_raw: unknown route {route!r} (expected 'auto' or 'distributed')"
-        )
-    sc = edges.sparkSession.sparkContext
-    spark = edges.sparkSession
-    e0 = edges.select(F.col(left).alias("c"), F.col(right).alias("s")).persist()
-    try:
-        if route == "auto":
-            import numpy as np
+    e0 = edges.select(F.col(left).alias("c"), F.col(right).alias("s"))
 
-            pdf = e0.limit(max_edges + 1).toPandas()
-            if len(pdf) <= max_edges and len(pdf) > 0:
-                c = pdf.iloc[:, 0].to_numpy()
-                s = pdf.iloc[:, 1].to_numpy()
-                cn = np.unique(c)
-                sn = np.unique(s)
-                ci = np.searchsorted(cn, c)
-                si = np.searchsorted(sn, s)
-                h = np.ones(len(cn))
-                a = np.zeros(len(sn))
-                for _ in range(iterations):
-                    a = np.bincount(si, weights=h[ci], minlength=len(sn))
-                    h = np.bincount(ci, weights=a[si], minlength=len(cn))
-                c_type = e0.schema[0].dataType
-                s_type = e0.schema[1].dataType
-                hub = spark.createDataFrame(
-                    sc.parallelize(
-                        list(zip([x.item() for x in cn], [float(x) for x in h])), 1
-                    ),
-                    StructType(
-                        [StructField(left, c_type), StructField("h", DoubleType())]
-                    ),
-                )
-                auth = spark.createDataFrame(
-                    sc.parallelize(
-                        list(zip([x.item() for x in sn], [float(x) for x in a])), 1
-                    ),
-                    StructType(
-                        [StructField(right, s_type), StructField("a", DoubleType())]
-                    ),
-                )
-                return hub, auth
-        # Distributed loop: hub and auth each feed exactly ONE consumer
-        # (the next half-step), so materializing every round buys no
-        # recompute safety — checkpoint cadence is purely a job-count
-        # knob. The FINAL auth feeds multiple consumers (its norm and the
-        # output projection), so it checkpoints eagerly inside the last
-        # round.
-        e = e0.repartition(sc.defaultParallelism, "c").persist()
+    def driver(e0):
+        import numpy as np
+
+        cols = _edge_columns(e0, max_edges)
+        if cols is None:
+            return None
+        c, s = cols
+        cn = np.unique(c)
+        sn = np.unique(s)
+        ci = np.searchsorted(cn, c)
+        si = np.searchsorted(sn, s)
+        h = np.ones(len(cn))
+        a = np.zeros(len(sn))
+        for _ in range(iterations):
+            a = np.bincount(si, weights=h[ci], minlength=len(sn))
+            h = np.bincount(ci, weights=a[si], minlength=len(cn))
+        return _rank_rows(cn, h), _rank_rows(sn, a)
+
+    def loop(e0, stage):
+        # hub and auth each feed exactly ONE consumer (the next half-step),
+        # so materializing every round buys no recompute safety: hub is
+        # checkpointed every 2nd round, which halves the job count. The
+        # FINAL auth and hub feed several consumers (norm and output), so
+        # both checkpoint eagerly in the last round.
+        e = stage(e0.repartition(e0.sparkSession.sparkContext.defaultParallelism, "c"))
         hub = e.select("c").distinct().withColumn("h", F.lit(1.0)).localCheckpoint()
         auth = None
         for _it in range(iterations):
@@ -988,13 +775,11 @@ def hits_raw(
             if _it == iterations - 1:
                 auth = auth.localCheckpoint()
             hub = e.join(auth, "s").groupBy("c").agg(F.sum("a").alias("h"))
-            if (_it + 1) % checkpoint_every == 0 or _it == iterations - 1:
+            if _it % 2 or _it == iterations - 1:
                 hub = hub.localCheckpoint()
-        e.unpersist()
         return hub.select(F.col("c").alias(left), "h"), auth.select(
             F.col("s").alias(right), "a"
         )
-    finally:
-        # Released on every exit: the driver route returned local frames,
-        # and the distributed loop's final state is an eager checkpoint.
-        e0.unpersist()
+
+    schemas = (f"`{left}` {_type(e0, 0)}, h double", f"`{right}` {_type(e0, 1)}, a double")
+    return run_route("hits_raw", route, e0, schemas, driver, loop)

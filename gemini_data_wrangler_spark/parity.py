@@ -72,15 +72,22 @@ EVER_RED = frozenset({"embedding_kmeans", "embedding_kmeans_members"})
 
 
 def compare(spark_df, duck_con, oracle_sql: str, sample: bool = False) -> dict:
-    """Return a diagnostics dict; ``ok`` True when everything matches."""
+    """Return a diagnostics dict; ``ok`` True when everything matches.
+    ``spark_s`` and ``oracle_s`` time the Spark collect and the DuckDB
+    fetch."""
+    t0 = time.perf_counter()
     spark_cols = [c.lower() for c in spark_df.columns]
     spark_rows = [tuple(r) for r in spark_df.collect()]
+    t1 = time.perf_counter()
 
     duck_res = duck_con.execute(oracle_sql)
     duck_cols = [d[0].lower() for d in duck_res.description]
     duck_rows = duck_res.fetchall()
+    t2 = time.perf_counter()
 
     out = {
+        "spark_s": t1 - t0,
+        "oracle_s": t2 - t1,
         "spark_rows": len(spark_rows),
         "duck_rows": len(duck_rows),
         "spark_cols": sorted(spark_cols),
@@ -126,7 +133,8 @@ def duck_connection(sf_dir: str):
 def run_parity(spark, sf_dir: str, only: list[str] | None = None) -> dict:
     """Run every registry query against its oracle; return the artifact dict.
 
-    Record shape matches CORRECTNESS_r{N}.json rows exactly; rows-only
+    Record shape matches CORRECTNESS_r{N}.json rows, plus ``spark_s``
+    (builder and collect) and ``oracle_s`` (DuckDB) in seconds; rows-only
     queries (no oracle) get ``err: "no_oracle"`` with their row count, the
     same weaker check the driver records.
     """
@@ -147,13 +155,18 @@ def run_parity(spark, sf_dir: str, only: list[str] | None = None) -> dict:
             "spark_rows": None,
             "oracle_rows": None,
             "err": None,
+            "spark_s": None,
+            "oracle_s": None,
         }
         try:
+            t0 = time.perf_counter()
             df = builder(spark, sf_dir)
             if oracle is None:
                 rec["spark_rows"] = df.count()
                 rec["err"] = "no_oracle"
+                rec.update(spark_s=round(time.perf_counter() - t0, 3), oracle_s=0.0)
             else:
+                builder_s = time.perf_counter() - t0
                 diag = compare(df, con, oracle, sample=name in EVER_RED)
                 rec.update(
                     rows_match=diag["rowcount_ok"],
@@ -161,6 +174,8 @@ def run_parity(spark, sf_dir: str, only: list[str] | None = None) -> dict:
                     hash_match=diag["values_ok"],
                     spark_rows=diag["spark_rows"],
                     oracle_rows=diag["duck_rows"],
+                    spark_s=round(builder_s + diag["spark_s"], 3),
+                    oracle_s=round(diag["oracle_s"], 3),
                 )
                 if "spark_sample" in diag:
                     rec["spark_sample"] = diag["spark_sample"]
@@ -219,6 +234,11 @@ def main(argv: list[str] | None = None) -> int:
         f"{s['rows_only']} rows-only, {len(s['failures'])} failures "
         f"({s['elapsed_sec']}s) -> {args.out}"
     )
+    timed = [(n, r) for n, r in artifact["queries"].items() if r["spark_s"] is not None]
+    timed.sort(key=lambda nr: -(nr[1]["spark_s"] + nr[1]["oracle_s"]))
+    print("slowest queries (spark_s + oracle_s):")
+    for name, r in timed[:10]:
+        print(f"  {name:45s} spark={r['spark_s']:7.2f}s oracle={r['oracle_s']:6.2f}s")
     spark.stop()
     return 1 if s["failures"] else 0
 

@@ -33,10 +33,6 @@ from gemini_data_wrangler_spark.sources.readers import sf_table
 # ---------------------------------------------------------------------------
 _HITS_ITERS = 8
 _HITS_TOP = 10
-# Hub-state materialization cadence: every 2nd round halves the job count
-# (per-job scheduling floor dominates node-sized rounds on the bench
-# host); must divide _HITS_ITERS so the last round's hub is checkpointed.
-_HITS_CHECKPOINT_EVERY = 2
 
 
 def _hits_oracle() -> str:
@@ -119,9 +115,7 @@ def graph_hits_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expensive full-suite row); the distributed loop stays as the
     # forced 100 TB fallback, equivalence-pinned in
     # tests/test_graph_driver_routes.py.
-    hub, auth = hits_raw(
-        edges, iterations=_HITS_ITERS, checkpoint_every=_HITS_CHECKPOINT_EVERY
-    )
+    hub, auth = hits_raw(edges, iterations=_HITS_ITERS)
     anorm = auth.agg(F.sqrt(F.sum(F.col("a") * F.col("a"))).alias("_z"))
     hnorm = hub.agg(F.sqrt(F.sum(F.col("h") * F.col("h"))).alias("_z"))
     hub_top = hub.crossJoin(F.broadcast(hnorm)).select(

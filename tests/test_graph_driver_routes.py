@@ -6,6 +6,7 @@ memos (near-dup pairs, directed kNN) must equal the un-memoized builds.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
@@ -92,9 +93,81 @@ def test_k_core_driver_route_matches_distributed(spark):
         assert low == dist
 
 
-def test_route_typos_raise(spark):
-    import pytest
+def _run_kernel(spark, kernel: str, route: str, **kw):
+    """Run one route-staged kernel on the 11-edge graph and collect every
+    frame it returns (``hits_raw`` returns two)."""
+    from gemini_data_wrangler_spark.operators import dedup, graphs
 
+    e = _edges(spark)
+    seeds = spark.createDataFrame([(1,), (4,)], "node bigint")
+    pairs = e.select(F.col("src").alias("doc_a"), F.col("dst").alias("doc_b"))
+    calls = {
+        "pagerank": lambda: graphs.pagerank(e, iterations=3, route=route, **kw),
+        "personalized_pagerank": lambda: graphs.personalized_pagerank(
+            e, seeds, iterations=3, route=route, **kw
+        ),
+        "label_propagation": lambda: graphs.label_propagation(
+            e, iterations=3, route=route, **kw
+        ),
+        "k_core": lambda: graphs.k_core(e, 2, route=route, **kw),
+        "bfs_hops": lambda: graphs.bfs_hops(e, 1, route=route, **kw),
+        "multi_bfs_hops": lambda: graphs.multi_bfs_hops(e, [1, 7], route=route, **kw),
+        "hits_raw": lambda: graphs.hits_raw(
+            e, left="src", right="dst", iterations=2, route=route, **kw
+        ),
+        "connected_components": lambda: dedup.connected_components(
+            pairs, route=route, **kw
+        ),
+        "connected_components_star": lambda: dedup.connected_components_star(
+            pairs, route=route, **kw
+        ),
+    }
+    out = calls[kernel]()
+    for df in out if isinstance(out, tuple) else (out,):
+        df.collect()
+
+
+_ROUTED_KERNELS = (
+    "pagerank",
+    "personalized_pagerank",
+    "label_propagation",
+    "k_core",
+    "bfs_hops",
+    "multi_bfs_hops",
+    "hits_raw",
+    "connected_components",
+    "connected_components_star",
+)
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("route", ["auto", "distributed"])
+@pytest.mark.parametrize("kernel", _ROUTED_KERNELS)
+def test_routed_kernels_release_every_staged_frame(spark, kernel, route):
+    """Every frame a kernel persists is released once its result is
+    collected, on both routes: nothing stays in the cache manager."""
+    spark.catalog.clearCache()
+    _run_kernel(spark, kernel, route)
+    assert _cache_is_empty(spark), kernel
+
+
+@pytest.mark.parametrize("route", ["auto", "distributed"])
+def test_ppr_empty_seed_raise_releases_staged_frames(spark, route):
+    """The empty-seed raise comes after the edge and node frames are
+    persisted; the error path must release them too."""
+    from gemini_data_wrangler_spark.operators.graphs import personalized_pagerank
+
+    spark.catalog.clearCache()
+    seeds = spark.createDataFrame([(999,)], "node bigint")  # not in the graph
+    with pytest.raises(ValueError, match="empty seed set"):
+        personalized_pagerank(_edges(spark), seeds, iterations=3, route=route)
+    assert _cache_is_empty(spark)
+
+
+def test_route_typos_raise(spark):
     from gemini_data_wrangler_spark.operators.graphs import (
         k_core,
         label_propagation,
@@ -112,6 +185,10 @@ def test_route_typos_raise(spark):
     ):
         with pytest.raises(ValueError):
             fn()
+    # Every route-staged kernel rejects a typo with a message naming it.
+    for kernel in _ROUTED_KERNELS:
+        with pytest.raises(ValueError, match=rf"^{kernel}: unknown route 'driver'"):
+            _run_kernel(spark, kernel, "driver")
 
 
 def test_neardup_pairs_memo_matches_fresh_build(spark):

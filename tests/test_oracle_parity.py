@@ -31,6 +31,15 @@ def test_rows_only_queries_return_rows(spark):
             assert df.count() >= 0, name
 
 
+def test_run_parity_records_spark_and_oracle_timings(spark):
+    from gemini_data_wrangler_spark.parity import run_parity
+
+    artifact = run_parity(spark, SF_ORACLE, only=["flagship_segment_sales"])
+    rec = artifact["queries"]["flagship_segment_sales"]
+    assert rec["hash_match"] and rec["err"] is None, rec
+    assert rec["spark_s"] >= 0 and rec["oracle_s"] >= 0, rec
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 
