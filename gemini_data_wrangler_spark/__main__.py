@@ -16,9 +16,11 @@ or preview the final result.
 
 This is the `spark-submit` surface: on a cluster,
 ``spark-submit --py-files gdws.zip -m gemini_data_wrangler_spark ...``
-with the session created by the cluster manager. The SQL path routes
-through the same DuckDB→Spark dialect shim as CUSTOM stages, so flows
-exported from the reference run unchanged.
+with the session created by the cluster manager. The SQL path runs as a
+one-stage CUSTOM pipeline, so it gets the same DuckDB→Spark dialect shim
+and the same loaded-table schemas (for COLUMNS(...), * REPLACE, len() and
+slicing) as a flow's CUSTOM stages; flows exported from the reference run
+unchanged.
 """
 
 from __future__ import annotations
@@ -68,17 +70,13 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
         with open(args.flow) as fh:
             stages = import_flow_json(fh.read())
-        results = runner.run(stages, continue_on_error=args.continue_on_error)
-        if not results:
-            print("flow produced no results", file=sys.stderr)
-            return 2
-        df = results[-1].df
     else:
-        from gemini_data_wrangler_spark.plans.dialect import duckdb_to_spark_sql
-
-        for name, t in tables.items():
-            t.createOrReplaceTempView(name)
-        df = spark.sql(duckdb_to_spark_sql(args.sql))
+        stages = [{"type": "CUSTOM", "data": {"sql": args.sql}}]
+    results = runner.run(stages, continue_on_error=args.continue_on_error)
+    if not results or results[-1].df is None:
+        print(results[-1].error if results else "flow produced no results", file=sys.stderr)
+        return 2
+    df = results[-1].df
 
     if args.out:
         from gemini_data_wrangler_spark.sources import sinks

@@ -24,7 +24,6 @@ Faithfulness notes (SURVEY.md §7.4):
 
 from __future__ import annotations
 
-import re
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -247,44 +246,17 @@ def compile_stage(
             raise ValueError("CUSTOM stage requires sql string")
         if spark is None:
             raise ValueError("CUSTOM stage requires a SparkSession")
-        from gemini_data_wrangler_spark.plans.dialect import duckdb_to_spark_sql
+        from gemini_data_wrangler_spark.plans import dialect
 
         # The reference's planner emits DuckDB SQL (server/index.js:269);
         # rewrite its known dialect-isms so migrated flows run unchanged.
-        # COLUMNS('re') expansion is schema-dependent: supply the catalog's
-        # temp-view schemas, lazily (one listTables pass) and only when the
-        # token actually appears — every other rewrite is schema-free.
-        text = str(sql)
-        table_columns = None
-        if re.search(r"\bCOLUMNS\s*\(", text, re.IGNORECASE):
-            table_columns = {
-                t2.name: spark.table(t2.name).columns
-                for t2 in spark.catalog.listTables()
-            }
-        column_kinds = None
-        if re.search(r"\blen\s*\(", text, re.IGNORECASE) or re.search(
-            r"\[[^\]\[]*:", text
-        ):
-            # len() dispatch and [i:j] slicing need column TYPES (string vs
-            # array); build a flat column→kind map from the catalog, marking
-            # cross-table name collisions with conflicting kinds as
-            # undecidable.
-            column_kinds = {}
-            for t2 in spark.catalog.listTables():
-                for f in spark.table(t2.name).schema.fields:
-                    tn = f.dataType.typeName()
-                    kind = (
-                        "string"
-                        if tn == "string"
-                        else "array" if tn in ("array", "map") else "other"
-                    )
-                    key = f.name.lower()
-                    prev = column_kinds.get(key)
-                    if prev is not None and prev != kind:
-                        column_kinds[key] = "conflict"
-                    else:
-                        column_kinds[key] = kind
-        return spark.sql(duckdb_to_spark_sql(text, table_columns, column_kinds))
+        # The shim calls the catalog-schema source only for the few
+        # rewrites that need a column (COLUMNS, * REPLACE, len, slices).
+        return spark.sql(
+            dialect.duckdb_to_spark_sql(
+                str(sql), schemas=lambda: dialect.catalog_schemas(spark)
+            )
+        )
 
     if t == "LOAD":
         # In the engine, LOAD resolves an already-registered table (the

@@ -14,9 +14,7 @@ Mirrors the reference's two executors:
 
 Spark-first difference: "materialization" is a temp-view registration of a
 *lazy* DataFrame, so consecutive stages fuse into one Catalyst plan (filters
-reach the scan, projections prune columns). ``cache_results=True`` opts into
-reference-style materialization via ``.cache()`` for results that fan out to
-multiple downstream stages.
+reach the scan, projections prune columns).
 """
 
 from __future__ import annotations
@@ -63,24 +61,18 @@ class PipelineRunner:
     spark: SparkSession
     tables: dict[str, DataFrame] = field(default_factory=dict)
     active_table: str | None = None
-    cache_results: bool = False
-    register_views: bool = True
 
     def __post_init__(self) -> None:
         for name, df in self.tables.items():
-            self._register(name, df)
+            df.createOrReplaceTempView(name)
 
     # -- catalog -----------------------------------------------------------
     def add_table(self, name: str, df: DataFrame) -> None:
         name = self._uniquify(clean_table_name(name))
         self.tables[name] = df
-        self._register(name, df)
+        df.createOrReplaceTempView(name)
         if self.active_table is None:
             self.active_table = name
-
-    def _register(self, name: str, df: DataFrame) -> None:
-        if self.register_views:
-            df.createOrReplaceTempView(name)
 
     def _uniquify(self, name: str) -> str:
         # Uniquify with _1, _2, … like ui/src/App.tsx:789-800.
@@ -138,11 +130,9 @@ class PipelineRunner:
 
         default_table = self.default_input(index, previous_result)
         df = compile_stage(stage, self.resolve, spark=self.spark, default_table=default_table)
-        if self.cache_results:
-            df = df.cache()
         result_name = self.result_name_for(stage, index)
         self.tables[result_name] = df
-        self._register(result_name, df)
+        df.createOrReplaceTempView(result_name)
         return StageResult(stage=stage, result_name=result_name, df=df)
 
     def run(self, stages: list[Stage | dict[str, Any]], continue_on_error: bool = False) -> list[StageResult]:

@@ -10,7 +10,15 @@ DuckDB-isms real flows carry, not just what the reference itself emits.
 Deliberately *surface-level*: each rule is a well-defined token rewrite of
 a DuckDB-ism onto its exact Spark equivalent, applied outside string
 literals. Anything beyond this list is already ANSI-shared between the
-engines and passes through untouched.
+engines and passes through untouched. Refused constructs sit in one
+pattern table, checked once on the literal-masked text.
+
+Schemas: ``duckdb_to_spark_sql(sql, schemas=...)`` takes a lazy
+``{view: StructType}`` source. The CUSTOM stage — and so every pipeline
+and the CLI's ``--sql`` path, which runs as a one-stage CUSTOM pipeline —
+passes ``catalog_schemas(spark)`` over the session's views. Only the rows
+marked *schema* below call it; direct callers without a source get those
+forms refused.
 
 | DuckDB | Spark |
 |---|---|
@@ -51,13 +59,13 @@ engines and passes through untouched.
 | ``GROUP BY ALL`` / ``ILIKE``       | pass through (Spark-native) |
 | ``a ^ b`` (DuckDB POWER)           | refused → explicit error (Spark ``^`` is XOR) |
 | ``t1 POSITIONAL JOIN t2``          | unsupported → explicit error |
-| ``expr[i:j]`` slicing              | ``substring``/``slice`` dispatched on the operand's inferred kind (same inference as ``len()``): 1-based end-inclusive, negatives from the end, clamped, empty bounds default to the ends; unresolvable operand type → explicit error |
+| ``expr[i:j]`` slicing              | ``substring``/``slice`` dispatched on the operand's inferred kind (same inference as ``len()``; *schema* for a bare column): 1-based end-inclusive, negatives from the end, clamped, empty bounds default to the ends; unresolvable operand type → explicit error |
 | ``SELECT DISTINCT ON (k) ...``     | row_number window wrapper (requires ORDER BY for determinism → else error) |
 | ``USING SAMPLE n% / n ROWS``       | ``TABLESAMPLE (n PERCENT / n ROWS)`` (+ ``REPEATABLE(seed)``; reservoir/bernoulli/system methods accepted) |
 | ``ASOF [LEFT] JOIN``               | correlated ``[LEFT] JOIN LATERAL (... ORDER BY <ineq operand> LIMIT 1)`` keeping the right alias (projections untouched); operator-level as-of (operators/temporal.py) remains the tuned path |
 | ``PIVOT t ON c IN (...) USING agg``| SQL-standard ``PIVOT`` clause (IN list required; dynamic column discovery refused) |
 | ``UNPIVOT t ON ... INTO NAME/VALUE`` | SQL-standard ``UNPIVOT`` clause |
-| ``COLUMNS('re')`` / ``COLUMNS(*)`` | explicit column list (needs caller-supplied table schemas; refused without) |
+| ``COLUMNS('re')`` / ``COLUMNS(*)`` | explicit column list of the single FROM table (*schema*; refused without a source) |
 | ``string_agg(x[, sep][ORDER BY o])`` | ``listagg(x, sep) [WITHIN GROUP (ORDER BY o)]`` |
 | ``date_diff('part', a, b)``        | boundary-exact arithmetic per part (DuckDB counts boundaries crossed, not complete intervals; 'week' refused; sub-day units pin DuckDB v1.0.0's trunc-toward-zero epoch division, incl. pre-epoch) |
 | ``strpos(s, sub)``                 | ``instr(s, sub)`` |
@@ -65,8 +73,8 @@ engines and passes through untouched.
 | ``j -> 'k'`` / ``j ->> 'k'``       | ``to_json(variant_get(parse_json(j), '$.k'))`` / ``get_json_object(j, '$.k')`` (ints index arrays; lambda arrows inside HOFs untouched) |
 | ``json_extract[_string](j, p)``    | same targets as the arrow forms (literal single path only) |
 | ``{'k': v}`` / ``MAP {'k': v}``    | ``named_struct('k', v)`` / ``map('k', v)`` (innermost-first) |
-| ``SELECT * REPLACE (e AS c)``      | explicit column list with ``e AS c`` substituted (schema-supplied) |
-| ``len(x)``                         | ``length(x)`` / ``size(x)`` dispatched on the inferred kind (literal shape, leading function, CAST target, or caller-supplied column kinds); undecidable → explicit error |
+| ``SELECT * REPLACE (e AS c)``      | explicit column list with ``e AS c`` substituted (*schema*; refused without a source) |
+| ``len(x)``                         | ``length(x)`` / ``size(x)`` dispatched on the inferred kind (literal shape, leading function, CAST target, or — *schema* — a bare column's type; a name whose type differs across views is undecidable); undecidable → explicit error |
 | ``regexp_replace(s, p, r[, opts])``| global (``'g'``): 3-arg Spark call, ``i``/``s``/``m`` fold into ``(?flags)``, literal replacements convert RE2 rewrite syntax (``\\k``, literal ``$``) to Java (``$k``, ``\\$``); first-match (no ``'g'``): anchored ``^((?s).*?)(p)`` wrapper + ``$1``-prefixed replacement with group refs shifted by 2 (needs a literal replacement → else error) |
 | ``date_part('dow'/'isodow'/'epoch', x)`` | ``dayofweek(x)-1`` / ``weekday(x)+1`` / fractional epoch seconds (numbering diverges); shared fields pass through, ``datepart`` renamed |
 | ``epoch(ts)``                      | ``unix_micros(cast(ts as timestamp)) / 1e6`` |
@@ -177,17 +185,25 @@ engines and passes through untouched.
 
 from __future__ import annotations
 
+import functools
 import re
+from typing import Callable
 
 # EXCLUDE after a star-select: DuckDB `* EXCLUDE (c1, c2)` or `r.* EXCLUDE (c)`
 _EXCLUDE_RE = re.compile(r"(\*\s*)EXCLUDE(\s*\()", re.IGNORECASE)
 _READ_CSV_RE = re.compile(r"read_csv_auto\s*\(\s*'([^']+)'[^)]*\)", re.IGNORECASE)
 _READ_PARQUET_RE = re.compile(r"read_parquet\s*\(\s*'([^']+)'\s*\)", re.IGNORECASE)
 _LIST_VALUE_RE = re.compile(r"\bLIST_VALUE\s*\(", re.IGNORECASE)
-_POSITIONAL_RE = re.compile(r"\bPOSITIONAL\s+JOIN\b", re.IGNORECASE)
-_RECURSIVE_UNNEST_RE = re.compile(r"\bunnest\s*\([^()]*recursive\s*:=", re.IGNORECASE)
 
 _STR_RE = re.compile(r"'(?:[^']|'')*'")
+_PLACEHOLDER_RE = re.compile(r"\x00(\d+)\x00")
+
+
+def _literal_index(arg: str) -> int | None:
+    """Index into ``literals`` when ``arg`` is exactly one masked string
+    literal, else None."""
+    m = _PLACEHOLDER_RE.fullmatch(arg)
+    return int(m.group(1)) if m else None
 
 
 def _mask_strings(sql: str) -> tuple[str, list[str]]:
@@ -207,10 +223,8 @@ def _unmask_strings(sql: str, literals: list[str]) -> str:
     escape-free (``'\\s+'`` is backslash-s-plus) while Spark's parser
     processes C-style escapes — an unescaped ``\\s`` would silently become
     ``s`` and corrupt every migrated regex."""
-    return re.sub(
-        r"\x00(\d+)\x00",
-        lambda m: literals[int(m.group(1))].replace("\\", "\\\\"),
-        sql,
+    return _PLACEHOLDER_RE.sub(
+        lambda m: literals[int(m.group(1))].replace("\\", "\\\\"), sql
     )
 
 
@@ -299,9 +313,6 @@ _DISTINCT_ON_RE = re.compile(r"\bSELECT\s+DISTINCT\s+ON\s*\(", re.IGNORECASE)
 _FROM_RE = re.compile(r"\bFROM\b", re.IGNORECASE)
 _ORDER_BY_RE = re.compile(r"\bORDER\s+BY\b", re.IGNORECASE)
 _LIMIT_RE = re.compile(r"\bLIMIT\b", re.IGNORECASE)
-_ASC_DESC_RE = re.compile(
-    r"\s+(ASC|DESC)(\s+NULLS\s+(FIRST|LAST))?\s*$", re.IGNORECASE
-)
 
 
 def _rewrite_distinct_on(sql: str) -> str:
@@ -444,13 +455,6 @@ def _rewrite_from_series(sql: str) -> str:
 # ---------------------------------------------------------------------------
 # List comprehensions and bracket list literals
 # ---------------------------------------------------------------------------
-_COMPREHENSION_RE = re.compile(
-    r"^\s*(?P<expr>.+?)\s+for\s+(?P<var>[A-Za-z_][A-Za-z0-9_]*)\s+in\s+"
-    r"(?P<src>.+?)(?:\s+if\s+(?P<cond>.+))?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-
 _NOT_SUBSCRIPT_WORDS = {
     "in", "select", "from", "where", "and", "or", "not", "then", "else",
     "when", "on", "using", "by", "as", "case", "end", "join", "having",
@@ -597,16 +601,11 @@ _FN_RENAMES = [
     (re.compile(r"\bdatetrunc\s*\(", re.IGNORECASE), "date_trunc("),
     (re.compile(r"\btoday\s*\(", re.IGNORECASE), "current_date("),
 ]
-# Refusals: close lookalikes whose semantics silently diverge.
-_QUANTILE_DISC_RE = re.compile(r"\bquantile_disc\s*\(", re.IGNORECASE)
 _LIST_REDUCE_RE = re.compile(r"\b(?:list|array)_reduce\s*\(", re.IGNORECASE)
 _RECURSIVE_RE = re.compile(r"\bWITH\s+RECURSIVE\b", re.IGNORECASE)
 _UNION_ALL_RE = re.compile(r"\bUNION\s+ALL\b", re.IGNORECASE)
 # DuckDB `//` is integer division; Spark's infix equivalent is `div`.
 _INTDIV_RE = re.compile(r"//")
-# In DuckDB SQL `^` is POWER (xor is the xor() function); Spark `^` is
-# bitwise XOR — a silent semantic flip, so refuse instead of mistranslate.
-_CARET_RE = re.compile(r"\^")
 # strftime(ts, 'fmt') → date_format(ts, 'translated fmt')
 _STRFTIME_RE = re.compile(r"\bstrftime\s*\(", re.IGNORECASE)
 _STRFTIME_MAP = [
@@ -633,129 +632,49 @@ def _rewrite_strftime(masked: str, literals: list[str]) -> str:
     ``date_format(ts, 'yyyy-MM-dd')``. Runs on the masked text: the format
     literal is a placeholder, so the translation edits the literals table
     and commas inside strings can't confuse the arg split."""
-    pos = 0
-    while True:
-        m = _STRFTIME_RE.search(masked, pos)
-        if not m:
-            return masked
-        open_idx = masked.index("(", m.end() - 1)
-        close = _find_matching(masked, open_idx, "(", ")")
-        if close < 0:
-            return masked
-        args = [a.strip() for a in _split_top_level(masked[open_idx + 1 : close])]
-        if len(args) != 2:
-            pos = m.end()
-            continue
-        ph = re.fullmatch(r"\x00(\d+)\x00", args[1])
-        ts_arg, fmt_arg = args[0], args[1]
-        if not ph:
-            ph = re.fullmatch(r"\x00(\d+)\x00", args[0])
-            ts_arg, fmt_arg = args[1], args[0]
-        if not ph:
-            pos = m.end()
-            continue
-        idx = int(ph.group(1))
+
+    def build(m, a):
+        if len(a) != 2:
+            return None
+        ts_arg, fmt_arg = a if _literal_index(a[1]) is not None else a[::-1]
+        idx = _literal_index(fmt_arg)
+        if idx is None:
+            return None
         literals[idx] = "'" + _translate_strftime_format(literals[idx].strip("'")) + "'"
-        masked = (
-            masked[: m.start()]
-            + f"date_format({ts_arg}, {fmt_arg})"
-            + masked[close + 1 :]
-        )
+        return f"date_format({ts_arg}, {fmt_arg})"
 
-
-def _has_slice(masked: str) -> bool:
-    """True when a subscript bracket group (``x[...]``) contains a
-    top-level ``:`` that is not part of a ``::`` cast — DuckDB slicing."""
-    for i, ch in enumerate(masked):
-        if ch != "[" or not _is_subscript(masked, i):
-            continue
-        close = _find_matching(masked, i, "[", "]")
-        if close < 0:
-            continue
-        body = masked[i + 1 : close]
-        depth = 0
-        for j, c in enumerate(body):
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                depth -= 1
-            elif (
-                c == ":"
-                and depth == 0
-                and (j == 0 or body[j - 1] != ":")
-                and (j + 1 >= len(body) or body[j + 1] != ":")
-            ):
-                return True
-    return False
+    return _rewrite_call(masked, _STRFTIME_RE, build)
 
 
 _LIST_HAS_ALL_RE = re.compile(r"\b(?:list|array)_has_all\s*\(", re.IGNORECASE)
 _REGEXP_MATCHES_RE = re.compile(r"\bregexp_matches\s*\(", re.IGNORECASE)
-_STRING_SPLIT_RE = re.compile(r"\bstring_split\s*\(", re.IGNORECASE)
-# Aliases of string_split with the same LITERAL separator (Spark's split
-# takes a regex). `\b` keeps these off string_split/str_split_regex.
-_BARE_SPLIT_RE = re.compile(r"\bsplit\s*\(", re.IGNORECASE)
-_STR_SPLIT_RE = re.compile(r"\bstr_split\s*\(", re.IGNORECASE)
+# string_split and its aliases split on a LITERAL separator (Spark's split
+# takes a regex). `\b` keeps these off str_split_regex/regexp_split_to_array.
+_STRING_SPLIT_RE = re.compile(
+    r"\b(?:string_split|string_to_array|str_split|split)\s*\(", re.IGNORECASE
+)
 _LIST_AGGREGATE_RE = re.compile(r"\b(?:list|array)_agg(?:regate|r)\s*\(", re.IGNORECASE)
 _EPOCH_RE = re.compile(r"\bepoch_(us|ms)\s*\(", re.IGNORECASE)
 _REGEX_METACHARS = r"\.^$*+?()[]{}|"
 
 
-def _rewrite_two_arg(sql: str, pattern: re.Pattern, build) -> str:
-    """Generic rewrite of ``fn(a, b)`` via ``build(a, b) -> replacement``;
-    ``build`` returning None leaves the call site untouched."""
-    pos = 0
-    while True:
-        m = pattern.search(sql, pos)
-        if not m:
-            return sql
-        open_idx = sql.index("(", m.end() - 1)
-        close = _find_matching(sql, open_idx, "(", ")")
-        if close < 0:
-            return sql
-        args = [a.strip() for a in _split_top_level(sql[open_idx + 1 : close])]
-        repl = build(args) if len(args) == 2 else None
-        if repl is None:
-            pos = m.end()
-            continue
-        sql = sql[: m.start()] + repl + sql[close + 1 :]
+def _rewrite_string_split(masked: str, literals: list[str]) -> str:
+    """``string_split(s, sep)`` (and the ``string_to_array``/``split``/
+    ``str_split`` aliases) splits on a LITERAL separator; Spark's ``split``
+    takes a regex — so the separator literal is regex-escaped in the
+    literals table. A non-literal separator is refused (its runtime value
+    would be interpreted as a regex, silently changing semantics)."""
 
-
-def _rewrite_one_arg(sql: str, pattern: re.Pattern, build) -> str:
-    pos = 0
-    while True:
-        m = pattern.search(sql, pos)
-        if not m:
-            return sql
-        open_idx = sql.index("(", m.end() - 1)
-        close = _find_matching(sql, open_idx, "(", ")")
-        if close < 0:
-            return sql
-        repl = build(m, sql[open_idx + 1 : close].strip())
-        if repl is None:
-            pos = m.end()
-            continue
-        sql = sql[: m.start()] + repl + sql[close + 1 :]
-
-
-def _rewrite_string_split(
-    masked: str, literals: list[str], pattern: re.Pattern | None = None
-) -> str:
-    """``string_split(s, sep)`` (and the ``string_to_array`` alias) splits
-    on a LITERAL separator; Spark's ``split`` takes a regex — so the
-    separator literal is regex-escaped in the literals table. A
-    non-literal separator is refused (its runtime value would be
-    interpreted as a regex, silently changing semantics)."""
-
-    def build(args):
-        ph = re.fullmatch(r"\x00(\d+)\x00", args[1])
-        if not ph:
+    def build(m, args):
+        if len(args) != 2:
+            return None
+        idx = _literal_index(args[1])
+        if idx is None:
             raise ValueError(
                 "split/string_split with a non-literal separator cannot be "
                 "translated (Spark's split interprets the separator as a "
                 "regex); inline the separator as a string literal"
             )
-        idx = int(ph.group(1))
         body = literals[idx][1:-1]
         escaped = "".join(
             ("\\" + ch) if ch in _REGEX_METACHARS else ch for ch in body
@@ -763,7 +682,7 @@ def _rewrite_string_split(
         literals[idx] = f"'{escaped}'"
         return f"split\x01({args[0]}, {args[1]})"
 
-    return _rewrite_two_arg(masked, pattern or _STRING_SPLIT_RE, build)
+    return _rewrite_call(masked, _STRING_SPLIT_RE, build)
 
 
 _LIST_AGG_MAP = {
@@ -775,9 +694,11 @@ _LIST_AGG_MAP = {
 
 
 def _rewrite_list_aggregate(masked: str, literals: list[str]) -> str:
-    def build(args):
-        ph = re.fullmatch(r"\x00(\d+)\x00", args[1])
-        name = literals[int(ph.group(1))][1:-1].lower() if ph else None
+    def build(m, args):
+        if len(args) != 2:
+            return None
+        idx = _literal_index(args[1])
+        name = literals[idx][1:-1].lower() if idx is not None else None
         if name not in _LIST_AGG_MAP:
             raise ValueError(
                 f"list_aggregate(..., {name!r}) has no verified Spark "
@@ -786,7 +707,7 @@ def _rewrite_list_aggregate(masked: str, literals: list[str]) -> str:
             )
         return _LIST_AGG_MAP[name].format(l=args[0])
 
-    return _rewrite_two_arg(masked, _LIST_AGGREGATE_RE, build)
+    return _rewrite_call(masked, _LIST_AGGREGATE_RE, build)
 
 
 _STRING_AGG_RE = re.compile(r"\bstring_agg\s*\(", re.IGNORECASE)
@@ -796,19 +717,10 @@ _ORDER_IN_ARG_RE = re.compile(r"\s+ORDER\s+BY\s+", re.IGNORECASE)
 def _rewrite_string_agg(sql: str) -> str:
     """``string_agg(x[, sep][ ORDER BY o])`` → ``listagg(x, sep)
     [WITHIN GROUP (ORDER BY o)]``. DuckDB's default separator is ','."""
-    pos = 0
-    while True:
-        m = _STRING_AGG_RE.search(sql, pos)
-        if not m:
-            return sql
-        open_idx = sql.index("(", m.end() - 1)
-        close = _find_matching(sql, open_idx, "(", ")")
-        if close < 0:
-            return sql
-        args = [a.strip() for a in _split_top_level(sql[open_idx + 1 : close])]
+
+    def build(m, args):
         if not 1 <= len(args) <= 2:
-            pos = m.end()
-            continue
+            return None
         order = None
         om = _ORDER_IN_ARG_RE.search(args[-1])
         if om:
@@ -820,7 +732,9 @@ def _rewrite_string_agg(sql: str) -> str:
         repl = f"listagg({args[0]}, {sep})"
         if order:
             repl += f" WITHIN GROUP (ORDER BY {order})"
-        sql = sql[: m.start()] + repl + sql[close + 1 :]
+        return repl
+
+    return _rewrite_call(sql, _STRING_AGG_RE, build)
 
 
 _DATE_DIFF_RE = re.compile(r"\bdate_?diff\s*\(", re.IGNORECASE)
@@ -863,26 +777,17 @@ def _rewrite_date_diff(masked: str, literals: list[str]) -> str:
     (DuckDB counts boundaries crossed, NOT complete intervals — Spark's
     timestampdiff would silently disagree at month ends). 2-arg datediff
     (already Spark-compatible) is left untouched."""
-    pos = 0
-    while True:
-        m = _DATE_DIFF_RE.search(masked, pos)
-        if not m:
-            return masked
-        open_idx = masked.index("(", m.end() - 1)
-        close = _find_matching(masked, open_idx, "(", ")")
-        if close < 0:
-            return masked
-        args = [a.strip() for a in _split_top_level(masked[open_idx + 1 : close])]
+
+    def build(m, args):
         if len(args) != 3:
-            pos = m.end()
-            continue
-        ph = re.fullmatch(r"\x00(\d+)\x00", args[0])
-        if not ph:
+            return None
+        idx = _literal_index(args[0])
+        if idx is None:
             raise ValueError(
                 "date_diff with a non-literal part cannot be translated; "
                 "inline the part as a string literal"
             )
-        unit = literals[int(ph.group(1))][1:-1].lower().rstrip("s")
+        unit = literals[idx][1:-1].lower().rstrip("s")
         tmpl = _DATE_DIFF_TEMPLATES.get(unit)
         if tmpl is None:
             raise ValueError(
@@ -892,32 +797,26 @@ def _rewrite_date_diff(masked: str, literals: list[str]) -> str:
             )
         # Plain replace, not str.format: argument expressions may contain
         # braces (e.g. a struct literal) that .format would choke on.
-        repl = tmpl.replace("{a}", args[1]).replace("{b}", args[2])
-        masked = masked[: m.start()] + repl + masked[close + 1 :]
+        return tmpl.replace("{a}", args[1]).replace("{b}", args[2])
+
+    return _rewrite_call(masked, _DATE_DIFF_RE, build)
 
 
 def _rewrite_list_sum(sql: str) -> str:
-    while True:
-        m = _LIST_SUM_RE.search(sql)
-        if not m:
-            return sql
-        open_idx = sql.index("(", m.start())
-        close_idx = _find_matching(sql, open_idx, "(", ")")
-        if close_idx < 0:
-            return sql
-        arg = sql[open_idx + 1 : close_idx].strip()
-        # DuckDB list_sum SKIPS null elements (list_sum([1, NULL, 3]) =
-        # 4) but yields NULL for empty / all-null / NULL input — the
-        # size-guard reproduces that; coalesce keeps the fold null-safe.
-        sql = (
-            sql[: m.start()]
-            + (
-                f"(CASE WHEN size(filter({arg}, _ls -> _ls IS NOT NULL)) = 0 "
-                f"THEN NULL ELSE aggregate({arg}, cast(0.0 as double), "
-                f"(acc, x) -> acc + coalesce(x, cast(0.0 as double))) END)"
-            )
-            + sql[close_idx + 1 :]
-        )
+    # DuckDB list_sum SKIPS null elements (list_sum([1, NULL, 3]) = 4) but
+    # yields NULL for empty / all-null / NULL input — the size-guard
+    # reproduces that; coalesce keeps the fold null-safe.
+    return _rewrite_call(
+        sql,
+        _LIST_SUM_RE,
+        lambda m, a: (
+            f"(CASE WHEN size(filter({a[0]}, _ls -> _ls IS NOT NULL)) = 0 "
+            f"THEN NULL ELSE aggregate({a[0]}, cast(0.0 as double), "
+            f"(acc, x) -> acc + coalesce(x, cast(0.0 as double))) END)"
+            if len(a) == 1
+            else None
+        ),
+    )
 
 
 _ASOF_TERMINATOR_RE = re.compile(
@@ -1165,15 +1064,68 @@ def _rewrite_unpivot_stmt(masked: str) -> str:
         return masked
 
 
+class _Schemas:
+    """The caller's ``{view: StructType}`` source, called at most once and
+    only when a rewrite needs a column: ``COLUMNS(...)``, ``* REPLACE``,
+    and ``len()`` or ``[i:j]`` over a bare column name."""
+
+    def __init__(self, source: Callable[[], dict] | None) -> None:
+        self.source = source
+
+    @functools.cached_property
+    def views(self) -> dict:
+        return self.source() if self.source is not None else {}
+
+    def columns(self, view: str | None) -> list[str] | None:
+        schema = self.views.get(view) if view else None
+        return schema.fieldNames() if schema is not None else None
+
+    @functools.cached_property
+    def kinds(self) -> dict[str, str]:
+        """Lowercase column name → 'string' | 'array' | 'other' over every
+        view; a name whose kinds disagree across views is 'conflict'
+        (undecidable)."""
+        kinds: dict[str, str] = {}
+        for schema in self.views.values():
+            for f in schema.fields:
+                tn = f.dataType.typeName()
+                kind = "string" if tn == "string" else "array" if tn in ("array", "map") else "other"
+                prev = kinds.get(f.name.lower())
+                kinds[f.name.lower()] = kind if prev in (None, kind) else "conflict"
+        return kinds
+
+
+def catalog_schemas(spark) -> dict:
+    """``{view: StructType}`` for every table and temp view in the
+    session's catalog — the schema source a CUSTOM stage passes."""
+    return {t.name: spark.table(t.name).schema for t in spark.catalog.listTables()}
+
+
+_FROM_TABLE_RE = re.compile(r"\bFROM\s+([A-Za-z_][A-Za-z_0-9]*)", re.IGNORECASE)
+
+
+def _from_table(masked: str, start: int, close: int) -> str | None:
+    """Table named by the first ``FROM <table>`` after ``close`` at the
+    bracket depth of ``start`` (the projection's own SELECT)."""
+
+    def depth(i: int) -> int:
+        return masked.count("(", 0, i) - masked.count(")", 0, i)
+
+    for cand in _FROM_TABLE_RE.finditer(masked[close:]):
+        if depth(close + cand.start()) == depth(start):
+            return cand.group(1)
+    return None
+
+
 def _rewrite_columns_projection(
-    masked: str, literals: list[str], table_columns: dict[str, list[str]] | None
+    masked: str, literals: list[str], schemas: _Schemas
 ) -> str:
     """``COLUMNS('regex')`` / ``COLUMNS(*)`` → an explicit column list.
 
-    Schema-dependent by nature: requires ``table_columns`` (supplied by
-    the CLI / pipeline runner from the loaded tables) and a plain
-    single-table FROM at the same nesting depth; refused otherwise, with
-    the workaround spelled out."""
+    Schema-dependent by nature: requires a ``schemas`` source (the CUSTOM
+    stage supplies the session catalog's, so pipelines and the CLI
+    ``--sql`` path have it) and a plain single-table FROM at the same
+    nesting depth; refused otherwise, with the workaround spelled out."""
     while True:
         m = _COLUMNS_RE.search(masked)
         if not m:
@@ -1181,21 +1133,13 @@ def _rewrite_columns_projection(
         open_idx = masked.index("(", m.end() - 1)
         close_idx = _find_matching(masked, open_idx, "(", ")")
         inner = masked[open_idx + 1 : close_idx].strip()
-        if table_columns is None:
+        if schemas.source is None:
             raise ValueError(
                 "COLUMNS(...) projection needs the table schema; run "
                 "through the CLI/pipeline (which supplies loaded-table "
                 "schemas), or list the columns explicitly"
             )
-        # locate the FROM table at this nesting depth
-        depth = masked[: m.start()].count("(") - masked[: m.start()].count(")")
-        fm = None
-        for cand in re.finditer(r"\bFROM\s+([A-Za-z_][A-Za-z_0-9]*)", masked[close_idx:], re.IGNORECASE):
-            pre = masked[close_idx : close_idx + cand.start()]
-            if masked[: close_idx].count("(") - masked[: close_idx].count(")") + pre.count("(") - pre.count(")") == depth:
-                fm = cand.group(1)
-                break
-        cols = table_columns.get(fm) if fm else None
+        cols = schemas.columns(_from_table(masked, m.start(), close_idx))
         if cols is None:
             raise ValueError(
                 "COLUMNS(...) could not be resolved: FROM is not a single "
@@ -1204,12 +1148,12 @@ def _rewrite_columns_projection(
         if inner == "*":
             chosen = list(cols)
         else:
-            ph = re.fullmatch(r"\x00(\d+)\x00", inner)
-            if not ph:
+            idx = _literal_index(inner)
+            if idx is None:
                 raise ValueError(
                     "COLUMNS(...) supports '*' or a regex string literal"
                 )
-            pat = re.compile(literals[int(ph.group(1))][1:-1])
+            pat = re.compile(literals[idx][1:-1])
             chosen = [c for c in cols if pat.search(c)]
         if not chosen:
             raise ValueError("COLUMNS(...) matched no columns")
@@ -1279,17 +1223,7 @@ def _arrow_left_operand(masked: str, end: int) -> int:
     while i > 0:
         ch = masked[i - 1]
         if ch in ")]":
-            opener = "(" if ch == ")" else "["
-            depth = 0
-            j = i - 1
-            while j >= 0:
-                if masked[j] == ch:
-                    depth += 1
-                elif masked[j] == opener:
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j -= 1
+            j = _find_matching_back(masked, i - 1)
             if j < 0:
                 return end  # unbalanced; treat as no operand
             i = j
@@ -1383,28 +1317,31 @@ def _rewrite_json_extract(masked: str, literals: list[str]) -> str:
     form is refused."""
 
     def norm_path(arg: str) -> str | None:
-        ph = re.fullmatch(r"\x00(\d+)\x00", arg)
-        if not ph:
+        idx = _literal_index(arg)
+        if idx is None:
             raise ValueError(
                 "json_extract with a non-literal or list path cannot be "
                 "translated; inline a single string path literal"
             )
-        idx = int(ph.group(1))
         body = literals[idx][1:-1]
         if not body.startswith("$"):
             literals[idx] = f"'$.{body}'"
         return arg
 
-    masked = _rewrite_two_arg(
+    masked = _rewrite_call(
         masked,
         _JSON_EXTRACT_STRING_RE,
-        lambda a: f"get_json_object({a[0]}, {norm_path(a[1])})",
+        lambda m, a: (
+            f"get_json_object({a[0]}, {norm_path(a[1])})" if len(a) == 2 else None
+        ),
     )
-    return _rewrite_two_arg(
+    return _rewrite_call(
         masked,
         _JSON_EXTRACT_RE,
-        lambda a: (
+        lambda m, a: (
             f"to_json(variant_get(parse_json({a[0]}), {norm_path(a[1])}))"
+            if len(a) == 2
+            else None
         ),
     )
 
@@ -1412,13 +1349,11 @@ def _rewrite_json_extract(masked: str, literals: list[str]) -> str:
 _STAR_REPLACE_RE = re.compile(r"\*\s*REPLACE\s*\(", re.IGNORECASE)
 
 
-def _rewrite_star_replace(
-    masked: str, table_columns: dict[str, list[str]] | None
-) -> str:
+def _rewrite_star_replace(masked: str, schemas: _Schemas) -> str:
     """``SELECT * REPLACE (expr AS col, ...) FROM t`` → the explicit
     column list with ``expr AS col`` substituted in place. Schema-
-    dependent like COLUMNS(...): requires caller-supplied table schemas
-    and a single-table FROM at the same nesting depth."""
+    dependent like COLUMNS(...): requires a ``schemas`` source and a
+    single-table FROM at the same nesting depth."""
     while True:
         m = _STAR_REPLACE_RE.search(masked)
         if not m:
@@ -1427,7 +1362,7 @@ def _rewrite_star_replace(
         close = _find_matching(masked, open_idx, "(", ")")
         if close < 0:
             raise ValueError("unbalanced parenthesis in * REPLACE (...)")
-        if table_columns is None:
+        if schemas.source is None:
             raise ValueError(
                 "* REPLACE (...) needs the table schema; run through the "
                 "CLI/pipeline (which supplies loaded-table schemas), or "
@@ -1441,16 +1376,7 @@ def _rewrite_star_replace(
                     "* REPLACE items must be 'expr AS column_name'"
                 )
             repls[am.group(2).lower()] = am.group(1).strip()
-        base_depth = masked[: m.start()].count("(") - masked[: m.start()].count(")")
-        fm_name = None
-        for cand in re.finditer(
-            r"\bFROM\s+([A-Za-z_][A-Za-z_0-9]*)", masked[close:], re.IGNORECASE
-        ):
-            seg = masked[: close + cand.start()]
-            if seg.count("(") - seg.count(")") == base_depth:
-                fm_name = cand.group(1)
-                break
-        cols = table_columns.get(fm_name) if fm_name else None
+        cols = schemas.columns(_from_table(masked, m.start(), close))
         if cols is None:
             raise ValueError(
                 "* REPLACE could not be resolved: FROM is not a single "
@@ -1473,13 +1399,12 @@ _LIST_PREPEND_RE = re.compile(r"\b(?:list|array)_prepend\s*\(", re.IGNORECASE)
 _LIST_POP_RE = re.compile(
     r"\b(?:list|array)_pop_(?:back|front)\s*\(", re.IGNORECASE
 )
-_STRING_TO_ARRAY_RE = re.compile(r"\bstring_to_array\s*\(", re.IGNORECASE)
 
 # len() dispatch support: DuckDB's len() is type-overloaded over strings
 # AND lists; Spark splits the surface into length()/size(). The kind of
 # the argument is inferred from literal shape, the leading function name,
-# a CAST target, or — when the caller supplies ``column_kinds`` (same
-# catalog plumbing class as COLUMNS expansion) — the resolved column type.
+# a CAST target, or — for a bare column name — its type in the caller's
+# schema source (the same hand-off as COLUMNS expansion).
 _LEN_STRING_FNS = frozenset(
     """concat concat_ws substr substring trim ltrim rtrim btrim upper lower
     ucase lcase replace translate repeat left right lpad rpad format printf
@@ -1503,10 +1428,10 @@ _LEN_LEADING_FN_RE = re.compile(r"^([A-Za-z_][A-Za-z_0-9]*)\s*\(")
 _CAST_TARGET_RE = re.compile(r"\bas\s+([A-Za-z_]+)\s*(?:\(\s*\d+\s*\))?\s*$", re.IGNORECASE)
 
 
-def _len_kind(arg: str, column_kinds: dict[str, str] | None) -> str | None:
+def _len_kind(arg: str, schemas: _Schemas) -> str | None:
     """'string' | 'array' | None (undecidable) for a len() argument."""
     a = arg.strip()
-    if re.fullmatch(r"\x00\d+\x00", a):
+    if _literal_index(a) is not None:
         return "string"
     if a.startswith("["):
         return "array"
@@ -1524,8 +1449,8 @@ def _len_kind(arg: str, column_kinds: dict[str, str] | None) -> str | None:
                 elif inner[i] in ")]":
                     depth -= 1
                 elif depth == 0 and inner[i : i + 2] == "||":
-                    return _len_kind(inner[:i], column_kinds)
-        return _len_kind(inner, column_kinds)
+                    return _len_kind(inner[:i], schemas)
+        return _len_kind(inner, schemas)
     m = _LEN_LEADING_FN_RE.match(a)
     if m and _find_matching(a, a.index("("), "(", ")") == len(a) - 1:
         fn = m.group(1).lower()
@@ -1540,17 +1465,17 @@ def _len_kind(arg: str, column_kinds: dict[str, str] | None) -> str | None:
             return "array"
         return None
     im = _LEN_IDENT_RE.match(a)
-    if im and column_kinds:
-        kind = column_kinds.get(im.group(1).lower())
+    if im:
+        kind = schemas.kinds.get(im.group(1).lower())
         return kind if kind in ("string", "array") else None
     return None
 
 
-def _rewrite_len(masked: str, column_kinds: dict[str, str] | None) -> str:
+def _rewrite_len(masked: str, schemas: _Schemas) -> str:
     def build(m, args):
         if len(args) != 1:
             return None
-        kind = _len_kind(args[0], column_kinds)
+        kind = _len_kind(args[0], schemas)
         if kind == "string":
             return f"length({args[0]})"
         if kind == "array":
@@ -1720,7 +1645,7 @@ def _slice_result_kind(op: str) -> str | None:
     return "string" if m.group(1) == "substring" else "array"
 
 
-def _rewrite_slices(masked: str, column_kinds: dict[str, str] | None) -> str:
+def _rewrite_slices(masked: str, schemas: _Schemas) -> str:
     """DuckDB ``expr[a:b]`` slicing (1-based, end-inclusive, negatives
     from the end, out-of-range clamped, empty bounds defaulting to the
     ends) → ``substring`` for strings / ``slice`` for arrays, dispatched
@@ -1770,7 +1695,7 @@ def _rewrite_slices(masked: str, column_kinds: dict[str, str] | None) -> str:
         a, b = body[:colon].strip(), body[colon + 1 :].strip()
         start_op = _slice_operand_start(masked, i)
         op = masked[start_op:i].strip()
-        kind = _slice_result_kind(op) or _len_kind(op, column_kinds)
+        kind = _slice_result_kind(op) or _len_kind(op, schemas)
         var = f"_sl{uniq}"
         uniq += 1
         if kind == "string":
@@ -1857,11 +1782,6 @@ _DATE_SUB_RE = re.compile(r"\bdate_?sub\s*\(", re.IGNORECASE)
 _ISOYEAR_RE = re.compile(r"\bisoyear\s*\(", re.IGNORECASE)
 _ISFINITE_RE = re.compile(r"\bisfinite\s*\(", re.IGNORECASE)
 _ISINF_RE = re.compile(r"\bisinf\s*\(", re.IGNORECASE)
-_HASH_RE = re.compile(r"\bhash\s*\(", re.IGNORECASE)
-_UNION_BY_NAME_RE = re.compile(
-    r"\bUNION\s+(?:ALL\s+)?BY\s+NAME\b", re.IGNORECASE
-)
-_SUMMARIZE_RE = re.compile(r"^\s*SUMMARIZE\b", re.IGNORECASE)
 _INTERVAL_KW_RE = re.compile(r"\bINTERVAL\b", re.IGNORECASE)
 # Fixed-width units where Spark's timestampdiff IS DuckDB date_sub's
 # complete-elapsed counting (truncating epoch division, symmetric in
@@ -1898,10 +1818,9 @@ def _anchor_literal(literals: list[str], token: str) -> str | None:
     """Wrap the masked string literal ``token`` refers to in full-match
     anchors (``^(?:...)$``), returning the token — or None if ``token``
     is not a masked literal."""
-    ph = re.fullmatch(r"\x00(\d+)\x00", token)
-    if not ph:
+    idx = _literal_index(token)
+    if idx is None:
         return None
-    idx = int(ph.group(1))
     literals[idx] = f"'^(?:{literals[idx][1:-1]})$'"
     return token
 
@@ -1924,7 +1843,7 @@ def _rewrite_match_operators(masked: str, literals: list[str]) -> str:
 
     masked = _MATCH_OP_RE.sub(sub, masked)
 
-    def build_full_match(a):
+    def build_full_match(m, a):
         if len(a) != 2:
             return None
         if _anchor_literal(literals, a[1]) is None:
@@ -1935,7 +1854,7 @@ def _rewrite_match_operators(masked: str, literals: list[str]) -> str:
             )
         return f"({a[0]} RLIKE {a[1]})"
 
-    return _rewrite_two_arg(masked, _REGEXP_FULL_MATCH_RE, build_full_match)
+    return _rewrite_call(masked, _REGEXP_FULL_MATCH_RE, build_full_match)
 
 
 def _rewrite_time_flips(masked: str, literals: list[str]) -> str:
@@ -1953,34 +1872,33 @@ def _rewrite_time_flips(masked: str, literals: list[str]) -> str:
       boundary counting);
     * ``isoyear(x)`` → ``extract(YEAROFWEEK FROM x)``."""
 
-    def build_strptime(a):
+    def build_strptime(m, a):
         if len(a) != 2:
             return None
-        ph = re.fullmatch(r"\x00(\d+)\x00", a[1])
-        if not ph:
+        idx = _literal_index(a[1])
+        if idx is None:
             raise ValueError(
                 "strptime with a non-literal format cannot be translated "
                 "(the %-codes must be mapped to Spark's pattern letters); "
                 "inline the format string"
             )
-        idx = int(ph.group(1))
         literals[idx] = (
             "'" + _translate_strftime_format(literals[idx].strip("'")) + "'"
         )
         return f"to_timestamp\x01({a[0]}, {a[1]})"
 
-    masked = _rewrite_two_arg(masked, _STRPTIME_RE, build_strptime)
+    masked = _rewrite_call(masked, _STRPTIME_RE, build_strptime)
     masked = _rewrite_call(
         masked,
         _TO_TIMESTAMP_RE,
         lambda m, a: f"timestamp_seconds({a[0]})" if len(a) == 1 else None,
     )
-    masked = _rewrite_two_arg(
+    masked = _rewrite_call(
         masked,
         _DATE_ADD_RE,
-        lambda a: (
+        lambda m, a: (
             f"cast(({a[0]}) + ({a[1]}) as timestamp)"
-            if _INTERVAL_KW_RE.search(a[1])
+            if len(a) == 2 and _INTERVAL_KW_RE.search(a[1])
             else None
         ),
     )
@@ -1988,13 +1906,13 @@ def _rewrite_time_flips(masked: str, literals: list[str]) -> str:
     def build_date_sub(m, a):
         if len(a) != 3:
             return None
-        ph = re.fullmatch(r"\x00(\d+)\x00", a[0])
-        if not ph:
+        idx = _literal_index(a[0])
+        if idx is None:
             raise ValueError(
                 "date_sub with a non-literal part cannot be translated; "
                 "inline the part name"
             )
-        unit = literals[int(ph.group(1))][1:-1].lower()
+        unit = literals[idx][1:-1].lower()
         if unit in _CALENDAR_UNIT_DIV:
             xa, xb = f"({a[1]})", f"({a[2]})"
             fwd = _complete_months_sql(xa, xb)
@@ -2016,23 +1934,31 @@ def _rewrite_time_flips(masked: str, literals: list[str]) -> str:
         return f"timestampdiff({unit.upper()}, {a[1]}, {a[2]})"
 
     masked = _rewrite_call(masked, _DATE_SUB_RE, build_date_sub)
-    masked = _rewrite_one_arg(
-        masked, _ISOYEAR_RE, lambda m, arg: f"extract(YEAROFWEEK FROM {arg})"
+    masked = _rewrite_call(
+        masked,
+        _ISOYEAR_RE,
+        lambda m, a: f"extract(YEAROFWEEK FROM {a[0]})" if len(a) == 1 else None,
     )
     # isfinite/isinf: NULL → NULL (comparisons propagate), NaN → false for
     # both (Spark NaN = Infinity is false; isnan screens the isfinite arm).
-    masked = _rewrite_one_arg(
+    masked = _rewrite_call(
         masked,
         _ISFINITE_RE,
-        lambda m, arg: (
-            f"(NOT isnan({arg}) AND "
-            f"abs({arg}) <> cast(\x02Infinity\x02 as double))"
+        lambda m, a: (
+            f"(NOT isnan({a[0]}) AND "
+            f"abs({a[0]}) <> cast(\x02Infinity\x02 as double))"
+            if len(a) == 1
+            else None
         ),
     )
-    return _rewrite_one_arg(
+    return _rewrite_call(
         masked,
         _ISINF_RE,
-        lambda m, arg: f"(abs({arg}) = cast(\x02Infinity\x02 as double))",
+        lambda m, a: (
+            f"(abs({a[0]}) = cast(\x02Infinity\x02 as double))"
+            if len(a) == 1
+            else None
+        ),
     )
 
 
@@ -2146,17 +2072,7 @@ def _absorb_atom_left(s: str, j: int) -> int:
             return j
         c = s[j - 1]
         if c in ")]":
-            opener = "(" if c == ")" else "["
-            depth = 0
-            k = j - 1
-            while k >= 0:
-                if s[k] == c:
-                    depth += 1
-                elif s[k] == opener:
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k -= 1
+            k = _find_matching_back(s, j - 1)
             if k < 0:
                 return j
             j = k
@@ -2207,18 +2123,8 @@ def _absorb_atom_right(s: str, j: int) -> int:
             k = s.find("\x00", j + 1)
             j = (k + 1) if k >= 0 else n
         elif c in "([":
-            closer = ")" if c == "(" else "]"
-            depth = 0
-            k = j
-            while k < n:
-                if s[k] == c:
-                    depth += 1
-                elif s[k] == closer:
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k += 1
-            j = k + 1 if k < n else n
+            k = _find_matching(s, j, c, ")" if c == "(" else "]")
+            j = k + 1 if k >= 0 else n
         elif c.isalnum() or c in _ATOM_CHARS or c == ":":
             while j < n and (s[j].isalnum() or s[j] in _ATOM_CHARS or s[j] == ":"):
                 j += 1
@@ -2500,13 +2406,15 @@ def _rewrite_agg_flips(masked: str) -> str:
         ),
     )
 
-    def build_corr(a):
+    def build_corr(m, a):
+        if len(a) != 2:
+            return None
         x, y = a
         sx = f"stddev_pop(CASE WHEN ({y}) IS NOT NULL THEN ({x}) END)"
         sy = f"stddev_pop(CASE WHEN ({x}) IS NOT NULL THEN ({y}) END)"
         return f"try_divide(covar_pop({x}, {y}), ({sx} * {sy}))"
 
-    masked = _rewrite_two_arg(masked, _CORR_RE, build_corr)
+    masked = _rewrite_call(masked, _CORR_RE, build_corr)
 
     pos = 0
     while True:
@@ -2522,29 +2430,14 @@ def _rewrite_agg_flips(masked: str) -> str:
         if close < 0:
             return masked
         inner = masked[open_idx + 1 : close].strip()
-        if re.match(r"WHERE\b", inner, re.IGNORECASE) or "," in set(
-            _strip_depth0_commas(inner)
-        ):
+        # a depth-0 comma means a multi-argument higher-order filter()
+        if re.match(r"WHERE\b", inner, re.IGNORECASE) or len(_split_top_level(inner)) > 1:
             pos = m.end()
             continue
         masked = (
             masked[: open_idx + 1] + "WHERE " + masked[open_idx + 1 :]
         )
         pos = close + len("WHERE ") + 1
-
-
-def _strip_depth0_commas(text: str) -> str:
-    """The depth-0 characters of ``text`` (commas at depth 0 signal a
-    multi-argument call, i.e. a higher-order ``filter``)."""
-    out, depth = [], 0
-    for ch in text:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0:
-            out.append(ch)
-    return "".join(out)
 
 
 _CONCAT_RE = re.compile(r"\bconcat\s*\(", re.IGNORECASE)
@@ -2722,12 +2615,7 @@ def _rewrite_extract_fields(masked: str) -> str:
 _DAYOFWEEK_RE = re.compile(r"\b(?:dayofweek|weekday)\s*\(", re.IGNORECASE)
 _ISODOW_RE = re.compile(r"\bisodow\s*\(", re.IGNORECASE)
 _DAYNAME_RE = re.compile(r"\b(day|month)name\s*\(", re.IGNORECASE)
-_PRODUCT_RE = re.compile(r"\bproduct\s*\(", re.IGNORECASE)
 _LIST_AGG_FN_RE = re.compile(r"\b(?:list|array_agg)\s*\(", re.IGNORECASE)
-_ORDER_BY_TAIL_RE = re.compile(
-    r"(.*\S)\s+ORDER\s+BY\s+(.+?)\s*(ASC|DESC)?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
 
 
 def _rewrite_day_fns(masked: str, literals: list[str]) -> str:
@@ -2735,19 +2623,24 @@ def _rewrite_day_fns(masked: str, literals: list[str]) -> str:
     ``dayofweek`` is 1=Sunday and its ``weekday`` is 0=MONDAY — the same
     spellings, shifted numbers. ``isodow`` is 1=Monday..7. ``dayname``/
     ``monthname`` give full names (Spark's give 3-letter)."""
-    masked = _rewrite_one_arg(
-        masked, _DAYOFWEEK_RE, lambda m, a: f"(dayofweek\x01({a}) - 1)"
+    masked = _rewrite_call(
+        masked,
+        _DAYOFWEEK_RE,
+        lambda m, a: f"(dayofweek\x01({a[0]}) - 1)" if len(a) == 1 else None,
     )
-    masked = _rewrite_one_arg(
-        masked, _ISODOW_RE, lambda m, a: f"(weekday\x01({a}) + 1)"
+    masked = _rewrite_call(
+        masked,
+        _ISODOW_RE,
+        lambda m, a: f"(weekday\x01({a[0]}) + 1)" if len(a) == 1 else None,
     )
 
     def dayname(m, a):
-        fmt = "'EEEE'" if m.group(1).lower() == "day" else "'MMMM'"
-        literals.append(fmt)
-        return f"date_format({a}, \x00{len(literals) - 1}\x00)"
+        if len(a) != 1:
+            return None
+        literals.append("'EEEE'" if m.group(1).lower() == "day" else "'MMMM'")
+        return f"date_format({a[0]}, \x00{len(literals) - 1}\x00)"
 
-    return _rewrite_one_arg(masked, _DAYNAME_RE, dayname)
+    return _rewrite_call(masked, _DAYNAME_RE, dayname)
 
 
 _AGG_KEY_RE = re.compile(
@@ -2911,7 +2804,7 @@ def _rewrite_subscripts(masked: str) -> str:
         if close < 0:
             return masked
         body = masked[idx + 1 : close].strip()
-        if re.fullmatch(r"\x00\d+\x00", body):
+        if _literal_index(body) is not None:
             pos = close + 1  # string key: map/struct access, shared syntax
             continue
         left_start = _arrow_left_operand(masked, idx)
@@ -3061,12 +2954,12 @@ def _rewrite_regexp_replace(masked: str, literals: list[str]) -> str:
             return None
         flags = ""
         if len(args) == 4:
-            ph = re.fullmatch(r"\x00(\d+)\x00", args[3])
-            if not ph:
+            oi = _literal_index(args[3])
+            if oi is None:
                 raise ValueError(
                     "regexp_replace options must be a string literal"
                 )
-            opts = literals[int(ph.group(1))].strip("'").lower()
+            opts = literals[oi].strip("'").lower()
             flags = "".join(sorted(set(opts) - {"g"}))
             if not set(flags) <= {"i", "s", "m"}:
                 raise ValueError(
@@ -3075,33 +2968,28 @@ def _rewrite_regexp_replace(masked: str, literals: list[str]) -> str:
                 )
             if "g" in opts:
                 pat = args[1]
+                pi, ri = _literal_index(pat), _literal_index(args[2])
                 if flags:
-                    pp = re.fullmatch(r"\x00(\d+)\x00", pat)
-                    if pp:
-                        body = literals[int(pp.group(1))][1:-1]
-                        literals[int(pp.group(1))] = f"'(?{flags}){body}'"
+                    if pi is not None:
+                        literals[pi] = f"'(?{flags}){literals[pi][1:-1]}'"
                     else:
                         pat = f"concat('(?{flags})', {pat})"
                 repl = args[2]
-                rp = re.fullmatch(r"\x00(\d+)\x00", repl)
-                if rp:
-                    body = literals[int(rp.group(1))][1:-1]
-                    literals[int(rp.group(1))] = (
-                        f"'{_re2_rewrite_to_java(body, 0)}'"
-                    )
+                if ri is not None:
+                    literals[ri] = f"'{_re2_rewrite_to_java(literals[ri][1:-1], 0)}'"
                 return f"regexp_replace\x01({args[0]}, {pat}, {repl})"
         # First-match form (3-arg, or 4-arg options without 'g').
-        rp = re.fullmatch(r"\x00(\d+)\x00", args[2])
-        if not rp:
+        ri = _literal_index(args[2])
+        if ri is None:
             raise ValueError(first_match_msg)
-        repl_body = literals[int(rp.group(1))][1:-1]
+        repl_body = literals[ri][1:-1]
         # \0 = whole match of the user pattern = wrapper group 2 (shift 2).
         java_repl = "$1" + _re2_rewrite_to_java(repl_body, 2)
         repl = new_lit(f"'{java_repl}'")
         flag_pfx = f"(?{flags})" if flags else ""
-        pp = re.fullmatch(r"\x00(\d+)\x00", args[1])
-        if pp:
-            pat_body = literals[int(pp.group(1))][1:-1]
+        pi = _literal_index(args[1])
+        if pi is not None:
+            pat_body = literals[pi][1:-1]
             pat = new_lit(f"'^((?s).*?)({flag_pfx}{pat_body})'")
         else:
             pat = (
@@ -3127,10 +3015,10 @@ def _rewrite_date_part(masked: str, literals: list[str]) -> str:
     def build(m, args):
         if len(args) != 2:
             return None
-        ph = re.fullmatch(r"\x00(\d+)\x00", args[0])
-        if not ph:
+        idx = _literal_index(args[0])
+        if idx is None:
             return None
-        part = literals[int(ph.group(1))].strip("'").lower()
+        part = literals[idx].strip("'").lower()
         if part == "dow":
             return f"(dayofweek({args[1]}) - 1)"
         if part == "isodow":
@@ -3386,42 +3274,6 @@ _FSUM_RE = re.compile(r"\bfsum\s*\(", re.IGNORECASE)
 _FAVG_RE = re.compile(r"\bfavg\s*\(", re.IGNORECASE)
 _GEOMEAN_RE = re.compile(r"\b(?:geomean|geometric_mean)\s*\(", re.IGNORECASE)
 
-# Close lookalikes / DuckDB-only functions with no faithful Spark
-# expansion: refuse loudly instead of mistranslating.
-_R3_REFUSALS = [
-    (re.compile(r"\bentropy\s*\(", re.IGNORECASE),
-     "entropy() needs a two-level aggregation (value frequencies, then "
-     "Σ −p·log2 p); compute it with a GROUP BY subquery"),
-    (re.compile(r"\bmad\s*\(", re.IGNORECASE),
-     "mad() nests a median of deviations from the median — not a "
-     "single-pass Spark aggregate; compute with two percentile passes"),
-    (re.compile(r"\bdamerau_levenshtein\s*\(", re.IGNORECASE),
-     "damerau_levenshtein has no Spark equivalent (Spark levenshtein "
-     "lacks transpositions); use levenshtein or the fuzzy-match operator"),
-    (re.compile(r"\bjaro_(?:winkler_)?similarity\s*\(", re.IGNORECASE),
-     "jaro/jaro_winkler similarity has no Spark equivalent; use "
-     "levenshtein or the fuzzy-match operator"),
-    (re.compile(r"\bage\s*\(", re.IGNORECASE),
-     "age() returns a mixed month/day INTERVAL with no Spark "
-     "counterpart; use date_diff('day', ...) or months_between()"),
-    (re.compile(r"\bformat\s*\((?!\s*\))", re.IGNORECASE),
-     "format() uses fmt-style {} templates whose float rendering "
-     "diverges from Java's; use printf() (%-style), which both engines "
-     "share"),
-    (re.compile(r"\b(?:gamma|lgamma)\s*\(", re.IGNORECASE),
-     "gamma/lgamma have no Spark SQL equivalent; precompute or use a "
-     "Pandas UDF"),
-    (re.compile(r"\bnextafter\s*\(", re.IGNORECASE),
-     "nextafter (ulp stepping) has no Spark SQL equivalent"),
-    (re.compile(r"\bsignbit\s*\(", re.IGNORECASE),
-     "signbit has no Spark SQL equivalent (x < 0 misses -0.0); compare "
-     "against 0 explicitly if -0.0 does not matter"),
-    (re.compile(r"\btimezone_(?:hour|minute)\s*\(", re.IGNORECASE),
-     "timezone_hour/timezone_minute need a TIMESTAMPTZ type Spark does "
-     "not have; the session zone is a constant — inline it"),
-]
-
-
 
 def _null_lit(arg: str) -> bool:
     """A bare NULL literal argument: DuckDB types it as NULL and
@@ -3432,10 +3284,6 @@ def _null_lit(arg: str) -> bool:
 def _rewrite_r3_tail_fns(masked: str, literals: list[str]) -> str:
     """Batch of exact DuckDB→Spark rewrites (see the module table);
     differentially verified in tests/test_dialect_bank.py."""
-    for pat, msg in _R3_REFUSALS:
-        if pat.search(masked):
-            raise ValueError(msg)
-
     # DuckDB flatten SKIPS null sublists ([[1],NULL,[2]] → [1,2]); Spark
     # flatten propagates NULL for the whole result.
     masked = _rewrite_call(
@@ -3501,10 +3349,8 @@ def _rewrite_r3_tail_fns(masked: str, literals: list[str]) -> str:
     def _dt_build(m, a):
         if len(a) != 2:
             return None
-        ph = re.fullmatch(r"\x00(\d+)\x00", a[0])
-        if not ph:
-            return None
-        if literals[int(ph.group(1))][1:-1].lower() not in _DATE_TRUNC_COARSE:
+        idx = _literal_index(a[0])
+        if idx is None or literals[idx][1:-1].lower() not in _DATE_TRUNC_COARSE:
             return None
         return f"cast(date_trunc\x01({a[0]}, {a[1]}) as date)"
 
@@ -3726,13 +3572,13 @@ def _rewrite_r3_tail_fns(masked: str, literals: list[str]) -> str:
             # ordered-aggregation rewrite or user-written): pass through.
         parts = []
         for arg in a[1:]:
-            ph = re.fullmatch(r"\x00(\d+)\x00", arg)
-            if not ph:
+            idx = _literal_index(arg)
+            if idx is None:
                 raise ValueError(
                     "list_sort with a non-literal direction/null-order "
                     "cannot be translated; inline the modifiers"
                 )
-            parts.extend(literals[int(ph.group(1))][1:-1].upper().split())
+            parts.extend(literals[idx][1:-1].upper().split())
         desc = "DESC" in parts
         nulls_first = "FIRST" in parts
         l = a[0]
@@ -3871,13 +3717,6 @@ _QUANTIFIED_CMP_RE = re.compile(
     r"(=|<>|!=|<=|>=|<|>)\s*(ANY|ALL|SOME)\s*\(", re.IGNORECASE
 )
 _SUBQUERY_HEAD_RE = re.compile(r"^\s*(SELECT|FROM|WITH|VALUES)\b", re.IGNORECASE)
-# Boundary keywords that END a comparison LHS when scanning left.
-_LHS_BOUNDARY_RE = re.compile(
-    r"\b(AND|OR|NOT|WHERE|WHEN|THEN|ELSE|CASE|END|SELECT|ON|HAVING|"
-    r"BETWEEN|IN|LIKE|JOIN|BY|SET|RETURNING|QUALIFY|LIMIT|OFFSET|ALL|"
-    r"DISTINCT|AS)\s*$",
-    re.IGNORECASE,
-)
 _TO_BASE_RE = re.compile(r"\bto_base\s*\(", re.IGNORECASE)
 _FROM_BASE64_RE = re.compile(r"\bfrom_base64\s*\(", re.IGNORECASE)
 _ENCODE_RE = re.compile(r"\bencode\s*\(", re.IGNORECASE)
@@ -3889,10 +3728,6 @@ _TO_INTERVAL_RE = re.compile(
     r"microseconds)\s*\(",
     re.IGNORECASE,
 )
-_TO_INTERVAL_SLOT = {
-    "years": 0, "months": 1, "weeks": 2, "days": 3,
-    "hours": 4, "minutes": 5, "seconds": 6,
-}
 _LOCALTIMESTAMP_RE = re.compile(r"\bcurrent_localtimestamp\s*\(", re.IGNORECASE)
 _LIST_RESIZE_RE = re.compile(r"\b(?:list|array)_resize\s*\(", re.IGNORECASE)
 _LIST_SELECT_RE = re.compile(r"\b(?:list|array)_select\s*\(", re.IGNORECASE)
@@ -3901,35 +3736,6 @@ _LIST_GRADE_UP_RE = re.compile(r"\b(?:list|array)_grade_up\s*\(", re.IGNORECASE)
 _LIST_REVERSE_SORT_RE = re.compile(r"\b(?:list|array)_reverse_sort\s*\(", re.IGNORECASE)
 _APPROX_QUANTILE_RE = re.compile(r"\bapprox_quantile\s*\(", re.IGNORECASE)
 _REGEXP_ESCAPE_RE = re.compile(r"\bregexp_escape\s*\(", re.IGNORECASE)
-
-_R3B2_REFUSALS = [
-    (re.compile(r"\bstrip_accents\s*\(", re.IGNORECASE),
-     "strip_accents (unicode decomposition) has no Spark SQL equivalent; "
-     "use translate() for a known accent set or a Pandas UDF"),
-    (re.compile(r"\bnfc_normalize\s*\(", re.IGNORECASE),
-     "nfc_normalize has no Spark SQL equivalent; normalize upstream or "
-     "use a Pandas UDF"),
-    (re.compile(r"\b(?:left|right)_grapheme\s*\(", re.IGNORECASE),
-     "grapheme-cluster slicing has no Spark SQL equivalent; left/right "
-     "operate on code points — use them if surrogate pairs are acceptable"),
-    (re.compile(r"\bhistogram\s*\(", re.IGNORECASE),
-     "histogram() builds a value→count MAP in one aggregate; Spark needs "
-     "a two-level GROUP BY — compute the frequency table explicitly"),
-    (re.compile(r"\bbitstring_agg\s*\(", re.IGNORECASE),
-     "bitstring_agg has no Spark equivalent (BIT type); aggregate into a "
-     "bool array or bitmask bigint explicitly"),
-    (re.compile(r"\b(?:greatest_common_divisor|least_common_multiple|"
-                r"gcd|lcm)\s*\(", re.IGNORECASE),
-     "gcd/lcm have no Spark SQL equivalent; precompute or use a Pandas "
-     "UDF"),
-    (re.compile(r"\bparse_(?:path|dirname|filename)\s*\(", re.IGNORECASE),
-     "parse_path/parse_dirname/parse_filename have no Spark equivalent; "
-     "use split(path, '/') / regexp_extract"),
-    (re.compile(r"\bmd5_number(?:_lower|_upper)?\s*\(", re.IGNORECASE),
-     "md5_number/md5_number_lower return 128/64-bit UNSIGNED integers "
-     "Spark's types cannot hold; use md5() hex text or xxhash64 with "
-     "explicit expectations"),
-]
 
 
 # Keywords whose trailing position makes a following +/- UNARY (the
@@ -4039,9 +3845,6 @@ def _rewrite_quantified_cmp(masked: str) -> str:
 
 
 def _rewrite_r3_batch2(masked: str, literals: list[str]) -> str:
-    for pat, msg in _R3B2_REFUSALS:
-        if pat.search(masked):
-            raise ValueError(msg)
     masked = _rewrite_pow_op(masked)
     masked = _rewrite_quantified_cmp(masked)
 
@@ -4252,29 +4055,22 @@ def _rewrite_r3_batch2(masked: str, literals: list[str]) -> str:
     def _struct_extract_build(m, a):
         if len(a) != 2:
             return None
-        ph = re.fullmatch(r"\x00(\d+)\x00", a[1])
-        if not ph:
+        idx = _literal_index(a[1])
+        if idx is None:
             raise ValueError(
                 "struct_extract with a non-literal (or integer) key has "
                 "no Spark equivalent; name the field explicitly"
             )
-        key = literals[int(ph.group(1))][1:-1]
-        return f"(({a[0]}).`{key}`)"
+        return f"(({a[0]}).`{literals[idx][1:-1]}`)"
 
     masked = _rewrite_call(masked, _STRUCT_EXTRACT_RE, _struct_extract_build)
     # row(...) builds an unnamed struct; Spark's struct() is positional
     # too (field names differ — col1/col2 — but row compares by value).
     masked = _ROW_CTOR_RE.sub("struct(", masked)
 
-    # Window frame exclusion: EXCLUDE NO OTHERS is the default (drop
-    # it); the real exclusion modes have no Spark spelling.
+    # Window frame EXCLUDE NO OTHERS is the default: drop it (the real
+    # exclusion modes are refused up front).
     masked = _FRAME_EXCLUDE_NOOP_RE.sub("", masked)
-    if _FRAME_EXCLUDE_RE.search(masked):
-        raise ValueError(
-            "window frame EXCLUDE CURRENT ROW / GROUP / TIES has no "
-            "Spark equivalent; subtract the excluded rows' contribution "
-            "explicitly"
-        )
     # arbitrary() is DuckDB's any_value: first NON-NULL value.
     masked = _rewrite_call(
         masked,
@@ -4294,8 +4090,8 @@ def _strip_agg_order(m, a):
     changed = False
     out = []
     for arg in a:
-        om = _top_level_order_by(arg)
-        if om is not None:
+        om = _find_top_level_order_by(arg)
+        if om >= 0:
             arg = arg[:om].rstrip()
             changed = True
         out.append(arg)
@@ -4304,31 +4100,8 @@ def _strip_agg_order(m, a):
     return f"{m.group(1)}\x01({', '.join(out)})"
 
 
-def _top_level_order_by(arg: str) -> int | None:
-    """Start index of a depth-0 ' ORDER BY ' in ``arg``, else None."""
-    depth = 0
-    i = 0
-    up = arg.upper()
-    while i < len(arg):
-        ch = arg[i]
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and up.startswith("ORDER", i):
-            before_ok = i == 0 or not (arg[i - 1].isalnum() or arg[i - 1] == "_")
-            rest = up[i + 5 :].lstrip()
-            if before_ok and rest.startswith("BY"):
-                return i
-        i += 1
-    return None
-
-
 _FRAME_EXCLUDE_NOOP_RE = re.compile(
     r"\bEXCLUDE\s+NO\s+OTHERS\b", re.IGNORECASE
-)
-_FRAME_EXCLUDE_RE = re.compile(
-    r"\bEXCLUDE\s+(?:CURRENT\s+ROW|GROUP|TIES)\b", re.IGNORECASE
 )
 _ARBITRARY_RE = re.compile(r"\barbitrary\s*\(", re.IGNORECASE)
 _TYPEOF_RE = re.compile(r"\btypeof\s*\(", re.IGNORECASE)
@@ -4344,25 +4117,112 @@ _COMMUTATIVE_AGG_RE = re.compile(
 )
 
 
+# Constructs with no faithful Spark spelling — DuckDB-only statements and
+# functions, and close lookalikes whose semantics silently diverge — are
+# refused loudly instead of mistranslated. Checked once, on the masked text
+# (string literals never trip a refusal); the first match wins.
+_REFUSALS = [
+    (re.compile(r"\bPOSITIONAL\s+JOIN\b", re.IGNORECASE),
+     "POSITIONAL JOIN has no Spark equivalent; zip frames with a "
+     "row_number window + equi-join instead"),
+    (re.compile(r"\bunnest\s*\([^()]*recursive\s*:=", re.IGNORECASE),
+     "unnest(..., recursive := true) has no Spark equivalent; "
+     "explode struct fields explicitly instead"),
+    (re.compile(r"\^"),
+     "'^' is POWER in DuckDB but bitwise XOR in Spark — a silent "
+     "semantic flip; write power(a, b) explicitly"),
+    (re.compile(r"\bhash\s*\(", re.IGNORECASE),
+     "hash() is DuckDB's internal 64-bit hash; Spark's hash() is "
+     "32-bit Murmur3 — values silently diverge. Use a portable "
+     "digest (md5/sha2) or xxhash64 with explicit expectations"),
+    (re.compile(r"\bUNION\s+(?:ALL\s+)?BY\s+NAME\b", re.IGNORECASE),
+     "UNION [ALL] BY NAME has no Spark SQL spelling and aligning "
+     "columns requires both subquery schemas; list the columns "
+     "explicitly in the same order on both sides (or use the "
+     "DataFrame unionByName operator)"),
+    (re.compile(r"^\s*SUMMARIZE\b", re.IGNORECASE),
+     "SUMMARIZE is a DuckDB statement with no SQL equivalent; use "
+     "the column-profile operator (profile_orders_columns-style "
+     "introspection) instead"),
+    (re.compile(r"\bentropy\s*\(", re.IGNORECASE),
+     "entropy() needs a two-level aggregation (value frequencies, then "
+     "Σ −p·log2 p); compute it with a GROUP BY subquery"),
+    (re.compile(r"\bmad\s*\(", re.IGNORECASE),
+     "mad() nests a median of deviations from the median — not a "
+     "single-pass Spark aggregate; compute with two percentile passes"),
+    (re.compile(r"\bdamerau_levenshtein\s*\(", re.IGNORECASE),
+     "damerau_levenshtein has no Spark equivalent (Spark levenshtein "
+     "lacks transpositions); use levenshtein or the fuzzy-match operator"),
+    (re.compile(r"\bjaro_(?:winkler_)?similarity\s*\(", re.IGNORECASE),
+     "jaro/jaro_winkler similarity has no Spark equivalent; use "
+     "levenshtein or the fuzzy-match operator"),
+    (re.compile(r"\bage\s*\(", re.IGNORECASE),
+     "age() returns a mixed month/day INTERVAL with no Spark "
+     "counterpart; use date_diff('day', ...) or months_between()"),
+    (re.compile(r"\bformat\s*\((?!\s*\))", re.IGNORECASE),
+     "format() uses fmt-style {} templates whose float rendering "
+     "diverges from Java's; use printf() (%-style), which both engines "
+     "share"),
+    (re.compile(r"\b(?:gamma|lgamma)\s*\(", re.IGNORECASE),
+     "gamma/lgamma have no Spark SQL equivalent; precompute or use a "
+     "Pandas UDF"),
+    (re.compile(r"\bnextafter\s*\(", re.IGNORECASE),
+     "nextafter (ulp stepping) has no Spark SQL equivalent"),
+    (re.compile(r"\bsignbit\s*\(", re.IGNORECASE),
+     "signbit has no Spark SQL equivalent (x < 0 misses -0.0); compare "
+     "against 0 explicitly if -0.0 does not matter"),
+    (re.compile(r"\btimezone_(?:hour|minute)\s*\(", re.IGNORECASE),
+     "timezone_hour/timezone_minute need a TIMESTAMPTZ type Spark does "
+     "not have; the session zone is a constant — inline it"),
+    (re.compile(r"\bstrip_accents\s*\(", re.IGNORECASE),
+     "strip_accents (unicode decomposition) has no Spark SQL equivalent; "
+     "use translate() for a known accent set or a Pandas UDF"),
+    (re.compile(r"\bnfc_normalize\s*\(", re.IGNORECASE),
+     "nfc_normalize has no Spark SQL equivalent; normalize upstream or "
+     "use a Pandas UDF"),
+    (re.compile(r"\b(?:left|right)_grapheme\s*\(", re.IGNORECASE),
+     "grapheme-cluster slicing has no Spark SQL equivalent; left/right "
+     "operate on code points — use them if surrogate pairs are acceptable"),
+    (re.compile(r"\bhistogram\s*\(", re.IGNORECASE),
+     "histogram() builds a value→count MAP in one aggregate; Spark needs "
+     "a two-level GROUP BY — compute the frequency table explicitly"),
+    (re.compile(r"\bbitstring_agg\s*\(", re.IGNORECASE),
+     "bitstring_agg has no Spark equivalent (BIT type); aggregate into a "
+     "bool array or bitmask bigint explicitly"),
+    (re.compile(r"\b(?:greatest_common_divisor|least_common_multiple|"
+                r"gcd|lcm)\s*\(", re.IGNORECASE),
+     "gcd/lcm have no Spark SQL equivalent; precompute or use a Pandas "
+     "UDF"),
+    (re.compile(r"\bparse_(?:path|dirname|filename)\s*\(", re.IGNORECASE),
+     "parse_path/parse_dirname/parse_filename have no Spark equivalent; "
+     "use split(path, '/') / regexp_extract"),
+    (re.compile(r"\bmd5_number(?:_lower|_upper)?\s*\(", re.IGNORECASE),
+     "md5_number/md5_number_lower return 128/64-bit UNSIGNED integers "
+     "Spark's types cannot hold; use md5() hex text or xxhash64 with "
+     "explicit expectations"),
+    (re.compile(r"\bEXCLUDE\s+(?:CURRENT\s+ROW|GROUP|TIES)\b", re.IGNORECASE),
+     "window frame EXCLUDE CURRENT ROW / GROUP / TIES has no "
+     "Spark equivalent; subtract the excluded rows' contribution "
+     "explicitly"),
+    (re.compile(r"\bproduct\s*\(", re.IGNORECASE),
+     "the product() aggregate has no Spark equivalent "
+     "(exp(sum(ln(x))) breaks on zeros/negatives); compute it "
+     "explicitly if the domain is known-positive"),
+]
+
+
 def duckdb_to_spark_sql(
-    sql: str,
-    table_columns: dict[str, list[str]] | None = None,
-    column_kinds: dict[str, str] | None = None,
+    sql: str, schemas: Callable[[], dict] | None = None
 ) -> str:
     """Rewrite known DuckDB-isms to Spark SQL; raise on constructs with no
     Spark equivalent rather than letting them fail with a parser error.
 
-    ``table_columns`` (optional, table name → column list, as the CLI and
-    pipeline runner supply) enables the schema-dependent rewrites:
-    ``COLUMNS('regex')`` / ``COLUMNS(*)`` projection expansion.
-    ``column_kinds`` (optional, lowercase column name → 'string'/'array')
-    enables ``len()`` dispatch on bare column references; expressions with
-    a recognizable literal/function/CAST shape dispatch without it."""
-    if _POSITIONAL_RE.search(sql):
-        raise ValueError(
-            "POSITIONAL JOIN has no Spark equivalent; zip frames with a "
-            "row_number window + equi-join instead"
-        )
+    ``schemas`` (optional) is a zero-argument source of ``{view:
+    StructType}``, e.g. ``lambda: catalog_schemas(spark)`` as the CUSTOM
+    stage passes it. It is called at most once, and only when a rewrite
+    needs a column: ``COLUMNS(...)`` and ``* REPLACE`` expansion, and
+    ``len()`` / ``[i:j]`` dispatch over a bare column name. Without it
+    those forms are refused; every other rewrite is schema-free."""
     sm = _DUCK_STATEMENT_RE.match(sql)
     if sm:
         raise ValueError(
@@ -4371,24 +4231,23 @@ def duckdb_to_spark_sql(
             "SELECT-shaped stages (configuration belongs in the session "
             "builder, ingest in the LOAD stage)"
         )
-    if _RECURSIVE_UNNEST_RE.search(sql):
-        raise ValueError(
-            "unnest(..., recursive := true) has no Spark equivalent; "
-            "explode struct fields explicitly instead"
-        )
     masked, literals = _mask_strings(sql)
+    for pat, msg in _REFUSALS:
+        if pat.search(masked):
+            raise ValueError(msg)
+    views = _Schemas(schemas)
     # Before any cast handling: `T[]` list-type spellings → ARRAY<T> so the
     # int-cast rounding rewrites never see a `[]`-suffixed target.
     masked = _rewrite_array_types(masked)
     masked = _rewrite_asof(masked)
     masked = _rewrite_pivot_stmt(masked)
     masked = _rewrite_unpivot_stmt(masked)
-    masked = _rewrite_columns_projection(masked, literals, table_columns)
-    masked = _rewrite_star_replace(masked, table_columns)
+    masked = _rewrite_columns_projection(masked, literals, views)
+    masked = _rewrite_star_replace(masked, views)
     masked = _rewrite_struct_literals(masked)
     masked = _rewrite_json_arrows(masked, literals)
     masked = _rewrite_json_extract(masked, literals)
-    masked = _rewrite_len(masked, column_kinds)
+    masked = _rewrite_len(masked, views)
     if _RECURSIVE_RE.search(masked) and not _UNION_ALL_RE.search(masked):
         raise ValueError(
             "Spark recursive CTEs support only UNION ALL between anchor and "
@@ -4399,44 +4258,19 @@ def duckdb_to_spark_sql(
         )
     masked = _rewrite_quantile_disc(masked)
     masked = _rewrite_list_reduce(masked)
-    masked = _rewrite_slices(masked, column_kinds)
-    if _CARET_RE.search(masked):
-        raise ValueError(
-            "'^' is POWER in DuckDB but bitwise XOR in Spark — a silent "
-            "semantic flip; write power(a, b) explicitly"
-        )
-    if _HASH_RE.search(masked):
-        raise ValueError(
-            "hash() is DuckDB's internal 64-bit hash; Spark's hash() is "
-            "32-bit Murmur3 — values silently diverge. Use a portable "
-            "digest (md5/sha2) or xxhash64 with explicit expectations"
-        )
-    if _UNION_BY_NAME_RE.search(masked):
-        raise ValueError(
-            "UNION [ALL] BY NAME has no Spark SQL spelling and aligning "
-            "columns requires both subquery schemas; list the columns "
-            "explicitly in the same order on both sides (or use the "
-            "DataFrame unionByName operator)"
-        )
-    if _SUMMARIZE_RE.search(masked):
-        raise ValueError(
-            "SUMMARIZE is a DuckDB statement with no SQL equivalent; use "
-            "the column-profile operator (profile_orders_columns-style "
-            "introspection) instead"
-        )
+    masked = _rewrite_slices(masked, views)
     masked = _rewrite_match_operators(masked, literals)
     masked = _rewrite_subscripts(masked)
     masked = _INTDIV_RE.sub(" div ", masked)
     masked = _rewrite_strftime(masked, literals)
     masked = _rewrite_time_flips(masked, literals)
     masked = _rewrite_string_split(masked, literals)
-    masked = _rewrite_string_split(masked, literals, _STRING_TO_ARRAY_RE)
-    masked = _rewrite_string_split(masked, literals, _BARE_SPLIT_RE)
-    masked = _rewrite_string_split(masked, literals, _STR_SPLIT_RE)
     masked = _rewrite_list_aggregate(masked, literals)
     # list_prepend(elem, list) → array_prepend(list, elem): reversed args.
-    masked = _rewrite_two_arg(
-        masked, _LIST_PREPEND_RE, lambda a: f"array_prepend\x01({a[1]}, {a[0]})"
+    masked = _rewrite_call(
+        masked,
+        _LIST_PREPEND_RE,
+        lambda m, a: f"array_prepend\x01({a[1]}, {a[0]})" if len(a) == 2 else None,
     )
     # array/list_pop_back|front → slice (empty list stays empty, NULL NULL)
     masked = _rewrite_call(
@@ -4451,25 +4285,30 @@ def duckdb_to_spark_sql(
     )
     # list_has_all(haystack, needles) → every needle contained (Spark has
     # no direct equivalent; forall + array_contains is exact).
-    masked = _rewrite_two_arg(
+    masked = _rewrite_call(
         masked,
         _LIST_HAS_ALL_RE,
-        lambda a: f"forall({a[1]}, x -> array_contains({a[0]}, x))",
+        lambda m, a: (
+            f"forall({a[1]}, x -> array_contains({a[0]}, x))" if len(a) == 2 else None
+        ),
     )
     # regexp_matches is DuckDB's partial-match boolean — Spark RLIKE.
-    masked = _rewrite_two_arg(
-        masked, _REGEXP_MATCHES_RE, lambda a: f"({a[0]} RLIKE {a[1]})"
+    masked = _rewrite_call(
+        masked,
+        _REGEXP_MATCHES_RE,
+        lambda m, a: f"({a[0]} RLIKE {a[1]})" if len(a) == 2 else None,
     )
     # epoch_us/epoch_ms → unix_micros/unix_millis (exact integer epochs;
     # the cast covers TIMESTAMP_NTZ columns, which the unix_* functions
     # reject raw).
-    masked = _rewrite_one_arg(
+    masked = _rewrite_call(
         masked,
         _EPOCH_RE,
-        lambda m, arg: (
-            f"unix_micros(cast({arg} as timestamp))"
-            if m.group(1).lower() == "us"
-            else f"unix_millis(cast({arg} as timestamp))"
+        lambda m, a: (
+            f"unix_{'micros' if m.group(1).lower() == 'us' else 'millis'}"
+            f"(cast({a[0]} as timestamp))"
+            if len(a) == 1
+            else None
         ),
     )
     # Bare VARCHAR (DuckDB's default string type) needs a length in Spark;
@@ -4491,12 +4330,6 @@ def duckdb_to_spark_sql(
     masked = _rewrite_first_last_ordered(masked)
     masked = _rewrite_r3_tail_fns(masked, literals)
     masked = _rewrite_r3_batch2(masked, literals)
-    if _PRODUCT_RE.search(masked):
-        raise ValueError(
-            "the product() aggregate has no Spark equivalent "
-            "(exp(sum(ln(x))) breaks on zeros/negatives); compute it "
-            "explicitly if the domain is known-positive"
-        )
     # group_concat is string_agg's alias — fold into that rewrite.
     masked = re.sub(r"\bgroup_concat\s*\(", "string_agg(", masked, flags=re.IGNORECASE)
     # ISO week-of-year in both engines.
@@ -4513,48 +4346,58 @@ def duckdb_to_spark_sql(
     # epoch(ts) → fractional epoch seconds (epoch_ms/epoch_us were already
     # rewritten above; the bare spelling requires '(' right after the name
     # so it cannot touch them).
-    masked = _rewrite_one_arg(
+    masked = _rewrite_call(
         masked,
         _EPOCH_FN_RE,
-        lambda m, arg: f"(unix_micros(cast({arg} as timestamp)) / 1e6)",
+        lambda m, a: (
+            f"(unix_micros(cast({a[0]} as timestamp)) / 1e6)" if len(a) == 1 else None
+        ),
     )
     # list_unique COUNTS distinct non-null elements (it is not a dedup).
-    masked = _rewrite_one_arg(
+    masked = _rewrite_call(
         masked,
         _LIST_UNIQUE_RE,
-        lambda m, arg: (
-            f"size(array_distinct\x01(filter({arg}, _lu -> _lu IS NOT NULL)))"
+        lambda m, a: (
+            f"size(array_distinct\x01(filter({a[0]}, _lu -> _lu IS NOT NULL)))"
+            if len(a) == 1
+            else None
         ),
     )
     # list_distinct DROPS null elements in DuckDB; Spark's array_distinct
     # keeps one — filter them out first.
-    masked = _rewrite_one_arg(
+    masked = _rewrite_call(
         masked,
         _LIST_DISTINCT_RE,
-        lambda m, arg: (
-            f"array_distinct\x01(filter({arg}, _ld -> _ld IS NOT NULL))"
+        lambda m, a: (
+            f"array_distinct\x01(filter({a[0]}, _ld -> _ld IS NOT NULL))"
+            if len(a) == 1
+            else None
         ),
     )
     # list_has_any IGNORES null elements (false, not NULL, when only
     # nulls overlap); arrays_overlap returns NULL there. Whole-list NULL
     # operands stay NULL in both.
-    masked = _rewrite_two_arg(
+    masked = _rewrite_call(
         masked,
         _LIST_HAS_ANY_RE,
-        lambda a: (
+        lambda m, a: (
             f"(CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN NULL "
             f"ELSE coalesce(arrays_overlap({a[0]}, {a[1]}), false) END)"
+            if len(a) == 2
+            else None
         ),
     )
     # list_concat treats a NULL operand as empty; Spark concat propagates
     # NULL — fold the null-handling into a CASE.
-    masked = _rewrite_two_arg(
+    masked = _rewrite_call(
         masked,
         _LIST_CONCAT_RE,
-        lambda a: (
+        lambda m, a: (
             f"(CASE WHEN ({a[0]}) IS NULL THEN {a[1]} "
             f"WHEN ({a[1]}) IS NULL THEN {a[0]} "
             f"ELSE concat\x01({a[0]}, {a[1]}) END)"
+            if len(a) == 2
+            else None
         ),
     )
     masked = _rewrite_date_diff(masked, literals)

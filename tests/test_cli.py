@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from tests.conftest import SF_SMALL
 
 
@@ -88,3 +90,28 @@ def test_cli_sql_accepts_duckdb_idioms(spark, capsys):
     )
     assert rc == 0
     assert len(json.loads(capsys.readouterr().out)) == 3
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT COLUMNS('^n_') FROM nation WHERE n_nationkey < 3",
+        "SELECT n_name, len(n_name) AS n FROM nation WHERE n_nationkey < 3",
+    ],
+    ids=["columns", "len"],
+)
+def test_cli_sql_gets_table_schemas(spark, capsys, sql):
+    """The ``--sql`` path hands the dialect shim the loaded tables'
+    schemas, so COLUMNS(...) and len() over a column translate there as
+    they do in a flow's CUSTOM stage."""
+    from gemini_data_wrangler_spark.__main__ import main
+
+    rc = main(["--tables-dir", SF_SMALL, "--sql", sql, "--show", "5"], spark=spark)
+    assert rc == 0
+    rows = json.loads(capsys.readouterr().out)
+    assert len(rows) == 3
+    if "COLUMNS" in sql:
+        assert {"n_nationkey", "n_name"} <= set(rows[0])
+        assert all(c.startswith("n_") for c in rows[0])
+    else:
+        assert all(r["n"] == len(r["n_name"]) for r in rows)

@@ -1103,33 +1103,16 @@ def _register_views(spark):
         df.createOrReplaceTempView(name)
 
 
-def _column_kinds(spark) -> dict[str, str]:
-    """Flat column→kind map over the fixture tables, mirroring how the
-    compiler's CUSTOM stage builds it from the session catalog for len()
-    dispatch."""
-    kinds: dict[str, str] = {}
-    for tbl in load_sf_tables(spark, SF_ORACLE).values():
-        for f in tbl.schema.fields:
-            tn = f.dataType.typeName()
-            kind = (
-                "string"
-                if tn == "string"
-                else "array" if tn in ("array", "map") else "other"
-            )
-            prev = kinds.get(f.name.lower())
-            kinds[f.name.lower()] = (
-                kind if prev in (None, kind) else "conflict"
-            )
-    return kinds
+@pytest.fixture(scope="module")
+def view_schemas(spark):
+    """``{view: StructType}`` of the fixture tables: the shim's schema
+    source, as a CUSTOM stage hands it the session catalog's."""
+    return {n: df.schema for n, df in load_sf_tables(spark, SF_ORACLE).items()}
 
 
 @pytest.mark.parametrize("name,sql", BANK, ids=[b[0] for b in BANK])
-def test_duckdb_idiom_matches(spark, duck, name, sql):
-    import re as _re
-
-    needs_kinds = "len(" in sql.lower() or _re.search(r"\[[^\]\[]*:", sql)
-    kinds = _column_kinds(spark) if needs_kinds else None
-    spark_df = spark.sql(duckdb_to_spark_sql(sql, column_kinds=kinds))
+def test_duckdb_idiom_matches(spark, duck, view_schemas, name, sql):
+    spark_df = spark.sql(duckdb_to_spark_sql(sql, schemas=lambda: view_schemas))
     diag = compare(spark_df, duck, sql)
     assert diag["ok"], f"{name}: {diag}"
 
@@ -1233,23 +1216,25 @@ def test_admin_statements_refused():
     ):
         with pytest.raises(ValueError, match="administrative"):
             duckdb_to_spark_sql(stmt)
-    # mid-query occurrences of the same words must NOT trip the check
+    # mid-query occurrences of the same words must NOT trip the check, and
+    # neither may a refused construct's spelling inside a string literal
     duckdb_to_spark_sql("SELECT 1 AS settled, 'COPY' AS label FROM orders")
+    quoted = "SELECT 'a POSITIONAL JOIN b' AS s FROM t"
+    assert duckdb_to_spark_sql(quoted) == quoted
 
 
-def test_columns_projection_matches_duckdb(spark, duck):
+def test_columns_projection_matches_duckdb(spark, duck, view_schemas):
     """``COLUMNS('regex')`` expands to an explicit list when the caller
     supplies table schemas (as the pipeline's CUSTOM stage does) and the
     result matches DuckDB running the raw text."""
     sql = "SELECT COLUMNS('key$') FROM orders WHERE o_orderkey < 50"
-    cols = {"orders": spark.table("orders").columns}
-    out = duckdb_to_spark_sql(sql, cols)
+    out = duckdb_to_spark_sql(sql, schemas=lambda: view_schemas)
     assert "o_orderkey, o_custkey" in out
     diag = compare(spark.sql(out), duck, sql)
     assert diag["ok"], diag
     star = duckdb_to_spark_sql(
         "SELECT COLUMNS(*) FROM nation WHERE n_nationkey = 1",
-        {"nation": spark.table("nation").columns},
+        schemas=lambda: view_schemas,
     )
     diag = compare(
         spark.sql(star), duck, "SELECT COLUMNS(*) FROM nation WHERE n_nationkey = 1"
@@ -1257,14 +1242,14 @@ def test_columns_projection_matches_duckdb(spark, duck):
     assert diag["ok"], diag
 
 
-def test_star_replace_matches_duckdb(spark, duck):
+def test_star_replace_matches_duckdb(spark, duck, view_schemas):
     """``SELECT * REPLACE (expr AS col)`` expands to the explicit column
     list (schema-supplied, like COLUMNS) and matches DuckDB."""
     sql = (
         "SELECT * REPLACE (upper(n_name) AS n_name, n_regionkey + 100 AS n_regionkey) "
         "FROM nation WHERE n_nationkey < 10"
     )
-    out = duckdb_to_spark_sql(sql, {"nation": spark.table("nation").columns})
+    out = duckdb_to_spark_sql(sql, schemas=lambda: view_schemas)
     # Untouched columns (n_nationkey) survive in position; replaced ones carry
     # the substituted expression.
     assert "upper(n_name) AS n_name" in out and "SELECT n_nationkey," in out
@@ -1277,6 +1262,35 @@ def test_star_replace_and_len_refusals():
         duckdb_to_spark_sql("SELECT * REPLACE (1 AS x) FROM t")  # no schema
     with pytest.raises(ValueError, match="length\\(\\) for strings"):
         duckdb_to_spark_sql("SELECT len(s) FROM t")
+
+
+def test_schema_source_is_lazy():
+    """Schema-free SQL never calls the schema source; SQL that needs
+    columns calls it once, however many rewrites ask."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    def refuse():
+        raise AssertionError("schema source called for schema-free SQL")
+
+    for sql in (
+        "SELECT strftime(o_orderdate, '%Y-%m') AS ym FROM orders",
+        "SELECT o_orderkey FROM orders "
+        "QUALIFY row_number() OVER (ORDER BY o_totalprice) <= 3",
+        "SELECT o_orderkey // 7 AS bucket FROM orders",
+    ):
+        assert duckdb_to_spark_sql(sql, schemas=refuse) == duckdb_to_spark_sql(sql)
+    calls = []
+
+    def nation():
+        calls.append(1)
+        return {"nation": StructType([StructField("n_name", StringType())])}
+
+    out = duckdb_to_spark_sql(
+        "SELECT COLUMNS('^n_'), len(n_name) AS l, n_name[1:2] AS p FROM nation",
+        schemas=nation,
+    )
+    assert out.startswith("SELECT n_name, length(n_name) AS l,"), out
+    assert len(calls) == 1
 
 
 def test_lambda_arrows_left_alone(spark, duck):

@@ -60,6 +60,22 @@ def test_custom_sql_sees_result_views(runner):
     assert results[1].df.collect()[0].s == 150.0
 
 
+def test_custom_star_replace_gets_view_schemas(spark):
+    """A CUSTOM stage's ``SELECT * REPLACE`` expands against the schemas of
+    the runner's registered views."""
+    from gemini_data_wrangler_spark.sources.readers import load_sf_tables
+    from tests.conftest import SF_SMALL
+
+    nation = load_sf_tables(spark, SF_SMALL)["nation"]
+    r = PipelineRunner(spark=spark, tables={"nation": nation})
+    results = r.run(
+        [{"type": "CUSTOM", "data": {"sql": "SELECT * REPLACE (upper(n_name) AS n_name) FROM nation"}}]
+    )
+    df = results[0].df
+    assert df.columns == nation.columns
+    assert sorted(x.n_name for x in df.collect()) == sorted(x.n_name.upper() for x in nation.collect())
+
+
 def test_join_stage_in_pipeline(runner):
     results = runner.run(
         [
