@@ -6,14 +6,15 @@ Prints ONE compact JSON line as the FINAL stdout line:
 
 The driver captures only a bounded tail of stdout, so the ``queries`` map
 holds a fixed HEADLINE subset (the heavy/representative operators, listed
-below) with 2-decimal timings — round 1's full 107-query map overflowed
-the capture window and arrived unparseable. The full suite still runs and
-is summarized in ``full_total`` / ``n_queries``; per-query numbers for
-everything are written to BENCH_LOCAL.json for local inspection.
+below) with 2-decimal timings. The full suite still runs and is summarized
+in ``full_total`` / ``n_queries``; ``steal_s`` is the host CPU steal
+measured over every query's runs. Per-query records (``s``, ``err``,
+``steal_s``) are written to BENCH_LOCAL.json for local inspection.
 
 Env knobs: ``SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1),
 ``SPARK_GRAFT_CPUS`` (default all), ``BENCH_QUERIES`` (comma-separated
-subset — overrides both the run set and the reported map).
+subset — overrides both the run set and the reported map; an unknown name
+fails the run before any query is timed).
 """
 
 from __future__ import annotations
@@ -95,57 +96,6 @@ SCALE_PATH = [
 ]
 
 
-def _env_fingerprint(spark) -> dict:
-    """Version provenance for the artifact (kept tiny: the driver's stdout
-    tail is bounded)."""
-    import duckdb
-    import numpy
-
-    return {
-        "spark": spark.version,
-        "duckdb": duckdb.__version__,
-        "numpy": numpy.__version__,
-        "python": ".".join(map(str, sys.version_info[:3])),
-    }
-
-
-def _merge_best(timings: dict, sf) -> tuple[dict, str]:
-    """Rolling per-query MIN across every bench run at the same
-    (sf, git HEAD) — the noise-free floor the round-6 verdict asked for
-    (ask #7): the committed artifact is one host window, but the best
-    observed timing across ALL validation runs of the same code is what
-    separates a real regression from a steal burst. Keyed by HEAD so a
-    code change resets the floor (a stale min from faster old code must
-    not mask a legitimate slowdown); state lives in BENCH_BEST.json
-    (gitignored scratch)."""
-    import subprocess
-
-    try:
-        head = subprocess.run(
-            ["git", "-C", REPO_DIR, "rev-parse", "--short", "HEAD"],
-            capture_output=True,
-            text=True,
-            timeout=10,
-        ).stdout.strip() or "unknown"
-    except Exception:
-        head = "unknown"
-    path = os.path.join(REPO_DIR, "BENCH_BEST.json")
-    best: dict[str, float] = {}
-    try:
-        with open(path) as fh:
-            prev = json.load(fh)
-        if prev.get("sf") == sf and prev.get("head") == head:
-            best = prev.get("best", {})
-    except Exception:
-        pass
-    for n, t in timings.items():
-        b = best.get(n)
-        best[n] = round(t if b is None else min(t, b), 3)
-    with open(path, "w") as fh:
-        json.dump({"sf": sf, "head": head, "best": best}, fh, indent=1, sort_keys=True)
-    return best, head
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -153,7 +103,7 @@ def main() -> None:
     except ValueError:
         sf = None
 
-    from gemini_data_wrangler_spark.queries import registry
+    from gemini_data_wrangler_spark.queries import env_fingerprint, registry, run_each
     from gemini_data_wrangler_spark.session import get_spark
 
     spark = get_spark(app_name="gdws-bench")
@@ -168,117 +118,63 @@ def main() -> None:
     # query, not session startup.
     reg["flagship_segment_sales"][0](spark, sf_dir).count()
 
-    # The host VM shows multi-second CPU-steal bursts (identical queries
-    # measured 6 s and 25 s back-to-back on an idle guest, and 20 s vs
-    # 6 s five minutes apart in round 5): one-shot timings are noise for
-    # anything non-trivial. Since round 4 EVERY query runs twice and
-    # reports the MIN — one uniform policy so headline and full-suite
-    # numbers are like-for-like. Round 5 adds an instability retry: when
-    # the two runs of a non-trivial query disagree by >2x, the burst
-    # likely spanned both, so up to two extra runs are taken (still
-    # reporting the min). The policy is recorded in the artifact.
+    # Host CPU-steal bursts make one-shot timings noise (identical queries
+    # measured 6 s and 25 s back-to-back on an idle guest), so every query
+    # runs twice and reports the MIN. When the two runs disagree by >2x, or
+    # both sit above the tail cutoff, the burst likely spanned both, so up
+    # to two extra runs are taken (still reporting the min).
     TIMING_POLICY = "min_of_2_plus_instability_retries"
-
-    def _run_once(builder) -> float:
-        t0 = time.perf_counter()
-        df = builder(spark, sf_dir)
-        # Force full execution without collecting result rows to the driver.
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    # Absolute tail-outlier cutoff for the instability retry, scaled to
-    # the scale factor (round-5 ADVICE: a flat 8 s is an sf0.1 constant —
-    # at sf1 a legitimately slower query would always burn 4 runs without
-    # converging). 80 s/sf ≈ 8 s at the default sf0.1, FLOORED at 8 s
-    # (round-6 ADVICE: linear scaling DOWN made the cutoff 0.8 s at
-    # sf0.01, so every moderately heavy query there burned the 2 extra
-    # retries and small-sf iteration loops ran ~2x slower than needed).
+    # No registry query legitimately needs >8 s at sf0.1. The cutoff scales
+    # with sf so larger inputs don't always burn 4 runs, and is floored at
+    # 8 s so small-sf runs don't retry every moderately heavy query.
     slow_cutoff = max(8.0, 80.0 * sf) if sf else 8.0
 
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in names:
-        builder, _ = reg[name]
-        try:
-            runs = [_run_once(builder), _run_once(builder)]
-            # Instability retry: a steal burst that spans both runs leaves
-            # min(2 runs) inflated — detectable as a >2x spread between
-            # the runs, or as an absolute tail outlier (no query in the
-            # registry legitimately needs >8 s at sf0.1; a burst hitting
-            # both runs equally shows no spread at all). Two more attempts
-            # bound the added wall time to the genuinely noisy queries.
-            for _ in range(2):
-                unstable = max(runs) > 2 * min(runs) and min(runs) > 1.0
-                if not (unstable or min(runs) > slow_cutoff):
-                    break
-                runs.append(_run_once(builder))
-            timings[name] = round(min(runs), 3)
-        except Exception as exc:  # noqa: BLE001 — one bad query must not
-            # abort the whole bench run (the driver parses the final JSON).
-            errors[name] = repr(exc)[:200]
-            print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
-        # Drop per-query persisted intermediates (dedup/similarity stage
-        # caches) so successive queries don't accumulate heap pressure.
-        # clearCache only covers the SQL cache manager — localCheckpoint
-        # blocks (connected components) are freed by the ContextCleaner,
-        # which needs the Python refs collected first; nudge both so each
-        # query starts from a clean block manager.
-        spark.catalog.clearCache()
-        import gc
+    def _run_once(build) -> float:
+        t0 = time.perf_counter()
+        # Force full execution without collecting result rows to the driver.
+        build().write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
 
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
+    def run(_name, build, _oracle) -> dict:
+        runs = [_run_once(build), _run_once(build)]
+        for _ in range(2):
+            unstable = max(runs) > 2 * min(runs) and min(runs) > 1.0
+            if not (unstable or min(runs) > slow_cutoff):
+                break
+            runs.append(_run_once(build))
+        return {"s": round(min(runs), 3)}
 
-    full_total = round(sum(timings.values()), 2)
+    # A failing query keeps its exception in ``err`` and the run goes on,
+    # so the final JSON line still prints.
+    records = run_each(spark, sf_dir, names, run)
+    timings = {n: r["s"] for n, r in records.items() if r["err"] is None}
+    errors = sorted(n for n, r in records.items() if r["err"] is not None)
+    for name in errors:
+        print(f"BENCH ERROR {name}: {records[name]['err']}", file=sys.stderr)
+
     headline = {n: round(t, 2) for n, t in timings.items() if n in report}
-    best, best_head = _merge_best(timings, sf)
-    # Self-diagnosing noise markers for the driver artifact: the headline
-    # total at the session's best-observed floor, plus the queries whose
-    # committed timing sits >1.3x above their own floor (host-window
-    # spikes read directly off the artifact instead of being re-derived
-    # from a separate builder run each round).
-    best_observed = round(sum(best[n] for n in headline if n in best), 2)
-    noise_suspects = sorted(
-        n for n, t in headline.items()
-        if n in best and t > 1.3 * best[n] + 0.2
-    )
     payload = {
         "metric": "headline_query_wall_seconds",
         "value": round(sum(headline.values()), 2),
         "unit": "sec",
         "queries": headline,
         "sf": sf,
-        "full_total": full_total,
+        "full_total": round(sum(timings.values()), 2),
         "n_queries": len(timings),
         "timing_policy": TIMING_POLICY,
         "scale_path": {
             n: round(timings[n], 2) for n in SCALE_PATH if n in timings
         },
-        "best_observed": best_observed,
-        "best_head": best_head,
-        "noise_suspects": noise_suspects[:8],
-        # Environment fingerprint: rounds 4 and 5 each burned a cycle on
-        # "mismatch/outlier only in the driver env" — one line of
-        # provenance localizes an engine-version divergence immediately.
-        "env": _env_fingerprint(spark),
+        "steal_s": round(sum(r["steal_s"] for r in records.values()), 2),
+        "env": env_fingerprint(spark),
     }
     if errors:
         # Keep the printed line bounded: error names only, capped at 5 —
-        # full reprs go to BENCH_LOCAL.json / stderr.
+        # full messages go to BENCH_LOCAL.json / stderr.
         payload["n_errors"] = len(errors)
-        payload["errors"] = sorted(errors)[:5]
+        payload["errors"] = errors[:5]
     with open(os.path.join(REPO_DIR, "BENCH_LOCAL.json"), "w") as fh:
-        json.dump(
-            {
-                "timings": timings,
-                "error_detail": errors,
-                "best_observed_per_query": best,
-                **payload,
-            },
-            fh,
-            indent=1,
-            sort_keys=True,
-        )
+        json.dump({**payload, "records": records}, fh, indent=1, sort_keys=True)
     # The driver parses the stdout tail (2000 bytes observed in round 1);
     # if the line ever outgrows it, shed headline entries largest-name-first
     # until it fits — totals always survive.

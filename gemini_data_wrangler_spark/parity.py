@@ -22,20 +22,6 @@ from collections import Counter
 from datetime import date, datetime
 from decimal import Decimal
 
-ORACLE_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def _norm_value(v):
     if v is None:
         return "NULL"
@@ -120,8 +106,10 @@ def duck_connection(sf_dir: str):
     the driver's oracle harness does."""
     import duckdb
 
+    from gemini_data_wrangler_spark.sources.readers import TESTDATA_TABLES
+
     con = duckdb.connect()
-    for name in ORACLE_TABLES:
+    for name in TESTDATA_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
             con.execute(
@@ -131,76 +119,65 @@ def duck_connection(sf_dir: str):
 
 
 def run_parity(spark, sf_dir: str, only: list[str] | None = None) -> dict:
-    """Run every registry query against its oracle; return the artifact dict.
+    """Run every registry query (or the ``only`` subset) against its oracle;
+    return the artifact dict. Unknown ``only`` names raise ``ValueError``
+    before any query runs.
 
     Record shape matches CORRECTNESS_r{N}.json rows, plus ``spark_s``
-    (builder and collect) and ``oracle_s`` (DuckDB) in seconds; rows-only
-    queries (no oracle) get ``err: "no_oracle"`` with their row count, the
-    same weaker check the driver records.
+    (builder and collect) and ``oracle_s`` (DuckDB) in seconds and
+    ``steal_s`` (host steal during the query); rows-only queries (no
+    oracle) get ``err: "no_oracle"`` with their row count, the same weaker
+    check CORRECTNESS_r{N}.json records.
     """
-    from gemini_data_wrangler_spark.queries import registry
+    from gemini_data_wrangler_spark.queries import env_fingerprint, registry, run_each
 
     con = duck_connection(sf_dir)
-    results: dict[str, dict] = {}
-    t_start = time.time()
-    items = sorted(registry().items())
-    if only:
-        wanted = set(only)
-        items = [(n, v) for n, v in items if n in wanted]
-    for name, (builder, oracle) in items:
-        rec = {
-            "rows_match": False,
-            "schema_match": False,
-            "hash_match": False,
-            "spark_rows": None,
-            "oracle_rows": None,
-            "err": None,
-            "spark_s": None,
-            "oracle_s": None,
-        }
-        try:
-            t0 = time.perf_counter()
-            df = builder(spark, sf_dir)
-            if oracle is None:
-                rec["spark_rows"] = df.count()
-                rec["err"] = "no_oracle"
-                rec.update(spark_s=round(time.perf_counter() - t0, 3), oracle_s=0.0)
-            else:
-                builder_s = time.perf_counter() - t0
-                diag = compare(df, con, oracle, sample=name in EVER_RED)
-                rec.update(
-                    rows_match=diag["rowcount_ok"],
-                    schema_match=diag["schema_ok"],
-                    hash_match=diag["values_ok"],
-                    spark_rows=diag["spark_rows"],
-                    oracle_rows=diag["duck_rows"],
-                    spark_s=round(builder_s + diag["spark_s"], 3),
-                    oracle_s=round(diag["oracle_s"], 3),
-                )
-                if "spark_sample" in diag:
-                    rec["spark_sample"] = diag["spark_sample"]
-                    rec["oracle_sample"] = diag["duck_sample"]
-                if not diag["ok"]:
-                    rec["err"] = json.dumps(diag["sample_diff"], default=str)[:500] or "mismatch"
-        except Exception as exc:  # noqa: BLE001 — artifact records the failure
-            rec["err"] = f"{type(exc).__name__}: {exc}"[:500]
-        results[name] = rec
-    con.close()
 
-    import duckdb
-    import numpy
+    def run(name, build, oracle) -> dict:
+        t0 = time.perf_counter()
+        df = build()
+        if oracle is None:
+            rows = df.count()
+            spark_s = round(time.perf_counter() - t0, 3)
+            return {"spark_rows": rows, "err": "no_oracle", "spark_s": spark_s, "oracle_s": 0.0}
+        builder_s = time.perf_counter() - t0
+        diag = compare(df, con, oracle, sample=name in EVER_RED)
+        rec = {
+            "rows_match": diag["rowcount_ok"],
+            "schema_match": diag["schema_ok"],
+            "hash_match": diag["values_ok"],
+            "spark_rows": diag["spark_rows"],
+            "oracle_rows": diag["duck_rows"],
+            "spark_s": round(builder_s + diag["spark_s"], 3),
+            "oracle_s": round(diag["oracle_s"], 3),
+        }
+        if "spark_sample" in diag:
+            rec["spark_sample"] = diag["spark_sample"]
+            rec["oracle_sample"] = diag["duck_sample"]
+        if not diag["ok"]:
+            rec["err"] = json.dumps(diag["sample_diff"], default=str)[:500] or "mismatch"
+        return rec
+
+    t_start = time.time()
+    try:
+        records = run_each(spark, sf_dir, sorted(set(only or registry())), run)
+    finally:
+        con.close()
+    empty = {
+        "rows_match": False,
+        "schema_match": False,
+        "hash_match": False,
+        "spark_rows": None,
+        "oracle_rows": None,
+        "spark_s": None,
+        "oracle_s": None,
+    }
+    results = {name: {**empty, **rec} for name, rec in records.items()}
 
     oracle_rows = [r for r in results.values() if r["err"] != "no_oracle"]
     summary = {
         "sf_dir": sf_dir,
-        # Engine provenance: a hash mismatch that reproduces in one
-        # environment only (rounds 4-5: embedding_kmeans) is localized by
-        # comparing these versions across artifacts.
-        "env": {
-            "spark": spark.version,
-            "duckdb": duckdb.__version__,
-            "numpy": numpy.__version__,
-        },
+        "env": env_fingerprint(spark),
         "total_queries": len(results),
         "oracle_backed": len(oracle_rows),
         "rows_only": len(results) - len(oracle_rows),
@@ -225,7 +202,11 @@ def main(argv: list[str] | None = None) -> int:
     from gemini_data_wrangler_spark.session import get_spark
 
     spark = get_spark(app_name="gdws-parity")
-    artifact = run_parity(spark, args.sf_dir, only=args.only)
+    try:
+        artifact = run_parity(spark, args.sf_dir, only=args.only)
+    except ValueError as exc:  # unknown --only names
+        spark.stop()
+        p.error(str(exc))
     with open(args.out, "w") as fh:
         json.dump(artifact, fh, indent=1, default=str)
     s = artifact["summary"]

@@ -73,14 +73,6 @@ class FilterCondition:
             logic=d.get("logic", "AND"),
         )
 
-    def to_dict(self) -> dict[str, Any]:
-        return {
-            "column": self.column,
-            "operator": self.operator,
-            "value": self.value,
-            "logic": self.logic,
-        }
-
 
 @dataclass
 class AggSpec:
@@ -94,12 +86,6 @@ class AggSpec:
     def from_dict(cls, d: dict[str, Any]) -> AggSpec:
         return cls(function=d["function"], column=d["column"], alias=d.get("alias"))
 
-    def to_dict(self) -> dict[str, Any]:
-        out: dict[str, Any] = {"function": self.function, "column": self.column}
-        if self.alias:
-            out["alias"] = self.alias
-        return out
-
 
 @dataclass
 class OrderSpec:
@@ -111,9 +97,6 @@ class OrderSpec:
     @classmethod
     def from_dict(cls, d: dict[str, Any]) -> OrderSpec:
         return cls(column=d["column"], direction=d.get("direction", "ASC"))
-
-    def to_dict(self) -> dict[str, Any]:
-        return {"column": self.column, "direction": self.direction}
 
 
 @dataclass
@@ -156,7 +139,7 @@ class Stage:
     def order_by(self) -> list[OrderSpec]:
         return [OrderSpec.from_dict(o) for o in self.data.get("orderBy", [])]
 
-    # -- (de)serialization -------------------------------------------------
+    # -- deserialization ---------------------------------------------------
     @classmethod
     def from_dict(cls, d: dict[str, Any]) -> Stage:
         stage_type = d.get("type", "CUSTOM")
@@ -170,14 +153,6 @@ class Stage:
             description=d.get("description", ""),
             data=dict(d.get("data") or {}),
         )
-
-    def to_dict(self) -> dict[str, Any]:
-        return {
-            "id": self.id,
-            "type": self.type,
-            "description": self.description,
-            "data": dict(self.data),
-        }
 
 
 def validate_stage(stage: Stage) -> bool:

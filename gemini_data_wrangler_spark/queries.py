@@ -18,9 +18,13 @@ event windows) registered by their own modules.
 
 from __future__ import annotations
 
+import functools
+import gc
 import importlib
+import os
 import pkgutil
 import re
+import sys
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,6 +61,65 @@ def registry() -> dict[str, tuple[QueryFn, Optional[str]]]:
     for name in sorted(names, key=_module_order):
         importlib.import_module(f"{pkg.__name__}.{name}")
     return dict(_REGISTRY)
+
+
+def host_steal_s() -> float:
+    """Cumulative host CPU steal over all CPUs, from ``/proc/stat``."""
+    with open("/proc/stat") as fh:
+        steal_ticks = int(fh.readline().split()[8])
+    return steal_ticks / os.sysconf("SC_CLK_TCK")
+
+
+def env_fingerprint(spark: SparkSession) -> dict:
+    """Engine versions for a run artifact: a result that differs in one
+    environment only is localized by comparing these across artifacts."""
+    import duckdb
+    import numpy
+
+    return {
+        "spark": spark.version,
+        "duckdb": duckdb.__version__,
+        "numpy": numpy.__version__,
+        "python": ".".join(map(str, sys.version_info[:3])),
+    }
+
+
+def run_each(
+    spark: SparkSession,
+    sf_dir: str,
+    names: list[str],
+    run: Callable[[str, Callable[[], DataFrame], Optional[str]], dict],
+) -> dict[str, dict]:
+    """The one query-run loop of the bench, the parity runner and plan
+    capture: ``run(name, build, oracle)`` for each name, where ``build()``
+    returns the query's DataFrame over ``sf_dir``.
+
+    Unknown names raise ``ValueError`` before any query runs. Each record
+    is ``run``'s dict plus ``err`` (the exception, if ``run`` raised) and
+    ``steal_s`` (host CPU steal during ``run``). After each query,
+    ``clearCache`` drops the SQL cache and the Python then JVM collections
+    let the ContextCleaner free localCheckpoint blocks, so every query
+    starts from a clean block manager.
+    """
+    reg = registry()
+    unknown = sorted(set(names) - set(reg))
+    if unknown:
+        raise ValueError(f"unknown query names: {', '.join(unknown)}")
+    records: dict[str, dict] = {}
+    for name in names:
+        builder, oracle = reg[name]
+        rec: dict = {"err": None}
+        steal0 = host_steal_s()
+        try:
+            rec.update(run(name, functools.partial(builder, spark, sf_dir), oracle))
+        except Exception as exc:  # noqa: BLE001 — one bad query must not end the run
+            rec["err"] = f"{type(exc).__name__}: {exc}"[:500]
+        rec["steal_s"] = round(host_steal_s() - steal0, 2)
+        records[name] = rec
+        spark.catalog.clearCache()
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+    return records
 
 
 def make_runner(spark: SparkSession, sf_dir: str) -> PipelineRunner:

@@ -204,12 +204,11 @@ def load_sf_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     ensure_package_shipped(spark)
 
     def build() -> dict[str, DataFrame]:
-        _enable_nanos_timestamps(spark)
         out: dict[str, DataFrame] = {}
         for name in TESTDATA_TABLES:
             path = os.path.join(sf_dir, f"{name}.parquet")
             if os.path.exists(path):
-                out[name] = _normalize_ns_timestamps(spark, spark.read.parquet(path), path)
+                out[name] = read_parquet(spark, path)
         return out
 
     tables = session_memo(spark, "sf_tables", (sf_dir,), build)
@@ -234,13 +233,12 @@ def load_dir_tables(
     writes) are detected by extension-less directory names containing
     parquet part files. Each table optionally registers as a temp view so
     CUSTOM SQL / ``--sql`` can reference it by name."""
-    _enable_nanos_timestamps(spark)
     out: dict[str, DataFrame] = {}
     for fn in sorted(os.listdir(dir_path)):
         path = os.path.join(dir_path, fn)
         if fn.endswith(".parquet"):
             name = fn[: -len(".parquet")]
-            df = _normalize_ns_timestamps(spark, spark.read.parquet(path), path)
+            df = read_parquet(spark, path)
         elif fn.endswith(".csv"):
             name = fn[: -len(".csv")]
             df = read_csv(spark, path)
@@ -248,7 +246,7 @@ def load_dir_tables(
             f.endswith(".parquet") for f in os.listdir(path)
         ):
             name = fn
-            df = _normalize_ns_timestamps(spark, spark.read.parquet(path), path)
+            df = read_parquet(spark, path)
         else:
             continue
         if register:

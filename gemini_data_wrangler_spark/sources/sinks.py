@@ -10,7 +10,6 @@ first-class here:
   ``max_records_per_file`` to bound file sizes at 100 TB.
 * ``write_csv`` / ``write_json`` — interchange formats, header on by
   default to round-trip with the CSV LOAD path.
-* ``write_flow_json`` — the reference's own export format (plans.graph).
 
 All writers go through ``df.write`` (distributed, executor-side IO —
 never a driver collect).
@@ -19,9 +18,6 @@ never a driver collect).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-from gemini_data_wrangler_spark.plans.graph import export_flow_json
-from gemini_data_wrangler_spark.plans.stage import Stage
 
 
 def write_parquet(
@@ -76,12 +72,6 @@ def write_xml(
     df.write.mode(mode).format("xml").option("rowTag", row_tag).option(
         "rootTag", root_tag
     ).save(path)
-
-
-def write_flow_json(stages: list[Stage], path: str) -> None:
-    """Serialize a stage flow to the reference's export JSON format."""
-    with open(path, "w", encoding="utf-8") as fh:
-        fh.write(export_flow_json(stages))
 
 
 def write_bucketed_table(

@@ -26,23 +26,8 @@ def spark():
 def duck():
     """DuckDB connection with the sf0.01 tables registered as views, the way
     the driver's oracle harness does."""
-    import duckdb
+    from gemini_data_wrangler_spark.parity import duck_connection
 
-    con = duckdb.connect()
-    for name in (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ):
-        path = os.path.join(SF_ORACLE, f"{name}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
+    con = duck_connection(SF_ORACLE)
     yield con
     con.close()

@@ -33,20 +33,14 @@ import duckdb
 import pytest
 
 from tests.conftest import SF_ORACLE
-from gemini_data_wrangler_spark.parity import ORACLE_TABLES, _rows_multiset
+from gemini_data_wrangler_spark.parity import _rows_multiset, duck_connection
 
 KMEANS_FAMILY = ["embedding_kmeans", "dedup_semantic"]
 
 
 def _duck(threads: int):
-    con = duckdb.connect()
+    con = duck_connection(SF_ORACLE)
     con.execute(f"SET threads TO {threads}")
-    for t in ORACLE_TABLES:
-        p = os.path.join(SF_ORACLE, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
     return con
 
 

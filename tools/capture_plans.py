@@ -5,10 +5,11 @@ Usage: python tools/capture_plans.py <suffix> [query ...]
 
 Writes `plans/<round>/<query>_<suffix>.txt` for each query (round defaults
 to r08; override with PLAN_ROUND). With no query names, re-captures every
-query that already has a `_before.txt` in the round directory. The
-physical plan is the formatted explain output of the DataFrame the
-registry builder returns — the exact artifact the optimization-round
-judge diffs against the `_before.txt` capture.
+query that already has a `_before.txt` in the round directory; an unknown
+name fails the run before any plan is captured. The physical plan is the
+formatted explain output of the DataFrame the registry builder returns —
+the exact artifact the optimization-round judge diffs against the
+`_before.txt` capture.
 
 Capture goes through the public `DataFrame.explain(mode)` API with stdout
 redirected (the r07 version reached into `df._jdf.queryExecution()`,
@@ -40,30 +41,24 @@ def main() -> None:
             if f.endswith("_before.txt")
         )
 
-    from gemini_data_wrangler_spark.queries import registry
+    from gemini_data_wrangler_spark.queries import run_each
     from gemini_data_wrangler_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     spark = get_spark(app_name="gdws-capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    reg = registry()
 
-    for name in names:
-        if name not in reg:
-            print(f"SKIP {name}: not in registry", file=sys.stderr)
-            continue
-        try:
-            df = reg[name][0](spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain(mode="formatted")
-            text = buf.getvalue()
-        except Exception as exc:  # noqa: BLE001 — record the failure, keep going
-            text = f"EXPLAIN FAILED: {exc!r}\n"
+    def run(_name, build, _oracle) -> dict:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            build().explain(mode="formatted")
+        return {"plan": buf.getvalue()}
+
+    for name, rec in run_each(spark, sf_dir, names, run).items():
+        text = rec["plan"] if rec["err"] is None else f"EXPLAIN FAILED: {rec['err']}\n"
         with open(os.path.join(PLAN_DIR, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(text)
         print(f"wrote {name}_{suffix}.txt")
-        spark.catalog.clearCache()
 
     spark.stop()
 
