@@ -9,7 +9,8 @@ holds a fixed HEADLINE subset (the heavy/representative operators, listed
 below) with 2-decimal timings. The full suite still runs and is summarized
 in ``full_total`` / ``n_queries``; ``steal_s`` is the host CPU steal
 measured over every query's runs. Per-query records (``s``, ``err``,
-``steal_s``) are written to BENCH_LOCAL.json for local inspection.
+``steal_s``) are written to BENCH_LOCAL.json (git-ignored) for local
+inspection; a round's snapshot is committed as ``BENCH_rNN*.json``.
 
 Env knobs: ``SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1),
 ``SPARK_GRAFT_CPUS`` (default all), ``BENCH_QUERIES`` (comma-separated
@@ -96,6 +97,22 @@ SCALE_PATH = [
 ]
 
 
+def summarize(records: dict[str, dict], report: set[str]) -> dict:
+    """The timing fields of the bench line. Every successful query's time
+    is rounded to 2 decimals once; the headline rows (``queries``, the
+    names in ``report``), their sum ``value``, the sum of all rows
+    ``full_total`` and ``scale_path`` all come from those rounded times."""
+    rows = {n: round(r["s"], 2) for n, r in records.items() if r["err"] is None}
+    headline = {n: t for n, t in rows.items() if n in report}
+    return {
+        "value": round(sum(headline.values()), 2),
+        "queries": headline,
+        "full_total": round(sum(rows.values()), 2),
+        "n_queries": len(rows),
+        "scale_path": {n: rows[n] for n in SCALE_PATH if n in rows},
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -147,24 +164,21 @@ def main() -> None:
     # A failing query keeps its exception in ``err`` and the run goes on,
     # so the final JSON line still prints.
     records = run_each(spark, sf_dir, names, run)
-    timings = {n: r["s"] for n, r in records.items() if r["err"] is None}
     errors = sorted(n for n, r in records.items() if r["err"] is not None)
     for name in errors:
         print(f"BENCH ERROR {name}: {records[name]['err']}", file=sys.stderr)
 
-    headline = {n: round(t, 2) for n, t in timings.items() if n in report}
+    summary = summarize(records, report)
     payload = {
         "metric": "headline_query_wall_seconds",
-        "value": round(sum(headline.values()), 2),
+        "value": summary["value"],
         "unit": "sec",
-        "queries": headline,
+        "queries": summary["queries"],
         "sf": sf,
-        "full_total": round(sum(timings.values()), 2),
-        "n_queries": len(timings),
+        "full_total": summary["full_total"],
+        "n_queries": summary["n_queries"],
         "timing_policy": TIMING_POLICY,
-        "scale_path": {
-            n: round(timings[n], 2) for n in SCALE_PATH if n in timings
-        },
+        "scale_path": summary["scale_path"],
         "steal_s": round(sum(r["steal_s"] for r in records.values()), 2),
         "env": env_fingerprint(spark),
     }

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gemini_data_wrangler_spark.operators.compiler import compile_stage
 from gemini_data_wrangler_spark.plans.stage import Stage
+from gemini_data_wrangler_spark.sources.readers import bind_view
 
 _STAGE_ID_NUM = re.compile(r"stage_(\d+)")
 
@@ -64,13 +65,13 @@ class PipelineRunner:
 
     def __post_init__(self) -> None:
         for name, df in self.tables.items():
-            df.createOrReplaceTempView(name)
+            bind_view(self.spark, name, df)
 
     # -- catalog -----------------------------------------------------------
     def add_table(self, name: str, df: DataFrame) -> None:
         name = self._uniquify(clean_table_name(name))
         self.tables[name] = df
-        df.createOrReplaceTempView(name)
+        bind_view(self.spark, name, df)
         if self.active_table is None:
             self.active_table = name
 
@@ -132,7 +133,7 @@ class PipelineRunner:
         df = compile_stage(stage, self.resolve, spark=self.spark, default_table=default_table)
         result_name = self.result_name_for(stage, index)
         self.tables[result_name] = df
-        df.createOrReplaceTempView(result_name)
+        bind_view(self.spark, result_name, df)
         return StageResult(stage=stage, result_name=result_name, df=df)
 
     def run(self, stages: list[Stage | dict[str, Any]], continue_on_error: bool = False) -> list[StageResult]:

@@ -8,16 +8,32 @@ tier 1–2 ≡ ``spark.read.csv(..., inferSchema=True)``, tier 3 ≡
 (``ui/src/App.tsx:812-835``) built row-by-row with INSERTs become a single
 ``spark.createDataFrame`` — no driver-side row loops at scale.
 
-Driver testdata is parquet; ``load_sf_tables`` registers all tables of a
-scale-factor directory as temp views so both DataFrame code and CUSTOM SQL
-stages can reach them.
+Parquet: a LOAD in the reference costs DuckDB one footer read, and so does
+:func:`read_parquet` here. It reads the footer once with pyarrow and hands
+Spark the schema it would infer (``spark.read.schema(...)``), so opening a
+file runs no Spark job. INT64 ``TIMESTAMP(NANOS)`` columns are read as
+bigint nanos (``nanosAsLong``) and converted to µs timestamps; INT96
+columns keep Spark's own type and values. Directories of part files, hive
+partitions, files Spark wrote and types the footer conversion cannot map
+(e.g. ``uint32``) keep ``spark.read.parquet`` inference.
+
+Views: :func:`bind_view` is the engine's only temp-view registration.
+Driver testdata is parquet; ``load_sf_tables`` binds all tables of a
+scale-factor directory to views of their names so both DataFrame code and
+CUSTOM SQL stages can reach them. Each view is registered once per
+application and registered again only when the catalog no longer holds
+the relation bound for that frame (replaced, dropped, or bound to another
+scale); memo-hit loads and pipeline runners over loaded tables run no
+view command.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 
 TESTDATA_TABLES = (
     "region",
@@ -36,47 +52,172 @@ TESTDATA_TABLES = (
 def _enable_nanos_timestamps(spark: SparkSession) -> None:
     """The driver testdata stores TIMESTAMP(NANOS) parquet columns, which
     Spark rejects by default (PARQUET_TYPE_ILLEGAL). This runtime conf makes
-    Spark 4 read them (as timestamp_ntz, truncated to µs — the same value
-    DuckDB's TIMESTAMP cast produces). Set here, not only at session build,
-    so it also applies under an externally-provided SparkSession."""
+    Spark 4 read them as bigint nanos, which :func:`read_parquet` converts.
+    Set here, not only at session build, so it also applies under an
+    externally-provided SparkSession."""
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
 
 
-def _normalize_ns_timestamps(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    """TIMESTAMP(NANOS) parquet columns arrive as bigint (nanos since epoch)
-    under ``nanosAsLong``; convert them back to timestamp_ntz so event-time
-    operators (window/session_window) see real timestamps. Conversion goes
-    through epoch-micros with the session timezone pinned to UTC so the
-    wall-clock values match what DuckDB reads, independent of the host tz."""
+# Reader confs whose non-default value changes the types Spark infers from
+# a parquet footer; under any other value the footer schema is not derived.
+_FOOTER_SCHEMA_CONFS = {
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+    "spark.sql.parquet.int96AsTimestamp": "true",
+    "spark.sql.parquet.binaryAsString": "false",
+}
+# Footer key of the schema Spark stores in the files it writes; Spark's
+# inference prefers it over the parquet types.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _same_in_spark(at) -> bool:
+    """Whether Spark reads the parquet column of Arrow type ``at`` as
+    ``from_arrow_type(at)`` does. Excluded: unsigned ints, half floats,
+    decimal256, date64, time and duration (Arrow-only annotations, or
+    types Spark reads differently or refuses) and anything else not
+    listed."""
+    import pyarrow.types as pt
+
+    if pt.is_dictionary(at):
+        return _same_in_spark(at.value_type)
+    if pt.is_list(at) or pt.is_large_list(at) or pt.is_fixed_size_list(at):
+        return _same_in_spark(at.value_type)
+    if pt.is_map(at):
+        return _same_in_spark(at.key_type) and _same_in_spark(at.item_type)
+    if pt.is_struct(at):
+        return all(_same_in_spark(f.type) for f in at)
+    return any(
+        check(at)
+        for check in (
+            pt.is_boolean, pt.is_signed_integer, pt.is_float32, pt.is_float64,
+            pt.is_decimal128, pt.is_string, pt.is_large_string, pt.is_binary,
+            pt.is_large_binary, pt.is_fixed_size_binary, pt.is_date32, pt.is_timestamp,
+        )
+    )
+
+
+def _footer_schema(spark: SparkSession, path: str) -> tuple[StructType | None, dict[str, bool]]:
+    """Read the parquet footer of ``path`` once and return ``(schema,
+    ns_columns)``.
+
+    ``ns_columns`` maps every top-level INT64 ``TIMESTAMP(NANOS)`` column to
+    its ``isAdjustedToUTC`` flag (for a directory, from its first part
+    file). ``schema`` is the Spark schema ``spark.read.parquet`` would
+    infer, built without a Spark job: ``from_arrow_type(...,
+    prefer_timestamp_ntz=True)`` per field, with the ns columns as bigint (what
+    ``nanosAsLong`` reads) and INT96 columns as timestamp. It is ``None``
+    (Spark infers) for a directory, a file Spark wrote, nested ns or INT96
+    fields, a type outside :func:`_same_in_spark`, or a reader conf that
+    changes inference."""
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    single = os.path.isfile(path)
+    file = path if single else _first_part_file(path)
+    try:
+        meta = pq.read_metadata(file) if file else None
+    except (OSError, ValueError):
+        meta = None
+    if meta is None:
+        return None, {}
+    arrow = meta.schema.to_arrow_schema()
+    top = set(arrow.names)
+    ns: dict[str, bool] = {}
+    int96: set[str] = set()
+    nested_special = False
+    for i in range(meta.num_columns):
+        col = meta.schema.column(i)
+        logical = json.loads(col.logical_type.to_json())
+        is_ns = (
+            col.physical_type == "INT64"
+            and logical.get("Type") == "Timestamp"
+            and logical.get("timeUnit") == "nanoseconds"
+        )
+        if not is_ns and col.physical_type != "INT96":
+            continue
+        if col.path not in top:
+            nested_special = True
+        elif is_ns:
+            ns[col.path] = bool(logical.get("isAdjustedToUTC"))
+        else:
+            int96.add(col.path)
+    if (
+        not single
+        or nested_special
+        or _SPARK_SCHEMA_KEY in (meta.metadata or {})
+        or any(spark.conf.get(k, v) != v for k, v in _FOOTER_SCHEMA_CONFS.items())
+        or not all(_same_in_spark(f.type) for f in arrow if f.name not in ns and f.name not in int96)
+    ):
+        return None, ns
+    fields = []
+    for f in arrow:
+        if f.name in ns:
+            dtype = LongType()
+        elif f.name in int96:
+            dtype = TimestampType()
+        else:
+            dtype = from_arrow_type(f.type, prefer_timestamp_ntz=True)
+        fields.append(StructField(f.name, dtype, True))
+    return StructType(fields), ns
+
+
+def _first_part_file(path: str) -> str | None:
+    """The first data file of a parquet directory, skipping the hidden
+    (``.``) and metadata (``_``) entries that Spark skips too."""
+    if not os.path.isdir(path):
+        return None
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+        for fn in sorted(files):
+            if not fn.startswith((".", "_")):
+                return os.path.join(root, fn)
+    return None
+
+
+def _normalize_ns_timestamps(spark: SparkSession, df: DataFrame, ns_columns: dict[str, bool]) -> DataFrame:
+    """TIMESTAMP(NANOS) parquet columns arrive as bigint (nanos since epoch)
+    under ``nanosAsLong``; convert them back to timestamps, truncated to
+    µs, so event-time operators (window/session_window) see real
+    timestamps: timestamp_ntz when the column is not UTC-adjusted,
+    timestamp when it is. Conversion goes through epoch-micros with the
+    session timezone pinned to UTC so the wall-clock values match what
+    DuckDB reads, independent of the host tz."""
     from pyspark.sql import functions as F
 
-    try:
-        arrow_schema = pq.read_schema(path)
-    except Exception:
-        return df
-    ns_cols = [f.name for f in arrow_schema if str(f.type) == "timestamp[ns]"]
-    if not ns_cols:
+    if ns_columns:
+        # A directory's schema is Spark's: convert only what it read as bigint.
+        longs = {f.name for f in df.schema.fields if isinstance(f.dataType, LongType)}
+        ns_columns = {c: utc for c, utc in ns_columns.items() if c in longs}
+    if not ns_columns:
         return df
     try:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:
         pass
-    for c in ns_cols:
-        # Integer DIV, not `/`: float division of ~1.7e18 nanos exceeds
-        # double precision (2^53) and lands microseconds off.
-        df = df.withColumn(
-            c, F.expr(f"CAST(timestamp_micros(CAST(`{c}` AS BIGINT) DIV 1000) AS TIMESTAMP_NTZ)")
+    # Integer DIV, not `/`: float division of ~1.7e18 nanos exceeds
+    # double precision (2^53) and lands microseconds off.
+    return df.withColumns({
+        c: F.expr(
+            f"timestamp_micros(CAST(`{c}` AS BIGINT) DIV 1000)"
+            if utc
+            else f"CAST(timestamp_micros(CAST(`{c}` AS BIGINT) DIV 1000) AS TIMESTAMP_NTZ)"
         )
-    return df
+        for c, utc in ns_columns.items()
+    })
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet ingest. The schema comes from the footer (see
+    :func:`_footer_schema`), so opening a single file runs no Spark job;
+    otherwise Spark infers it. TIMESTAMP(NANOS) columns are converted as
+    :func:`_normalize_ns_timestamps` says."""
     _enable_nanos_timestamps(spark)
-    return _normalize_ns_timestamps(spark, spark.read.parquet(path), path)
+    schema, ns_columns = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return _normalize_ns_timestamps(spark, reader.parquet(path), ns_columns)
 
 
 def read_csv(
@@ -193,11 +334,34 @@ def dataframe_from_rows(
     return spark.createDataFrame(rows, schema=fields)
 
 
+def bind_view(spark: SparkSession, name: str, df: DataFrame) -> None:
+    """Register ``df`` as temp view ``name``: the engine's only view
+    registration. The relation it registered is kept in
+    ``session_memo`` per view name with its frame, and the command is
+    skipped while the catalog still holds that relation and ``df`` is
+    that frame; a view that was replaced, dropped or bound to another
+    frame is registered again. Nothing outlives the Spark application."""
+    from gemini_data_wrangler_spark.session import session_memo
+
+    catalog = spark._jsparkSession.sessionState().catalog()
+
+    def register() -> tuple[DataFrame, object]:
+        df.createOrReplaceTempView(name)
+        return df, catalog.getRawTempView(name).get()
+
+    held, relation = session_memo(spark, "temp_view", (name,), register)
+    if held is df:
+        current = catalog.getRawTempView(name)
+        if current.isDefined() and current.get().equals(relation):
+            return
+    session_memo(spark, "temp_view", (name,), register, reuse=False)
+
+
 def load_sf_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every parquet table of a testdata scale-factor directory and
-    register each as a temp view (for CUSTOM SQL stages). The DataFrames
-    are memoized per application: parquet schema discovery costs a JVM
-    round-trip per table."""
+    bind each to a temp view of its name (for CUSTOM SQL stages). The
+    DataFrames are memoized per application; after every call the view
+    names point at ``sf_dir``'s tables."""
     from gemini_data_wrangler_spark.session import session_memo
     from gemini_data_wrangler_spark.shipping import ensure_package_shipped
 
@@ -213,7 +377,7 @@ def load_sf_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
     tables = session_memo(spark, "sf_tables", (sf_dir,), build)
     for name, df in tables.items():
-        df.createOrReplaceTempView(name)
+        bind_view(spark, name, df)
     return dict(tables)
 
 
@@ -250,6 +414,6 @@ def load_dir_tables(
         else:
             continue
         if register:
-            df.createOrReplaceTempView(name)
+            bind_view(spark, name, df)
         out[name] = df
     return out
