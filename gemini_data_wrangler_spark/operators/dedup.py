@@ -33,8 +33,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.functions.text import char_shingle_hashes
-from gemini_data_wrangler_spark.operators.graphs import env_int as _env_int, run_route
+from gemini_data_wrangler_spark.operators.graphs import run_route
 from gemini_data_wrangler_spark.plans.stage import Stage
+from gemini_data_wrangler_spark.session import env_int
 
 # Mersenne prime 2^31-1: modulus for the universal-hash family
 # h_i(x) = ((a_i * (x mod P) + b_i) mod P). 31 bits keeps every product
@@ -124,8 +125,6 @@ def _hot_shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
 # dedup_ngram_jaccard). Above the budget the join stays a shuffle join —
 # the 100 TB shape. Env-overridable like the other deployment bounds.
 def _docs_broadcast_bytes() -> int:
-    from gemini_data_wrangler_spark.operators.graphs import env_int
-
     return env_int("SPARK_GRAFT_DOCS_BROADCAST_MAX_BYTES", 64 * 1024 * 1024)
 
 
@@ -810,7 +809,7 @@ def simhash_oracle_sql(
 # driver union-find costs one collect instead of rounds × join jobs.
 # Above the bound the distributed loops below take over (a trillion-token
 # corpus can still produce billions of pairs).
-DRIVER_CC_MAX_EDGES = _env_int("SPARK_GRAFT_DRIVER_CC_MAX_EDGES", 500_000)
+DRIVER_CC_MAX_EDGES = env_int("SPARK_GRAFT_DRIVER_CC_MAX_EDGES", 500_000)
 
 
 def _cc_driver_route(

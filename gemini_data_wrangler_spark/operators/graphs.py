@@ -32,24 +32,10 @@ read ``SPARK_GRAFT_DRIVER_*_MAX_EDGES`` overrides.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def env_int(name: str, default: int) -> int:
-    """Integer knob from the environment, ``default`` when unset or empty —
-    the route bounds below are deployment-sized (how much loop state a
-    driver can hold), so they are env-parameterised like
-    SPARK_GRAFT_SHUFFLE_PARTITIONS (round-7 verdict: the docs promised
-    this; now it is true). A value that is not an integer raises
-    ``ValueError`` instead of silently running with the default."""
-    raw = os.environ.get(name, "")
-    try:
-        return int(raw) if raw else default
-    except ValueError:
-        raise ValueError(f"{name}={raw!r} is not an integer") from None
+from gemini_data_wrangler_spark.session import env_int
 
 
 def run_route(

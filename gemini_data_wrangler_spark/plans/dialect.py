@@ -13,6 +13,14 @@ literals. Anything beyond this list is already ANSI-shared between the
 engines and passes through untouched. Refused constructs sit in one
 pattern table, checked once on the literal-masked text.
 
+A function mapping whose output depends only on the call's arguments
+(and the masked literals) is one row of the ordered call table: ``(DuckDB
+spelling, arity, Spark template)``, ``(spelling, builder)`` or ``(spelling,
+"name(")`` for a head rename. The table is cut into the ``*_CALLS``
+segments only where a pass that is not a call rewrite (int casts, type
+names, ``**``, ``unnest`` in FROM, ...) must run between two rows;
+``duckdb_to_spark_sql`` applies each segment with ``_rewrite_calls``.
+
 Schemas: ``duckdb_to_spark_sql(sql, schemas=...)`` takes a lazy
 ``{view: StructType}`` source. The CUSTOM stage — and so every pipeline
 and the CLI's ``--sql`` path, which runs as a one-stage CUSTOM pipeline —
@@ -193,7 +201,6 @@ from typing import Callable
 _EXCLUDE_RE = re.compile(r"(\*\s*)EXCLUDE(\s*\()", re.IGNORECASE)
 _READ_CSV_RE = re.compile(r"read_csv_auto\s*\(\s*'([^']+)'[^)]*\)", re.IGNORECASE)
 _READ_PARQUET_RE = re.compile(r"read_parquet\s*\(\s*'([^']+)'\s*\)", re.IGNORECASE)
-_LIST_VALUE_RE = re.compile(r"\bLIST_VALUE\s*\(", re.IGNORECASE)
 
 _STR_RE = re.compile(r"'(?:[^']|'')*'")
 _PLACEHOLDER_RE = re.compile(r"\x00(\d+)\x00")
@@ -558,56 +565,54 @@ def _rewrite_brackets(sql: str) -> str:
 # Simple function-name mappings
 # ---------------------------------------------------------------------------
 _FN_RENAMES = [
-    (re.compile(r"\bregexp_split_to_array\s*\(", re.IGNORECASE), "split("),
-    (re.compile(r"\barray_to_string\s*\(", re.IGNORECASE), "array_join("),
-    (re.compile(r"\b(?:list|array)_transform\s*\(", re.IGNORECASE), "transform("),
-    (re.compile(r"\b(?:list|array)_filter\s*\(", re.IGNORECASE), "filter("),
-    (re.compile(r"\b(?:list_|array_)?apply\s*\(", re.IGNORECASE), "transform("),
-    (re.compile(r"\barray_indexof\s*\(", re.IGNORECASE), "array_position("),
-    (re.compile(r"\blist_pack\s*\(", re.IGNORECASE), "array("),
-    (re.compile(r"\barray_reverse\s*\(", re.IGNORECASE), "reverse("),
-    (re.compile(r"\blist_contains\s*\(", re.IGNORECASE), "array_contains("),
+    ("regexp_split_to_array", "split("),
+    ("array_to_string", "array_join("),
+    ("(?:list|array)_transform", "transform("),
+    ("(?:list|array)_filter", "filter("),
+    ("(?:list_|array_)?apply", "transform("),
+    ("array_indexof", "array_position("),
+    ("list_pack", "array("),
+    ("array_reverse", "reverse("),
+    ("list_contains", "array_contains("),
     # list_distinct handled by a dedicated rewrite (DuckDB drops NULLs).
-    (re.compile(r"\b(?:list|array)_sort\s*\(", re.IGNORECASE), "array_sort("),
-    (re.compile(r"\bunnest\s*\(", re.IGNORECASE), "explode("),
-    (re.compile(r"\barg_max\s*\(", re.IGNORECASE), "max_by("),
-    (re.compile(r"\barg_min\s*\(", re.IGNORECASE), "min_by("),
+    ("(?:list|array)_sort", "array_sort("),
+    ("unnest", "explode("),
+    ("arg_max", "max_by("),
+    ("arg_min", "min_by("),
     # Same (expr, fraction) argument order; both linearly interpolate.
-    (re.compile(r"\bquantile_cont\s*\(", re.IGNORECASE), "percentile("),
-    (re.compile(r"\blist_reverse\s*\(", re.IGNORECASE), "reverse("),
-    (re.compile(r"\blist_max\s*\(", re.IGNORECASE), "array_max("),
-    (re.compile(r"\blist_min\s*\(", re.IGNORECASE), "array_min("),
+    ("quantile_cont", "percentile("),
+    ("list_reverse", "reverse("),
+    ("list_max", "array_max("),
+    ("list_min", "array_min("),
     # Same argument order and prefix-match semantics.
-    (re.compile(r"\bstarts_with\s*\(", re.IGNORECASE), "startswith("),
+    ("starts_with", "startswith("),
     # 1-based position of substring, identical argument order.
-    (re.compile(r"\bstrpos\s*\(", re.IGNORECASE), "instr("),
+    ("strpos", "instr("),
     # list_has_any handled by a dedicated rewrite (null-element handling).
     # Same (list, element) argument order. (list_prepend's order is
     # REVERSED vs array_prepend and handled by a two-arg swap rewrite.)
-    (re.compile(r"\blist_append\s*\(", re.IGNORECASE), "array_append("),
+    ("list_append", "array_append("),
     # Levenshtein alias (same cost model: unit insert/delete/substitute).
-    (re.compile(r"\beditdist3\s*\(", re.IGNORECASE), "levenshtein("),
+    ("editdist3", "levenshtein("),
     # Boolean prefix/suffix tests, same argument order.
-    (re.compile(r"\bprefix\s*\(", re.IGNORECASE), "startswith("),
-    (re.compile(r"\bsuffix\s*\(", re.IGNORECASE), "endswith("),
+    ("prefix", "startswith("),
+    ("suffix", "endswith("),
     # Both return the 1-based first position, 0 when absent.
-    (re.compile(r"\blist_position\s*\(", re.IGNORECASE), "array_position("),
-    (re.compile(r"\blist_indexof\s*\(", re.IGNORECASE), "array_position("),
-    (re.compile(r"\barray_length\s*\(", re.IGNORECASE), "size("),
+    ("list_position", "array_position("),
+    ("list_indexof", "array_position("),
+    ("array_length", "size("),
     # Shared extract fields (dow/isodow/epoch already special-cased).
-    (re.compile(r"\bdatepart\s*\(", re.IGNORECASE), "date_part("),
+    ("datepart", "date_part("),
     # Regex-separator split: Spark's split IS the regex form.
-    (re.compile(r"\bstr_split_regex\s*\(", re.IGNORECASE), "split("),
-    (re.compile(r"\bdatetrunc\s*\(", re.IGNORECASE), "date_trunc("),
-    (re.compile(r"\btoday\s*\(", re.IGNORECASE), "current_date("),
+    ("str_split_regex", "split("),
+    ("datetrunc", "date_trunc("),
+    ("today", "current_date("),
 ]
-_LIST_REDUCE_RE = re.compile(r"\b(?:list|array)_reduce\s*\(", re.IGNORECASE)
 _RECURSIVE_RE = re.compile(r"\bWITH\s+RECURSIVE\b", re.IGNORECASE)
 _UNION_ALL_RE = re.compile(r"\bUNION\s+ALL\b", re.IGNORECASE)
 # DuckDB `//` is integer division; Spark's infix equivalent is `div`.
 _INTDIV_RE = re.compile(r"//")
 # strftime(ts, 'fmt') → date_format(ts, 'translated fmt')
-_STRFTIME_RE = re.compile(r"\bstrftime\s*\(", re.IGNORECASE)
 _STRFTIME_MAP = [
     ("%Y", "yyyy"), ("%y", "yy"), ("%m", "MM"), ("%d", "dd"),
     ("%H", "HH"), ("%M", "mm"), ("%S", "ss"), ("%f", "SSSSSS"),
@@ -623,66 +628,47 @@ def _translate_strftime_format(lit: str) -> str:
     for duck, spark in _STRFTIME_MAP:
         out = out.replace(duck, spark)
     return out
-_LIST_SUM_RE = re.compile(r"\blist_sum\s*\(", re.IGNORECASE)
-_SCALAR_SERIES_RE = re.compile(r"\bgenerate_series\s*\(", re.IGNORECASE)
 
 
-def _rewrite_strftime(masked: str, literals: list[str]) -> str:
+def _strftime_build(m, a, literals):
     """``strftime(ts, '%Y-%m-%d')`` (either argument order) →
     ``date_format(ts, 'yyyy-MM-dd')``. Runs on the masked text: the format
     literal is a placeholder, so the translation edits the literals table
     and commas inside strings can't confuse the arg split."""
-
-    def build(m, a):
-        if len(a) != 2:
-            return None
-        ts_arg, fmt_arg = a if _literal_index(a[1]) is not None else a[::-1]
-        idx = _literal_index(fmt_arg)
-        if idx is None:
-            return None
-        literals[idx] = "'" + _translate_strftime_format(literals[idx].strip("'")) + "'"
-        return f"date_format({ts_arg}, {fmt_arg})"
-
-    return _rewrite_call(masked, _STRFTIME_RE, build)
+    if len(a) != 2:
+        return None
+    ts_arg, fmt_arg = a if _literal_index(a[1]) is not None else a[::-1]
+    idx = _literal_index(fmt_arg)
+    if idx is None:
+        return None
+    literals[idx] = "'" + _translate_strftime_format(literals[idx].strip("'")) + "'"
+    return f"date_format({ts_arg}, {fmt_arg})"
 
 
-_LIST_HAS_ALL_RE = re.compile(r"\b(?:list|array)_has_all\s*\(", re.IGNORECASE)
-_REGEXP_MATCHES_RE = re.compile(r"\bregexp_matches\s*\(", re.IGNORECASE)
-# string_split and its aliases split on a LITERAL separator (Spark's split
-# takes a regex). `\b` keeps these off str_split_regex/regexp_split_to_array.
-_STRING_SPLIT_RE = re.compile(
-    r"\b(?:string_split|string_to_array|str_split|split)\s*\(", re.IGNORECASE
-)
-_LIST_AGGREGATE_RE = re.compile(r"\b(?:list|array)_agg(?:regate|r)\s*\(", re.IGNORECASE)
-_EPOCH_RE = re.compile(r"\bepoch_(us|ms)\s*\(", re.IGNORECASE)
 _REGEX_METACHARS = r"\.^$*+?()[]{}|"
 
 
-def _rewrite_string_split(masked: str, literals: list[str]) -> str:
+def _string_split_build(m, args, literals):
     """``string_split(s, sep)`` (and the ``string_to_array``/``split``/
     ``str_split`` aliases) splits on a LITERAL separator; Spark's ``split``
     takes a regex — so the separator literal is regex-escaped in the
     literals table. A non-literal separator is refused (its runtime value
     would be interpreted as a regex, silently changing semantics)."""
-
-    def build(m, args):
-        if len(args) != 2:
-            return None
-        idx = _literal_index(args[1])
-        if idx is None:
-            raise ValueError(
-                "split/string_split with a non-literal separator cannot be "
-                "translated (Spark's split interprets the separator as a "
-                "regex); inline the separator as a string literal"
-            )
-        body = literals[idx][1:-1]
-        escaped = "".join(
-            ("\\" + ch) if ch in _REGEX_METACHARS else ch for ch in body
+    if len(args) != 2:
+        return None
+    idx = _literal_index(args[1])
+    if idx is None:
+        raise ValueError(
+            "split/string_split with a non-literal separator cannot be "
+            "translated (Spark's split interprets the separator as a "
+            "regex); inline the separator as a string literal"
         )
-        literals[idx] = f"'{escaped}'"
-        return f"split\x01({args[0]}, {args[1]})"
-
-    return _rewrite_call(masked, _STRING_SPLIT_RE, build)
+    body = literals[idx][1:-1]
+    escaped = "".join(
+        ("\\" + ch) if ch in _REGEX_METACHARS else ch for ch in body
+    )
+    literals[idx] = f"'{escaped}'"
+    return f"split\x01({args[0]}, {args[1]})"
 
 
 _LIST_AGG_MAP = {
@@ -693,51 +679,42 @@ _LIST_AGG_MAP = {
 }
 
 
-def _rewrite_list_aggregate(masked: str, literals: list[str]) -> str:
-    def build(m, args):
-        if len(args) != 2:
-            return None
-        idx = _literal_index(args[1])
-        name = literals[idx][1:-1].lower() if idx is not None else None
-        if name not in _LIST_AGG_MAP:
-            raise ValueError(
-                f"list_aggregate(..., {name!r}) has no verified Spark "
-                "mapping (only sum/min/max/count are translated); rewrite "
-                "with an explicit aggregate(...) fold"
-            )
-        return _LIST_AGG_MAP[name].format(l=args[0])
-
-    return _rewrite_call(masked, _LIST_AGGREGATE_RE, build)
+def _list_aggregate_build(m, args, literals):
+    if len(args) != 2:
+        return None
+    idx = _literal_index(args[1])
+    name = literals[idx][1:-1].lower() if idx is not None else None
+    if name not in _LIST_AGG_MAP:
+        raise ValueError(
+            f"list_aggregate(..., {name!r}) has no verified Spark "
+            "mapping (only sum/min/max/count are translated); rewrite "
+            "with an explicit aggregate(...) fold"
+        )
+    return _LIST_AGG_MAP[name].format(l=args[0])
 
 
-_STRING_AGG_RE = re.compile(r"\bstring_agg\s*\(", re.IGNORECASE)
 _ORDER_IN_ARG_RE = re.compile(r"\s+ORDER\s+BY\s+", re.IGNORECASE)
 
 
-def _rewrite_string_agg(sql: str) -> str:
+def _string_agg_build(m, args, literals):
     """``string_agg(x[, sep][ ORDER BY o])`` → ``listagg(x, sep)
     [WITHIN GROUP (ORDER BY o)]``. DuckDB's default separator is ','."""
-
-    def build(m, args):
-        if not 1 <= len(args) <= 2:
-            return None
-        order = None
-        om = _ORDER_IN_ARG_RE.search(args[-1])
-        if om:
-            order = args[-1][om.end() :].strip()
-            args[-1] = args[-1][: om.start()].strip()
-            if not args[-1]:
-                args.pop()
-        sep = args[1] if len(args) == 2 else "','"
-        repl = f"listagg({args[0]}, {sep})"
-        if order:
-            repl += f" WITHIN GROUP (ORDER BY {order})"
-        return repl
-
-    return _rewrite_call(sql, _STRING_AGG_RE, build)
+    if not 1 <= len(args) <= 2:
+        return None
+    order = None
+    om = _ORDER_IN_ARG_RE.search(args[-1])
+    if om:
+        order = args[-1][om.end() :].strip()
+        args[-1] = args[-1][: om.start()].strip()
+        if not args[-1]:
+            args.pop()
+    sep = args[1] if len(args) == 2 else "','"
+    repl = f"listagg({args[0]}, {sep})"
+    if order:
+        repl += f" WITHIN GROUP (ORDER BY {order})"
+    return repl
 
 
-_DATE_DIFF_RE = re.compile(r"\bdate_?diff\s*\(", re.IGNORECASE)
 _BARE_VARCHAR_RE = re.compile(r"\bVARCHAR\b(?!\s*\()", re.IGNORECASE)
 _BARE_BLOB_RE = re.compile(r"\b(?:BLOB|BYTEA|VARBINARY)\b", re.IGNORECASE)
 
@@ -772,51 +749,30 @@ _DATE_DIFF_TEMPLATES = {
 }
 
 
-def _rewrite_date_diff(masked: str, literals: list[str]) -> str:
+def _date_diff_build(m, args, literals):
     """3-arg ``date_diff('part', a, b)`` → boundary-exact Spark arithmetic
     (DuckDB counts boundaries crossed, NOT complete intervals — Spark's
     timestampdiff would silently disagree at month ends). 2-arg datediff
     (already Spark-compatible) is left untouched."""
-
-    def build(m, args):
-        if len(args) != 3:
-            return None
-        idx = _literal_index(args[0])
-        if idx is None:
-            raise ValueError(
-                "date_diff with a non-literal part cannot be translated; "
-                "inline the part as a string literal"
-            )
-        unit = literals[idx][1:-1].lower().rstrip("s")
-        tmpl = _DATE_DIFF_TEMPLATES.get(unit)
-        if tmpl is None:
-            raise ValueError(
-                f"date_diff({unit!r}, ...) boundary semantics have no exact "
-                "Spark counterpart (DuckDB counts part boundaries crossed); "
-                "supported parts: " + ", ".join(sorted(_DATE_DIFF_TEMPLATES))
-            )
-        # Plain replace, not str.format: argument expressions may contain
-        # braces (e.g. a struct literal) that .format would choke on.
-        return tmpl.replace("{a}", args[1]).replace("{b}", args[2])
-
-    return _rewrite_call(masked, _DATE_DIFF_RE, build)
-
-
-def _rewrite_list_sum(sql: str) -> str:
-    # DuckDB list_sum SKIPS null elements (list_sum([1, NULL, 3]) = 4) but
-    # yields NULL for empty / all-null / NULL input — the size-guard
-    # reproduces that; coalesce keeps the fold null-safe.
-    return _rewrite_call(
-        sql,
-        _LIST_SUM_RE,
-        lambda m, a: (
-            f"(CASE WHEN size(filter({a[0]}, _ls -> _ls IS NOT NULL)) = 0 "
-            f"THEN NULL ELSE aggregate({a[0]}, cast(0.0 as double), "
-            f"(acc, x) -> acc + coalesce(x, cast(0.0 as double))) END)"
-            if len(a) == 1
-            else None
-        ),
-    )
+    if len(args) != 3:
+        return None
+    idx = _literal_index(args[0])
+    if idx is None:
+        raise ValueError(
+            "date_diff with a non-literal part cannot be translated; "
+            "inline the part as a string literal"
+        )
+    unit = literals[idx][1:-1].lower().rstrip("s")
+    tmpl = _DATE_DIFF_TEMPLATES.get(unit)
+    if tmpl is None:
+        raise ValueError(
+            f"date_diff({unit!r}, ...) boundary semantics have no exact "
+            "Spark counterpart (DuckDB counts part boundaries crossed); "
+            "supported parts: " + ", ".join(sorted(_DATE_DIFF_TEMPLATES))
+        )
+    # Plain replace, not str.format: argument expressions may contain
+    # braces (e.g. a struct literal) that .format would choke on.
+    return tmpl.replace("{a}", args[1]).replace("{b}", args[2])
 
 
 _ASOF_TERMINATOR_RE = re.compile(
@@ -1305,45 +1261,20 @@ def _rewrite_json_arrows(masked: str, literals: list[str]) -> str:
         pos = left_start  # re-scan from here: chains fold left-to-right
 
 
-_JSON_EXTRACT_RE = re.compile(r"\bjson_extract\s*\(", re.IGNORECASE)
-_JSON_EXTRACT_STRING_RE = re.compile(
-    r"\bjson_extract_string\s*\(", re.IGNORECASE
-)
-
-
-def _rewrite_json_extract(masked: str, literals: list[str]) -> str:
-    """Function spellings of the arrow operators, same target forms.
-    Paths must be string literals ('k' or '$.k.j'); DuckDB's list-of-paths
-    form is refused."""
-
-    def norm_path(arg: str) -> str | None:
-        idx = _literal_index(arg)
-        if idx is None:
-            raise ValueError(
-                "json_extract with a non-literal or list path cannot be "
-                "translated; inline a single string path literal"
-            )
-        body = literals[idx][1:-1]
-        if not body.startswith("$"):
-            literals[idx] = f"'$.{body}'"
-        return arg
-
-    masked = _rewrite_call(
-        masked,
-        _JSON_EXTRACT_STRING_RE,
-        lambda m, a: (
-            f"get_json_object({a[0]}, {norm_path(a[1])})" if len(a) == 2 else None
-        ),
-    )
-    return _rewrite_call(
-        masked,
-        _JSON_EXTRACT_RE,
-        lambda m, a: (
-            f"to_json(variant_get(parse_json({a[0]}), {norm_path(a[1])}))"
-            if len(a) == 2
-            else None
-        ),
-    )
+def _json_path(arg: str, literals: list[str]) -> str:
+    """A json_extract path argument, normalized to ``'$.k'`` form in the
+    literals table. Paths must be string literals ('k' or '$.k.j');
+    DuckDB's list-of-paths form is refused."""
+    idx = _literal_index(arg)
+    if idx is None:
+        raise ValueError(
+            "json_extract with a non-literal or list path cannot be "
+            "translated; inline a single string path literal"
+        )
+    body = literals[idx][1:-1]
+    if not body.startswith("$"):
+        literals[idx] = f"'$.{body}'"
+    return arg
 
 
 _STAR_REPLACE_RE = re.compile(r"\*\s*REPLACE\s*\(", re.IGNORECASE)
@@ -1395,10 +1326,6 @@ def _rewrite_star_replace(masked: str, schemas: _Schemas) -> str:
 
 
 _LEN_RE = re.compile(r"\blen\s*\(", re.IGNORECASE)
-_LIST_PREPEND_RE = re.compile(r"\b(?:list|array)_prepend\s*\(", re.IGNORECASE)
-_LIST_POP_RE = re.compile(
-    r"\b(?:list|array)_pop_(?:back|front)\s*\(", re.IGNORECASE
-)
 
 # len() dispatch support: DuckDB's len() is type-overloaded over strings
 # AND lists; Spark splits the surface into length()/size(). The kind of
@@ -1719,24 +1646,20 @@ def _rewrite_slices(masked: str, schemas: _Schemas) -> str:
         masked = masked[:start_op] + repl + masked[close + 1 :]
 
 
-def _rewrite_list_reduce(masked: str) -> str:
+def _list_reduce_build(m, args, literals):
     """DuckDB ``list_reduce(l, λ)`` seeds the left fold with the FIRST
     element and folds λ(acc, x) over the rest; Spark's ``aggregate``
     requires an explicit seed, so replay DuckDB's semantics as
     ``aggregate(slice(l, 2, …), element_at(l, 1), λ)``. Empty lists error
     on both engines (DuckDB refuses the fold; ANSI ``element_at`` raises
     on index 1), NULL lists return NULL on both."""
-
-    def build(m, args):
-        if len(args) != 2:
-            raise ValueError("list_reduce takes exactly (list, lambda)")
-        l, lam = args
-        return (
-            f"aggregate(slice({l}, 2, greatest(size({l}) - 1, 0)), "
-            f"element_at({l}, 1), {lam})"
-        )
-
-    return _rewrite_call(masked, _LIST_REDUCE_RE, build)
+    if len(args) != 2:
+        raise ValueError("list_reduce takes exactly (list, lambda)")
+    l, lam = args
+    return (
+        f"aggregate(slice({l}, 2, greatest(size({l}) - 1, 0)), "
+        f"element_at({l}, 1), {lam})"
+    )
 
 
 def _rewrite_call(masked: str, pattern: re.Pattern, build) -> str:
@@ -1761,11 +1684,71 @@ def _rewrite_call(masked: str, pattern: re.Pattern, build) -> str:
         masked = masked[: m.start()] + repl + masked[close + 1 :]
 
 
-_LOG_RE = re.compile(r"\blog\s*\(", re.IGNORECASE)
-_REGEXP_EXTRACT_RE = re.compile(r"\bregexp_extract\s*\(", re.IGNORECASE)
-_REGEXP_EXTRACT_ALL_RE = re.compile(r"\bregexp_extract_all\s*\(", re.IGNORECASE)
-_LRTRIM_RE = re.compile(r"\b([lr])trim\s*\(", re.IGNORECASE)
-_TRUNC_RE = re.compile(r"\btrunc\s*\(", re.IGNORECASE)
+# ---------------------------------------------------------------------------
+# The call table: one row per function mapping (see the module docstring).
+# ---------------------------------------------------------------------------
+def _call_pattern(spelling: str) -> re.Pattern:
+    """The one call-site pattern rule: ``spelling`` (a regex fragment —
+    alternations, optional parts, groups a builder reads) as a whole word
+    in any case, then an opening paren."""
+    return re.compile(rf"\b(?:{spelling})\s*\(", re.IGNORECASE)
+
+
+def _null_lit(arg: str) -> bool:
+    """A bare NULL literal argument: DuckDB types it as NULL and
+    propagates, Spark cannot analysis-resolve HOFs over it — the
+    rewrites short-circuit to NULL (or empty, where DuckDB says so)."""
+    return arg.strip().upper() == "NULL"
+
+
+def _template(arity: int, template: str):
+    """Builder of an ``(spelling, arity, template)`` row."""
+    return lambda m, a, literals: template.format(*a) if len(a) == arity else None
+
+
+def _strict(arity: int, template: str):
+    """Builder for a template row whose bare NULL literal arguments
+    short-circuit to NULL (``_null_lit``)."""
+
+    def build(m, a, literals):
+        if len(a) != arity:
+            return None
+        return "NULL" if any(_null_lit(x) for x in a) else template.format(*a)
+
+    return build
+
+
+def _call_table(rows: list[tuple]) -> list[tuple[re.Pattern, object]]:
+    """Compile call-table rows, in order, to ``(pattern, action)`` pairs:
+
+    * ``(spelling, arity, template)``: a call with exactly ``arity``
+      arguments becomes ``template.format(*args)``; other arities stay;
+    * ``(spelling, builder)``: ``builder(match, args, literals)`` returns
+      the replacement, or None to leave the call site alone;
+    * ``(spelling, "name(")``: only the call's head is renamed.
+
+    The pattern is ``_call_pattern(spelling)``; a row whose match needs
+    more than that rule gives a compiled pattern as its spelling."""
+    table = []
+    for spelling, *action in rows:
+        if not isinstance(spelling, re.Pattern):
+            spelling = _call_pattern(spelling)
+        table.append((spelling, _template(*action) if len(action) == 2 else action[0]))
+    return table
+
+
+def _rewrite_calls(masked: str, table, literals: list[str]) -> str:
+    """Apply one segment of the call table, row by row."""
+    for pattern, action in table:
+        if isinstance(action, str):
+            masked = pattern.sub(action, masked)
+        else:
+            masked = _rewrite_call(
+                masked, pattern, lambda m, a: action(m, a, literals)
+            )
+    return masked
+
+
 # Postgres-style match OPERATORS. Binary-use only: the left context must be
 # an operand tail (identifier char, closing paren/bracket, or a masked
 # literal's \x00), which excludes unary bitwise-NOT (`~5`, always preceded
@@ -1774,15 +1757,6 @@ _TRUNC_RE = re.compile(r"\btrunc\s*\(", re.IGNORECASE)
 _MATCH_OP_RE = re.compile(
     r"(?P<pre>[\w\)\]\x00])(?P<sp>\s*)(?P<op>!~~|~~|!~|~)\s*\x00(?P<idx>\d+)\x00"
 )
-_REGEXP_FULL_MATCH_RE = re.compile(r"\bregexp_full_match\s*\(", re.IGNORECASE)
-_STRPTIME_RE = re.compile(r"\bstrptime\s*\(", re.IGNORECASE)
-_TO_TIMESTAMP_RE = re.compile(r"\bto_timestamp\s*\(", re.IGNORECASE)
-_DATE_ADD_RE = re.compile(r"\bdate_?add\s*\(", re.IGNORECASE)
-_DATE_SUB_RE = re.compile(r"\bdate_?sub\s*\(", re.IGNORECASE)
-_ISOYEAR_RE = re.compile(r"\bisoyear\s*\(", re.IGNORECASE)
-_ISFINITE_RE = re.compile(r"\bisfinite\s*\(", re.IGNORECASE)
-_ISINF_RE = re.compile(r"\bisinf\s*\(", re.IGNORECASE)
-_INTERVAL_KW_RE = re.compile(r"\bINTERVAL\b", re.IGNORECASE)
 # Fixed-width units where Spark's timestampdiff IS DuckDB date_sub's
 # complete-elapsed counting (truncating epoch division, symmetric in
 # sign). 'week' is excluded: DuckDB anchors weeks on calendar weeks in
@@ -1829,7 +1803,8 @@ def _rewrite_match_operators(masked: str, literals: list[str]) -> str:
     """Postgres-style operators DuckDB supports but Spark parses as
     bitwise-NOT or a syntax error: ``~`` (full regex match) / ``!~`` →
     anchored ``[NOT] RLIKE``; ``~~`` (LIKE alias) / ``!~~`` → ``[NOT]
-    LIKE``. ``regexp_full_match(s, 'p')`` gets the same anchoring."""
+    LIKE``. ``regexp_full_match(s, 'p')`` gets the same anchoring from
+    its row (``_full_match_build``), right after this pass."""
 
     def sub(m):
         op = m.group("op")
@@ -1841,186 +1816,73 @@ def _rewrite_match_operators(masked: str, literals: list[str]) -> str:
             kw = "LIKE" if op == "~~" else "NOT LIKE"
         return f"{m.group('pre')} {kw} {tok}"
 
-    masked = _MATCH_OP_RE.sub(sub, masked)
-
-    def build_full_match(m, a):
-        if len(a) != 2:
-            return None
-        if _anchor_literal(literals, a[1]) is None:
-            raise ValueError(
-                "regexp_full_match with a non-literal pattern cannot be "
-                "translated (Spark RLIKE is a partial match; anchoring "
-                "needs the pattern text) — inline the pattern literal"
-            )
-        return f"({a[0]} RLIKE {a[1]})"
-
-    return _rewrite_call(masked, _REGEXP_FULL_MATCH_RE, build_full_match)
+    return _MATCH_OP_RE.sub(sub, masked)
 
 
-def _rewrite_time_flips(masked: str, literals: list[str]) -> str:
-    """Time functions whose Spark same-name counterpart silently differs:
-
-    * ``strptime(s, '%fmt')`` → ``to_timestamp(s, 'translated fmt')``
-      (strftime's %-map, reused);
-    * 1-arg ``to_timestamp(x)`` → ``timestamp_seconds(x)`` — DuckDB's
-      to_timestamp ONLY accepts epoch seconds, Spark's parses strings;
-    * ``date_add(d, INTERVAL ...)`` → ``cast(d + INTERVAL ... as
-      timestamp)`` — Spark's date_add is (date, int-days) and DuckDB's
-      interval overload always yields TIMESTAMP;
-    * 3-arg ``date_sub('part', a, b)`` → ``timestampdiff(PART, a, b)``
-      (complete elapsed units in both engines — NOT date_diff's
-      boundary counting);
-    * ``isoyear(x)`` → ``extract(YEAROFWEEK FROM x)``."""
-
-    def build_strptime(m, a):
-        if len(a) != 2:
-            return None
-        idx = _literal_index(a[1])
-        if idx is None:
-            raise ValueError(
-                "strptime with a non-literal format cannot be translated "
-                "(the %-codes must be mapped to Spark's pattern letters); "
-                "inline the format string"
-            )
-        literals[idx] = (
-            "'" + _translate_strftime_format(literals[idx].strip("'")) + "'"
+def _full_match_build(m, a, literals):
+    """``regexp_full_match(s, 'p')`` → ``s RLIKE '^(?:p)$'``."""
+    if len(a) != 2:
+        return None
+    if _anchor_literal(literals, a[1]) is None:
+        raise ValueError(
+            "regexp_full_match with a non-literal pattern cannot be "
+            "translated (Spark RLIKE is a partial match; anchoring "
+            "needs the pattern text) — inline the pattern literal"
         )
-        return f"to_timestamp\x01({a[0]}, {a[1]})"
-
-    masked = _rewrite_call(masked, _STRPTIME_RE, build_strptime)
-    masked = _rewrite_call(
-        masked,
-        _TO_TIMESTAMP_RE,
-        lambda m, a: f"timestamp_seconds({a[0]})" if len(a) == 1 else None,
-    )
-    masked = _rewrite_call(
-        masked,
-        _DATE_ADD_RE,
-        lambda m, a: (
-            f"cast(({a[0]}) + ({a[1]}) as timestamp)"
-            if len(a) == 2 and _INTERVAL_KW_RE.search(a[1])
-            else None
-        ),
-    )
-
-    def build_date_sub(m, a):
-        if len(a) != 3:
-            return None
-        idx = _literal_index(a[0])
-        if idx is None:
-            raise ValueError(
-                "date_sub with a non-literal part cannot be translated; "
-                "inline the part name"
-            )
-        unit = literals[idx][1:-1].lower()
-        if unit in _CALENDAR_UNIT_DIV:
-            xa, xb = f"({a[1]})", f"({a[2]})"
-            fwd = _complete_months_sql(xa, xb)
-            bwd = _complete_months_sql(xb, xa)
-            months = (
-                f"(CASE WHEN cast({xa} as timestamp) <= "
-                f"cast({xb} as timestamp) THEN {fwd} ELSE -{bwd} END)"
-            )
-            div = _CALENDAR_UNIT_DIV[unit]
-            return months if div == 1 else f"({months} div {div})"
-        if unit not in _TIMESTAMPDIFF_UNITS:
-            raise ValueError(
-                f"date_sub({unit!r}, ...) complete-interval semantics have "
-                "no verified Spark equivalent (supported: "
-                f"{sorted(_TIMESTAMPDIFF_UNITS | set(_CALENDAR_UNIT_DIV))}); "
-                "use date_diff for boundary counting or spell the "
-                "arithmetic explicitly"
-            )
-        return f"timestampdiff({unit.upper()}, {a[1]}, {a[2]})"
-
-    masked = _rewrite_call(masked, _DATE_SUB_RE, build_date_sub)
-    masked = _rewrite_call(
-        masked,
-        _ISOYEAR_RE,
-        lambda m, a: f"extract(YEAROFWEEK FROM {a[0]})" if len(a) == 1 else None,
-    )
-    # isfinite/isinf: NULL → NULL (comparisons propagate), NaN → false for
-    # both (Spark NaN = Infinity is false; isnan screens the isfinite arm).
-    masked = _rewrite_call(
-        masked,
-        _ISFINITE_RE,
-        lambda m, a: (
-            f"(NOT isnan({a[0]}) AND "
-            f"abs({a[0]}) <> cast(\x02Infinity\x02 as double))"
-            if len(a) == 1
-            else None
-        ),
-    )
-    return _rewrite_call(
-        masked,
-        _ISINF_RE,
-        lambda m, a: (
-            f"(abs({a[0]}) = cast(\x02Infinity\x02 as double))"
-            if len(a) == 1
-            else None
-        ),
-    )
+    return f"({a[0]} RLIKE {a[1]})"
 
 
-def _rewrite_math_string_flips(masked: str) -> str:
-    """Same-spelling functions whose defaults diverge:
+def _strptime_build(m, a, literals):
+    """``strptime(s, '%fmt')`` → ``to_timestamp(s, 'translated fmt')``
+    (strftime's %-map, reused)."""
+    if len(a) != 2:
+        return None
+    idx = _literal_index(a[1])
+    if idx is None:
+        raise ValueError(
+            "strptime with a non-literal format cannot be translated "
+            "(the %-codes must be mapped to Spark's pattern letters); "
+            "inline the format string"
+        )
+    literals[idx] = (
+        "'" + _translate_strftime_format(literals[idx].strip("'")) + "'"
+    )
+    return f"to_timestamp\x01({a[0]}, {a[1]})"
 
-    * ``log(x)`` is log10 in DuckDB but ln in Spark → ``log10(x)``
-      (two-argument ``log(base, x)`` agrees and passes through);
-    * ``regexp_extract(s, p)`` returns the whole match in DuckDB but
-      group 1 in Spark (and errors on group-free patterns) → append
-      ``, 0``;
-    * ``ltrim/rtrim(s, chars)`` has REVERSED arguments in Spark
-      ('xxabc','x' silently returns '') → ``trim(LEADING/TRAILING chars
-      FROM s)``;
-    * numeric ``trunc(x)`` does not exist in Spark (its trunc is
-      date-only) → toward-zero CASE of floor/ceil."""
-    masked = _rewrite_call(
-        masked,
-        _LOG_RE,
-        lambda m, a: f"log10({a[0]})" if len(a) == 1 else None,
-    )
-    masked = _rewrite_call(
-        masked,
-        _REGEXP_EXTRACT_RE,
-        lambda m, a: (
-            f"regexp_extract\x01({a[0]}, {a[1]}, 0)" if len(a) == 2 else None
-        ),
-    )
-    masked = _rewrite_call(
-        masked,
-        _REGEXP_EXTRACT_ALL_RE,
-        lambda m, a: (
-            f"regexp_extract_all\x01({a[0]}, {a[1]}, 0)"
-            if len(a) == 2
-            else None
-        ),
-    )
-    masked = _rewrite_call(
-        masked,
-        _LRTRIM_RE,
-        lambda m, a: (
-            (
-                f"trim({'LEADING' if m.group(1).lower() == 'l' else 'TRAILING'}"
-                f" {a[1]} FROM {a[0]})"
-            )
-            if len(a) == 2
-            else None
-        ),
-    )
-    # DOUBLE result pins the dominant DuckDB case (trunc of DOUBLE stays
-    # DOUBLE; Spark's floor/ceil yield BIGINT). Integer/decimal inputs
-    # come back as doubles — a type, not value, divergence.
-    return _rewrite_call(
-        masked,
-        _TRUNC_RE,
-        lambda m, a: (
-            f"cast((CASE WHEN ({a[0]}) < 0 THEN ceil({a[0]}) "
-            f"ELSE floor({a[0]}) END) as double)"
-            if len(a) == 1
-            else None
-        ),
-    )
+
+def _date_sub_build(m, a, literals):
+    """3-arg ``date_sub('part', a, b)`` → complete elapsed units in both
+    engines (NOT date_diff's boundary counting): ``timestampdiff(PART, a,
+    b)`` for fixed-width parts, the exact add_months closed form for
+    calendar parts."""
+    if len(a) != 3:
+        return None
+    idx = _literal_index(a[0])
+    if idx is None:
+        raise ValueError(
+            "date_sub with a non-literal part cannot be translated; "
+            "inline the part name"
+        )
+    unit = literals[idx][1:-1].lower()
+    if unit in _CALENDAR_UNIT_DIV:
+        xa, xb = f"({a[1]})", f"({a[2]})"
+        fwd = _complete_months_sql(xa, xb)
+        bwd = _complete_months_sql(xb, xa)
+        months = (
+            f"(CASE WHEN cast({xa} as timestamp) <= "
+            f"cast({xb} as timestamp) THEN {fwd} ELSE -{bwd} END)"
+        )
+        div = _CALENDAR_UNIT_DIV[unit]
+        return months if div == 1 else f"({months} div {div})"
+    if unit not in _TIMESTAMPDIFF_UNITS:
+        raise ValueError(
+            f"date_sub({unit!r}, ...) complete-interval semantics have "
+            "no verified Spark equivalent (supported: "
+            f"{sorted(_TIMESTAMPDIFF_UNITS | set(_CALENDAR_UNIT_DIV))}); "
+            "use date_diff for boundary counting or spell the "
+            "arithmetic explicitly"
+        )
+    return f"timestampdiff({unit.upper()}, {a[1]}, {a[2]})"
 
 
 # ---------------------------------------------------------------------------
@@ -2381,41 +2243,13 @@ def _rewrite_int_casts(masked: str) -> str:
         pos = start + len(repl)
 
 
-_ANY_VALUE_RE = re.compile(r"\bany_value\s*\(", re.IGNORECASE)
-_CORR_RE = re.compile(r"\bcorr\s*\(", re.IGNORECASE)
 _FILTER_CLAUSE_RE = re.compile(r"\bFILTER\s*\(", re.IGNORECASE)
 
 
-def _rewrite_agg_flips(masked: str) -> str:
-    """Aggregate-level flips:
-
-    * ``any_value(x)`` SKIPS nulls in DuckDB but respects them in Spark
-      → ``any_value(x, true)``;
-    * ``FILTER (cond)`` — DuckDB's WHERE-less spelling — → ``FILTER
-      (WHERE cond)`` (only after a closing paren, so the ``filter``
-      higher-order function is untouched);
-    * ``corr(x, y)`` with zero variance is NULL in DuckDB but raises
-      DIVIDE_BY_ZERO under Spark's ANSI default → recomposed as
-      ``try_divide(covar_pop, sd(x|y paired) * sd(y|x paired))`` with
-      pairwise null deletion preserved."""
-    masked = _rewrite_call(
-        masked,
-        _ANY_VALUE_RE,
-        lambda m, a: (
-            f"any_value\x01({a[0]}, true)" if len(a) == 1 else None
-        ),
-    )
-
-    def build_corr(m, a):
-        if len(a) != 2:
-            return None
-        x, y = a
-        sx = f"stddev_pop(CASE WHEN ({y}) IS NOT NULL THEN ({x}) END)"
-        sy = f"stddev_pop(CASE WHEN ({x}) IS NOT NULL THEN ({y}) END)"
-        return f"try_divide(covar_pop({x}, {y}), ({sx} * {sy}))"
-
-    masked = _rewrite_call(masked, _CORR_RE, build_corr)
-
+def _rewrite_filter_clause(masked: str) -> str:
+    """``FILTER (cond)`` — DuckDB's WHERE-less spelling of an aggregate
+    filter — → ``FILTER (WHERE cond)`` (only after a closing paren, so the
+    ``filter`` higher-order function is untouched)."""
     pos = 0
     while True:
         m = _FILTER_CLAUSE_RE.search(masked, pos)
@@ -2440,83 +2274,54 @@ def _rewrite_agg_flips(masked: str) -> str:
         pos = close + len("WHERE ") + 1
 
 
-_CONCAT_RE = re.compile(r"\bconcat\s*\(", re.IGNORECASE)
-_SUBSTR_RE = re.compile(r"\bsubstr(?:ing)?\s*\(", re.IGNORECASE)
-_LEFT_RE = re.compile(r"\bleft\s*\(", re.IGNORECASE)
-_RIGHT_RE = re.compile(r"\bright\s*\(", re.IGNORECASE)
 _BARE_NONNEG_INT_RE = re.compile(r"\+?\d+$")
 
 
-def _rewrite_string_edge_flips(masked: str) -> str:
-    """String functions whose edge semantics silently diverge:
-
-    * ``concat`` SKIPS null arguments in DuckDB ('a'||NULL via concat is
-      'a') but propagates NULL in Spark → each argument wraps in
-      ``coalesce(cast(.. as string), '')`` (DuckDB concat is
-      string-typed; array concat is list_concat and untouched);
-    * 3-arg ``substr``/``substring`` with start 0 or a negative LENGTH
-      follows DuckDB's character-window model ([start, start+len) in
-      1-based space, negative start from the end, negative len swinging
-      the window backwards, out-of-range positions dropped) → an exact
-      CASE closed form. Plain positive literals pass through — Spark
-      agrees there, and on every 2-arg form;
-    * ``left``/``right`` with NEGATIVE n drop -n chars from the
-      opposite end in DuckDB but return '' in Spark → CASE on the sign.
-    """
-    masked = _rewrite_call(
-        masked,
-        _CONCAT_RE,
-        lambda m, a: (
-            "concat\x01("
-            + ", ".join(
-                f"coalesce(cast(({x}) as string), \x02\x02)" for x in a
-            )
-            + ")"
-            if a and any(x for x in a)
-            else None
-        ),
+def _substr_build(m, a, literals):
+    """3-arg ``substr``/``substring`` with start 0 or a negative LENGTH
+    follows DuckDB's character-window model ([start, start+len) in 1-based
+    space, negative start from the end, negative len swinging the window
+    backwards, out-of-range positions dropped) → an exact CASE closed
+    form. Plain positive literals pass through — Spark agrees there, and
+    on every 2-arg form."""
+    if len(a) != 3:
+        return None
+    s, st, ln = a
+    if (
+        _BARE_NONNEG_INT_RE.fullmatch(st)
+        and _BARE_NONNEG_INT_RE.fullmatch(ln)
+        and int(st.lstrip("+")) >= 1
+    ):
+        return None
+    length = f"length({s})"
+    st1 = f"(CASE WHEN ({st}) < 0 THEN {length} + ({st}) + 1 ELSE ({st}) END)"
+    lo = f"(CASE WHEN ({ln}) < 0 THEN {st1} + ({ln}) ELSE {st1} END)"
+    hi = f"(CASE WHEN ({ln}) < 0 THEN {st1} ELSE {st1} + ({ln}) END)"
+    lo2 = f"greatest({lo}, 1)"
+    return (
+        f"(CASE WHEN {hi} <= {lo2} THEN \x02\x02 "
+        f"ELSE substring\x01({s}, {lo2}, {hi} - {lo2}) END)"
     )
 
-    def build_substr(m, a):
-        if len(a) != 3:
+
+def _left_right_build(side: str):
+    """``left``/``right`` with NEGATIVE n drop -n chars from the opposite
+    end in DuckDB but return '' in Spark → CASE on the sign."""
+
+    def build(m, a, literals):
+        if len(a) != 2 or _BARE_NONNEG_INT_RE.fullmatch(a[1]):
             return None
-        s, st, ln = a
-        if (
-            _BARE_NONNEG_INT_RE.fullmatch(st)
-            and _BARE_NONNEG_INT_RE.fullmatch(ln)
-            and int(st.lstrip("+")) >= 1
-        ):
-            return None
-        length = f"length({s})"
-        st1 = f"(CASE WHEN ({st}) < 0 THEN {length} + ({st}) + 1 ELSE ({st}) END)"
-        lo = f"(CASE WHEN ({ln}) < 0 THEN {st1} + ({ln}) ELSE {st1} END)"
-        hi = f"(CASE WHEN ({ln}) < 0 THEN {st1} ELSE {st1} + ({ln}) END)"
-        lo2 = f"greatest({lo}, 1)"
+        s, n = a
+        if side == "left":
+            neg = f"substring\x01({s}, 1, greatest(length({s}) + ({n}), 0))"
+        else:
+            neg = f"substring\x01({s}, 1 - ({n}))"
         return (
-            f"(CASE WHEN {hi} <= {lo2} THEN \x02\x02 "
-            f"ELSE substring\x01({s}, {lo2}, {hi} - {lo2}) END)"
+            f"(CASE WHEN ({n}) < 0 THEN {neg} "
+            f"ELSE {side}\x01({s}, {n}) END)"
         )
 
-    masked = _rewrite_call(masked, _SUBSTR_RE, build_substr)
-
-    def lr(side):
-        def build(m, a):
-            if len(a) != 2 or _BARE_NONNEG_INT_RE.fullmatch(a[1]):
-                return None
-            s, n = a
-            if side == "left":
-                neg = f"substring\x01({s}, 1, greatest(length({s}) + ({n}), 0))"
-            else:
-                neg = f"substring\x01({s}, 1 - ({n}))"
-            return (
-                f"(CASE WHEN ({n}) < 0 THEN {neg} "
-                f"ELSE {side}\x01({s}, {n}) END)"
-            )
-
-        return build
-
-    masked = _rewrite_call(masked, _LEFT_RE, lr("left"))
-    return _rewrite_call(masked, _RIGHT_RE, lr("right"))
+    return build
 
 
 _ORDER_BY_KW_RE = re.compile(r"\bORDER\s+BY\b", re.IGNORECASE)
@@ -2610,37 +2415,13 @@ def _rewrite_extract_fields(masked: str) -> str:
         masked = masked[: m.start()] + repl + masked[close + 1 :]
 
 
-# Same-name date functions whose numbering/format diverges. Markers keep
-# the emitted Spark calls from re-matching.
-_DAYOFWEEK_RE = re.compile(r"\b(?:dayofweek|weekday)\s*\(", re.IGNORECASE)
-_ISODOW_RE = re.compile(r"\bisodow\s*\(", re.IGNORECASE)
-_DAYNAME_RE = re.compile(r"\b(day|month)name\s*\(", re.IGNORECASE)
-_LIST_AGG_FN_RE = re.compile(r"\b(?:list|array_agg)\s*\(", re.IGNORECASE)
-
-
-def _rewrite_day_fns(masked: str, literals: list[str]) -> str:
-    """DuckDB ``dayofweek``/``weekday`` both mean 0=Sunday; Spark's
-    ``dayofweek`` is 1=Sunday and its ``weekday`` is 0=MONDAY — the same
-    spellings, shifted numbers. ``isodow`` is 1=Monday..7. ``dayname``/
-    ``monthname`` give full names (Spark's give 3-letter)."""
-    masked = _rewrite_call(
-        masked,
-        _DAYOFWEEK_RE,
-        lambda m, a: f"(dayofweek\x01({a[0]}) - 1)" if len(a) == 1 else None,
-    )
-    masked = _rewrite_call(
-        masked,
-        _ISODOW_RE,
-        lambda m, a: f"(weekday\x01({a[0]}) + 1)" if len(a) == 1 else None,
-    )
-
-    def dayname(m, a):
-        if len(a) != 1:
-            return None
-        literals.append("'EEEE'" if m.group(1).lower() == "day" else "'MMMM'")
-        return f"date_format({a[0]}, \x00{len(literals) - 1}\x00)"
-
-    return _rewrite_call(masked, _DAYNAME_RE, dayname)
+def _dayname_build(m, a, literals):
+    """DuckDB ``dayname``/``monthname`` give full names (Spark's give
+    3-letter ones) → ``date_format`` with a full-name pattern literal."""
+    if len(a) != 1:
+        return None
+    literals.append("'EEEE'" if m.group(1).lower() == "day" else "'MMMM'")
+    return f"date_format({a[0]}, \x00{len(literals) - 1}\x00)"
 
 
 _AGG_KEY_RE = re.compile(
@@ -2711,7 +2492,7 @@ def _null_keeping_collect(expr: str, distinct: bool) -> str:
     return f"array_distinct\x01({base})" if distinct else base
 
 
-def _rewrite_list_agg_fn(masked: str) -> str:
+def _list_agg_build(m, args, literals):
     """DuckDB's ``list(x)`` / ``array_agg(x)`` aggregates → null-keeping
     collects (see ``_null_keeping_collect``). The inline ``ORDER BY``
     forms translate too: the sort key being the collected ascending
@@ -2720,68 +2501,57 @@ def _rewrite_list_agg_fn(masked: str) -> str:
     struct collect (see ``_ordered_collect_sql``). DISTINCT with a
     non-self ordering is refused (dedup of the value conflicts with
     carrying foreign keys)."""
-
-    def build(m, args):
-        if not args:
-            return None
-        joined = ", ".join(args)
-        distinct = False
-        dm = re.match(r"\s*DISTINCT\s+", joined, re.IGNORECASE)
-        if dm:
-            distinct = True
-            joined = joined[dm.end() :]
-        ob = _find_top_level_order_by(joined)
-        if ob < 0:
-            return _null_keeping_collect(joined, distinct)
-        expr = joined[:ob].strip()
-        keys_text = re.sub(
-            r"^ORDER\s+BY\s+", "", joined[ob:], flags=re.IGNORECASE
-        ).strip()
-        km = _AGG_KEY_RE.fullmatch(keys_text)
-        self_asc = (
-            km is not None
-            and km.group("key").strip() == expr
-            and (km.group("dir") or "ASC").upper() == "ASC"
-            and (km.group("nulls") or "LAST").upper() == "LAST"
+    if not args:
+        return None
+    joined = ", ".join(args)
+    distinct = False
+    dm = re.match(r"\s*DISTINCT\s+", joined, re.IGNORECASE)
+    if dm:
+        distinct = True
+        joined = joined[dm.end() :]
+    ob = _find_top_level_order_by(joined)
+    if ob < 0:
+        return _null_keeping_collect(joined, distinct)
+    expr = joined[:ob].strip()
+    keys_text = re.sub(
+        r"^ORDER\s+BY\s+", "", joined[ob:], flags=re.IGNORECASE
+    ).strip()
+    km = _AGG_KEY_RE.fullmatch(keys_text)
+    self_asc = (
+        km is not None
+        and km.group("key").strip() == expr
+        and (km.group("dir") or "ASC").upper() == "ASC"
+        and (km.group("nulls") or "LAST").upper() == "LAST"
+    )
+    if self_asc:
+        return f"array_sort({_null_keeping_collect(expr, distinct)})"
+    if distinct:
+        raise ValueError(
+            "list/array_agg(DISTINCT x ORDER BY k) translates only "
+            "when k is x ascending; deduping the value while sorting "
+            "by another key has no Spark aggregate equivalent"
         )
-        if self_asc:
-            return f"array_sort({_null_keeping_collect(expr, distinct)})"
-        if distinct:
-            raise ValueError(
-                "list/array_agg(DISTINCT x ORDER BY k) translates only "
-                "when k is x ascending; deduping the value while sorting "
-                "by another key has no Spark aggregate equivalent"
-            )
-        return _ordered_collect_sql(expr, keys_text)
-
-    return _rewrite_call(masked, _LIST_AGG_FN_RE, build)
+    return _ordered_collect_sql(expr, keys_text)
 
 
-_FIRST_LAST_RE = re.compile(r"\b(first|last)\s*\(", re.IGNORECASE)
-
-
-def _rewrite_first_last_ordered(masked: str) -> str:
+def _first_last_build(m, args, literals):
     """``first/last(x ORDER BY k1 [DESC], ...)`` — DuckDB's ordered
     selection aggregates (e.g. ``first(price ORDER BY ts DESC)`` = the
     latest price, null x kept) → ``element_at`` on the comparator-sorted
     struct collect. The orderless forms pass through (both engines pick
     an arbitrary row)."""
-
-    def build(m, args):
-        if not args:
-            return None
-        joined = ", ".join(args)
-        ob = _find_top_level_order_by(joined)
-        if ob < 0:
-            return None
-        expr = joined[:ob].strip()
-        keys_text = re.sub(
-            r"^ORDER\s+BY\s+", "", joined[ob:], flags=re.IGNORECASE
-        ).strip()
-        pos = 1 if m.group(1).lower() == "first" else -1
-        return f"element_at({_ordered_collect_sql(expr, keys_text)}, {pos})"
-
-    return _rewrite_call(masked, _FIRST_LAST_RE, build)
+    if not args:
+        return None
+    joined = ", ".join(args)
+    ob = _find_top_level_order_by(joined)
+    if ob < 0:
+        return None
+    expr = joined[:ob].strip()
+    keys_text = re.sub(
+        r"^ORDER\s+BY\s+", "", joined[ob:], flags=re.IGNORECASE
+    ).strip()
+    pos = 1 if m.group(1).lower() == "first" else -1
+    return f"element_at({_ordered_collect_sql(expr, keys_text)}, {pos})"
 
 
 def _rewrite_subscripts(masked: str) -> str:
@@ -2821,31 +2591,22 @@ def _rewrite_subscripts(masked: str) -> str:
         pos = left_start + len(repl)
 
 
-_IGNORE_NULLS_FNS_RE = re.compile(
-    r"\b(lag|lead|first_value|last_value|nth_value|any_value|first|last)"
-    r"\s*\(",
-    re.IGNORECASE,
-)
 _NULLS_MODIFIER_RE = re.compile(
     r"(.*\S)\s+(IGNORE|RESPECT)\s+NULLS\s*$", re.IGNORECASE | re.DOTALL
 )
 
 
-def _rewrite_ignore_nulls(masked: str) -> str:
+def _ignore_nulls_build(m, args, literals):
     """DuckDB puts the nulls modifier INSIDE the call — ``lag(x IGNORE
     NULLS)``; Spark takes it outside — ``lag(x) IGNORE NULLS``. Same
     keyword, one paren over."""
-
-    def build(m, args):
-        if not args:
-            return None
-        nm = _NULLS_MODIFIER_RE.fullmatch(args[-1])
-        if not nm:
-            return None
-        inner = ", ".join(args[:-1] + [nm.group(1)])
-        return f"{m.group(1)}({inner}) {nm.group(2).upper()} NULLS"
-
-    return _rewrite_call(masked, _IGNORE_NULLS_FNS_RE, build)
+    if not args:
+        return None
+    nm = _NULLS_MODIFIER_RE.fullmatch(args[-1])
+    if not nm:
+        return None
+    inner = ", ".join(args[:-1] + [nm.group(1)])
+    return f"{m.group(1)}({inner}) {nm.group(2).upper()} NULLS"
 
 
 _UNNEST_RE = re.compile(r"\bunnest\s*\(", re.IGNORECASE)
@@ -2890,9 +2651,6 @@ def _rewrite_from_unnest(masked: str) -> str:
         pos = m.start() + len(repl)
 
 
-_REGEXP_REPLACE_RE = re.compile(r"\bregexp_replace\s*\(", re.IGNORECASE)
-
-
 def _re2_rewrite_to_java(body: str, shift: int) -> str:
     """RE2 rewrite-string → Java ``Matcher`` replacement: ``\\k`` group
     refs become ``$(k+shift)``, ``\\\\`` stays a literal backslash, and
@@ -2920,7 +2678,7 @@ def _re2_rewrite_to_java(body: str, shift: int) -> str:
     return "".join(out)
 
 
-def _rewrite_regexp_replace(masked: str, literals: list[str]) -> str:
+def _regexp_replace_build(m, args, literals):
     """DuckDB ``regexp_replace`` replaces only the FIRST match unless the
     ``'g'`` option is given; Spark's replaces every match (its optional
     4th argument is a start POSITION — same name, different meaning, so
@@ -2937,99 +2695,87 @@ def _rewrite_regexp_replace(masked: str, literals: list[str]) -> str:
     with group refs shifted by 2 (prefix group, wrapper group). Requires
     a literal replacement (group refs must renumber); non-literal
     replacements keep the explicit refusal."""
-    first_match_msg = (
-        "DuckDB regexp_replace replaces only the FIRST match while Spark "
-        "replaces every one; the first-match translation (anchored "
-        "single-match wrapper) needs a string-literal replacement to "
-        "renumber group references — add the 'g' option for global "
-        "replace, or pass the replacement as a literal"
-    )
 
     def new_lit(raw: str) -> str:
         literals.append(raw)
         return f"\x00{len(literals) - 1}\x00"
 
-    def build(m, args):
-        if len(args) not in (3, 4):
-            return None
-        flags = ""
-        if len(args) == 4:
-            oi = _literal_index(args[3])
-            if oi is None:
-                raise ValueError(
-                    "regexp_replace options must be a string literal"
-                )
-            opts = literals[oi].strip("'").lower()
-            flags = "".join(sorted(set(opts) - {"g"}))
-            if not set(flags) <= {"i", "s", "m"}:
-                raise ValueError(
-                    f"regexp_replace options {opts!r} have no Spark "
-                    "equivalent (translatable: g, i, s, m)"
-                )
-            if "g" in opts:
-                pat = args[1]
-                pi, ri = _literal_index(pat), _literal_index(args[2])
-                if flags:
-                    if pi is not None:
-                        literals[pi] = f"'(?{flags}){literals[pi][1:-1]}'"
-                    else:
-                        pat = f"concat('(?{flags})', {pat})"
-                repl = args[2]
-                if ri is not None:
-                    literals[ri] = f"'{_re2_rewrite_to_java(literals[ri][1:-1], 0)}'"
-                return f"regexp_replace\x01({args[0]}, {pat}, {repl})"
-        # First-match form (3-arg, or 4-arg options without 'g').
-        ri = _literal_index(args[2])
-        if ri is None:
-            raise ValueError(first_match_msg)
-        repl_body = literals[ri][1:-1]
-        # \0 = whole match of the user pattern = wrapper group 2 (shift 2).
-        java_repl = "$1" + _re2_rewrite_to_java(repl_body, 2)
-        repl = new_lit(f"'{java_repl}'")
-        flag_pfx = f"(?{flags})" if flags else ""
-        pi = _literal_index(args[1])
-        if pi is not None:
-            pat_body = literals[pi][1:-1]
-            pat = new_lit(f"'^((?s).*?)({flag_pfx}{pat_body})'")
-        else:
-            pat = (
-                f"concat({new_lit(chr(39) + '^((?s).*?)(' + flag_pfx + chr(39))}, "
-                f"{args[1]}, {new_lit(chr(39) + ')' + chr(39))})"
+    if len(args) not in (3, 4):
+        return None
+    flags = ""
+    if len(args) == 4:
+        oi = _literal_index(args[3])
+        if oi is None:
+            raise ValueError(
+                "regexp_replace options must be a string literal"
             )
-        return f"regexp_replace\x01({args[0]}, {pat}, {repl})"
+        opts = literals[oi].strip("'").lower()
+        flags = "".join(sorted(set(opts) - {"g"}))
+        if not set(flags) <= {"i", "s", "m"}:
+            raise ValueError(
+                f"regexp_replace options {opts!r} have no Spark "
+                "equivalent (translatable: g, i, s, m)"
+            )
+        if "g" in opts:
+            pat = args[1]
+            pi, ri = _literal_index(pat), _literal_index(args[2])
+            if flags:
+                if pi is not None:
+                    literals[pi] = f"'(?{flags}){literals[pi][1:-1]}'"
+                else:
+                    pat = f"concat('(?{flags})', {pat})"
+            repl = args[2]
+            if ri is not None:
+                literals[ri] = f"'{_re2_rewrite_to_java(literals[ri][1:-1], 0)}'"
+            return f"regexp_replace\x01({args[0]}, {pat}, {repl})"
+    # First-match form (3-arg, or 4-arg options without 'g').
+    ri = _literal_index(args[2])
+    if ri is None:
+        raise ValueError(
+            "DuckDB regexp_replace replaces only the FIRST match while Spark "
+            "replaces every one; the first-match translation (anchored "
+            "single-match wrapper) needs a string-literal replacement to "
+            "renumber group references — add the 'g' option for global "
+            "replace, or pass the replacement as a literal"
+        )
+    repl_body = literals[ri][1:-1]
+    # \0 = whole match of the user pattern = wrapper group 2 (shift 2).
+    java_repl = "$1" + _re2_rewrite_to_java(repl_body, 2)
+    repl = new_lit(f"'{java_repl}'")
+    flag_pfx = f"(?{flags})" if flags else ""
+    pi = _literal_index(args[1])
+    if pi is not None:
+        pat_body = literals[pi][1:-1]
+        pat = new_lit(f"'^((?s).*?)({flag_pfx}{pat_body})'")
+    else:
+        pat = (
+            f"concat({new_lit(chr(39) + '^((?s).*?)(' + flag_pfx + chr(39))}, "
+            f"{args[1]}, {new_lit(chr(39) + ')' + chr(39))})"
+        )
+    return f"regexp_replace\x01({args[0]}, {pat}, {repl})"
 
-    return _rewrite_call(masked, _REGEXP_REPLACE_RE, build)
 
-
-_DATE_PART_RE = re.compile(r"\bdate_?part\s*\(", re.IGNORECASE)
-_EPOCH_FN_RE = re.compile(r"\bepoch\s*\(", re.IGNORECASE)
-
-
-def _rewrite_date_part(masked: str, literals: list[str]) -> str:
+def _date_part_build(m, args, literals):
     """Fields whose numbering diverges: DuckDB ``dow`` is 0=Sunday while
     Spark's is 1=Sunday; DuckDB ``isodow`` is 1=Monday..7 (Spark's
     ``weekday`` is 0=Monday..6); ``epoch`` (fractional seconds) is not a
     Spark extract field at all. Shared fields pass through (``datepart``
     spelled without the underscore is renamed afterwards)."""
-
-    def build(m, args):
-        if len(args) != 2:
-            return None
-        idx = _literal_index(args[0])
-        if idx is None:
-            return None
-        part = literals[idx].strip("'").lower()
-        if part == "dow":
-            return f"(dayofweek({args[1]}) - 1)"
-        if part == "isodow":
-            return f"(weekday({args[1]}) + 1)"
-        if part == "epoch":
-            return (
-                f"(unix_micros(cast({args[1]} as timestamp)) / 1e6)"
-            )
+    if len(args) != 2:
         return None
-
-    return _rewrite_call(masked, _DATE_PART_RE, build)
+    idx = _literal_index(args[0])
+    if idx is None:
+        return None
+    part = literals[idx].strip("'").lower()
+    if part == "dow":
+        return f"(dayofweek({args[1]}) - 1)"
+    if part == "isodow":
+        return f"(weekday({args[1]}) + 1)"
+    if part == "epoch":
+        return (
+            f"(unix_micros(cast({args[1]} as timestamp)) / 1e6)"
+        )
+    return None
 
 
 _SIMILAR_TO_RE = re.compile(r"\b(NOT\s+)?SIMILAR\s+TO\b", re.IGNORECASE)
@@ -3055,104 +2801,79 @@ def _rewrite_similar_to(masked: str, literals: list[str]) -> str:
         masked = masked[: m.start()] + op + masked[m.end() :]
 
 
-_LIST_SLICE_RE = re.compile(r"\b(?:list|array)_slice\s*\(", re.IGNORECASE)
-_LIST_UNIQUE_RE = re.compile(r"\b(?:list|array)_unique\s*\(", re.IGNORECASE)
-_LIST_DISTINCT_RE = re.compile(r"\b(?:list|array)_distinct\s*\(", re.IGNORECASE)
-_LIST_HAS_ANY_RE = re.compile(r"\b(?:list|array)_has_any\s*\(", re.IGNORECASE)
-_LIST_CONCAT_RE = re.compile(r"\b(?:list|array)_(?:concat|cat)\s*\(", re.IGNORECASE)
-_STRUCT_PACK_RE = re.compile(r"\bstruct_pack\s*\(", re.IGNORECASE)
-
-
-def _rewrite_list_slice(masked: str) -> str:
+def _list_slice_build(m, args, literals):
     """``list_slice(l, begin, end)``: 1-based, END-INCLUSIVE, negative
     indices count from the end, out-of-range clamps to empty — vs Spark
     ``slice(l, start, LENGTH)``. Normalize both bounds to absolute
     positions and clamp the derived length at 0."""
-
-    def build(m, args):
-        if len(args) == 4:
-            raise ValueError(
-                "list_slice with a step argument has no Spark equivalent"
-            )
-        if len(args) != 3:
-            return None
-        l, a, b = args
-        ai = f"(CASE WHEN ({a}) < 0 THEN size({l}) + ({a}) + 1 ELSE ({a}) END)"
-        bi = f"(CASE WHEN ({b}) < 0 THEN size({l}) + ({b}) + 1 ELSE ({b}) END)"
-        start = f"greatest({ai}, 1)"
-        return f"slice({l}, {start}, greatest({bi} - {start} + 1, 0))"
-
-    return _rewrite_call(masked, _LIST_SLICE_RE, build)
+    if len(args) == 4:
+        raise ValueError(
+            "list_slice with a step argument has no Spark equivalent"
+        )
+    if len(args) != 3:
+        return None
+    l, a, b = args
+    ai = f"(CASE WHEN ({a}) < 0 THEN size({l}) + ({a}) + 1 ELSE ({a}) END)"
+    bi = f"(CASE WHEN ({b}) < 0 THEN size({l}) + ({b}) + 1 ELSE ({b}) END)"
+    start = f"greatest({ai}, 1)"
+    return f"slice({l}, {start}, greatest({bi} - {start} + 1, 0))"
 
 
-def _rewrite_struct_pack(masked: str) -> str:
+def _struct_pack_build(m, args, literals):
     """``struct_pack(k := v, ...)`` → ``named_struct('k', v, ...)``."""
-
-    def build(m, args):
-        pairs = []
-        for item in args:
-            im = re.match(
-                r"([A-Za-z_][A-Za-z_0-9]*)\s*:=\s*(.+)$", item, re.DOTALL
+    pairs = []
+    for item in args:
+        im = re.match(
+            r"([A-Za-z_][A-Za-z_0-9]*)\s*:=\s*(.+)$", item, re.DOTALL
+        )
+        if not im:
+            raise ValueError(
+                "struct_pack arguments must be `name := value`"
             )
-            if not im:
-                raise ValueError(
-                    "struct_pack arguments must be `name := value`"
-                )
-            pairs.append((im.group(1), im.group(2).strip()))
-        return (
-            "named_struct("
-            + ", ".join(f"'{k}', {v}" for k, v in pairs)
-            + ")"
-        )
-
-    return _rewrite_call(masked, _STRUCT_PACK_RE, build)
+        pairs.append((im.group(1), im.group(2).strip()))
+    return (
+        "named_struct("
+        + ", ".join(f"'{k}', {v}" for k, v in pairs)
+        + ")"
+    )
 
 
-# Vector math over embedding lists (list_* and array_* spellings): exact
-# double-typed HOF expansions — the shim's bridge for DuckDB's VSS-style
-# queries over the embeddings table.
-_VEC_FN_RE = re.compile(
-    r"\b(?:list|array)_(cosine_similarity|cosine_distance|inner_product|"
-    r"dot_product|negative_inner_product|distance)\s*\(",
-    re.IGNORECASE,
-)
+def _vec_dot(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+        "cast(0 as double), (s, v) -> s + v)"
+    )
 
 
-def _rewrite_vector_fns(masked: str) -> str:
-    def dot(a, b):
-        return (
-            f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-            "cast(0 as double), (s, v) -> s + v)"
-        )
-
-    def norm(v):
-        return (
-            f"sqrt(aggregate(transform({v}, x -> x * x), "
-            "cast(0 as double), (s, v) -> s + v))"
-        )
-
-    def build(m, args):
-        if len(args) != 2:
-            return None
-        kind = m.group(1).lower()
-        a, b = args
-        if kind in ("inner_product", "dot_product"):
-            return dot(a, b)
-        if kind == "negative_inner_product":
-            return f"(- {dot(a, b)})"
-        if kind == "cosine_similarity":
-            return f"({dot(a, b)} / ({norm(a)} * {norm(b)}))"
-        if kind == "cosine_distance":
-            return f"(1.0 - {dot(a, b)} / ({norm(a)} * {norm(b)}))"
-        return (
-            f"sqrt(aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-            "cast(0 as double), (s, v) -> s + v))"
-        )
-
-    return _rewrite_call(masked, _VEC_FN_RE, build)
+def _vec_norm(v: str) -> str:
+    return (
+        f"sqrt(aggregate(transform({v}, x -> x * x), "
+        "cast(0 as double), (s, v) -> s + v))"
+    )
 
 
-_TIME_BUCKET_RE = re.compile(r"\btime_bucket\s*\(", re.IGNORECASE)
+def _vector_build(m, args, literals):
+    """Vector math over embedding lists (list_* and array_* spellings):
+    exact double-typed HOF expansions — the shim's bridge for DuckDB's
+    VSS-style queries over the embeddings table."""
+    if len(args) != 2:
+        return None
+    kind = m.group(1).lower()
+    a, b = args
+    if kind in ("inner_product", "dot_product"):
+        return _vec_dot(a, b)
+    if kind == "negative_inner_product":
+        return f"(- {_vec_dot(a, b)})"
+    if kind == "cosine_similarity":
+        return f"({_vec_dot(a, b)} / ({_vec_norm(a)} * {_vec_norm(b)}))"
+    if kind == "cosine_distance":
+        return f"(1.0 - {_vec_dot(a, b)} / ({_vec_norm(a)} * {_vec_norm(b)}))"
+    return (
+        f"sqrt(aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
+        "cast(0 as double), (s, v) -> s + v))"
+    )
+
+
 # DuckDB's documented origins: 2000-01-03 00:00:00 (a Monday) for
 # sub-month widths, 2000-01-01 for month-quantized widths.
 _TB_ORIGIN_SEC = 946857600
@@ -3165,577 +2886,169 @@ _TB_UNIT_SEC = {
 }
 
 
-def _rewrite_time_bucket(masked: str, literals: list[str]) -> str:
+def _time_bucket_build(m, args, literals):
     """``time_bucket(INTERVAL 'n unit', ts)`` → origin-anchored epoch
     arithmetic (``pmod`` keeps floor semantics before the origin).
     Month/year widths bucket on the month index instead. The result is a
     TIMESTAMP even for DATE inputs (DuckDB preserves DATE); three-argument
     origin/offset forms are refused."""
-
-    def build(m, args):
-        if len(args) != 2:
-            raise ValueError(
-                "time_bucket with an explicit origin/offset is not "
-                "translated; use the two-argument form"
-            )
-        iv, ts = args
-        im = re.fullmatch(r"INTERVAL\s+\x00(\d+)\x00", iv, re.IGNORECASE)
-        if im:
-            body = literals[int(im.group(1))].strip("'").strip()
-        else:
-            um = re.fullmatch(r"INTERVAL\s+(\d+\s+[A-Za-z]+)", iv, re.IGNORECASE)
-            if not um:
-                raise ValueError(
-                    "time_bucket needs a literal INTERVAL bucket width"
-                )
-            body = um.group(1)
-        bm = re.fullmatch(
-            r"(\d+)\s*(second|minute|hour|day|week|month|year)s?",
-            body,
-            re.IGNORECASE,
+    if len(args) != 2:
+        raise ValueError(
+            "time_bucket with an explicit origin/offset is not "
+            "translated; use the two-argument form"
         )
-        if not bm:
+    iv, ts = args
+    im = re.fullmatch(r"INTERVAL\s+\x00(\d+)\x00", iv, re.IGNORECASE)
+    if im:
+        body = literals[int(im.group(1))].strip("'").strip()
+    else:
+        um = re.fullmatch(r"INTERVAL\s+(\d+\s+[A-Za-z]+)", iv, re.IGNORECASE)
+        if not um:
             raise ValueError(
-                f"unsupported time_bucket width '{body}' (single-unit "
-                "second/minute/hour/day/week/month/year widths translate)"
+                "time_bucket needs a literal INTERVAL bucket width"
             )
-        n, unit = int(bm.group(1)), bm.group(2).lower()
-        if unit in ("month", "year"):
-            months = n * (12 if unit == "year" else 1)
-            mi = f"((year({ts}) - 2000) * 12 + month({ts}) - 1)"
-            return (
-                f"cast(add_months(DATE '2000-01-01', "
-                f"{mi} - pmod({mi}, {months})) as timestamp)"
-            )
-        width = n * _TB_UNIT_SEC[unit]
-        t = f"unix_seconds(cast({ts} as timestamp))"
+        body = um.group(1)
+    bm = re.fullmatch(
+        r"(\d+)\s*(second|minute|hour|day|week|month|year)s?",
+        body,
+        re.IGNORECASE,
+    )
+    if not bm:
+        raise ValueError(
+            f"unsupported time_bucket width '{body}' (single-unit "
+            "second/minute/hour/day/week/month/year widths translate)"
+        )
+    n, unit = int(bm.group(1)), bm.group(2).lower()
+    if unit in ("month", "year"):
+        months = n * (12 if unit == "year" else 1)
+        mi = f"((year({ts}) - 2000) * 12 + month({ts}) - 1)"
         return (
-            f"timestamp_seconds({t} - pmod({t} - {_TB_ORIGIN_SEC}, {width}))"
+            f"cast(add_months(DATE '2000-01-01', "
+            f"{mi} - pmod({mi}, {months})) as timestamp)"
         )
+    width = n * _TB_UNIT_SEC[unit]
+    t = f"unix_seconds(cast({ts} as timestamp))"
+    return (
+        f"timestamp_seconds({t} - pmod({t} - {_TB_ORIGIN_SEC}, {width}))"
+    )
 
-    return _rewrite_call(masked, _TIME_BUCKET_RE, build)
 
-
-# ---------------------------------------------------------------------------
-# Round-3 tail batch: the remaining DuckDB function surface a migrated
-# flow can carry — silent-flip fixes (flatten's NULL-sublist skip, 2-arg
-# trim's reversed arguments, bias-corrected skewness/kurtosis, coarse
-# date_trunc's DATE return type) plus exact translations for the list_*,
-# string-distance, calendar-part and Kahan-aggregate families. Every
-# mapping below is differentially pinned against DuckDB in
-# tests/test_dialect_bank.py.
-# ---------------------------------------------------------------------------
-_FLATTEN_RE = re.compile(r"\bflatten\s*\(", re.IGNORECASE)
-_TRIM2_RE = re.compile(r"(?<![lr])\btrim\s*\(", re.IGNORECASE)
-_SKEWNESS_RE = re.compile(r"\bskewness\s*\(", re.IGNORECASE)
-_KURTOSIS_RE = re.compile(r"\bkurtosis\s*\(", re.IGNORECASE)
-_KURTOSIS_POP_RE = re.compile(r"\bkurtosis_pop\s*\(", re.IGNORECASE)
-_DATE_TRUNC_TYPE_RE = re.compile(r"\bdate_?trunc\s*\(", re.IGNORECASE)
 # Parts at day granularity or coarser, where DuckDB returns DATE while
 # Spark's date_trunc always returns TIMESTAMP (value agrees, type flips).
 _DATE_TRUNC_COARSE = {
     "day", "week", "month", "quarter", "year",
     "decade", "century", "millennium",
 }
-_ENDS_WITH_RE = re.compile(r"\bends_with\s*\(", re.IGNORECASE)
-_STRLEN_RE = re.compile(r"\bstrlen\s*\(", re.IGNORECASE)
-_TO_HEX_RE = re.compile(r"\bto_hex\s*\(", re.IGNORECASE)
-_FROM_HEX_RE = re.compile(r"\bfrom_hex\s*\(", re.IGNORECASE)
-_SHA256_RE = re.compile(r"\bsha256\s*\(", re.IGNORECASE)
-_UNICODE_FN_RE = re.compile(r"\b(?:unicode|ord)\s*\(", re.IGNORECASE)
-_XOR_FN_RE = re.compile(r"\bxor\s*\(", re.IGNORECASE)
-_EVEN_RE = re.compile(r"\beven\s*\(", re.IGNORECASE)
-_ROUND_EVEN_RE = re.compile(r"\bround_even\s*\(", re.IGNORECASE)
-_FDIV_RE = re.compile(r"\bfdiv\s*\(", re.IGNORECASE)
-_FMOD_RE = re.compile(r"\bfmod\s*\(", re.IGNORECASE)
-_MAKE_TS_RE = re.compile(r"\bmake_timestamp\s*\(", re.IGNORECASE)
-_YEARWEEK_RE = re.compile(r"\byearweek\s*\(", re.IGNORECASE)
-_CENTURY_RE = re.compile(r"\bcentury\s*\(", re.IGNORECASE)
-_DECADE_RE = re.compile(r"\bdecade\s*\(", re.IGNORECASE)
-_MILLENNIUM_RE = re.compile(r"\bmillennium\s*\(", re.IGNORECASE)
-_MICROSECOND_RE = re.compile(r"\bmicrosecond\s*\(", re.IGNORECASE)
-_MILLISECOND_RE = re.compile(r"\bmillisecond\s*\(", re.IGNORECASE)
-_JSON_KEYS_RE = re.compile(r"\bjson_keys\s*\(", re.IGNORECASE)
-_JSON_VALID_RE = re.compile(r"\bjson_valid\s*\(", re.IGNORECASE)
-_HAMMING_RE = re.compile(r"\b(?:hamming|mismatches)\s*\(", re.IGNORECASE)
-_JACCARD_RE = re.compile(r"\bjaccard\s*\(", re.IGNORECASE)
-_LIST_ZIP_RE = re.compile(r"\b(?:list|array)_zip\s*\(", re.IGNORECASE)
-_LIST_SORT_ARGS_RE = re.compile(r"\b(?:list|array)_sort\s*\(", re.IGNORECASE)
-_LIST_ELEMENT_RE = re.compile(
-    r"\b(?:list_element|list_extract|array_extract)\s*\(", re.IGNORECASE
-)
-_LIST_COUNT_RE = re.compile(r"\blist_count\s*\(", re.IGNORECASE)
-_LIST_AVG_RE = re.compile(r"\blist_avg\s*\(", re.IGNORECASE)
-_LIST_MEDIAN_RE = re.compile(r"\blist_median\s*\(", re.IGNORECASE)
-_LIST_ANY_VALUE_RE = re.compile(r"\blist_any_value\s*\(", re.IGNORECASE)
-_LIST_FIRST_RE = re.compile(r"\blist_first\s*\(", re.IGNORECASE)
-_LIST_LAST_RE = re.compile(r"\blist_last\s*\(", re.IGNORECASE)
-_FSUM_RE = re.compile(r"\bfsum\s*\(", re.IGNORECASE)
-_FAVG_RE = re.compile(r"\bfavg\s*\(", re.IGNORECASE)
-_GEOMEAN_RE = re.compile(r"\b(?:geomean|geometric_mean)\s*\(", re.IGNORECASE)
 
 
-def _null_lit(arg: str) -> bool:
-    """A bare NULL literal argument: DuckDB types it as NULL and
-    propagates, Spark cannot analysis-resolve HOFs over it — the
-    rewrites short-circuit to NULL (or empty, where DuckDB says so)."""
-    return arg.strip().upper() == "NULL"
+def _date_trunc_build(m, a, literals):
+    """date_trunc to a part of day granularity or coarser returns DATE in
+    DuckDB (even for TIMESTAMP inputs) but TIMESTAMP in Spark — the value
+    agrees, the type flips. Literal parts get the cast; sub-day parts and
+    non-literal parts pass through (both engines: TIMESTAMP)."""
+    if len(a) != 2:
+        return None
+    idx = _literal_index(a[0])
+    if idx is None or literals[idx][1:-1].lower() not in _DATE_TRUNC_COARSE:
+        return None
+    return f"cast(date_trunc\x01({a[0]}, {a[1]}) as date)"
 
-def _rewrite_r3_tail_fns(masked: str, literals: list[str]) -> str:
-    """Batch of exact DuckDB→Spark rewrites (see the module table);
-    differentially verified in tests/test_dialect_bank.py."""
-    # DuckDB flatten SKIPS null sublists ([[1],NULL,[2]] → [1,2]); Spark
-    # flatten propagates NULL for the whole result.
-    masked = _rewrite_call(
-        masked,
-        _FLATTEN_RE,
-        lambda m, a: (
-            "NULL"
-            if len(a) == 1 and _null_lit(a[0])
-            else (
-                f"(CASE WHEN ({a[0]}) IS NULL THEN NULL ELSE "
-                f"flatten\x01(filter({a[0]}, _fl -> _fl IS NOT NULL)) END)"
-                if len(a) == 1
-                else None
+
+def _list_zip_build(m, a, literals):
+    """list_zip: n-ary zip padded to the LONGEST input with NULLs, struct
+    fields named list_1..list_n (DuckDB's names); a NULL list behaves as
+    empty. Spark's arrays_zip names fields positionally, so build the
+    structs explicitly."""
+    if len(a) < 2:
+        return None
+    if all(_null_lit(x) for x in a):
+        return "array()"
+    sizes = ", ".join(f"size({x})" for x in a)
+    fields = ", ".join(
+        f"\x02list_{i + 1}\x02, try_element_at({x}, _zi)"
+        for i, x in enumerate(a)
+    )
+    return (
+        f"(CASE WHEN coalesce(greatest({sizes}), 0) <= 0 THEN array() "
+        f"ELSE transform(sequence(1, greatest({sizes})), _zi -> "
+        f"named_struct({fields})) END)"
+    )
+
+
+def _list_sort_build(m, a, literals):
+    """list_sort with explicit direction / null-order literals (the 1-arg
+    form matches array_sort — ASC NULLS LAST — and stays a rename)."""
+    if len(a) not in (2, 3):
+        return None
+    if _null_lit(a[0]):
+        return "NULL"
+    if any("->" in arg for arg in a[1:]):
+        return None  # Spark-native comparator lambda (emitted by the
+        # ordered-aggregation rewrite or user-written): pass through.
+    parts = []
+    for arg in a[1:]:
+        idx = _literal_index(arg)
+        if idx is None:
+            raise ValueError(
+                "list_sort with a non-literal direction/null-order "
+                "cannot be translated; inline the modifiers"
             )
-        ),
-    )
-    # 2-arg trim has REVERSED arguments in Spark (same flip as ltrim/
-    # rtrim): trim('xxaxx','x') silently returns '' instead of 'a'.
-    masked = _rewrite_call(
-        masked,
-        _TRIM2_RE,
-        lambda m, a: (
-            f"trim\x01(BOTH {a[1]} FROM {a[0]})" if len(a) == 2 else None
-        ),
-    )
-    # kurtosis_pop == Spark's kurtosis (population excess); rename FIRST
-    # so the sample-correction below cannot touch it (the marker breaks
-    # the `kurtosis\s*\(` match).
-    masked = _KURTOSIS_POP_RE.sub("kurtosis\x01(", masked)
-    # DuckDB skewness/kurtosis are BIAS-CORRECTED sample statistics;
-    # Spark's are population statistics. Exact closed forms:
-    #   g1' = g1 · √(n(n−1))/(n−2)          (NULL when n < 3)
-    #   g2' = (n−1)/((n−2)(n−3)) · ((n+1)·g2 + 6)   (NULL when n < 4)
-    # Zero-variance inputs are NULL in both engines already.
-    masked = _rewrite_call(
-        masked,
-        _SKEWNESS_RE,
-        lambda m, a: (
-            f"(CASE WHEN count({a[0]}) < 3 THEN NULL ELSE "
-            f"skewness\x01({a[0]}) * sqrt(count({a[0]}) * (count({a[0]}) - 1.0))"
-            f" / (count({a[0]}) - 2.0) END)"
-            if len(a) == 1
-            else None
-        ),
-    )
-    masked = _rewrite_call(
-        masked,
-        _KURTOSIS_RE,
-        lambda m, a: (
-            f"(CASE WHEN count({a[0]}) < 4 THEN NULL ELSE "
-            f"((count({a[0]}) - 1.0) / ((count({a[0]}) - 2.0) * "
-            f"(count({a[0]}) - 3.0))) * ((count({a[0]}) + 1.0) * "
-            f"kurtosis\x01({a[0]}) + 6.0) END)"
-            if len(a) == 1
-            else None
-        ),
+        parts.extend(literals[idx][1:-1].upper().split())
+    desc = "DESC" in parts
+    nulls_first = "FIRST" in parts
+    l = a[0]
+    nn = f"array_sort\x01(filter({l}, _ls -> _ls IS NOT NULL))"
+    if desc:
+        nn = f"reverse({nn})"
+    nulls = f"filter({l}, _ls -> _ls IS NULL)"
+    inner = f"{nulls}, {nn}" if nulls_first else f"{nn}, {nulls}"
+    return (
+        f"(CASE WHEN ({l}) IS NULL THEN NULL ELSE "
+        f"concat\x01({inner}) END)"
     )
 
-    # date_trunc to a part of day granularity or coarser returns DATE in
-    # DuckDB (even for TIMESTAMP inputs) but TIMESTAMP in Spark — the
-    # value agrees, the type flips. Literal parts get the cast; sub-day
-    # parts and non-literal parts pass through (both engines: TIMESTAMP).
-    def _dt_build(m, a):
-        if len(a) != 2:
-            return None
-        idx = _literal_index(a[0])
-        if idx is None or literals[idx][1:-1].lower() not in _DATE_TRUNC_COARSE:
-            return None
-        return f"cast(date_trunc\x01({a[0]}, {a[1]}) as date)"
 
-    masked = _rewrite_call(masked, _DATE_TRUNC_TYPE_RE, _dt_build)
+def _list_element_build(m, a, literals):
+    """list_element/list_extract/array_extract share the subscript
+    semantics: 1-based, NULL out of bounds, negative from the end, index
+    0 → NULL (nullif guards Spark's index-0 error)."""
+    if len(a) != 2:
+        return None
+    idx = a[1]
+    if not re.fullmatch(r"-?[1-9]\d*", idx):
+        idx = f"nullif({idx}, 0)"
+    return f"try_element_at({a[0]}, {idx})"
 
-    # Straight renames with identical semantics.
-    masked = _ENDS_WITH_RE.sub("endswith\x01(", masked)
-    masked = _STRLEN_RE.sub("octet_length\x01(", masked)  # BYTE length
-    masked = _TO_HEX_RE.sub("hex\x01(", masked)
-    masked = _FROM_HEX_RE.sub("unhex\x01(", masked)
-    # round_even: both half-even; DuckDB returns DOUBLE for any numeric
-    # input, and Spark's bround matches DuckDB's exact-decimal rounding
-    # on DECIMAL sources (DOUBLE sources inherit the round(DOUBLE, n)
-    # scaled-arithmetic caveat documented above).
-    masked = _rewrite_call(
-        masked,
-        _ROUND_EVEN_RE,
-        lambda m, a: (
-            f"cast(bround\x01({a[0]}, {a[1]}) as double)"
-            if len(a) == 2
-            else None
-        ),
-    )
-    masked = _JSON_KEYS_RE.sub("json_object_keys\x01(", masked)
-    masked = _rewrite_call(
-        masked,
-        _SHA256_RE,
-        lambda m, a: f"sha2({a[0]}, 256)" if len(a) == 1 else None,
-    )
-    # unicode(): codepoint of the first character, -1 for the empty
-    # string (Spark ascii gives 0 there).
-    masked = _rewrite_call(
-        masked,
-        _UNICODE_FN_RE,
-        lambda m, a: (
-            f"(CASE WHEN ({a[0]}) IS NULL THEN NULL WHEN ({a[0]}) = \x02\x02 "
-            f"THEN -1 ELSE ascii({a[0]}) END)"
-            if len(a) == 1
-            else None
-        ),
-    )
-    # DuckDB's xor() FUNCTION is Spark's `^` operator (safe to emit here:
-    # the input-side `^`-is-POWER refusal already ran).
-    masked = _rewrite_call(
-        masked,
-        _XOR_FN_RE,
-        lambda m, a: f"(({a[0]}) ^ ({a[1]}))" if len(a) == 2 else None,
-    )
-    # even(x): round away from zero to the next even integer (DOUBLE).
-    masked = _rewrite_call(
-        masked,
-        _EVEN_RE,
-        lambda m, a: (
-            f"cast(sign({a[0]}) * ceil(abs({a[0]}) * 0.5) * 2 as double)"
-            if len(a) == 1
-            else None
-        ),
-    )
-    # fdiv/fmod: FLOORED division/modulus as DOUBLE, NULL on zero
-    # divisors (the emitted `/` picks up the try_divide rewrite below).
-    masked = _rewrite_call(
-        masked,
-        _FDIV_RE,
-        lambda m, a: (
-            f"cast(floor(({a[0]}) / ({a[1]})) as double)"
-            if len(a) == 2
-            else None
-        ),
-    )
-    masked = _rewrite_call(
-        masked,
-        _FMOD_RE,
-        lambda m, a: (
-            f"cast(({a[0]}) - ({a[1]}) * floor(({a[0]}) / ({a[1]})) as double)"
-            if len(a) == 2
-            else None
-        ),
-    )
-    # 1-arg make_timestamp takes epoch MICROS in DuckDB.
-    masked = _rewrite_call(
-        masked,
-        _MAKE_TS_RE,
-        lambda m, a: f"timestamp_micros({a[0]})" if len(a) == 1 else None,
-    )
-    # Calendar parts Spark lacks as functions (CE years; BC diverges).
-    masked = _rewrite_call(
-        masked,
-        _YEARWEEK_RE,
-        lambda m, a: (
-            f"(extract(YEAROFWEEK FROM {a[0]}) * 100 + weekofyear({a[0]}))"
-            if len(a) == 1
-            else None
-        ),
-    )
-    masked = _rewrite_call(
-        masked,
-        _CENTURY_RE,
-        lambda m, a: (
-            f"cast((year({a[0]}) + 99) div 100 as bigint)"
-            if len(a) == 1
-            else None
-        ),
-    )
-    masked = _rewrite_call(
-        masked,
-        _DECADE_RE,
-        lambda m, a: (
-            f"cast(year({a[0]}) div 10 as bigint)" if len(a) == 1 else None
-        ),
-    )
-    masked = _rewrite_call(
-        masked,
-        _MILLENNIUM_RE,
-        lambda m, a: (
-            f"cast((year({a[0]}) + 999) div 1000 as bigint)"
-            if len(a) == 1
-            else None
-        ),
-    )
-    # DuckDB's sub-minute parts INCLUDE the seconds component:
-    # microsecond('…:03.456789') = 3456789, millisecond = 3456.
-    masked = _rewrite_call(
-        masked,
-        _MICROSECOND_RE,
-        lambda m, a: (
-            f"cast(extract(SECOND FROM {a[0]}) * 1000000 as bigint)"
-            if len(a) == 1
-            else None
-        ),
-    )
-    masked = _rewrite_call(
-        masked,
-        _MILLISECOND_RE,
-        lambda m, a: (
-            f"cast(floor(extract(SECOND FROM {a[0]}) * 1000) as bigint)"
-            if len(a) == 1
-            else None
-        ),
-    )
-    # json_valid accepts ANY top-level JSON value ('3', 'null', …);
-    # try_parse_json returns a non-NULL VARIANT for each of those and
-    # SQL NULL only on malformed input.
-    masked = _rewrite_call(
-        masked,
-        _JSON_VALID_RE,
-        lambda m, a: (
-            f"(CASE WHEN ({a[0]}) IS NULL THEN NULL ELSE "
-            f"try_parse_json({a[0]}) IS NOT NULL END)"
-            if len(a) == 1
-            else None
-        ),
-    )
-    # hamming/mismatches: positional mismatch count; DuckDB ERRORS on
-    # empty or unequal-length inputs — assert_true reproduces the error
-    # loudly (NULL inputs short-circuit to NULL first, as in DuckDB).
-    masked = _rewrite_call(
-        masked,
-        _HAMMING_RE,
-        lambda m, a: (
-            f"(CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN NULL "
-            f"WHEN assert_true(length({a[0]}) = length({a[1]}) AND "
-            f"length({a[0]}) > 0) IS NULL THEN "
-            f"cast(size(filter(sequence(1, length({a[0]})), _hx -> "
-            f"substring({a[0]}, _hx, 1) <> substring({a[1]}, _hx, 1))) "
-            f"as bigint) END)"
-            if len(a) == 2
-            else None
-        ),
-    )
-    # jaccard: CHARACTER-SET Jaccard similarity (case-sensitive); DuckDB
-    # errors on empty inputs.
-    masked = _rewrite_call(
-        masked,
-        _JACCARD_RE,
-        lambda m, a: (
-            f"(CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN NULL "
-            f"WHEN assert_true(length({a[0]}) > 0 AND length({a[1]}) > 0) "
-            f"IS NULL THEN "
-            f"size(array_intersect(array_distinct(split\x01({a[0]}, \x02\x02)), "
-            f"array_distinct(split\x01({a[1]}, \x02\x02)))) / "
-            f"size(array_union(array_distinct(split\x01({a[0]}, \x02\x02)), "
-            f"array_distinct(split\x01({a[1]}, \x02\x02)))) END)"
-            if len(a) == 2
-            else None
-        ),
-    )
 
-    # list_zip: n-ary zip padded to the LONGEST input with NULLs, struct
-    # fields named list_1..list_n (DuckDB's names); a NULL list behaves
-    # as empty. Spark's arrays_zip names fields positionally, so build
-    # the structs explicitly.
-    def _zip_build(m, a):
-        if len(a) < 2:
-            return None
-        if all(_null_lit(x) for x in a):
-            return "array()"
-        sizes = ", ".join(f"size({x})" for x in a)
-        fields = ", ".join(
-            f"\x02list_{i + 1}\x02, try_element_at({x}, _zi)"
-            for i, x in enumerate(a)
-        )
-        return (
-            f"(CASE WHEN coalesce(greatest({sizes}), 0) <= 0 THEN array() "
-            f"ELSE transform(sequence(1, greatest({sizes})), _zi -> "
-            f"named_struct({fields})) END)"
-        )
-
-    masked = _rewrite_call(masked, _LIST_ZIP_RE, _zip_build)
-
-    # list_sort with explicit direction / null-order literals (the 1-arg
-    # form matches array_sort — ASC NULLS LAST — and stays a rename).
-    def _sort_build(m, a):
-        if len(a) not in (2, 3):
-            return None
-        if _null_lit(a[0]):
-            return "NULL"
-        if any("->" in arg for arg in a[1:]):
-            return None  # Spark-native comparator lambda (emitted by the
-            # ordered-aggregation rewrite or user-written): pass through.
-        parts = []
-        for arg in a[1:]:
-            idx = _literal_index(arg)
-            if idx is None:
-                raise ValueError(
-                    "list_sort with a non-literal direction/null-order "
-                    "cannot be translated; inline the modifiers"
-                )
-            parts.extend(literals[idx][1:-1].upper().split())
-        desc = "DESC" in parts
-        nulls_first = "FIRST" in parts
-        l = a[0]
-        nn = f"array_sort\x01(filter({l}, _ls -> _ls IS NOT NULL))"
-        if desc:
-            nn = f"reverse({nn})"
-        nulls = f"filter({l}, _ls -> _ls IS NULL)"
-        inner = f"{nulls}, {nn}" if nulls_first else f"{nn}, {nulls}"
-        return (
-            f"(CASE WHEN ({l}) IS NULL THEN NULL ELSE "
-            f"concat\x01({inner}) END)"
-        )
-
-    masked = _rewrite_call(masked, _LIST_SORT_ARGS_RE, _sort_build)
-
-    # list_element/list_extract/array_extract share the subscript
-    # semantics: 1-based, NULL out of bounds, negative from the end,
-    # index 0 → NULL (nullif guards Spark's index-0 error).
-    def _elem_build(m, a):
-        if len(a) != 2:
-            return None
-        idx = a[1]
-        if not re.fullmatch(r"-?[1-9]\d*", idx):
-            idx = f"nullif({idx}, 0)"
-        return f"try_element_at({a[0]}, {idx})"
-
-    masked = _rewrite_call(masked, _LIST_ELEMENT_RE, _elem_build)
-
-    # Aggregate-style list folds (all skip NULL elements, as DuckDB's
-    # list_* aggregate family does).
-    masked = _rewrite_call(
-        masked,
-        _LIST_COUNT_RE,
-        lambda m, a: (
-            "NULL"
-            if len(a) == 1 and _null_lit(a[0])
-            else f"size(filter({a[0]}, _lc -> _lc IS NOT NULL))"
-            if len(a) == 1
-            else None
-        ),
+def _list_median_build(m, a, literals):
+    """list_median: interpolating median over non-null elements as DOUBLE.
+    KNOWN divergence (same family as the round(DOUBLE) pass-through):
+    DECIMAL-typed lists keep DuckDB's source scale via truncation —
+    numeric int/double lists match exactly."""
+    if len(a) != 1:
+        return None
+    if _null_lit(a[0]):
+        return "NULL"
+    nn = f"array_sort\x01(filter({a[0]}, _lm -> _lm IS NOT NULL))"
+    n = f"size({nn})"
+    return (
+        f"(CASE WHEN coalesce({n}, 0) = 0 THEN NULL "
+        f"WHEN pmod({n}, 2) = 1 THEN "
+        f"cast(element_at({nn}, cast(({n} + 1) div 2 as int)) as double) "
+        f"ELSE (cast(element_at({nn}, cast({n} div 2 as int)) as double) + "
+        f"cast(element_at({nn}, cast({n} div 2 + 1 as int)) as double)) "
+        f"/ 2.0 END)"
     )
-    masked = _rewrite_call(
-        masked,
-        _LIST_AVG_RE,
-        lambda m, a: (
-            "NULL"
-            if len(a) == 1 and _null_lit(a[0])
-            else f"try_divide(aggregate({a[0]}, cast(0.0 as double), "
-            f"(_aa, _ax) -> _aa + coalesce(cast(_ax as double), 0.0d)), "
-            f"size(filter({a[0]}, _an -> _an IS NOT NULL)))"
-            if len(a) == 1
-            else None
-        ),
-    )
-
-    # list_median: interpolating median over non-null elements as DOUBLE.
-    # KNOWN divergence (same family as the round(DOUBLE) pass-through):
-    # DECIMAL-typed lists keep DuckDB's source scale via truncation —
-    # numeric int/double lists match exactly.
-    def _median_build(m, a):
-        if len(a) != 1:
-            return None
-        if _null_lit(a[0]):
-            return "NULL"
-        nn = f"array_sort\x01(filter({a[0]}, _lm -> _lm IS NOT NULL))"
-        n = f"size({nn})"
-        return (
-            f"(CASE WHEN coalesce({n}, 0) = 0 THEN NULL "
-            f"WHEN pmod({n}, 2) = 1 THEN "
-            f"cast(element_at({nn}, cast(({n} + 1) div 2 as int)) as double) "
-            f"ELSE (cast(element_at({nn}, cast({n} div 2 as int)) as double) + "
-            f"cast(element_at({nn}, cast({n} div 2 + 1 as int)) as double)) "
-            f"/ 2.0 END)"
-        )
-
-    masked = _rewrite_call(masked, _LIST_MEDIAN_RE, _median_build)
-    masked = _rewrite_call(
-        masked,
-        _LIST_ANY_VALUE_RE,
-        lambda m, a: (
-            "NULL"
-            if len(a) == 1 and _null_lit(a[0])
-            else f"try_element_at(filter({a[0]}, _lv -> _lv IS NOT NULL), 1)"
-            if len(a) == 1
-            else None
-        ),
-    )
-    masked = _rewrite_call(
-        masked,
-        _LIST_FIRST_RE,
-        lambda m, a: (
-            "NULL"
-            if len(a) == 1 and _null_lit(a[0])
-            else f"try_element_at({a[0]}, 1)" if len(a) == 1 else None
-        ),
-    )
-    masked = _rewrite_call(
-        masked,
-        _LIST_LAST_RE,
-        lambda m, a: (
-            "NULL"
-            if len(a) == 1 and _null_lit(a[0])
-            else f"try_element_at({a[0]}, -1)" if len(a) == 1 else None
-        ),
-    )
-    # Kahan-summation aggregates: same math, DOUBLE result; the
-    # compensated error term is below the repo's 6-decimal compare.
-    masked = _rewrite_call(
-        masked,
-        _FSUM_RE,
-        lambda m, a: f"sum(cast({a[0]} as double))" if len(a) == 1 else None,
-    )
-    masked = _rewrite_call(
-        masked,
-        _FAVG_RE,
-        lambda m, a: f"avg(cast({a[0]} as double))" if len(a) == 1 else None,
-    )
-    # geomean = exp(mean(ln x)); exact for the positive domain DuckDB
-    # accepts. DIVERGENCE ONLY WHERE DUCKDB ERRORS: x ≤ 0 raises there,
-    # while Spark's ln yields NULL and the row drops out of the mean.
-    masked = _rewrite_call(
-        masked,
-        _GEOMEAN_RE,
-        lambda m, a: (
-            f"exp(avg(ln(cast({a[0]} as double))))" if len(a) == 1 else None
-        ),
-    )
-    return masked
 
 
 # ---------------------------------------------------------------------------
-# Round-3 batch 2: operators and list/interval/base utilities.
+# Operator scanners: `**` and `op ANY/ALL (...)`.
 # ---------------------------------------------------------------------------
 _POW_OP_RE = re.compile(r"\*\*")
 _QUANTIFIED_CMP_RE = re.compile(
     r"(=|<>|!=|<=|>=|<|>)\s*(ANY|ALL|SOME)\s*\(", re.IGNORECASE
 )
 _SUBQUERY_HEAD_RE = re.compile(r"^\s*(SELECT|FROM|WITH|VALUES)\b", re.IGNORECASE)
-_TO_BASE_RE = re.compile(r"\bto_base\s*\(", re.IGNORECASE)
-_FROM_BASE64_RE = re.compile(r"\bfrom_base64\s*\(", re.IGNORECASE)
-_ENCODE_RE = re.compile(r"\bencode\s*\(", re.IGNORECASE)
-_DECODE_RE = re.compile(r"\bdecode\s*\(", re.IGNORECASE)
-# Interval constructors → make_interval(years, months, weeks, days,
-# hours, mins, secs) slot position (ms/us scale into the seconds slot).
-_TO_INTERVAL_RE = re.compile(
-    r"\bto_(years|months|weeks|days|hours|minutes|seconds|milliseconds|"
-    r"microseconds)\s*\(",
-    re.IGNORECASE,
-)
-_LOCALTIMESTAMP_RE = re.compile(r"\bcurrent_localtimestamp\s*\(", re.IGNORECASE)
-_LIST_RESIZE_RE = re.compile(r"\b(?:list|array)_resize\s*\(", re.IGNORECASE)
-_LIST_SELECT_RE = re.compile(r"\b(?:list|array)_select\s*\(", re.IGNORECASE)
-_LIST_WHERE_RE = re.compile(r"\b(?:list|array)_where\s*\(", re.IGNORECASE)
-_LIST_GRADE_UP_RE = re.compile(r"\b(?:list|array)_grade_up\s*\(", re.IGNORECASE)
-_LIST_REVERSE_SORT_RE = re.compile(r"\b(?:list|array)_reverse_sort\s*\(", re.IGNORECASE)
-_APPROX_QUANTILE_RE = re.compile(r"\bapprox_quantile\s*\(", re.IGNORECASE)
-_REGEXP_ESCAPE_RE = re.compile(r"\bregexp_escape\s*\(", re.IGNORECASE)
 
 
 # Keywords whose trailing position makes a following +/- UNARY (the
@@ -3844,249 +3157,110 @@ def _rewrite_quantified_cmp(masked: str) -> str:
         pos = lhs_start + len(repl)
 
 
-def _rewrite_r3_batch2(masked: str, literals: list[str]) -> str:
-    masked = _rewrite_pow_op(masked)
-    masked = _rewrite_quantified_cmp(masked)
-
-    # to_base(x, b[, min_len]): non-negative only (DuckDB errors on
-    # negatives; conv's two's-complement there would silently diverge).
-    def _to_base_build(m, a):
-        if len(a) not in (2, 3):
-            return None
-        core = f"conv({a[0]}, 10, {a[1]})"
-        if len(a) == 3:
-            core = (
-                f"(CASE WHEN length({core}) >= ({a[2]}) THEN {core} "
-                f"ELSE lpad({core}, cast({a[2]} as int), \x020\x02) END)"
-            )
-        return (
-            f"(CASE WHEN assert_true(({a[0]}) >= 0) IS NULL "
-            f"THEN {core} END)"
+def _to_base_build(m, a, literals):
+    """to_base(x, b[, min_len]): non-negative only (DuckDB errors on
+    negatives; conv's two's-complement there would silently diverge)."""
+    if len(a) not in (2, 3):
+        return None
+    core = f"conv({a[0]}, 10, {a[1]})"
+    if len(a) == 3:
+        core = (
+            f"(CASE WHEN length({core}) >= ({a[2]}) THEN {core} "
+            f"ELSE lpad({core}, cast({a[2]} as int), \x020\x02) END)"
         )
-
-    masked = _rewrite_call(masked, _TO_BASE_RE, _to_base_build)
-    masked = _FROM_BASE64_RE.sub("unbase64\x01(", masked)
-    # 1-arg encode/decode are UTF-8 in DuckDB; Spark requires the charset.
-    masked = _rewrite_call(
-        masked,
-        _ENCODE_RE,
-        lambda m, a: (
-            f"encode\x01({a[0]}, \x02utf-8\x02)" if len(a) == 1 else None
-        ),
-    )
-    masked = _rewrite_call(
-        masked,
-        _DECODE_RE,
-        lambda m, a: (
-            f"decode\x01({a[0]}, \x02utf-8\x02)" if len(a) == 1 else None
-        ),
+    return (
+        f"(CASE WHEN assert_true(({a[0]}) >= 0) IS NULL "
+        f"THEN {core} END)"
     )
 
-    # Day-time units build a DayTimeIntervalType (make_dt_interval) so
-    # DATE + interval promotes to TIMESTAMP exactly as DuckDB does;
-    # year/month units need make_ym_interval, where Spark's DATE + ym
-    # stays DATE (value-equal, type flips — documented divergence).
-    def _interval_build(m, a):
-        if len(a) != 1:
-            return None
-        unit = m.group(1).lower()
-        if unit == "years":
-            return f"make_ym_interval({a[0]})"
-        if unit == "months":
-            return f"make_ym_interval(0, {a[0]})"
-        if unit == "weeks":
-            return f"make_dt_interval(({a[0]}) * 7)"
-        if unit == "milliseconds":
-            return f"make_dt_interval(0, 0, 0, ({a[0]}) * 0.001)"
-        if unit == "microseconds":
-            return f"make_dt_interval(0, 0, 0, ({a[0]}) * 0.000001)"
-        slot = {"days": 0, "hours": 1, "minutes": 2, "seconds": 3}[unit]
-        args = ["0"] * slot + [f"({a[0]})"]
-        return f"make_dt_interval({', '.join(args)})"
 
-    masked = _rewrite_call(masked, _TO_INTERVAL_RE, _interval_build)
-    masked = _LOCALTIMESTAMP_RE.sub("localtimestamp\x01(", masked)
+def _to_interval_build(m, a, literals):
+    """Interval constructors → make_interval slots. Day-time units build
+    a DayTimeIntervalType (make_dt_interval) so DATE + interval promotes
+    to TIMESTAMP exactly as DuckDB does; year/month units need
+    make_ym_interval, where Spark's DATE + ym stays DATE (value-equal,
+    type flips — documented divergence); ms/us scale into the seconds
+    slot."""
+    if len(a) != 1:
+        return None
+    unit = m.group(1).lower()
+    if unit == "years":
+        return f"make_ym_interval({a[0]})"
+    if unit == "months":
+        return f"make_ym_interval(0, {a[0]})"
+    if unit == "weeks":
+        return f"make_dt_interval(({a[0]}) * 7)"
+    if unit == "milliseconds":
+        return f"make_dt_interval(0, 0, 0, ({a[0]}) * 0.001)"
+    if unit == "microseconds":
+        return f"make_dt_interval(0, 0, 0, ({a[0]}) * 0.000001)"
+    slot = {"days": 0, "hours": 1, "minutes": 2, "seconds": 3}[unit]
+    args = ["0"] * slot + [f"({a[0]})"]
+    return f"make_dt_interval({', '.join(args)})"
 
-    # list_resize(l, n[, fill]): truncate or pad to n (fill NULL).
-    def _resize_build(m, a):
-        if len(a) not in (2, 3):
-            return None
-        if a[0].upper() == "NULL":  # untyped literal cannot resolve
-            return "NULL"
-        fill = a[2] if len(a) == 3 else "NULL"
-        return (
-            f"(CASE WHEN ({a[0]}) IS NULL THEN NULL "
-            f"WHEN coalesce(({a[1]}), 0) <= 0 THEN array() "
-            f"ELSE transform(sequence(1, cast({a[1]} as int)), _ri -> "
-            f"CASE WHEN _ri <= size({a[0]}) THEN element_at({a[0]}, _ri) "
-            f"ELSE {fill} END) END)"
+
+def _list_resize_build(m, a, literals):
+    """list_resize(l, n[, fill]): truncate or pad to n (fill NULL)."""
+    if len(a) not in (2, 3):
+        return None
+    if a[0].upper() == "NULL":  # untyped literal cannot resolve
+        return "NULL"
+    fill = a[2] if len(a) == 3 else "NULL"
+    return (
+        f"(CASE WHEN ({a[0]}) IS NULL THEN NULL "
+        f"WHEN coalesce(({a[1]}), 0) <= 0 THEN array() "
+        f"ELSE transform(sequence(1, cast({a[1]} as int)), _ri -> "
+        f"CASE WHEN _ri <= size({a[0]}) THEN element_at({a[0]}, _ri) "
+        f"ELSE {fill} END) END)"
+    )
+
+
+def _grade_up_build(m, a, literals):
+    """list_grade_up(l): 1-based permutation that ascending-sorts l (nulls
+    last, ties stable by position) — explicit comparator over (value,
+    index) structs."""
+    if len(a) != 1:
+        return None
+    if _null_lit(a[0]):
+        return "NULL"
+    pairs = (
+        f"transform(sequence(1, cast(size({a[0]}) as int)), _gi -> "
+        f"struct(try_element_at({a[0]}, _gi) as v, _gi as i))"
+    )
+    cmp = (
+        "(_gx, _gy) -> CASE "
+        "WHEN _gx.v IS NULL AND _gy.v IS NULL THEN "
+        "(CASE WHEN _gx.i < _gy.i THEN -1 ELSE 1 END) "
+        "WHEN _gx.v IS NULL THEN 1 WHEN _gy.v IS NULL THEN -1 "
+        "WHEN _gx.v < _gy.v THEN -1 WHEN _gx.v > _gy.v THEN 1 "
+        "WHEN _gx.i < _gy.i THEN -1 ELSE 1 END"
+    )
+    return (
+        f"(CASE WHEN ({a[0]}) IS NULL THEN NULL "
+        f"WHEN size({a[0]}) = 0 THEN array() "
+        f"ELSE transform(array_sort\x01({pairs}, {cmp}), _gs -> _gs.i) "
+        f"END)"
+    )
+
+
+def _struct_extract_build(m, a, literals):
+    """struct_extract(s, 'k') → parenthesized field access; the key must
+    be a string literal (Spark has no runtime-keyed struct access)."""
+    if len(a) != 2:
+        return None
+    idx = _literal_index(a[1])
+    if idx is None:
+        raise ValueError(
+            "struct_extract with a non-literal (or integer) key has "
+            "no Spark equivalent; name the field explicitly"
         )
-
-    masked = _rewrite_call(masked, _LIST_RESIZE_RE, _resize_build)
-    # list_select(l, idxs): 1-based gather; 0/negative/OOB → NULL element
-    # (NO negative-from-end here, unlike subscripts); NULL index ERRORS.
-    masked = _rewrite_call(
-        masked,
-        _LIST_SELECT_RE,
-        lambda m, a: (
-            "NULL"
-            if len(a) == 2 and (_null_lit(a[0]) or _null_lit(a[1]))
-            else f"transform({a[1]}, _si -> CASE WHEN assert_true(_si IS NOT "
-            f"NULL) IS NULL THEN (CASE WHEN _si >= 1 THEN "
-            f"try_element_at({a[0]}, cast(_si as int)) END) END)"
-            if len(a) == 2
-            else None
-        ),
-    )
-    # list_where(l, mask): keep l[i] where mask[i]; the MASK's length
-    # bounds the result (shorter mask truncates, longer pads NULLs);
-    # NULL mask elements ERROR.
-    masked = _rewrite_call(
-        masked,
-        _LIST_WHERE_RE,
-        lambda m, a: (
-            "NULL"
-            if len(a) == 2 and (_null_lit(a[0]) or _null_lit(a[1]))
-            else f"(CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN NULL "
-            f"WHEN size({a[1]}) = 0 THEN array() "
-            f"ELSE transform(filter(sequence(1, cast(size({a[1]}) as int)), "
-            f"_wi -> CASE WHEN assert_true(try_element_at({a[1]}, _wi) "
-            f"IS NOT NULL) IS NULL THEN try_element_at({a[1]}, _wi) END), "
-            f"_wi -> try_element_at({a[0]}, _wi)) END)"
-            if len(a) == 2
-            else None
-        ),
-    )
-
-    # list_grade_up(l): 1-based permutation that ascending-sorts l
-    # (nulls last, ties stable by position) — explicit comparator over
-    # (value, index) structs.
-    def _grade_build(m, a):
-        if len(a) != 1:
-            return None
-        if _null_lit(a[0]):
-            return "NULL"
-        pairs = (
-            f"transform(sequence(1, cast(size({a[0]}) as int)), _gi -> "
-            f"struct(try_element_at({a[0]}, _gi) as v, _gi as i))"
-        )
-        cmp = (
-            "(_gx, _gy) -> CASE "
-            "WHEN _gx.v IS NULL AND _gy.v IS NULL THEN "
-            "(CASE WHEN _gx.i < _gy.i THEN -1 ELSE 1 END) "
-            "WHEN _gx.v IS NULL THEN 1 WHEN _gy.v IS NULL THEN -1 "
-            "WHEN _gx.v < _gy.v THEN -1 WHEN _gx.v > _gy.v THEN 1 "
-            "WHEN _gx.i < _gy.i THEN -1 ELSE 1 END"
-        )
-        return (
-            f"(CASE WHEN ({a[0]}) IS NULL THEN NULL "
-            f"WHEN size({a[0]}) = 0 THEN array() "
-            f"ELSE transform(array_sort\x01({pairs}, {cmp}), _gs -> _gs.i) "
-            f"END)"
-        )
-
-    masked = _rewrite_call(masked, _LIST_GRADE_UP_RE, _grade_build)
-    # list_reverse_sort = list_sort(l, 'DESC'): descending, nulls LAST.
-    masked = _rewrite_call(
-        masked,
-        _LIST_REVERSE_SORT_RE,
-        lambda m, a: (
-            "NULL"
-            if len(a) == 1 and _null_lit(a[0])
-            else f"(CASE WHEN ({a[0]}) IS NULL THEN NULL ELSE "
-            f"concat\x01(reverse(array_sort\x01(filter({a[0]}, "
-            f"_rs -> _rs IS NOT NULL))), "
-            f"filter({a[0]}, _rs -> _rs IS NULL)) END)"
-            if len(a) == 1
-            else None
-        ),
-    )
-    # approx_quantile → approx_percentile: both t-digest-family sketches,
-    # APPROXIMATE — values may legitimately differ between engines (same
-    # contract as approx_count_distinct's pass-through).
-    masked = _APPROX_QUANTILE_RE.sub("approx_percentile(", masked)
-
-    # regexp_escape is RE2's QuoteMeta: EVERY ASCII char outside
-    # [A-Za-z0-9_] gets a backslash (space, comma, controls included;
-    # bytes ≥ 0x80 and NUL are left alone). Reproduced with a runtime-
-    # built pattern `((?![A-Za-z0-9_])[\x01-\x7F])` — every structural
-    # char (parens, brackets, backslash) is spelled chr(n) so the
-    # emitted text cannot confuse later scanning passes, and no escape
-    # sequence ever hits either engine's string-literal parser.
-    def _escape_build(m, a):
-        if len(a) != 1:
-            return None
-        pat = (
-            "concat(chr(40), chr(40), \x02?!\x02, chr(91), "
-            "\x02A-Za-z0-9_\x02, chr(93), chr(41), chr(91), chr(1), "
-            "\x02-\x02, chr(127), chr(93), chr(41))"
-        )
-        rep = "concat(chr(92), chr(92), \x02$1\x02)"
-        return f"regexp_replace\x01({a[0]}, {pat}, {rep})"
-
-    masked = _rewrite_call(masked, _REGEXP_ESCAPE_RE, _escape_build)
-
-    # typeof(): both engines have it, but the type-name SPELLINGS differ
-    # (DuckDB 'INTEGER'/'VARCHAR' vs Spark 'int'/'string') — a silent
-    # flip for flows that branch on the result. Map the scalar names;
-    # nested types (lists/structs) stay Spark-spelled (documented).
-    masked = _rewrite_call(
-        masked,
-        _TYPEOF_RE,
-        lambda m, a: (
-            (
-                f"(CASE typeof\x01({a[0]}) "
-                f"WHEN \x02int\x02 THEN \x02INTEGER\x02 "
-                f"WHEN \x02string\x02 THEN \x02VARCHAR\x02 "
-                f"WHEN \x02binary\x02 THEN \x02BLOB\x02 "
-                f"WHEN \x02timestamp_ntz\x02 THEN \x02TIMESTAMP\x02 "
-                f'WHEN \x02void\x02 THEN \x02"NULL"\x02 '
-                f"ELSE upper(typeof\x01({a[0]})) END)"
-            )
-            if len(a) == 1
-            else None
-        ),
-    )
-    # JSON casts of a whole value: same target as to_json.
-    masked = _ARRAY_ROW_TO_JSON_RE.sub("to_json\x01(", masked)
-
-    # struct_extract(s, 'k') → parenthesized field access; the key must
-    # be a string literal (Spark has no runtime-keyed struct access).
-    def _struct_extract_build(m, a):
-        if len(a) != 2:
-            return None
-        idx = _literal_index(a[1])
-        if idx is None:
-            raise ValueError(
-                "struct_extract with a non-literal (or integer) key has "
-                "no Spark equivalent; name the field explicitly"
-            )
-        return f"(({a[0]}).`{literals[idx][1:-1]}`)"
-
-    masked = _rewrite_call(masked, _STRUCT_EXTRACT_RE, _struct_extract_build)
-    # row(...) builds an unnamed struct; Spark's struct() is positional
-    # too (field names differ — col1/col2 — but row compares by value).
-    masked = _ROW_CTOR_RE.sub("struct(", masked)
-
-    # Window frame EXCLUDE NO OTHERS is the default: drop it (the real
-    # exclusion modes are refused up front).
-    masked = _FRAME_EXCLUDE_NOOP_RE.sub("", masked)
-    # arbitrary() is DuckDB's any_value: first NON-NULL value.
-    masked = _rewrite_call(
-        masked,
-        _ARBITRARY_RE,
-        lambda m, a: (
-            f"any_value\x01({a[0]}, true)" if len(a) == 1 else None
-        ),
-    )
-    # DuckDB permits ORDER BY inside ANY aggregate; for commutative
-    # aggregates it cannot change the result (beyond fp summation
-    # order) and Spark rejects the syntax — strip it.
-    masked = _rewrite_call(masked, _COMMUTATIVE_AGG_RE, _strip_agg_order)
-    return masked
+    return f"(({a[0]}).`{literals[idx][1:-1]}`)"
 
 
-def _strip_agg_order(m, a):
+def _strip_agg_order(m, a, literals):
+    """DuckDB permits ORDER BY inside ANY aggregate; for commutative
+    aggregates it cannot change the result (beyond fp summation order)
+    and Spark rejects the syntax — strip it."""
     changed = False
     out = []
     for arg in a:
@@ -4103,18 +3277,430 @@ def _strip_agg_order(m, a):
 _FRAME_EXCLUDE_NOOP_RE = re.compile(
     r"\bEXCLUDE\s+NO\s+OTHERS\b", re.IGNORECASE
 )
-_ARBITRARY_RE = re.compile(r"\barbitrary\s*\(", re.IGNORECASE)
-_TYPEOF_RE = re.compile(r"\btypeof\s*\(", re.IGNORECASE)
-_ARRAY_ROW_TO_JSON_RE = re.compile(
-    r"\b(?:array|row)_to_json\s*\(", re.IGNORECASE
-)
-_STRUCT_EXTRACT_RE = re.compile(r"\bstruct_extract\s*\(", re.IGNORECASE)
-_ROW_CTOR_RE = re.compile(r"\brow\s*\(", re.IGNORECASE)
-_COMMUTATIVE_AGG_RE = re.compile(
-    r"\b(sum|avg|count|min|max|bool_and|bool_or|bit_and|bit_or|bit_xor)"
-    r"\s*\(",
-    re.IGNORECASE,
-)
+
+
+# ---------------------------------------------------------------------------
+# The call table, in pipeline order. Every mapping is differentially pinned
+# against DuckDB in tests/test_dialect_bank.py / test_dialect_scalars.py,
+# and tests/test_dialect_bank.py checks that each row has such a case.
+# A segment boundary is a pass that is not a call rewrite; rows never
+# cross one, because a row copies its arguments into its output and the
+# pass could rewrite text inside them.
+# ---------------------------------------------------------------------------
+
+# After the JSON arrow operators; before len(), whose kind dispatch reads
+# the heads these rows emit (get_json_object/to_json are string functions,
+# json_extract is not). Function spellings of the arrow operators, same
+# target forms.
+_JSON_CALLS = _call_table([
+    ("json_extract_string", lambda m, a, literals: (
+        f"get_json_object({a[0]}, {_json_path(a[1], literals)})"
+        if len(a) == 2 else None
+    )),
+    ("json_extract", lambda m, a, literals: (
+        f"to_json(variant_get(parse_json({a[0]}), {_json_path(a[1], literals)}))"
+        if len(a) == 2 else None
+    )),
+])
+
+# After quantile_disc; before the `[i:j]` slices, so a slice inside the
+# list argument is rewritten once, not in each of the row's three copies.
+_PRE_SLICE_CALLS = _call_table([
+    ("(?:list|array)_reduce", _list_reduce_build),
+])
+
+# After the `~` match operators (same literal anchoring); before the
+# subscripts and `//`.
+_POST_MATCH_OP_CALLS = _call_table([
+    ("regexp_full_match", _full_match_build),
+])
+
+# After the `//` → div pass; before the bare VARCHAR/BLOB type renames and
+# the int-cast rounding, which must not see what later rows emit (typeof's
+# 'VARCHAR'/'BLOB' names, integer casts).
+_PRE_CAST_CALLS = _call_table([
+    ("strftime", _strftime_build),
+    ("strptime", _strptime_build),
+    # 1-arg: DuckDB's to_timestamp ONLY accepts epoch seconds, Spark's
+    # parses strings.
+    ("to_timestamp", 1, "timestamp_seconds({0})"),
+    # date_add(d, INTERVAL ...): Spark's date_add is (date, int-days) and
+    # DuckDB's interval overload always yields TIMESTAMP.
+    ("date_?add", lambda m, a, literals: (
+        f"cast(({a[0]}) + ({a[1]}) as timestamp)"
+        if len(a) == 2 and re.search(r"\bINTERVAL\b", a[1], re.IGNORECASE)
+        else None
+    )),
+    ("date_?sub", _date_sub_build),
+    ("isoyear", 1, "extract(YEAROFWEEK FROM {0})"),
+    # isfinite/isinf: NULL → NULL (comparisons propagate), NaN → false for
+    # both (Spark NaN = Infinity is false; isnan screens the isfinite arm).
+    ("isfinite", 1,
+     "(NOT isnan({0}) AND abs({0}) <> cast(\x02Infinity\x02 as double))"),
+    ("isinf", 1, "(abs({0}) = cast(\x02Infinity\x02 as double))"),
+    # string_split and its aliases split on a LITERAL separator (Spark's
+    # split takes a regex). `\b` keeps these off str_split_regex and
+    # regexp_split_to_array.
+    ("string_split|string_to_array|str_split|split", _string_split_build),
+    ("(?:list|array)_agg(?:regate|r)", _list_aggregate_build),
+    # list_prepend(elem, list) → array_prepend(list, elem): reversed args.
+    ("(?:list|array)_prepend", 2, "array_prepend\x01({1}, {0})"),
+    # array/list_pop_back|front → slice (empty list stays empty, NULL NULL)
+    ("(?:list|array)_pop_(?:back|front)", lambda m, a, literals: (
+        f"slice({a[0]}, {'2' if 'front' in m.group(0).lower() else '1'}, "
+        f"greatest(size({a[0]}) - 1, 0))"
+        if len(a) == 1 else None
+    )),
+    # list_has_all(haystack, needles) → every needle contained (Spark has
+    # no direct equivalent; forall + array_contains is exact).
+    ("(?:list|array)_has_all", 2, "forall({1}, x -> array_contains({0}, x))"),
+    # regexp_matches is DuckDB's partial-match boolean — Spark RLIKE.
+    ("regexp_matches", 2, "({0} RLIKE {1})"),
+    # epoch_us/epoch_ms → unix_micros/unix_millis (exact integer epochs;
+    # the cast covers TIMESTAMP_NTZ columns, which the unix_* functions
+    # reject raw).
+    ("epoch_(us|ms)", lambda m, a, literals: (
+        f"unix_{'micros' if m.group(1).lower() == 'us' else 'millis'}"
+        f"(cast({a[0]} as timestamp))"
+        if len(a) == 1 else None
+    )),
+])
+
+# After the int-cast rounding; before the WHERE-less FILTER clause and the
+# EXTRACT(dow/isodow/epoch FROM ...) passes.
+_POST_CAST_CALLS = _call_table([
+    # log(x) is log10 in DuckDB but ln in Spark (two-argument log(base, x)
+    # agrees and passes through).
+    ("log", 1, "log10({0})"),
+    # regexp_extract(s, p) returns the whole match in DuckDB but group 1
+    # in Spark (and errors on group-free patterns) → append `, 0`.
+    ("regexp_extract", 2, "regexp_extract\x01({0}, {1}, 0)"),
+    ("regexp_extract_all", 2, "regexp_extract_all\x01({0}, {1}, 0)"),
+    # ltrim/rtrim(s, chars) has REVERSED arguments in Spark ('xxabc','x'
+    # silently returns '') → trim(LEADING/TRAILING chars FROM s).
+    ("([lr])trim", lambda m, a, literals: (
+        f"trim({'LEADING' if m.group(1).lower() == 'l' else 'TRAILING'}"
+        f" {a[1]} FROM {a[0]})"
+        if len(a) == 2 else None
+    )),
+    # Numeric trunc(x) does not exist in Spark (its trunc is date-only) →
+    # toward-zero CASE of floor/ceil. DOUBLE result pins the dominant
+    # DuckDB case (trunc of DOUBLE stays DOUBLE; Spark's floor/ceil yield
+    # BIGINT). Integer/decimal inputs come back as doubles — a type, not
+    # value, divergence.
+    ("trunc", 1,
+     "cast((CASE WHEN ({0}) < 0 THEN ceil({0}) "
+     "ELSE floor({0}) END) as double)"),
+    # concat SKIPS null arguments in DuckDB ('a'||NULL via concat is 'a')
+    # but propagates NULL in Spark → each argument wraps in
+    # coalesce(cast(.. as string), '') (DuckDB concat is string-typed;
+    # array concat is list_concat, whose row runs later and emits a
+    # marked concat this row never sees).
+    ("concat", lambda m, a, literals: (
+        "concat\x01("
+        + ", ".join(f"coalesce(cast(({x}) as string), \x02\x02)" for x in a)
+        + ")"
+        if a and any(x for x in a)
+        else None
+    )),
+    ("substr(?:ing)?", _substr_build),
+    ("left", _left_right_build("left")),
+    ("right", _left_right_build("right")),
+    # any_value(x) SKIPS nulls in DuckDB but respects them in Spark.
+    ("any_value", 1, "any_value\x01({0}, true)"),
+    # corr(x, y) with zero variance is NULL in DuckDB but raises
+    # DIVIDE_BY_ZERO under Spark's ANSI default → try_divide(covar_pop,
+    # sd(x|y paired) * sd(y|x paired)), pairwise null deletion preserved.
+    ("corr", 2,
+     "try_divide(covar_pop({0}, {1}), "
+     "(stddev_pop(CASE WHEN ({1}) IS NOT NULL THEN ({0}) END) * "
+     "stddev_pop(CASE WHEN ({0}) IS NOT NULL THEN ({1}) END)))"),
+])
+
+# After the FILTER clause and EXTRACT field passes; before the `**` and
+# `op ANY/ALL (...)` scanners.
+_PRE_POW_CALLS = _call_table([
+    # DuckDB dayofweek/weekday both mean 0=Sunday; Spark's dayofweek is
+    # 1=Sunday and its weekday is 0=MONDAY — the same spellings, shifted
+    # numbers. isodow is 1=Monday..7. Markers keep the emitted Spark
+    # calls from re-matching.
+    ("dayofweek|weekday", 1, "(dayofweek\x01({0}) - 1)"),
+    ("isodow", 1, "(weekday\x01({0}) + 1)"),
+    ("(day|month)name", _dayname_build),
+    ("list|array_agg", _list_agg_build),
+    ("(first|last)", _first_last_build),
+    # DuckDB flatten SKIPS null sublists ([[1],NULL,[2]] → [1,2]); Spark
+    # flatten propagates NULL for the whole result.
+    ("flatten", _strict(
+        1,
+        "(CASE WHEN ({0}) IS NULL THEN NULL ELSE "
+        "flatten\x01(filter({0}, _fl -> _fl IS NOT NULL)) END)",
+    )),
+    # 2-arg trim has REVERSED arguments in Spark (same flip as ltrim/
+    # rtrim): trim('xxaxx','x') silently returns '' instead of 'a'. The
+    # lookbehind keeps the row off ltrim/rtrim.
+    (re.compile(r"(?<![lr])\btrim\s*\(", re.IGNORECASE), 2,
+     "trim\x01(BOTH {1} FROM {0})"),
+    # kurtosis_pop == Spark's kurtosis (population excess); rename FIRST
+    # so the sample-correction below cannot touch it (the marker breaks
+    # the `kurtosis\s*\(` match).
+    ("kurtosis_pop", "kurtosis\x01("),
+    # DuckDB skewness/kurtosis are BIAS-CORRECTED sample statistics;
+    # Spark's are population statistics. Exact closed forms:
+    #   g1' = g1 · √(n(n−1))/(n−2)          (NULL when n < 3)
+    #   g2' = (n−1)/((n−2)(n−3)) · ((n+1)·g2 + 6)   (NULL when n < 4)
+    # Zero-variance inputs are NULL in both engines already.
+    ("skewness", 1,
+     "(CASE WHEN count({0}) < 3 THEN NULL ELSE "
+     "skewness\x01({0}) * sqrt(count({0}) * (count({0}) - 1.0))"
+     " / (count({0}) - 2.0) END)"),
+    ("kurtosis", 1,
+     "(CASE WHEN count({0}) < 4 THEN NULL ELSE "
+     "((count({0}) - 1.0) / ((count({0}) - 2.0) * "
+     "(count({0}) - 3.0))) * ((count({0}) + 1.0) * "
+     "kurtosis\x01({0}) + 6.0) END)"),
+    ("date_?trunc", _date_trunc_build),
+    # Straight renames with identical semantics.
+    ("ends_with", "endswith\x01("),
+    ("strlen", "octet_length\x01("),  # BYTE length
+    ("to_hex", "hex\x01("),
+    ("from_hex", "unhex\x01("),
+    # round_even: both half-even; DuckDB returns DOUBLE for any numeric
+    # input, and Spark's bround matches DuckDB's exact-decimal rounding
+    # on DECIMAL sources (DOUBLE sources inherit the round(DOUBLE, n)
+    # scaled-arithmetic caveat documented above).
+    ("round_even", 2, "cast(bround\x01({0}, {1}) as double)"),
+    ("json_keys", "json_object_keys\x01("),
+    ("sha256", 1, "sha2({0}, 256)"),
+    # unicode(): codepoint of the first character, -1 for the empty
+    # string (Spark ascii gives 0 there).
+    ("unicode|ord", 1,
+     "(CASE WHEN ({0}) IS NULL THEN NULL WHEN ({0}) = \x02\x02 "
+     "THEN -1 ELSE ascii({0}) END)"),
+    # DuckDB's xor() FUNCTION is Spark's `^` operator (safe to emit here:
+    # the input-side `^`-is-POWER refusal already ran).
+    ("xor", 2, "(({0}) ^ ({1}))"),
+    # even(x): round away from zero to the next even integer (DOUBLE).
+    ("even", 1, "cast(sign({0}) * ceil(abs({0}) * 0.5) * 2 as double)"),
+    # fdiv/fmod: FLOORED division/modulus as DOUBLE, NULL on zero
+    # divisors (the emitted `/` picks up the try_divide rewrite below).
+    ("fdiv", 2, "cast(floor(({0}) / ({1})) as double)"),
+    ("fmod", 2, "cast(({0}) - ({1}) * floor(({0}) / ({1})) as double)"),
+    # 1-arg make_timestamp takes epoch MICROS in DuckDB.
+    ("make_timestamp", 1, "timestamp_micros({0})"),
+    # Calendar parts Spark lacks as functions (CE years; BC diverges).
+    ("yearweek", 1, "(extract(YEAROFWEEK FROM {0}) * 100 + weekofyear({0}))"),
+    ("century", 1, "cast((year({0}) + 99) div 100 as bigint)"),
+    ("decade", 1, "cast(year({0}) div 10 as bigint)"),
+    ("millennium", 1, "cast((year({0}) + 999) div 1000 as bigint)"),
+    # DuckDB's sub-minute parts INCLUDE the seconds component:
+    # microsecond('…:03.456789') = 3456789, millisecond = 3456.
+    ("microsecond", 1, "cast(extract(SECOND FROM {0}) * 1000000 as bigint)"),
+    ("millisecond", 1,
+     "cast(floor(extract(SECOND FROM {0}) * 1000) as bigint)"),
+    # json_valid accepts ANY top-level JSON value ('3', 'null', …);
+    # try_parse_json returns a non-NULL VARIANT for each of those and
+    # SQL NULL only on malformed input.
+    ("json_valid", 1,
+     "(CASE WHEN ({0}) IS NULL THEN NULL ELSE "
+     "try_parse_json({0}) IS NOT NULL END)"),
+    # hamming/mismatches: positional mismatch count; DuckDB ERRORS on
+    # empty or unequal-length inputs — assert_true reproduces the error
+    # loudly (NULL inputs short-circuit to NULL first, as in DuckDB).
+    ("hamming|mismatches", 2,
+     "(CASE WHEN ({0}) IS NULL OR ({1}) IS NULL THEN NULL "
+     "WHEN assert_true(length({0}) = length({1}) AND "
+     "length({0}) > 0) IS NULL THEN "
+     "cast(size(filter(sequence(1, length({0})), _hx -> "
+     "substring({0}, _hx, 1) <> substring({1}, _hx, 1))) "
+     "as bigint) END)"),
+    # jaccard: CHARACTER-SET Jaccard similarity (case-sensitive); DuckDB
+    # errors on empty inputs.
+    ("jaccard", 2,
+     "(CASE WHEN ({0}) IS NULL OR ({1}) IS NULL THEN NULL "
+     "WHEN assert_true(length({0}) > 0 AND length({1}) > 0) "
+     "IS NULL THEN "
+     "size(array_intersect(array_distinct(split\x01({0}, \x02\x02)), "
+     "array_distinct(split\x01({1}, \x02\x02)))) / "
+     "size(array_union(array_distinct(split\x01({0}, \x02\x02)), "
+     "array_distinct(split\x01({1}, \x02\x02)))) END)"),
+    ("(?:list|array)_zip", _list_zip_build),
+    ("(?:list|array)_sort", _list_sort_build),
+    ("list_element|list_extract|array_extract", _list_element_build),
+    # Aggregate-style list folds (all skip NULL elements, as DuckDB's
+    # list_* aggregate family does).
+    ("list_count", _strict(1, "size(filter({0}, _lc -> _lc IS NOT NULL))")),
+    ("list_avg", _strict(
+        1,
+        "try_divide(aggregate({0}, cast(0.0 as double), "
+        "(_aa, _ax) -> _aa + coalesce(cast(_ax as double), 0.0d)), "
+        "size(filter({0}, _an -> _an IS NOT NULL)))",
+    )),
+    ("list_median", _list_median_build),
+    ("list_any_value", _strict(
+        1, "try_element_at(filter({0}, _lv -> _lv IS NOT NULL), 1)"
+    )),
+    ("list_first", _strict(1, "try_element_at({0}, 1)")),
+    ("list_last", _strict(1, "try_element_at({0}, -1)")),
+    # Kahan-summation aggregates: same math, DOUBLE result; the
+    # compensated error term is below the repo's 6-decimal compare.
+    ("fsum", 1, "sum(cast({0} as double))"),
+    ("favg", 1, "avg(cast({0} as double))"),
+    # geomean = exp(mean(ln x)); exact for the positive domain DuckDB
+    # accepts. DIVERGENCE ONLY WHERE DUCKDB ERRORS: x ≤ 0 raises there,
+    # while Spark's ln yields NULL and the row drops out of the mean.
+    ("geomean|geometric_mean", 1, "exp(avg(ln(cast({0} as double))))"),
+])
+
+# After the `**` and ANY/ALL scanners; before the EXCLUDE NO OTHERS frame
+# deletion.
+_PRE_FRAME_CALLS = _call_table([
+    ("to_base", _to_base_build),
+    ("from_base64", "unbase64\x01("),
+    # 1-arg encode/decode are UTF-8 in DuckDB; Spark requires the charset.
+    ("encode", 1, "encode\x01({0}, \x02utf-8\x02)"),
+    ("decode", 1, "decode\x01({0}, \x02utf-8\x02)"),
+    ("to_(years|months|weeks|days|hours|minutes|seconds|milliseconds|"
+     "microseconds)", _to_interval_build),
+    ("current_localtimestamp", "localtimestamp\x01("),
+    ("(?:list|array)_resize", _list_resize_build),
+    # list_select(l, idxs): 1-based gather; 0/negative/OOB → NULL element
+    # (NO negative-from-end here, unlike subscripts); NULL index ERRORS.
+    ("(?:list|array)_select", _strict(
+        2,
+        "transform({1}, _si -> CASE WHEN assert_true(_si IS NOT "
+        "NULL) IS NULL THEN (CASE WHEN _si >= 1 THEN "
+        "try_element_at({0}, cast(_si as int)) END) END)",
+    )),
+    # list_where(l, mask): keep l[i] where mask[i]; the MASK's length
+    # bounds the result (shorter mask truncates, longer pads NULLs);
+    # NULL mask elements ERROR.
+    ("(?:list|array)_where", _strict(
+        2,
+        "(CASE WHEN ({0}) IS NULL OR ({1}) IS NULL THEN NULL "
+        "WHEN size({1}) = 0 THEN array() "
+        "ELSE transform(filter(sequence(1, cast(size({1}) as int)), "
+        "_wi -> CASE WHEN assert_true(try_element_at({1}, _wi) "
+        "IS NOT NULL) IS NULL THEN try_element_at({1}, _wi) END), "
+        "_wi -> try_element_at({0}, _wi)) END)",
+    )),
+    ("(?:list|array)_grade_up", _grade_up_build),
+    # list_reverse_sort = list_sort(l, 'DESC'): descending, nulls LAST.
+    ("(?:list|array)_reverse_sort", _strict(
+        1,
+        "(CASE WHEN ({0}) IS NULL THEN NULL ELSE "
+        "concat\x01(reverse(array_sort\x01(filter({0}, "
+        "_rs -> _rs IS NOT NULL))), "
+        "filter({0}, _rs -> _rs IS NULL)) END)",
+    )),
+    # approx_quantile → approx_percentile: both t-digest-family sketches,
+    # APPROXIMATE — values may legitimately differ between engines (same
+    # contract as approx_count_distinct's pass-through).
+    ("approx_quantile", "approx_percentile("),
+    # regexp_escape is RE2's QuoteMeta: EVERY ASCII char outside
+    # [A-Za-z0-9_] gets a backslash (space, comma, controls included;
+    # bytes ≥ 0x80 and NUL are left alone). Reproduced with a runtime-
+    # built pattern `((?![A-Za-z0-9_])[\x01-\x7F])` — every structural
+    # char (parens, brackets, backslash) is spelled chr(n) so the
+    # emitted text cannot confuse later scanning passes, and no escape
+    # sequence ever hits either engine's string-literal parser.
+    ("regexp_escape", 1,
+     "regexp_replace\x01({0}, "
+     "concat(chr(40), chr(40), \x02?!\x02, chr(91), "
+     "\x02A-Za-z0-9_\x02, chr(93), chr(41), chr(91), chr(1), "
+     "\x02-\x02, chr(127), chr(93), chr(41)), "
+     "concat(chr(92), chr(92), \x02$1\x02))"),
+    # typeof(): both engines have it, but the type-name SPELLINGS differ
+    # (DuckDB 'INTEGER'/'VARCHAR' vs Spark 'int'/'string') — a silent
+    # flip for flows that branch on the result. Map the scalar names;
+    # nested types (lists/structs) stay Spark-spelled (documented).
+    ("typeof", 1,
+     "(CASE typeof\x01({0}) "
+     "WHEN \x02int\x02 THEN \x02INTEGER\x02 "
+     "WHEN \x02string\x02 THEN \x02VARCHAR\x02 "
+     "WHEN \x02binary\x02 THEN \x02BLOB\x02 "
+     "WHEN \x02timestamp_ntz\x02 THEN \x02TIMESTAMP\x02 "
+     'WHEN \x02void\x02 THEN \x02"NULL"\x02 '
+     "ELSE upper(typeof\x01({0})) END)"),
+    # JSON casts of a whole value: same target as to_json.
+    ("(?:array|row)_to_json", "to_json\x01("),
+    ("struct_extract", _struct_extract_build),
+    # row(...) builds an unnamed struct; Spark's struct() is positional
+    # too (field names differ — col1/col2 — but row compares by value).
+    ("row", "struct("),
+])
+
+# After the EXCLUDE NO OTHERS frame deletion; before FROM-position unnest.
+_PRE_UNNEST_CALLS = _call_table([
+    # arbitrary() is DuckDB's any_value: first NON-NULL value.
+    ("arbitrary", 1, "any_value\x01({0}, true)"),
+    ("(sum|avg|count|min|max|bool_and|bool_or|bit_and|bit_or|bit_xor)",
+     _strip_agg_order),
+    # group_concat is string_agg's alias — fold into that rewrite.
+    ("group_concat", "string_agg("),
+    # ISO week-of-year in both engines.
+    ("week", "weekofyear("),
+    ("(lag|lead|first_value|last_value|nth_value|any_value|first|last)",
+     _ignore_nulls_build),
+])
+
+# After FROM-position unnest; before SIMILAR TO, which edits literals.
+_PRE_SIMILAR_CALLS = _call_table([
+    ("regexp_replace", _regexp_replace_build),
+    ("date_?part", _date_part_build),
+])
+
+# After SIMILAR TO; before DISTINCT ON, USING SAMPLE and the `/` `%`
+# rewrite, which is last in the masked phase so the divisions these rows
+# emit (epoch seconds, cosine norms) also get DuckDB's NULL-on-zero.
+_PRE_DIV_CALLS = _call_table([
+    ("(?:list|array)_slice", _list_slice_build),
+    ("struct_pack", _struct_pack_build),
+    ("(?:list|array)_(cosine_similarity|cosine_distance|inner_product|"
+     "dot_product|negative_inner_product|distance)", _vector_build),
+    ("time_bucket", _time_bucket_build),
+    # epoch(ts) → fractional epoch seconds (epoch_ms/epoch_us were
+    # already rewritten; the bare spelling requires '(' right after the
+    # name so it cannot touch them).
+    ("epoch", 1, "(unix_micros(cast({0} as timestamp)) / 1e6)"),
+    # list_unique COUNTS distinct non-null elements (it is not a dedup).
+    ("(?:list|array)_unique", 1,
+     "size(array_distinct\x01(filter({0}, _lu -> _lu IS NOT NULL)))"),
+    # list_distinct DROPS null elements in DuckDB; Spark's array_distinct
+    # keeps one — filter them out first.
+    ("(?:list|array)_distinct", 1,
+     "array_distinct\x01(filter({0}, _ld -> _ld IS NOT NULL))"),
+    # list_has_any IGNORES null elements (false, not NULL, when only
+    # nulls overlap); arrays_overlap returns NULL there. Whole-list NULL
+    # operands stay NULL in both.
+    ("(?:list|array)_has_any", 2,
+     "(CASE WHEN ({0}) IS NULL OR ({1}) IS NULL THEN NULL "
+     "ELSE coalesce(arrays_overlap({0}, {1}), false) END)"),
+    # list_concat treats a NULL operand as empty; Spark concat propagates
+    # NULL — fold the null-handling into a CASE.
+    ("(?:list|array)_(?:concat|cat)", 2,
+     "(CASE WHEN ({0}) IS NULL THEN {1} "
+     "WHEN ({1}) IS NULL THEN {0} "
+     "ELSE concat\x01({0}, {1}) END)"),
+    ("date_?diff", _date_diff_build),
+    ("string_agg", _string_agg_build),
+])
+
+# After QUALIFY, EXCLUDE, FROM-position series and the bracket literals
+# (which emit the array(...) these rows fold over); before the ORDER BY
+# NULLS LAST pass.
+_LATE_CALLS = _call_table([
+    ("LIST_VALUE", "array("),
+    *_FN_RENAMES,
+    # DuckDB list_sum SKIPS null elements (list_sum([1, NULL, 3]) = 4) but
+    # yields NULL for empty / all-null / NULL input — the size-guard
+    # reproduces that; coalesce keeps the fold null-safe.
+    ("list_sum", 1,
+     "(CASE WHEN size(filter({0}, _ls -> _ls IS NOT NULL)) = 0 "
+     "THEN NULL ELSE aggregate({0}, cast(0.0 as double), "
+     "(acc, x) -> acc + coalesce(x, cast(0.0 as double))) END)"),
+    ("generate_series", "sequence("),
+])
 
 
 # Constructs with no faithful Spark spelling — DuckDB-only statements and
@@ -4246,7 +3832,7 @@ def duckdb_to_spark_sql(
     masked = _rewrite_star_replace(masked, views)
     masked = _rewrite_struct_literals(masked)
     masked = _rewrite_json_arrows(masked, literals)
-    masked = _rewrite_json_extract(masked, literals)
+    masked = _rewrite_calls(masked, _JSON_CALLS, literals)
     masked = _rewrite_len(masked, views)
     if _RECURSIVE_RE.search(masked) and not _UNION_ALL_RE.search(masked):
         raise ValueError(
@@ -4257,60 +3843,13 @@ def duckdb_to_spark_sql(
             "operator for graph closures"
         )
     masked = _rewrite_quantile_disc(masked)
-    masked = _rewrite_list_reduce(masked)
+    masked = _rewrite_calls(masked, _PRE_SLICE_CALLS, literals)
     masked = _rewrite_slices(masked, views)
     masked = _rewrite_match_operators(masked, literals)
+    masked = _rewrite_calls(masked, _POST_MATCH_OP_CALLS, literals)
     masked = _rewrite_subscripts(masked)
     masked = _INTDIV_RE.sub(" div ", masked)
-    masked = _rewrite_strftime(masked, literals)
-    masked = _rewrite_time_flips(masked, literals)
-    masked = _rewrite_string_split(masked, literals)
-    masked = _rewrite_list_aggregate(masked, literals)
-    # list_prepend(elem, list) → array_prepend(list, elem): reversed args.
-    masked = _rewrite_call(
-        masked,
-        _LIST_PREPEND_RE,
-        lambda m, a: f"array_prepend\x01({a[1]}, {a[0]})" if len(a) == 2 else None,
-    )
-    # array/list_pop_back|front → slice (empty list stays empty, NULL NULL)
-    masked = _rewrite_call(
-        masked,
-        _LIST_POP_RE,
-        lambda m, a: (
-            f"slice({a[0]}, {'2' if 'front' in m.group(0).lower() else '1'}, "
-            f"greatest(size({a[0]}) - 1, 0))"
-        )
-        if len(a) == 1
-        else None,
-    )
-    # list_has_all(haystack, needles) → every needle contained (Spark has
-    # no direct equivalent; forall + array_contains is exact).
-    masked = _rewrite_call(
-        masked,
-        _LIST_HAS_ALL_RE,
-        lambda m, a: (
-            f"forall({a[1]}, x -> array_contains({a[0]}, x))" if len(a) == 2 else None
-        ),
-    )
-    # regexp_matches is DuckDB's partial-match boolean — Spark RLIKE.
-    masked = _rewrite_call(
-        masked,
-        _REGEXP_MATCHES_RE,
-        lambda m, a: f"({a[0]} RLIKE {a[1]})" if len(a) == 2 else None,
-    )
-    # epoch_us/epoch_ms → unix_micros/unix_millis (exact integer epochs;
-    # the cast covers TIMESTAMP_NTZ columns, which the unix_* functions
-    # reject raw).
-    masked = _rewrite_call(
-        masked,
-        _EPOCH_RE,
-        lambda m, a: (
-            f"unix_{'micros' if m.group(1).lower() == 'us' else 'millis'}"
-            f"(cast({a[0]} as timestamp))"
-            if len(a) == 1
-            else None
-        ),
-    )
+    masked = _rewrite_calls(masked, _PRE_CAST_CALLS, literals)
     # Bare VARCHAR (DuckDB's default string type) needs a length in Spark;
     # map to STRING. Parameterized VARCHAR(n) is Spark-valid and untouched.
     masked = _BARE_VARCHAR_RE.sub("STRING", masked)
@@ -4319,89 +3858,21 @@ def duckdb_to_spark_sql(
     # Early: user-written integer casts only — later rewrites emit their
     # own (non-integer) casts that must stay untouched.
     masked = _rewrite_int_casts(masked)
-    masked = _rewrite_math_string_flips(masked)
-    # Before the list_concat rewrite, which emits an ARRAY concat that
-    # must not get the string-typed null-skip wrapping.
-    masked = _rewrite_string_edge_flips(masked)
-    masked = _rewrite_agg_flips(masked)
+    masked = _rewrite_calls(masked, _POST_CAST_CALLS, literals)
+    masked = _rewrite_filter_clause(masked)
     masked = _rewrite_extract_fields(masked)
-    masked = _rewrite_day_fns(masked, literals)
-    masked = _rewrite_list_agg_fn(masked)
-    masked = _rewrite_first_last_ordered(masked)
-    masked = _rewrite_r3_tail_fns(masked, literals)
-    masked = _rewrite_r3_batch2(masked, literals)
-    # group_concat is string_agg's alias — fold into that rewrite.
-    masked = re.sub(r"\bgroup_concat\s*\(", "string_agg(", masked, flags=re.IGNORECASE)
-    # ISO week-of-year in both engines.
-    masked = re.sub(r"\bweek\s*\(", "weekofyear(", masked, flags=re.IGNORECASE)
-    masked = _rewrite_ignore_nulls(masked)
+    masked = _rewrite_calls(masked, _PRE_POW_CALLS, literals)
+    masked = _rewrite_pow_op(masked)
+    masked = _rewrite_quantified_cmp(masked)
+    masked = _rewrite_calls(masked, _PRE_FRAME_CALLS, literals)
+    # Window frame EXCLUDE NO OTHERS is the default: drop it (the real
+    # exclusion modes are refused up front).
+    masked = _FRAME_EXCLUDE_NOOP_RE.sub("", masked)
+    masked = _rewrite_calls(masked, _PRE_UNNEST_CALLS, literals)
     masked = _rewrite_from_unnest(masked)
-    masked = _rewrite_regexp_replace(masked, literals)
-    masked = _rewrite_date_part(masked, literals)
+    masked = _rewrite_calls(masked, _PRE_SIMILAR_CALLS, literals)
     masked = _rewrite_similar_to(masked, literals)
-    masked = _rewrite_list_slice(masked)
-    masked = _rewrite_struct_pack(masked)
-    masked = _rewrite_vector_fns(masked)
-    masked = _rewrite_time_bucket(masked, literals)
-    # epoch(ts) → fractional epoch seconds (epoch_ms/epoch_us were already
-    # rewritten above; the bare spelling requires '(' right after the name
-    # so it cannot touch them).
-    masked = _rewrite_call(
-        masked,
-        _EPOCH_FN_RE,
-        lambda m, a: (
-            f"(unix_micros(cast({a[0]} as timestamp)) / 1e6)" if len(a) == 1 else None
-        ),
-    )
-    # list_unique COUNTS distinct non-null elements (it is not a dedup).
-    masked = _rewrite_call(
-        masked,
-        _LIST_UNIQUE_RE,
-        lambda m, a: (
-            f"size(array_distinct\x01(filter({a[0]}, _lu -> _lu IS NOT NULL)))"
-            if len(a) == 1
-            else None
-        ),
-    )
-    # list_distinct DROPS null elements in DuckDB; Spark's array_distinct
-    # keeps one — filter them out first.
-    masked = _rewrite_call(
-        masked,
-        _LIST_DISTINCT_RE,
-        lambda m, a: (
-            f"array_distinct\x01(filter({a[0]}, _ld -> _ld IS NOT NULL))"
-            if len(a) == 1
-            else None
-        ),
-    )
-    # list_has_any IGNORES null elements (false, not NULL, when only
-    # nulls overlap); arrays_overlap returns NULL there. Whole-list NULL
-    # operands stay NULL in both.
-    masked = _rewrite_call(
-        masked,
-        _LIST_HAS_ANY_RE,
-        lambda m, a: (
-            f"(CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN NULL "
-            f"ELSE coalesce(arrays_overlap({a[0]}, {a[1]}), false) END)"
-            if len(a) == 2
-            else None
-        ),
-    )
-    # list_concat treats a NULL operand as empty; Spark concat propagates
-    # NULL — fold the null-handling into a CASE.
-    masked = _rewrite_call(
-        masked,
-        _LIST_CONCAT_RE,
-        lambda m, a: (
-            f"(CASE WHEN ({a[0]}) IS NULL THEN {a[1]} "
-            f"WHEN ({a[1]}) IS NULL THEN {a[0]} "
-            f"ELSE concat\x01({a[0]}, {a[1]}) END)"
-            if len(a) == 2
-            else None
-        ),
-    )
-    masked = _rewrite_date_diff(masked, literals)
-    masked = _rewrite_string_agg(masked)
+    masked = _rewrite_calls(masked, _PRE_DIV_CALLS, literals)
     masked = _rewrite_distinct_on(masked)
     masked = _rewrite_using_sample(masked)
     # LAST in the masked phase: after USING SAMPLE consumes its `50%`
@@ -4412,11 +3883,7 @@ def duckdb_to_spark_sql(
     out = _EXCLUDE_RE.sub(lambda m: f"{m.group(1)}EXCEPT{m.group(2)}", out)
     out = _rewrite_from_series(out)
     out = _rewrite_brackets(out)
-    out = _LIST_VALUE_RE.sub("array(", out)
-    for pat, repl in _FN_RENAMES:
-        out = pat.sub(repl, out)
-    out = _rewrite_list_sum(out)
-    out = _SCALAR_SERIES_RE.sub("sequence(", out)
+    out = _rewrite_calls(out, _LATE_CALLS, literals)
     out = _rewrite_order_by_nulls(out)
     out = out.replace("\x01", "")  # same-name rewrite markers
     # \x02 brackets a quote a rewrite needs to INTRODUCE (e.g. the

@@ -421,6 +421,10 @@ def dedup_embedding_cosine_tiled_q(spark: SparkSession, sf_dir: str) -> DataFram
 # Similarity search (embeddings table)
 # ---------------------------------------------------------------------------
 _ANN_QUERY_IDS = [0, 1, 2, 3, 4]
+# Pinned-TRUE oracle of every ANN recall gate: one row per query id.
+_ANN_RECALL_ORACLE = (
+    "SELECT vec_id AS query_id, TRUE AS recall_ok FROM embeddings WHERE vec_id IN ({ids})"
+).format(ids=", ".join(str(i) for i in _ANN_QUERY_IDS))
 
 
 @register(
@@ -620,11 +624,6 @@ def _ann_recall_check(spark: SparkSession, sf_dir: str, approx_fn, floor: float)
             ((F.coalesce("_h", F.lit(0)) / F.col("_n")) >= floor).alias("recall_ok"),
         )
     )
-
-
-_ANN_RECALL_ORACLE = (
-    "SELECT vec_id AS query_id, TRUE AS recall_ok FROM embeddings WHERE vec_id IN ({ids})"
-).format(ids=", ".join(str(i) for i in _ANN_QUERY_IDS))
 
 
 @register("similarity_lsh_recall", _ANN_RECALL_ORACLE)

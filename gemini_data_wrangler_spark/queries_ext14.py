@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
+from gemini_data_wrangler_spark.queries_ext import _ANN_RECALL_ORACLE
 from gemini_data_wrangler_spark.session import session_memo
 from gemini_data_wrangler_spark.sources.readers import sf_table
 
@@ -227,16 +228,7 @@ def similarity_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return approx_topk_list(spark, sf_dir, "quantized", reuse=False)
 
 
-def _quantized_recall_oracle() -> str:
-    from gemini_data_wrangler_spark.queries_ext import _ANN_QUERY_IDS
-
-    return (
-        "SELECT vec_id AS query_id, TRUE AS recall_ok FROM embeddings "
-        "WHERE vec_id IN ({ids})"
-    ).format(ids=", ".join(str(i) for i in _ANN_QUERY_IDS))
-
-
-@register("similarity_quantized_recall", _quantized_recall_oracle())
+@register("similarity_quantized_recall", _ANN_RECALL_ORACLE)
 def similarity_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of int8-quantized scoring vs exact float cosine, floored
     at 0.8 per query (quantization error ~0.008 on unit vectors is far
@@ -553,7 +545,7 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_topk(emb, queries_from_ids(emb, _ANN_QUERY_IDS), k=10, index=idx)
 
 
-@register("similarity_pq_recall", _quantized_recall_oracle())
+@register("similarity_pq_recall", _ANN_RECALL_ORACLE)
 def similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of PQ/ADC scoring (8 subspaces × 16 codes = 64×
     compression) vs exact float cosine, floored per query. PQ trades the

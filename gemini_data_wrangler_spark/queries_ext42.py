@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
+from gemini_data_wrangler_spark.queries_ext import _ANN_RECALL_ORACLE
 from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
@@ -411,16 +412,7 @@ def similarity_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return approx_topk_list(spark, sf_dir, "rerank", reuse=False)
 
 
-def _rerank_recall_oracle() -> str:
-    from gemini_data_wrangler_spark.queries_ext import _ANN_QUERY_IDS
-
-    return (
-        "SELECT vec_id AS query_id, TRUE AS recall_ok FROM embeddings "
-        "WHERE vec_id IN ({ids})"
-    ).format(ids=", ".join(str(i) for i in _ANN_QUERY_IDS))
-
-
-@register("similarity_rerank_recall", _rerank_recall_oracle())
+@register("similarity_rerank_recall", _ANN_RECALL_ORACLE)
 def similarity_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of retrieve-then-rerank vs exact cosine, floored at 0.6
     per query (measured ≥ 0.8 on the driver corpus with a 100-candidate

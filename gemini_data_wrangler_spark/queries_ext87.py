@@ -146,7 +146,7 @@ _FUNNEL_STEPS = ["view", "click", "signup", "purchase"]
 # break parity.  Q(z) = phi(z)*(b1 t + b2 t^2 + ... + b5 t^5), t = 1/(1+p z)
 
 
-def _qnorm(z: str, engine: str) -> str:
+def _qnorm(z: str) -> str:
     t = f"(1.0 / (1.0 + 0.2316419 * {z}))"
     phi = f"(0.3989422804014327 * exp(-0.5 * {z} * {z}))"
     poly = (
@@ -185,7 +185,7 @@ def _qnorm(z: str, engine: str) -> str:
     )
     SELECT step, transition, n_from, n_to, round(conv, 6) AS conv,
            round(z, 4) AS z_vs_half,
-           round(2.0 * {_qnorm('z', 'duck')}, 6) AS p_two_sided
+           round(2.0 * {_qnorm('z')}, 6) AS p_two_sided
     FROM tested
     """,
 )
@@ -242,5 +242,5 @@ def events_funnel_significance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_to",
         F.round("conv", 6).alias("conv"),
         F.round("z", 4).alias("z_vs_half"),
-        F.round(2.0 * F.expr(_qnorm("z", "spark")), 6).alias("p_two_sided"),
+        F.round(2.0 * F.expr(_qnorm("z")), 6).alias("p_two_sided"),
     )

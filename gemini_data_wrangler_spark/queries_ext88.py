@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gemini_data_wrangler_spark.queries import register
+from gemini_data_wrangler_spark.queries_ext87 import _qnorm
 from gemini_data_wrangler_spark.sources.readers import sf_table
 
 
@@ -142,16 +143,6 @@ def quality_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Log-rank test on the order-completion survival grid
 # ---------------------------------------------------------------------------
-def _qnorm(z: str) -> str:
-    t = f"(1.0 / (1.0 + 0.2316419 * {z}))"
-    phi = f"(0.3989422804014327 * exp(-0.5 * {z} * {z}))"
-    poly = (
-        f"({t} * (0.319381530 + {t} * (-0.356563782 + {t} * (1.781477937"
-        f" + {t} * (-1.821255978 + {t} * 1.330274429)))))"
-    )
-    return f"({phi} * {poly})"
-
-
 @register(
     "customer_logrank_test",
     f"""

@@ -24,6 +24,19 @@ CODEGEN_CACHE_MAX_ENTRIES = 8000
 _MEMO: dict[tuple, object] = {}
 
 
+def env_int(name: str, default: int) -> int:
+    """Integer knob from the environment, ``default`` when unset or empty.
+    The engine's deployment-sized bounds (shuffle partitions, the graph
+    route bounds, the docs broadcast budget) are read through it. A value
+    that is not an integer raises ``ValueError`` naming the variable
+    instead of silently running with the default."""
+    raw = os.environ.get(name, "")
+    try:
+        return int(raw) if raw else default
+    except ValueError:
+        raise ValueError(f"{name}={raw!r} is not an integer") from None
+
+
 def get_spark(
     app_name: str = "gemini-data-wrangler-spark",
     master: str | None = None,
@@ -45,7 +58,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+        shuffle_partitions = env_int("SPARK_GRAFT_SHUFFLE_PARTITIONS", 32)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -117,7 +130,7 @@ def session_memo(
     application's entries. ``build`` owns the materialization of what it
     returns, and may itself call ``session_memo``.
     """
-    app = spark.sparkContext.applicationId
+    app = _application_id(spark)
     full_key = (app, kind, *key)
     if reuse and full_key in _MEMO:
         return _MEMO[full_key]
@@ -125,3 +138,15 @@ def session_memo(
         del _MEMO[stale]
     _MEMO[full_key] = value = build()
     return value
+
+
+def _application_id(spark: SparkSession) -> str:
+    """``applicationId``, read once per SparkContext object and kept on it:
+    the read costs two py4j round trips, and a new context (a new
+    application) is a new object that brings its own id."""
+    sc = spark.sparkContext
+    try:
+        return sc._memo_application_id
+    except AttributeError:
+        sc._memo_application_id = sc.applicationId
+        return sc._memo_application_id

@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 
 from gemini_data_wrangler_spark.parity import compare
+from gemini_data_wrangler_spark.plans import dialect
 from gemini_data_wrangler_spark.plans.dialect import duckdb_to_spark_sql
 from gemini_data_wrangler_spark.sources.readers import load_sf_tables
 from tests.conftest import SF_ORACLE
@@ -1737,3 +1738,24 @@ def test_quantile_disc_window_and_one_arg_refusals():
         duckdb_to_spark_sql("SELECT quantile(x) FROM t")
     with pytest.raises(ValueError, match="single argument"):
         duckdb_to_spark_sql("SELECT quantile_disc(x) FROM t")
+
+
+def test_every_call_table_row_has_a_parity_case():
+    """No Spark: each row of the call table (every ``*_CALLS`` segment,
+    ``_FN_RENAMES`` included) and each bare type-name rename matches at
+    least one DuckDB-parity text of this bank, ``SCALARS`` or
+    ``AGG_CASES`` after literal masking — so no mapping ships without a
+    differential case."""
+    from tests.test_dialect_scalars import AGG_CASES, SCALARS
+
+    texts = [sql for _, sql in BANK] + list(SCALARS)
+    texts += [f"SELECT {expr} AS r FROM {frm}" for expr, frm in AGG_CASES]
+    masked = [dialect._mask_strings(t)[0] for t in texts]
+    tables = [v for k, v in vars(dialect).items() if k.endswith("_CALLS")]
+    patterns = [pattern for table in tables for pattern, _ in table]
+    renames = {dialect._call_pattern(s).pattern for s, _ in dialect._FN_RENAMES}
+    assert renames <= {p.pattern for p in patterns}
+    patterns += [dialect._BARE_VARCHAR_RE, dialect._BARE_BLOB_RE]
+    assert len(tables) >= 9 and len(patterns) > 140
+    missing = [p.pattern for p in patterns if not any(p.search(m) for m in masked)]
+    assert not missing, missing

@@ -190,6 +190,12 @@ SCALARS = [
     "round_even(NULL, 2)",
     "typeof(NULL)",
     "make_timestamp(NULL)",
+    # renames and type names with no other case in the banks
+    "from_hex('414243')",
+    "CAST('AB' AS BLOB)",
+    "current_localtimestamp() IS NOT NULL",
+    "list_value(1, 2, NULL)",
+    "list_indexof([10, 20, 30], 20)",
 ]
 
 _CHUNK = 15
@@ -246,6 +252,7 @@ AGG_CASES = [
     ("count_if(v > 1)", "(VALUES (1),(2),(3)) t(v)"),
     ("bool_and(v)", "(VALUES (true),(false)) t(v)"),
     ("bit_xor(v)", "(VALUES (7),(5)) t(v)"),
+    ("group_concat(v, '-' ORDER BY v)", "(VALUES ('b'),('a')) t(v)"),
 ]
 
 

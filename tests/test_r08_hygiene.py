@@ -20,7 +20,7 @@ from tests.conftest import REPO_DIR, SF_SMALL
 
 
 def test_env_int_reads_override_and_falls_back(monkeypatch):
-    from gemini_data_wrangler_spark.operators.graphs import env_int
+    from gemini_data_wrangler_spark.session import env_int
 
     monkeypatch.setenv("SPARK_GRAFT_TEST_BOUND", "123")
     assert env_int("SPARK_GRAFT_TEST_BOUND", 500) == 123
@@ -37,6 +37,15 @@ def test_extra_conf_entry_that_is_not_k_eq_v_raises(monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", "oops")
     with pytest.raises(ValueError, match="'oops' is not k=v"):
+        get_spark()
+
+
+def test_bad_shuffle_partitions_names_the_variable(monkeypatch):
+    """Raised while the builder is assembled, before any JVM starts."""
+    from gemini_data_wrangler_spark.session import get_spark
+
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "abc")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE_PARTITIONS='abc'"):
         get_spark()
 
 

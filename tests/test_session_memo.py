@@ -74,3 +74,29 @@ def test_reentrant_build_keeps_both_entries(empty_store):
         ("app-A", "ann_exact_topk", "sf"): "ranked",
         ("app-A", "mmr_list", "sf"): "mmr over ranked",
     }
+
+
+class _CountingContext:
+    """A SparkContext stand-in that counts ``applicationId`` reads."""
+
+    def __init__(self, app_id: str) -> None:
+        self.app_id, self.reads = app_id, 0
+
+    @property
+    def applicationId(self) -> str:
+        self.reads += 1
+        return self.app_id
+
+
+def test_application_id_is_read_once_per_context(empty_store):
+    ctx = _CountingContext("app-A")
+    spark = SimpleNamespace(sparkContext=ctx)
+    for i in range(10):
+        session_memo(spark, "kind", (i,), object)
+        session_memo(spark, "kind", (i,), object)
+    assert ctx.reads == 1
+    # A second context object (a new application) is read afresh.
+    new_ctx = _CountingContext("app-B")
+    kept = session_memo(SimpleNamespace(sparkContext=new_ctx), "kind", (0,), object)
+    assert new_ctx.reads == 1
+    assert empty_store == {("app-B", "kind", 0): kept}
